@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -51,17 +51,32 @@ abstract class GraftTableProvider(format: GraftFormat)
     */
   protected def resolveFormat(opts: Map[String, String]): GraftFormat = format
 
-  private def makeTable(options: java.util.Map[String, String]): GraftTable = {
-    val opts = options.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-    new GraftTable(resolveFormat(opts), opts)
+  private def lowerKeys(options: java.util.Map[String, String]): Map[String, String] =
+    options.asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
+
+  /** The table inferSchema built, until getTable takes it over. Spark
+    * resolves a table by calling inferSchema(options) and then
+    * getTable(schema, _, options) on the same provider instance; handing
+    * the table over means the schema and the scan come from one listing
+    * instead of listing every root twice.
+    */
+  private val inferred = new java.util.concurrent.atomic.AtomicReference[GraftTable]()
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val opts = lowerKeys(options.asCaseSensitiveMap())
+    val table = new GraftTable(resolveFormat(opts), opts)
+    val schema = table.schema()
+    inferred.set(table)
+    schema
   }
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    makeTable(options.asCaseSensitiveMap()).schema()
-
   override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: java.util.Map[String, String]): Table =
-    makeTable(properties)
+                        properties: java.util.Map[String, String]): Table = {
+    val opts = lowerKeys(properties)
+    val pending = inferred.getAndSet(null)
+    if (pending != null && pending.options == opts) pending
+    else new GraftTable(resolveFormat(opts), opts)
+  }
 }
 
 /** One chunk of one file; a partition holds one or more chunks (small files
@@ -84,7 +99,7 @@ final case class FileChunk(path: String, start: Long, length: Long, fileSize: Lo
 
 final case class GraftInputPartition(chunks: Array[FileChunk]) extends InputPartition
 
-final class GraftTable(val format: GraftFormat, options: Map[String, String])
+final class GraftTable(val format: GraftFormat, private[sources] val options: Map[String, String])
   extends Table with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
 
   private def spark = SparkSession.active
@@ -192,20 +207,24 @@ final class GraftTable(val format: GraftFormat, options: Map[String, String])
 
     final case class DirTask(path: Path, parentVals: List[(String, String)], root: Boolean)
 
+    // A `k=v` directory below a root adds its column (at its depth among
+    // the `k=v` directories above it) and its value.
+    def withPartition(name: String, parentVals: List[(String, String)]): List[(String, String)] =
+      if (!name.contains("=")) parentVals
+      else {
+        val Array(k, v) = name.split("=", 2)
+        colDepth.merge(k, Integer.valueOf(parentVals.size),
+          (a, b) => if (a.intValue <= b.intValue) a else b)
+        parentVals :+ (k -> v)
+      }
+
     // One directory's listStatus: appends matching files, returns child dirs.
     def expand(t: DirTask): Seq[DirTask] = {
       val active = GraftScan.activeListings.incrementAndGet()
       GraftScan.maxConcurrentListings.accumulateAndGet(active, math.max)
       try {
         val fs = t.path.getFileSystem(conf)
-        val name = t.path.getName
-        val vals =
-          if (!t.root && name.contains("=")) {
-            val Array(k, v) = name.split("=", 2)
-            colDepth.merge(k, Integer.valueOf(t.parentVals.size),
-              (a, b) => if (a.intValue <= b.intValue) a else b)
-            t.parentVals :+ (k -> v)
-          } else t.parentVals
+        val vals = if (t.root) t.parentVals else withPartition(t.path.getName, t.parentVals)
         val next = mutable.ArrayBuffer[DirTask]()
         fs.listStatus(t.path).foreach { child =>
           if (child.isDirectory) next += DirTask(child.getPath, vals, root = false)
@@ -216,19 +235,57 @@ final class GraftTable(val format: GraftFormat, options: Map[String, String])
       } finally GraftScan.activeListings.decrementAndGet()
     }
 
-    // Roots: one glob per user-supplied path (serial; the fan-out below is
-    // what matters at scale, not the handful of top-level globs).
+    // The whole tree under `root` from one flat listing, on a filesystem
+    // that declares S3HttpFileSystem.FlatListing. Partition values come
+    // from the directories between the root and each entry; a directory
+    // entry (a marker with no files under it) still adds its columns.
+    def listFlat(fs: FileSystem, root: Path): Unit = {
+      val rootDepth = root.depth()
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) {
+        val st = it.next()
+        if (st.getPath.depth() == rootDepth) {
+          // the root is a file: explicit file path, no extension filtering
+          if (st.isFile && st.getLen > 0) files.add((st, Nil))
+        } else {
+          var dirs = List.empty[String]
+          var d = if (st.isDirectory) st.getPath else st.getPath.getParent
+          while (d.depth() > rootDepth) { dirs ::= d.getName; d = d.getParent }
+          val vals = dirs.foldLeft(List.empty[(String, String)])((acc, n) => withPartition(n, acc))
+          if (st.isFile && nameMatches(st.getPath.getName) && st.getLen > 0)
+            files.add((st, vals))
+        }
+      }
+    }
+
+    // Roots, serially (the fan-out below is what matters at scale, not the
+    // handful of top-level paths). A root without glob characters skips
+    // globStatus, which costs an object store 2 HEADs and a LIST; on a
+    // flat-listing filesystem it is listed in one go.
     var level: Seq[DirTask] = paths.flatMap { p =>
       val fsPath = new Path(p)
       val fs = fsPath.getFileSystem(conf)
-      val matches = fs.globStatus(fsPath)
-      if (matches == null || matches.isEmpty) { missing.add(fsPath.toString); Nil }
-      else matches.toSeq.flatMap { st =>
-        if (st.isDirectory) Seq(DirTask(st.getPath, Nil, root = true))
-        else {
-          // explicit file path: no extension filtering
-          if (st.getLen > 0) files.add((st, Nil))
-          Nil
+      val flat = fs.hasPathCapability(fsPath, s3.S3HttpFileSystem.FlatListing)
+      val isGlob = p.exists(c => "*?[]{}\\".indexOf(c) >= 0)
+      if (flat && !isGlob) {
+        try listFlat(fs, fs.makeQualified(fsPath))
+        catch { case _: java.io.FileNotFoundException => missing.add(fsPath.toString) }
+        Nil
+      } else {
+        val matches =
+          if (isGlob) fs.globStatus(fsPath)
+          else try Array(fs.getFileStatus(fsPath))
+          catch { case _: java.io.FileNotFoundException => null }
+        if (matches == null || matches.isEmpty) { missing.add(fsPath.toString); Nil }
+        else matches.toSeq.flatMap { st =>
+          if (st.isDirectory) {
+            if (flat) { listFlat(fs, st.getPath); Nil }
+            else Seq(DirTask(st.getPath, Nil, root = true))
+          } else {
+            // explicit file path: no extension filtering
+            if (st.getLen > 0) files.add((st, Nil))
+            Nil
+          }
         }
       }
     }
@@ -1521,7 +1578,12 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
     val c = chunks(chunkIdx)
     val path = new Path(c.path)
     val fs = path.getFileSystem(conf)
-    val raw = fs.open(path)
+    // The listing's length goes along, so an object store skips the HEAD
+    // a plain open() sends to learn it.
+    val status = new FileStatus(c.fileSize, false, 1, 0L, 0L, path)
+    val open = () => org.apache.hadoop.util.functional.FutureIO.awaitFuture(
+      fs.openFile(path).withFileStatus(status).build())
+    val raw = open()
     val compressed = Codecs.isCompressed(path.getName)
     val isSplit = c.start > 0 && !c.isBgzfChunk && !c.blockSplit &&
       !c.recordSplit && !c.alignedSplit && !c.containerSplit
@@ -1588,7 +1650,7 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
               else c.start + c.length
     partVals = c.partValues.map(v =>
       (if (v == null) null else UTF8String.fromString(v)): Any)
-    val reopen = () => fs.open(path): java.io.InputStream
+    val reopen = () => open(): java.io.InputStream
     it = format.records(
       new RecordInput(mkLines, stream, end, isSplit, c.isBgzfChunk, reopen, path, fs,
         startsAtFileStart = !isSplit && (!c.isBgzfChunk || c.vStart == 0L) &&

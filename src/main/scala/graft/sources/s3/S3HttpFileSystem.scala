@@ -3,9 +3,11 @@ package graft.sources.s3
 import java.io.{FileNotFoundException, IOException, InputStream}
 import java.net.{HttpURLConnection, URI, URL}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.CompletableFuture
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs._
+import org.apache.hadoop.fs.impl.{AbstractFSBuilderImpl, OpenFileParameters}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -228,21 +230,51 @@ class S3HttpFileSystem extends FileSystem {
     else throw new FileNotFoundException(s"$scheme://$bucket/$key")
   }
 
+  /** LIST first: a directory (the common case) costs one request. Only a
+    * prefix with nothing under it, not even a marker, is probed as a file.
+    */
   override def listStatus(f: Path): Array[FileStatus] = {
     val key = keyOf(f)
-    if (key.nonEmpty) {
-      val len = objectLength(key)
-      if (len >= 0) return Array(fileStatus(key, len))
-    }
     val prefix = if (key.isEmpty) "" else key + "/"
     val l = listAll(prefix, delimiter = Some("/"))
+    if (key.nonEmpty && l.keys.isEmpty && l.prefixes.isEmpty) {
+      val len = objectLength(key)
+      if (len < 0) throw new FileNotFoundException(s"$scheme://$bucket/$key")
+      return Array(fileStatus(key, len))
+    }
     val files = l.keys.collect {
       case (k, len) if k != prefix => fileStatus(k, len) // skip the dir marker itself
     }
-    val dirs = l.prefixes.map(p => dirStatus(p))
-    if (files.isEmpty && dirs.isEmpty && key.nonEmpty && objectLength(prefix) < 0)
-      throw new FileNotFoundException(s"$scheme://$bucket/$key")
-    (files ++ dirs).toArray
+    (files ++ l.prefixes.map(p => dirStatus(p))).toArray
+  }
+
+  override def hasPathCapability(p: Path, capability: String): Boolean =
+    capability == S3HttpFileSystem.FlatListing || super.hasPathCapability(p, capability)
+
+  /** `recursive = true` is one flat ListObjectsV2 of the prefix, without a
+    * delimiter: one request per 1000 keys at any depth, where a walk pays
+    * one LIST per directory. What it yields is described at
+    * [[S3HttpFileSystem.FlatListing]].
+    */
+  override def listFiles(f: Path, recursive: Boolean): RemoteIterator[LocatedFileStatus] = {
+    if (!recursive) return super.listFiles(f, recursive)
+    val key = keyOf(f)
+    val prefix = if (key.isEmpty) "" else key + "/"
+    val listed = listAll(prefix, delimiter = None).keys
+    val entries =
+      if (listed.nonEmpty || key.isEmpty) listed.collect {
+        case (k, _) if k.endsWith("/") && k != prefix => dirStatus(k) // a marker
+        case (k, len) if !k.endsWith("/") => fileStatus(k, len)
+      } else {
+        val len = objectLength(key)
+        if (len < 0) throw new FileNotFoundException(s"$scheme://$bucket/$key")
+        Seq(fileStatus(key, len))
+      }
+    val it = entries.iterator.map(st => new LocatedFileStatus(st, Array.empty[BlockLocation]))
+    new RemoteIterator[LocatedFileStatus] {
+      override def hasNext: Boolean = it.hasNext
+      override def next(): LocatedFileStatus = it.next()
+    }
   }
 
   // ---- read -------------------------------------------------------------
@@ -252,6 +284,22 @@ class S3HttpFileSystem extends FileSystem {
     val len = objectLength(key)
     if (len < 0) throw new FileNotFoundException(s"$scheme://$bucket/$key")
     new FSDataInputStream(new S3SeekableInput(key, len))
+  }
+
+  /** `openFile(path).withFileStatus(st)` takes the length from `st` and
+    * skips the HEAD that [[open]] sends; a missing object then fails on
+    * the first read instead of at open.
+    */
+  override protected def openFileWithOptions(path: Path,
+      parameters: OpenFileParameters): CompletableFuture[FSDataInputStream] = {
+    val st = parameters.getStatus
+    if (st == null || !st.isFile) super.openFileWithOptions(path, parameters)
+    else {
+      AbstractFSBuilderImpl.rejectUnknownMandatoryKeys(parameters.getMandatoryKeys,
+        Options.OpenFileOptions.FS_OPTION_OPENFILE_STANDARD_OPTIONS, s"for $path")
+      CompletableFuture.completedFuture(
+        new FSDataInputStream(new S3SeekableInput(keyOf(path), st.getLen)))
+    }
   }
 
   /** Lazy ranged-GET stream: each seek abandons the HTTP stream and the next
@@ -630,4 +678,15 @@ class S3HttpFileSystem extends FileSystem {
     }
     true
   }
+}
+
+object S3HttpFileSystem {
+  /** Path capability: `listFiles(dir, recursive = true)` answers from one
+    * flat listing of the object prefix. Beyond Hadoop's files-only
+    * contract it also yields each directory-marker object (a key ending in
+    * `/`, as mkdirs() writes) as a directory status, so that a caller still
+    * sees directories that hold no files. A `dir` with nothing under it is
+    * probed as a file, as `listFiles` on a file path returns that file.
+    */
+  val FlatListing = "graft.fs.flat-recursive-listing"
 }

@@ -902,4 +902,21 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
     assert(plan.linesIterator.filter(_.contains("Window"))
       .forall(_.contains("src")), plan)
   }
+
+  test("b22: the xxhash64 chain is folded at plan time and runs inside WholeStageCodegen") {
+    import org.apache.spark.sql.functions._
+    val df = Bench.hashShuffle(spark, 10000L)
+    val folded = df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("lambdafunction"), plan)
+    assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("Project [xxhash64(")),
+      s"hash projection is not codegen'd:\n$plan")
+    // the same answer as the lambda chain it replaces
+    val lambda = spark.range(0L, 10000L)
+      .select(expr("aggregate(sequence(1, 24), xxhash64(id), (a, i) -> xxhash64(a, i))").as("h"))
+      .groupBy(pmod(col("h"), lit(65536)).as("b"))
+      .agg(count(lit(1)).as("n"), max(col("h")).as("m"))
+      .agg(count(lit(1)), sum(col("n")), max(col("m")))
+    assert(folded.toSeq == lambda.collect().toSeq)
+  }
 }

@@ -261,4 +261,29 @@ class MzMlSplitSpec extends AnyFunSuite with SharedSpark {
       assert(gzDf.count() == nSpec)
     }
   }
+
+  test("the reader's Inflater ends in the next() that serves the last row") {
+    import graft.sources.formats.MzMlFormat
+    val before = MzMlFormat.liveReaderInflaters.get
+    val in = new java.io.BufferedInputStream(new java.io.FileInputStream(mzFile), 1 << 16)
+    try {
+      val it = MzMlFormat.records(new RecordInput(
+        () => throw new UnsupportedOperationException("no line view"), in, Long.MaxValue,
+        isMidFileSplit = false), Array(0))
+      (1 until nSpec).foreach(_ => it.next())
+      assert(MzMlFormat.liveReaderInflaters.get == before + 1, "released before the last row")
+      it.next() // the last row: no hasNext() after it
+      assert(MzMlFormat.liveReaderInflaters.get == before)
+    } finally in.close()
+  }
+
+  test("LIMIT 1 and a full drain both release every reader Inflater") {
+    import graft.sources.formats.MzMlFormat
+    val before = MzMlFormat.liveReaderInflaters.get
+    val df = spark.read.format("mzml").load(mzFile.getAbsolutePath)
+    assert(df.limit(1).collect().length == 1)
+    assert(MzMlFormat.liveReaderInflaters.get == before, "LIMIT 1 left an Inflater open")
+    assert(df.select("id").collect().length == nSpec)
+    assert(MzMlFormat.liveReaderInflaters.get == before, "a full drain left an Inflater open")
+  }
 }

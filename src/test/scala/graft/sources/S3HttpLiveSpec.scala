@@ -281,4 +281,95 @@ class S3HttpLiveSpec extends AnyFunSuite with SharedSpark {
       }
     }
   }
+
+  // ---- request shape of a region query ----------------------------------
+
+  /** A bgzipped VCF with a `.tbi`: 100 records per chrom, at 1, 101, 201, … */
+  private def indexedVcf(chroms: Seq[String]): (Array[Byte], Array[Byte]) = {
+    val data = new java.io.ByteArrayOutputStream()
+    val w = new BgzfWriter(data)
+    val tbi = new TabixWriter(chroms)
+    w.write("##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+      .getBytes("US-ASCII"))
+    for (r <- chroms.indices; i <- 0 until 100) {
+      val pos = i * 100 + 1
+      val vs = w.virtualPos
+      w.write(s"${chroms(r)}\t$pos\t.\tA\tG\t50\tPASS\tAC=1\n".getBytes("US-ASCII"))
+      tbi.add(r, pos - 1, pos, vs, w.virtualPos)
+    }
+    w.finish()
+    val idx = graft.TestTmp.file("shape", ".tbi")
+    tbi.write(idx)
+    (data.toByteArray, java.nio.file.Files.readAllBytes(idx))
+  }
+
+  /** pop=p0/{s0,s1} and pop=p1/s2 hold chr1 and chr2; pop=p1/s3 holds chr2
+    * only, so its index drops it from a chr1 query.
+    */
+  private def putCohort(s3: MiniS3): Unit = {
+    val both = indexedVcf(Seq("chr1", "chr2"))
+    val chr2 = indexedVcf(Seq("chr2"))
+    Seq("pop=p0/sample=s0" -> both, "pop=p0/sample=s1" -> both,
+        "pop=p1/sample=s2" -> both, "pop=p1/sample=s3" -> chr2).foreach {
+      case (dir, (vcf, tbi)) =>
+        s3.put("graft-test", s"cohort/$dir/calls.vcf.gz", vcf)
+        s3.put("graft-test", s"cohort/$dir/calls.vcf.gz.tbi", tbi)
+    }
+  }
+
+  private def chr1Count(root: String): Long =
+    spark.read.format("vcf").load(root)
+      .where("chrom = 'chr1' AND pos BETWEEN 1001 AND 2000").count()
+
+  /** Requests `body` sends, as (LISTs, HEADs, the rest). */
+  private def requestsOf(s3: MiniS3)(body: => Unit)
+      : (Seq[String], Seq[String], Seq[(String, String, Option[String])]) = {
+    import scala.jdk.CollectionConverters._
+    val before = s3.requests.size
+    body
+    val reqs = s3.requests.asScala.drop(before).toSeq
+    val (lists, rest) = reqs.partition(r => r._1 == "GET" && r._2.stripSuffix("/") == "graft-test")
+    val (heads, other) = rest.partition(_._1 == "HEAD")
+    (lists.map(_._2), heads.map(_._2), other)
+  }
+
+  test("live s3: a region query over a hive cohort is 1 LIST, 0 HEAD, 1 ranged GET per kept file") {
+    withS3 { s3 =>
+      putCohort(s3)
+      assert(chr1Count("s3://graft-test/cohort") == 30) // loads and caches the indexes
+      var n = 0L
+      val (lists, heads, other) = requestsOf(s3) { n = chr1Count("s3://graft-test/cohort") }
+      assert(n == 30)
+      assert(lists.size == 1, lists)
+      assert(heads.isEmpty, heads)
+      val kept = Seq("s0", "s1", "s2").map(s => s"/sample=$s/calls.vcf.gz")
+      assert(other.size == kept.size && other.forall(r => r._1 == "GET" &&
+        r._3.exists(_.startsWith("bytes=")) && kept.exists(r._2.endsWith)), other)
+    }
+  }
+
+  test("live s3: a literal file root costs at most 1 LIST and 1 HEAD") {
+    withS3 { s3 =>
+      putCohort(s3)
+      val file = "s3://graft-test/cohort/pop=p0/sample=s0/calls.vcf.gz"
+      assert(chr1Count(file) == 10)
+      var n = 0L
+      val (lists, heads, other) = requestsOf(s3) { n = chr1Count(file) }
+      assert(n == 10)
+      assert(lists.size <= 1 && heads.size <= 1, (lists, heads))
+      assert(other.size == 1 && other.head._2.endsWith("/calls.vcf.gz"), other)
+    }
+  }
+
+  test("live s3: one spark.read load lists its root once, the query included") {
+    withS3 { s3 =>
+      putCohort(s3)
+      val (lists, _, _) = requestsOf(s3) {
+        val df = spark.read.format("vcf").load("s3://graft-test/cohort")
+        assert(df.columns.toSeq.takeRight(2) == Seq("pop", "sample"))
+        assert(df.where("chrom = 'chr1' AND pos BETWEEN 1001 AND 2000").count() == 30)
+      }
+      assert(lists.size == 1, lists)
+    }
+  }
 }
