@@ -231,130 +231,14 @@ object Bgzf {
   }
 }
 
-/** Executor-shared inflate pool for BGZF blocks — blocks are independent
-  * gzip members, so a scan's inflation is order-free even though its
-  * record parse is strictly sequential. At narrow widths (the w1-w4
-  * regime: one big unsplittable-ish file, most cores idle) the profiled
-  * wall is single-thread Inflater.inflate (~50-60% of BAM/FASTQ-bgzf task
-  * samples); handing blocks to idle cores leaves the task thread IO- and
-  * parse-bound. Same discipline as MzMlFormat.decodePool: submission is
-  * gated LOCK-FREE on (in-flight pool decodes + live BGZF readers) staying
-  * under the core count, so a full-width scan (readers == cores) submits
-  * nothing and is sequential BY CONSTRUCTION; the SynchronousQueue +
-  * CallerRunsPolicy pair backstops the gate's racy read (a saturated pool
-  * inflates on the caller, never queues).
-  */
-private[sources] object BgzfPool {
-  val poolSize: Int = Runtime.getRuntime.availableProcessors()
-
-  /** Live BGZF block cursors in this JVM — the gate's estimate of cores
-    * already occupied by reader task threads. Conservative over-count (a
-    * reader blocked on IO still counts) errs toward sequential inflate,
-    * never toward oversubscription.
-    */
-  private val activeReaders = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** In-flight async inflates, tracked lock-free (ThreadPoolExecutor's
-    * getActiveCount takes the pool's mainLock — a per-block cost the gate
-    * must not pay).
-    */
-  private val activeDecodes = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private lazy val pool: java.util.concurrent.ThreadPoolExecutor = {
-    val p = new java.util.concurrent.ThreadPoolExecutor(poolSize, poolSize,
-      30L, java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.SynchronousQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-bgzf-inflate"); t.setDaemon(true); t
-      },
-      new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy())
-    p.allowCoreThreadTimeOut(true)
-    p
-  }
-
-  /** Per-pool-thread Inflater: reset per block, never end()-ed explicitly —
-    * native state is released by the zip Cleaner when an idle pool thread
-    * times out. (Task-owned Inflaters keep their explicit end().)
-    */
-  private val scratch: ThreadLocal[Inflater] =
-    ThreadLocal.withInitial(() => new Inflater(true))
-
-  /** GRAFT_BGZF_DEBUG=1 traces cursor creation and gate decisions. */
-  val debug: Boolean = sys.env.contains("GRAFT_BGZF_DEBUG")
-
-  /** Register a cursor with the reader count for the lifetime of its Spark
-    * task (no-op off-task, e.g. direct unit-test iteration).
-    */
-  def trackReader(): Unit =
-    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
-      activeReaders.incrementAndGet()
-      tc.addTaskCompletionListener[Unit](_ => activeReaders.decrementAndGet())
-    }
-
-  /** Submit a batch of blocks for async inflation when a core is idle;
-    * null when the gate is closed (caller inflates inline, sequentially).
-    * One pool handoff covers the whole batch — the SynchronousQueue
-    * rendezvous + FutureTask park/unpark costs ~40 µs per submission
-    * (measured: per-block submission ATE the b15 overlap win), so blocks
-    * ride in groups and each completes its own CompletableFuture as it
-    * inflates (block-granular joins, group-granular handoff).
-    */
-  def tryAsyncBatch(rbs: Array[Bgzf.RawBlock], n: Int)
-      : Array[java.util.concurrent.CompletableFuture[Array[Byte]]] = {
-    if (debug)
-      System.err.println(s"BGZF-GATE decodes=${activeDecodes.get} readers=${activeReaders.get} pool=$poolSize")
-    if (activeDecodes.get + activeReaders.get >= poolSize) return null
-    val futs = new Array[java.util.concurrent.CompletableFuture[Array[Byte]]](n)
-    var i = 0
-    while (i < n) {
-      futs(i) = new java.util.concurrent.CompletableFuture[Array[Byte]]()
-      i += 1
-    }
-    activeDecodes.incrementAndGet()
-    pool.execute { () =>
-      try {
-        val inf = scratch.get()
-        var k = 0
-        while (k < n) {
-          try futs(k).complete(Bgzf.inflateRaw(rbs(k), inf))
-          catch { case t: Throwable => futs(k).completeExceptionally(t) }
-          k += 1
-        }
-      } finally activeDecodes.decrementAndGet()
-    }
-    futs
-  }
-
-  /** Generic sibling of [[tryAsyncBatch]] for non-BGZF decode work that is
-    * order-free relative to its consumer (CRAM container decode rides
-    * this). Shares the SAME gate and counters — one global idle-core
-    * decode budget across all formats, so concurrent scans of different
-    * formats cannot oversubscribe the machine between them. Returns null
-    * when the gate is closed (caller runs the work inline, sequentially).
-    */
-  def tryAsyncWork[T](work: () => T)
-      : java.util.concurrent.CompletableFuture[T] = {
-    if (debug)
-      System.err.println(s"BGZF-GATE decodes=${activeDecodes.get} readers=${activeReaders.get} pool=$poolSize")
-    if (activeDecodes.get + activeReaders.get >= poolSize) return null
-    val fut = new java.util.concurrent.CompletableFuture[T]()
-    activeDecodes.incrementAndGet()
-    pool.execute { () =>
-      try fut.complete(work())
-      catch { case t: Throwable => fut.completeExceptionally(t) }
-      finally activeDecodes.decrementAndGet()
-    }
-    fut
-  }
-}
-
 /** Ordered BGZF block cursor shared by every block-loop stream: raw block
   * framing is read sequentially on the task thread (stream order is the
-  * only ordering constraint), inflation rides [[BgzfPool]] when cores are
+  * only ordering constraint), inflation rides [[DecodePool]] when cores are
   * idle, and `next()` hands blocks back strictly in file order. When the
   * pool gate is closed the ring never grows past the one block being
   * served — the exact sequential read-inflate-parse loop this class
-  * replaced.
+  * replaced. The cursor counts as one decode reader from construction to
+  * [[close]].
   *
   * `stopAfter`: never read a block whose offset exceeds it (chunk streams
   * know their last block up front; prefetch must not overshoot a bounded
@@ -364,6 +248,7 @@ private[sources] final class BgzfBlocks(raw: InputStream,
                                         firstOffset: Long = 0L,
                                         stopAfter: Long = Long.MaxValue) {
   import java.util.concurrent.Future
+  import BgzfBlocks.{Depth, Group}
 
   /** One block in flight: offset + compressed size are known at read time
     * (the split/resync ownership decisions need them before inflation);
@@ -373,46 +258,26 @@ private[sources] final class BgzfBlocks(raw: InputStream,
   final class Entry(val offset: Long, val compressedSize: Int,
                     rb: Bgzf.RawBlock, fut: Future[Array[Byte]]) {
     def data: Array[Byte] =
-      if (fut == null) Bgzf.inflateRaw(rb, inf)
-      else try fut.get()
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          e.getCause match {
-            case re: RuntimeException => throw re
-            case io: java.io.IOException => throw io
-            case other => throw new RuntimeException(other)
-          }
-      }
+      if (fut == null) Bgzf.inflateRaw(rb, inf) else DecodePool.await(fut)
   }
 
   private val inf = new Inflater(true)
-  private val depth =
-    sys.env.getOrElse("GRAFT_BGZF_DEPTH", "32").toInt
-  private val group =
-    math.max(1, sys.env.getOrElse("GRAFT_BGZF_GROUP", "4").toInt)
-  private val ring = new java.util.ArrayDeque[Entry](depth)
+  private val ring = new java.util.ArrayDeque[Entry](Depth)
   private var nextOffset = firstOffset
   private var rawEof = false
   // prefetch persists only while the pool keeps granting async slots: the
   // first gated (inline) batch parks the cursor in sequential mode until
-  // the ring drains and the gate is re-probed. GRAFT_BGZF_ASYNC=0 is the
-  // kill switch (pure sequential read-inflate-parse, the pre-pool path).
-  private var asyncGranted =
-    sys.env.getOrElse("GRAFT_BGZF_ASYNC", "1") != "0"
-  private val asyncEnabled = asyncGranted
-  if (BgzfPool.debug)
-    System.err.println(s"BGZF-BLOCKS new first=$firstOffset stop=$stopAfter async=$asyncEnabled")
-  BgzfPool.trackReader()
+  // the ring drains and the gate is re-probed
+  private var asyncGranted = true
+  private val reader = DecodePool.register()
 
   private def fill(): Unit = {
     while (!rawEof && nextOffset <= stopAfter &&
-        (ring.isEmpty || (asyncGranted && ring.size < depth))) {
+        (ring.isEmpty || (asyncGranted && ring.size < Depth))) {
       // read up to one group of raw blocks, then submit them as ONE pool
       // handoff (per-block handoff overhead measurably exceeds the overlap
       // win on parse-light formats)
-      val want =
-        if (asyncGranted) math.min(group, depth - math.max(ring.size, 0))
-        else 1
+      val want = if (asyncGranted) math.min(Group, Depth - ring.size) else 1
       val rbs = new Array[Bgzf.RawBlock](want)
       val offs = new Array[Long](want)
       var k = 0
@@ -426,7 +291,7 @@ private[sources] final class BgzfBlocks(raw: InputStream,
         }
       }
       if (k == 0) return
-      val futs = if (asyncEnabled) BgzfPool.tryAsyncBatch(rbs, k) else null
+      val futs = BgzfBlocks.tryInflateAsync(rbs, k)
       asyncGranted = futs != null
       var i = 0
       while (i < k) {
@@ -440,7 +305,47 @@ private[sources] final class BgzfBlocks(raw: InputStream,
   /** Next block in file order; null at EOF or past `stopAfter`. */
   def next(): Entry = { fill(); ring.poll() }
 
-  def close(): Unit = inf.end()
+  /** Ends the Inflater and gives the reader's place in the gate back;
+    * idempotent.
+    */
+  def close(): Unit = { inf.end(); reader.release() }
+}
+
+private[sources] object BgzfBlocks {
+  /** Most blocks a cursor keeps read ahead of the one being served. */
+  val Depth = 32
+  /** Blocks per pool handoff. */
+  val Group = 4
+
+  /** Per-pool-thread Inflater: reset per block, never end()-ed explicitly —
+    * native state is released by the zip Cleaner when an idle pool thread
+    * times out. (Task-owned Inflaters keep their explicit end().)
+    */
+  private val scratch: ThreadLocal[Inflater] =
+    ThreadLocal.withInitial(() => new Inflater(true))
+
+  /** Inflate the first `n` blocks on an idle core, one future per block;
+    * null when [[DecodePool]] refuses (the caller inflates inline,
+    * sequentially). One pool handoff covers the whole batch — the
+    * SynchronousQueue rendezvous + park/unpark costs ~40 µs per submission
+    * (measured: per-block submission ATE the b15 overlap win), so blocks
+    * ride in groups and each completes its own future as it inflates
+    * (block-granular joins, group-granular handoff).
+    */
+  def tryInflateAsync(rbs: Array[Bgzf.RawBlock], n: Int)
+      : Array[java.util.concurrent.CompletableFuture[Array[Byte]]] = {
+    val futs = Array.fill(n)(new java.util.concurrent.CompletableFuture[Array[Byte]]())
+    val granted = DecodePool.trySubmit { () =>
+      val inf = scratch.get()
+      var k = 0
+      while (k < n) {
+        try futs(k).complete(Bgzf.inflateRaw(rbs(k), inf))
+        catch { case t: Throwable => futs(k).completeExceptionally(t) }
+        k += 1
+      }
+    }
+    if (granted) futs else null
+  }
 }
 
 /** Decompressed stream over an entire BGZF file: a sequential readBlock
@@ -491,16 +396,17 @@ final class BgzfStreamInputStream(raw: InputStream) extends InputStream {
   * consumer, so the task thread spends its time parsing instead of
   * inflating. Upper bound is 2x (one producer, one consumer); the gain is
   * the inflate share of the profile. Takes ONE pool slot for the stream's
-  * lifetime — the same global decode budget as BGZF block inflation, so
-  * full-width scans see the gate closed and fall back to the plain
-  * sequential read (`AsyncChunkedInputStream.wrap` returns `inner`
-  * untouched). Producer failures surface on the consumer's next read.
+  * lifetime, and its consumer counts as a decode reader — the same global
+  * decode budget as every other format, so full-width scans see the gate
+  * closed and fall back to the plain sequential read on the consumer
+  * thread. Producer failures surface on the consumer's next read.
   */
 final class AsyncChunkedInputStream private (
     inner: InputStream,
     producerSlot: java.util.concurrent.CompletableFuture[Unit],
     q: java.util.concurrent.ArrayBlockingQueue[AnyRef],
-    closed: java.util.concurrent.atomic.AtomicBoolean) extends InputStream {
+    closed: java.util.concurrent.atomic.AtomicBoolean,
+    reader: DecodePool.Reader) extends InputStream {
 
   private var buf: Array[Byte] = _
   private var pos = 0
@@ -548,6 +454,7 @@ final class AsyncChunkedInputStream private (
     q.clear() // unblock a producer parked on a full queue
     try producerSlot.get(5, java.util.concurrent.TimeUnit.SECONDS)
     catch { case _: Throwable => () }
+    reader.release()
     inner.close()
   }
 }
@@ -558,13 +465,17 @@ object AsyncChunkedInputStream {
   private val Depth = 8
 
   /** Pipeline `inner` through the idle-core pool when a slot is free;
-    * return `inner` unchanged when the gate is closed (full-width scans —
-    * the overlap is a single-task/idle-core optimization by design).
+    * serve `inner` unpiped when the gate is closed (full-width scans — the
+    * overlap is a single-task/idle-core optimization by design). Either
+    * way the calling task thread, the stream's consumer, counts as a decode
+    * reader until the returned stream closes, so N tasks on N cores leave
+    * the gate closed.
     */
   def wrap(inner: InputStream): InputStream = {
+    val reader = DecodePool.register()
     val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
     val q = new java.util.concurrent.ArrayBlockingQueue[AnyRef](Depth)
-    val slot = BgzfPool.tryAsyncWork { () =>
+    val slot = DecodePool.tryAsync { () =>
       try {
         var eof = false
         while (!eof && !closed.get) {
@@ -591,16 +502,17 @@ object AsyncChunkedInputStream {
             !q.offer(t, 100, java.util.concurrent.TimeUnit.MILLISECONDS)) ()
       }
     }
-    if (slot == null) inner
-    else new AsyncChunkedInputStream(inner, slot, q, closed)
+    if (slot == null) new Unpiped(inner, reader)
+    else new AsyncChunkedInputStream(inner, slot, q, closed, reader)
+  }
+
+  /** `inner` read on the consumer thread, releasing its reader on close. */
+  private final class Unpiped(inner: InputStream, reader: DecodePool.Reader)
+      extends java.io.FilterInputStream(inner) {
+    override def close(): Unit = try super.close() finally reader.release()
   }
 }
 
-/** InputStream over the BGZF-decompressed bytes of one virtual-position
-  * chunk [vStart, vEnd]. Seeks the raw stream to the chunk's first block and
-  * serves decompressed bytes until the end virtual position. Index chunk
-  * boundaries are record-aligned, so line parsing terminates cleanly.
-  */
 /** Decompressed stream over one COMPRESSED-offset split [cStart, cEnd) of a
   * BGZF file with NO index: the index-free analog of the full-scan split,
   * for one-line-per-record text formats (bgzipped VCF/GFF/BED/... without a
@@ -860,6 +772,11 @@ object ResyncScan {
   }
 }
 
+/** InputStream over the BGZF-decompressed bytes of one virtual-position
+  * chunk [vStart, vEnd]. Seeks the raw stream to the chunk's first block and
+  * serves decompressed bytes until the end virtual position. Index chunk
+  * boundaries are record-aligned, so line parsing terminates cleanly.
+  */
 final class BgzfChunkInputStream(raw: FSDataInputStream, vStart: Long, vEnd: Long)
   extends InputStream {
 

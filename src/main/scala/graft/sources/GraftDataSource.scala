@@ -297,15 +297,7 @@ final class GraftTable(val format: GraftFormat, private[sources] val options: Ma
     while (level.nonEmpty) {
       level =
         if (level.size == 1) expand(level.head)
-        else {
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, level.size))
-          try {
-            val tasks: java.util.List[java.util.concurrent.Callable[Seq[DirTask]]] =
-              level.map(t => (() => expand(t)): java.util.concurrent.Callable[Seq[DirTask]]).asJava
-            pool.invokeAll(tasks).asScala.toSeq.flatMap(_.get())
-          } finally pool.shutdown()
-        }
+        else GraftScan.parFlatMap(level)(expand)
     }
 
     missingPaths = missing.asScala.toSeq
@@ -1018,17 +1010,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     val chunks: Seq[FileChunk] =
       if (!needsIndexes || pruned.size <= 1)
         pruned.flatMap { case (st, vals) => fileChunks(st, vals) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, pruned.size))
-        try {
-          val tasks: java.util.List[java.util.concurrent.Callable[Seq[FileChunk]]] =
-            pruned.map { case (st, vals) =>
-              (() => fileChunks(st, vals)): java.util.concurrent.Callable[Seq[FileChunk]]
-            }.asJava
-          pool.invokeAll(tasks).asScala.toSeq.flatMap(_.get())
-        } finally pool.shutdown()
-      }
+      else GraftScan.parFlatMap(pruned) { case (st, vals) => fileChunks(st, vals) }
 
     mFilesScanned = chunks.iterator.map(_.path).toSet.size.toLong
     mChunksPlanned = chunks.size.toLong
@@ -1307,6 +1289,19 @@ object GraftScan {
       else out += ((s, e))
     }
     out.toSeq
+  }
+
+  /** Planning fan-out (directory listings, per-file index reads — object
+    * store round trips): `f` over `items` on a pool of min(16, n) threads
+    * that lives for this one call, results concatenated in input order.
+    */
+  private[sources] def parFlatMap[A, B](items: Seq[A])(f: A => Seq[B]): Seq[B] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(16, items.size))
+    try {
+      val tasks = items.map(a => (() => f(a)): java.util.concurrent.Callable[Seq[B]])
+      pool.invokeAll(tasks.asJava).asScala.toSeq.flatMap(_.get())
+    } finally pool.shutdown()
   }
 
   /** Size-based chunk packing (mirrors Spark's FilePartition packing) so

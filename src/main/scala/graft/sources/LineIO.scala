@@ -179,8 +179,6 @@ final class ByteArrayBuilder(initial: Int = 256) {
   */
 object Codecs {
   private val gzipExts = Seq(".gz", ".gzip", ".bgz", ".bgzf")
-  private def bgzfAsyncEnabled: Boolean =
-    sys.env.getOrElse("GRAFT_BGZF_ASYNC", "1") != "0"
   private val zstdExts = Seq(".zst", ".zstd")
   private val bzip2Exts = Seq(".bz2", ".bzip2")
   private val xzExts = Seq(".xz")
@@ -211,19 +209,14 @@ object Codecs {
     // serve through BgzfStreamInputStream so block inflation rides the
     // idle-core pool and OVERLAPS parse (r17: fastq_bgzf single-task
     // decode 68 -> ~100 MB/s; same mechanism as the split-path b14/b17
-    // wins). The pre-pool measurement ("GZIPInputStream's reused inflater
-    // wins ~980 vs ~850 MB/s for bulk text reads") still governs the
-    // sequential regime, so GRAFT_BGZF_ASYNC=0 — the pool kill switch —
-    // restores the generic reader exactly. Non-BGZF gzip keeps it always.
-    // Non-BGZF sequential codecs can't block-parallelise, but decode can
-    // still OVERLAP parse through one idle-core producer (see
-    // AsyncChunkedInputStream) — a no-op when the pool gate is closed.
-    def pipelined(dec: InputStream): InputStream =
-      if (bgzfAsyncEnabled) AsyncChunkedInputStream.wrap(dec) else dec
+    // wins). Non-BGZF sequential codecs can't block-parallelise, but
+    // decode can still OVERLAP parse through one idle-core producer (see
+    // AsyncChunkedInputStream) — the plain sequential read when the pool
+    // gate is closed.
+    def pipelined(dec: InputStream): InputStream = AsyncChunkedInputStream.wrap(dec)
     if (gzipExts.exists(n.endsWith)) {
       val pb = new java.io.PushbackInputStream(in, 512)
-      if (bgzfAsyncEnabled && Bgzf.looksLikeBgzf(pb))
-        new BgzfStreamInputStream(pb)
+      if (Bgzf.looksLikeBgzf(pb)) new BgzfStreamInputStream(pb)
       else pipelined(new MultiMemberGzipInputStream(pb))
     }
     else if (zstdExts.exists(n.endsWith)) {

@@ -962,20 +962,18 @@ class CramFormat(refPath: Option[String],
       // another (each carries its own compression header, encodings and
       // entropy streams), so while THIS container's rows drain, the NEXT
       // containers' decodes (block decompress + slice record decode — the
-      // profiled 90% of task time) run on [[graft.sources.BgzfPool]]'s
+      // profiled 90% of task time) run on [[graft.sources.DecodePool]]'s
       // idle cores. Header parse + body-byte reads stay sequential on the
       // task thread (stream order); rows come back strictly in container
       // order via the FIFO ring. Same gate as BGZF/mzML: a full-width
-      // scan stages nothing ahead and decodes inline, sequentially.
-      private val asyncEnabled =
-        sys.env.getOrElse("GRAFT_CRAM_ASYNC", "1") != "0"
-      private val depth =
-        math.max(1, sys.env.getOrElse("GRAFT_CRAM_DEPTH", "4").toInt)
-      private var asyncGranted = asyncEnabled
+      // scan stages nothing ahead and decodes inline, sequentially. The
+      // iterator counts as a decode reader until it is exhausted.
+      private val depth = 4
+      private var asyncGranted = true
       private val ring =
         new java.util.ArrayDeque[() => mutable.ArrayBuffer[Array[Any]]](depth)
       private var streamDone = false
-      graft.sources.BgzfPool.trackReader()
+      private val reader = graft.sources.DecodePool.register()
 
       /** Read headers forward to the next DATA container this chunk owns
         * and wants; handle header/EOF/pruned containers inline. Returns a
@@ -1023,21 +1021,9 @@ class CramFormat(refPath: Option[String],
               decodeContainer(new In(body, 0), nb, theRefs, required, rows, conf)
               rows
             }
-            val fut =
-              if (asyncEnabled) graft.sources.BgzfPool.tryAsyncWork(() => work())
-              else null
+            val fut = graft.sources.DecodePool.tryAsync(() => work())
             asyncGranted = fut != null
-            if (fut != null) return { () =>
-              try fut.get()
-              catch {
-                case e: java.util.concurrent.ExecutionException =>
-                  e.getCause match {
-                    case re: RuntimeException => throw re
-                    case io: java.io.IOException => throw io
-                    case other => throw new RuntimeException(other)
-                  }
-              }
-            }
+            if (fut != null) return () => graft.sources.DecodePool.await(fut)
             return () => work()
           }
         }
@@ -1056,7 +1042,7 @@ class CramFormat(refPath: Option[String],
         while (!cur.hasNext && !finished) {
           fill()
           val head = ring.poll()
-          if (head == null) finished = true
+          if (head == null) { finished = true; reader.release() }
           else cur = head().iterator
         }
       }
@@ -1450,7 +1436,7 @@ class CramFormat(refPath: Option[String],
   def tagValueString(typ: Char, raw: Array[Byte]): String = {
     val bb = java.nio.ByteBuffer.wrap(raw).order(java.nio.ByteOrder.LITTLE_ENDIAN)
     typ match {
-      case 'Z' | 'H' => new String(raw).stripSuffix(" ")
+      case 'Z' | 'H' => new String(raw).stripSuffix("\u0000")
       case 'A' => raw.headOption.map(_.toChar.toString).getOrElse("")
       case 'c' => bb.get().toString
       case 'C' => (bb.get() & 0xff).toString

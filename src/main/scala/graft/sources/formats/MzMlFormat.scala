@@ -82,8 +82,7 @@ object MzMlFormat extends GraftFormat {
     * could still need it); the task-completion listener covers failure
     * paths and early termination (LIMIT) as before.
     */
-  private val groupSpectra: Int =
-    math.max(1, sys.env.getOrElse("GRAFT_MZML_GROUP", "32").toInt)
+  private val groupSpectra = 32
   private val groupByteBound: Long = 1L << 20
 
   private def pipelined(ctx: DecodeCtx, inner: Iterator[Array[Any]],
@@ -133,13 +132,6 @@ object MzMlFormat extends GraftFormat {
     val xml = factory.createXMLStreamReader(input.stream)
     val ctx = readerCtx()
     val want = wantMask(required)
-    // the Inflater holds native zlib state: release it when the task ends
-    // (covers failure paths) and again at normal exhaustion (end() is
-    // idempotent) — finalization-only release leaks off-heap memory on
-    // long-running executors
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => ctx.endInflater()))
-    trackReader()
     val inner = new Iterator[Array[Any]] {
       private var nextRow: Array[Any] = _
       advance()
@@ -178,9 +170,6 @@ object MzMlFormat extends GraftFormat {
     factory.setProperty(XMLInputFactory.IS_COALESCING, false) // readBinaryB64 loops chunked CHARACTERS events; coalescing only adds a per-blob assembly copy
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     val ctx = readerCtx()
-    Option(org.apache.spark.TaskContext.get())
-      .foreach(_.addTaskCompletionListener[Unit](_ => ctx.endInflater()))
-    trackReader()
 
     val inner = new Iterator[Array[Any]] {
       private var pos = from
@@ -442,27 +431,36 @@ object MzMlFormat extends GraftFormat {
   /** Reader Inflaters not yet released, JVM-wide: a leak check for specs. */
   private[sources] val liveReaderInflaters = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** A reader task's decode state, counted in [[liveReaderInflaters]]
-    * until its endInflater().
+  /** A reader task's decode state, counted in [[liveReaderInflaters]] and
+    * as a [[DecodePool]] reader until its endInflater(). The Inflater holds
+    * native zlib state: it is released when the task ends (covers failure
+    * paths and LIMIT) and at normal exhaustion (end() is idempotent) —
+    * finalization-only release leaks off-heap memory on long-running
+    * executors.
     */
   private def readerCtx(): DecodeCtx = {
     liveReaderInflaters.incrementAndGet()
-    new DecodeCtx
+    val ctx = new DecodeCtx(DecodePool.register())
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => ctx.endInflater()))
+    ctx
   }
 
   /** Per-partition reusable decode state: one native Inflater and two growable
     * scratch buffers for the whole file, instead of a fresh Inflater + regex
     * strip + ByteArrayOutputStream per binary array (the r4 b05 hot path).
     */
-  private final class DecodeCtx {
+  private[sources] final class DecodeCtx(reader: DecodePool.Reader = null) {
     val inflater = new java.util.zip.Inflater()
     private val ended = new java.util.concurrent.atomic.AtomicBoolean(false)
-    /** Releases the Inflater's native state; later calls do nothing. Only
-      * reader contexts ([[readerCtx]]) call it.
+    /** Releases the Inflater's native state and the reader's place in the
+      * decode gate; later calls do nothing. Only reader contexts
+      * ([[readerCtx]]) call it.
       */
     def endInflater(): Unit = if (ended.compareAndSet(false, true)) {
       inflater.end()
       liveReaderInflaters.decrementAndGet()
+      if (reader != null) reader.release()
     }
     var b64buf: Array[Byte] = new Array[Byte](1 << 13) // whitespace-stripped base64 bytes
     var rawbuf: Array[Byte] = new Array[Byte](1 << 14) // inflated output
@@ -471,141 +469,69 @@ object MzMlFormat extends GraftFormat {
     // current group (parse-group byte bound for wide-spectrum files)
     val pending = new java.util.ArrayList[PendingBlob](64)
     var groupBytes = 0L
-    val batch: Boolean = batchEnabled // captured once per reader
   }
 
   /** One staged small-blob decode: a copy of the whitespace-stripped base64
     * payload plus its declared codec params, completed by [[flushPending]].
     */
-  private final class PendingBlob(val buf: Array[Byte], val len: Int,
+  private[sources] final class PendingBlob(val buf: Array[Byte], val len: Int,
       val zlib: Boolean, val is64: Boolean) {
     val fut = new java.util.concurrent.CompletableFuture[Array[Double]]()
   }
 
-  /** Executor-shared decode pool for the `<binary>` blobs — the probe at
-    * the 84%-of-native-samples `Inflater.inflate` wall (67 MB/s/task).
-    * A spectrum's mz/intensity/wavelength arrays are independent, so they
-    * inflate concurrently WHEN CORES ARE IDLE: submission is gated on
-    * (busy pool threads + live mzML reader tasks) staying under the core
-    * count — [[activeReaders]] counts the parser threads themselves, so a
-    * full-width scan (readers == cores) submits nothing and is unchanged
-    * BY CONSTRUCTION, not just once the pool saturates. Narrow scans (one
-    * big file, the w1-w4 regime) get the win. The SynchronousQueue +
-    * CallerRunsPolicy pair backstops the gate's racy read: a saturated
-    * pool makes the parser thread decode inline, never queue. Bounded at
-    * the core count JVM-wide, shared across all concurrent tasks.
-    */
-  private lazy val decodePoolSize = Runtime.getRuntime.availableProcessors()
-
-  private lazy val decodePool: java.util.concurrent.ThreadPoolExecutor = {
-    val n = decodePoolSize
-    val p = new java.util.concurrent.ThreadPoolExecutor(n, n, 30L,
-      java.util.concurrent.TimeUnit.SECONDS,
-      new java.util.concurrent.SynchronousQueue[Runnable](),
-      (r: Runnable) => {
-        val t = new Thread(r, "graft-mzml-decode"); t.setDaemon(true); t
-      },
-      new java.util.concurrent.ThreadPoolExecutor.CallerRunsPolicy())
-    p.allowCoreThreadTimeOut(true)
-    p
-  }
-
-  /** Per-thread inflate scratch for pool (and caller-runs) decodes. The
-    * Inflater count is bounded by pool size + live task threads; native
-    * state is released by the zip Cleaner when an idle pool thread times
-    * out (the per-task ctx.inflater keeps its explicit end()).
+  /** Per-thread inflate scratch for [[DecodePool]] decodes. The Inflater
+    * count is bounded by the pool size; native state is released by the
+    * zip Cleaner when an idle pool thread times out (the per-task
+    * ctx.inflater keeps its explicit end()).
     */
   private val poolScratch: ThreadLocal[DecodeCtx] =
     ThreadLocal.withInitial(() => new DecodeCtx)
 
-  /** Blobs below this many base64 bytes decode inline: the pool handoff
-    * (payload copy + FutureTask + SynchronousQueue rendezvous) costs ~µs,
-    * which dominated sub-KB spectra (the b05 shape measured 67 -> 22 MB/s
-    * when everything went async) while a 64 KB blob inflates for ~1 ms
-    * and amortizes it. Env override for A/B measurement only.
+  /** Blobs below this many base64 bytes join the group batch: the pool
+    * handoff (payload copy + future + SynchronousQueue rendezvous) costs
+    * ~µs, which dominated sub-KB spectra (the b05 shape measured 67 -> 22
+    * MB/s when everything went async alone) while a 64 KB blob inflates
+    * for ~1 ms and amortizes it.
     */
-  private val asyncThreshold: Int =
-    sys.env.getOrElse("GRAFT_MZML_ASYNC_THRESHOLD", "65536").toInt
+  private val asyncThreshold = 65536
 
-  /** Live mzML reader tasks in this JVM — the async gate's estimate of
-    * cores already occupied by parser threads (which also decode small
-    * blobs inline). Incremented at reader open, decremented by the task
-    * completion listener; a conservative over-count (a reader blocked on
-    * IO still counts) only errs toward inline decode, never toward
-    * oversubscription.
+  /** Decode a blob off the parse thread when [[DecodePool]] has an idle
+    * core (the 84%-of-native-samples `Inflater.inflate` wall, 67 MB/s per
+    * task, is what a spectrum's independent mz/intensity/wavelength arrays
+    * spread over idle cores): big payloads are copied and decoded
+    * individually; small payloads are staged into the task's GROUP batch —
+    * one pool handoff per group of spectra (see [[flushPending]]). With the
+    * gate closed (full-width scan) everything decodes inline on the parse
+    * thread — the pre-pool path, zero overhead, by construction.
     */
-  private val activeReaders = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** In-flight async decodes, tracked lock-free — ThreadPoolExecutor's own
-    * getActiveCount takes the pool's mainLock, a per-blob cost the gate
-    * must not pay on the hot path.
-    */
-  private val activeDecodes = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Register a reader task with [[activeReaders]] for the lifetime of
-    * its Spark task (no-op off-task, e.g. direct unit-test iteration).
-    */
-  private def trackReader(): Unit =
-    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
-      activeReaders.incrementAndGet()
-      tc.addTaskCompletionListener[Unit](_ => activeReaders.decrementAndGet())
-    }
-
-  /** Small-blob GROUP batching kill switch (A/B): 0 restores the r17
-    * behavior — every sub-threshold payload decodes inline on the parse
-    * thread, nothing is staged. Read per READER (captured into DecodeCtx)
-    * from a system property first so a single-JVM interleaved A/B can
-    * toggle it between reps; env for process-level runs.
-    */
-  private def batchEnabled: Boolean =
-    sys.props.get("graft.mzml.batch")
-      .orElse(sys.env.get("GRAFT_MZML_BATCH")).forall(_ != "0")
-
-  /** Decode a blob: big payloads are staged (compressed-bytes copy) and
-    * decoded off the parse thread individually when capacity exists (see
-    * [[decodePool]]); small payloads are staged into the task's GROUP
-    * batch — one pool handoff per group of spectra (see [[flushPending]]),
-    * because the per-blob handoff measurably dominated sub-KB spectra
-    * (67 -> 22 MB/s when each went async alone, the r17 threshold note).
-    * With the gate closed (full-width scan) everything decodes inline on
-    * the parse thread — the pre-pool path, zero overhead, by construction.
-    */
-  private def decodeAsync(ctx: DecodeCtx, b64len: Int, zlib: Boolean,
+  private[sources] def decodeAsync(ctx: DecodeCtx, b64len: Int, zlib: Boolean,
       is64: Boolean): java.util.concurrent.Future[Array[Double]] = {
     ctx.groupBytes += b64len
-    if (activeDecodes.get + activeReaders.get >= decodePoolSize)
+    def inline(buf: Array[Byte], sc: DecodeCtx) =
       java.util.concurrent.CompletableFuture.completedFuture(
-        decodeBuf(ctx.b64buf, b64len, zlib, is64, ctx))
+        decodeBuf(buf, b64len, zlib, is64, sc))
+    if (!DecodePool.idle) inline(ctx.b64buf, ctx)
     else if (b64len < asyncThreshold) {
-      if (!ctx.batch)
-        java.util.concurrent.CompletableFuture.completedFuture(
-          decodeBuf(ctx.b64buf, b64len, zlib, is64, ctx))
-      else {
-        val p = new PendingBlob(java.util.Arrays.copyOf(ctx.b64buf, b64len),
-          b64len, zlib, is64)
-        ctx.pending.add(p)
-        p.fut
-      }
+      val p = new PendingBlob(java.util.Arrays.copyOf(ctx.b64buf, b64len),
+        b64len, zlib, is64)
+      ctx.pending.add(p)
+      p.fut
     } else {
       val copy = java.util.Arrays.copyOf(ctx.b64buf, b64len)
-      activeDecodes.incrementAndGet()
-      decodePool.submit(new java.util.concurrent.Callable[Array[Double]] {
-        override def call(): Array[Double] =
-          try decodeBuf(copy, b64len, zlib, is64, poolScratch.get())
-          finally activeDecodes.decrementAndGet()
-      })
+      val fut = DecodePool.tryAsync(() =>
+        decodeBuf(copy, b64len, zlib, is64, poolScratch.get()))
+      if (fut != null) fut else inline(copy, ctx)
     }
   }
 
-  /** Submit the task's staged small-blob batch as ONE pool task (or decode
-    * it inline when the idle-core gate is closed / the pool is saturated).
+  /** Submit the task's staged small-blob batch as ONE pool task, or decode
+    * it inline when [[DecodePool]] refuses; true when the pool took it.
     * Called once per parse group by [[pipelined]] — the group handoff is
     * what amortizes the SynchronousQueue rendezvous the per-blob path
     * could not.
     */
-  private def flushPending(ctx: DecodeCtx): Unit = {
-    val n = ctx.pending.size()
-    if (n == 0) return
+  private[sources] def flushPending(ctx: DecodeCtx): Boolean = {
+    if (ctx.pending.isEmpty) return false
     val blobs = new java.util.ArrayList[PendingBlob](ctx.pending)
     ctx.pending.clear()
     def decodeAll(sc: DecodeCtx): Unit = {
@@ -617,27 +543,10 @@ object MzMlFormat extends GraftFormat {
         i += 1
       }
     }
-    if (activeDecodes.get + activeReaders.get < decodePoolSize) {
-      activeDecodes.incrementAndGet()
-      decodePool.execute { () =>
-        try decodeAll(poolScratch.get())
-        finally activeDecodes.decrementAndGet()
-      }
-    } else decodeAll(ctx)
+    val granted = DecodePool.trySubmit(() => decodeAll(poolScratch.get()))
+    if (!granted) decodeAll(ctx)
+    granted
   }
-
-  private def await(f: java.util.concurrent.Future[Array[Double]]): Array[Double] =
-    if (f == null) null
-    else try f.get()
-    catch {
-      // keep the loud original (EOFException on truncated zlib, etc.)
-      case e: java.util.concurrent.ExecutionException =>
-        e.getCause match {
-          case re: RuntimeException => throw re
-          case io: java.io.IOException => throw io
-          case other => throw new RuntimeException(other)
-        }
-    }
 
   /** Bitmask of the binary-array columns a projection actually reads
     * (schema slots 1-3): a scan that prunes mz/intensity/wavelength must
@@ -777,7 +686,7 @@ object MzMlFormat extends GraftFormat {
     while (i <= 3) {
       row(i) = row(i) match {
         case f: java.util.concurrent.Future[_] =>
-          val a = await(f.asInstanceOf[java.util.concurrent.Future[Array[Double]]])
+          val a = DecodePool.await(f.asInstanceOf[java.util.concurrent.Future[Array[Double]]])
           if (a == null) null
           else new GenericInternalRow(Array[Any](
             org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
