@@ -105,15 +105,16 @@ object FormatQueries {
     }
   }
 
-  /** Shared f70/f74 gate: one big UNINDEXED CRAM (no .crai) must fan out
-    * index-free and aggregate exactly. `sweep = false` grades the default
-    * task-open-resync planner path (O(1) driver planning); `sweep = true`
-    * flips `graft.cram.resyncSplit.enabled` off to grade the legacy
-    * driver-side header-skipping sweep on the SAME corpus — both arms must
-    * match the same oracle. Conf overrides (SQL and hadoop) save/restore.
+  /** Shared f70/f74 gate: one big CRAM must fan out and aggregate
+    * exactly. The sink writes it with its `.crai`; a second copy holds the
+    * `.cram` alone. `indexed = false` grades the unindexed copy, split by
+    * task-open resync (O(1) driver planning); `indexed = true` grades the
+    * `.crai` copy, split at the index's container starts — both arms must
+    * match the same oracle. SQL conf overrides save/restore.
     */
-  private def cramIndexFreeGate(s: SparkSession, sweep: Boolean): DataFrame = {
-    val dir = gateDir("cram_aligned")
+  private def cramSplitGate(s: SparkSession, indexed: Boolean): DataFrame = {
+    val dir = gateDir("cram_split")
+    val craiDir = new java.io.File(dir, "crai")
     val cramDir = new java.io.File(dir, "t")
     if (!new java.io.File(dir, "_done").exists()) {
       s.range(0, 120000L).select(
@@ -136,28 +137,29 @@ object FormatQueries {
         .sortWithinPartitions("reference", "start")
         .write.format("cram").mode("overwrite")
         .option("refs", "chr1:40000000,chr2:40000000")
-        .save(cramDir.getAbsolutePath)
-      // delete the sink's .crai: the gate is about the NO-index shape
-      cramDir.listFiles().foreach { f =>
-        if (f.getName.endsWith(".crai")) require(f.delete())
+        .save(craiDir.getAbsolutePath)
+      // the unindexed copy: the .cram without its .crai
+      cramDir.mkdirs()
+      craiDir.listFiles().filter(_.getName.endsWith(".cram")).foreach { f =>
+        java.nio.file.Files.copy(f.toPath, new java.io.File(cramDir, f.getName).toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
+      require(craiDir.listFiles().exists(_.getName.endsWith(".crai")),
+        "the CRAM sink wrote no .crai")
       new java.io.File(dir, "_done").createNewFile()
     }
     val keys = Seq("spark.sql.files.maxPartitionBytes",
       "spark.sql.files.openCostInBytes")
     val saved = keys.map(k => k -> s.conf.getOption(k))
-    val hc = s.sparkContext.hadoopConfiguration
-    val hcKey = "graft.cram.resyncSplit.enabled"
-    val hcSaved = Option(hc.get(hcKey))
     try {
-      if (sweep) hc.set(hcKey, "false")
       s.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
       s.conf.set("spark.sql.files.openCostInBytes", "16384")
-      val df = s.read.format("cram").load(cramDir.getAbsolutePath)
+      val df = s.read.format("cram")
+        .load((if (indexed) craiDir else cramDir).getAbsolutePath)
         .select("reference", "start")
       val parts = df.rdd.getNumPartitions
       require(parts >= 3,
-        s"index-free CRAM ${if (sweep) "sweep" else "resync"} split did " +
+        s"${if (indexed) ".crai-indexed" else "index-free"} CRAM split did " +
           s"not engage: $parts partition(s)")
       val rows = df.groupBy(col("reference"))
         .agg(count(lit(1)).as("n"), sum(col("start")).cast("long").as("sum_start"))
@@ -165,11 +167,8 @@ object FormatQueries {
       import s.implicits._
       rows.toSeq.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toDF("reference", "n", "sum_start")
-    } finally {
-      saved.foreach { case (k, v) =>
-        v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
-      }
-      hcSaved match { case Some(x) => hc.set(hcKey, x); case None => hc.unset(hcKey) }
+    } finally saved.foreach { case (k, v) =>
+      v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
     }
   }
 
@@ -1019,17 +1018,16 @@ object FormatQueries {
     "f72_fastq_bgzf_split" -> ((s, _) => fastqSplitGate(s, bgzf = true)),
 
     // Index-free CRAM container split: a big UNINDEXED CRAM (no .crai —
-    // the landing-zone shape) must fan out. Since round 13 the default
-    // planner path is the TASK-OPEN RESYNC split (O(1) driver planning;
-    // GraftScan.containerResyncSplitChunks + CramFormat.
-    // resyncContainerStart); f74 grades the conf-gated driver-sweep
-    // fallback on the same corpus. Refuses to grade on a one-task plan.
-    "f70_cram_aligned_split" -> ((s, _) => cramIndexFreeGate(s, sweep = false)),
+    // the landing-zone shape) must fan out by TASK-OPEN RESYNC (O(1)
+    // driver planning; ChunkKind.Container + CramFormat.
+    // resyncContainerStart). Refuses to grade on a one-task plan.
+    "f70_cram_aligned_split" -> ((s, _) => cramSplitGate(s, indexed = false)),
 
-    // The legacy driver-side header-skipping sweep (CramFormat.
-    // alignedCutOffsets via graft.cram.resyncSplit.enabled=false), kept as
-    // the escape hatch — must stay row-identical to f70's resync plan.
-    "f74_cram_sweep_split" -> ((s, _) => cramIndexFreeGate(s, sweep = true)),
+    // The same corpus with its .crai: split at the index's container
+    // starts (CramFormat.alignedCutOffsets, ChunkKind.Aligned) — must stay
+    // row-identical to f70's resync plan. (The key predates the index arm:
+    // it graded the driver-side sweep this split replaced.)
+    "f74_cram_sweep_split" -> ((s, _) => cramSplitGate(s, indexed = true)),
 
     // Record-aligned splits of a big uncompressed GenBank flat file (the
     // multi-GB release landing shape, one task before r13): column-0
@@ -2060,7 +2058,7 @@ object FormatQueries {
         |  CAST(179997060000 AS BIGINT) AS sum_start
         |FROM generate_series(1, 2) t(i) ORDER BY reference""".stripMargin,
 
-    // same corpus + oracle as f70: the sweep fallback must agree exactly
+    // same corpus + oracle as f70: the .crai-indexed split must agree exactly
     "f74_cram_sweep_split" ->
       """SELECT 'chr' || CAST(i AS VARCHAR) AS reference,
         |  CAST(60000 AS BIGINT) AS n,

@@ -3329,17 +3329,15 @@ object LlmQueries {
       * what dominates those loops (JobProbe r18: ~37 ms/action). NOT
       * usable when an Observation must be read before the next action
       * (the CC loops) — obs.get would wait forever on the unmaterialized
-      * cut.
+      * cut. Under `spark.graft.checkpointDir` it is the eager [[cut]]: a
+      * lazy reliable checkpoint is written only by a later job that reaches
+      * it with no other marked RDD in between, so a chain of lazy cuts
+      * joined by shuffles (l62's rounds once they outgrow a broadcast)
+      * wrote only its topmost round.
       */
-    def cutLazy(): DataFrame = {
-      val s = df.sparkSession
-      s.conf.getOption("spark.graft.checkpointDir") match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          df.checkpoint(eager = false)
-        case None => df.localCheckpoint(eager = false)
-      }
-    }
+    def cutLazy(): DataFrame =
+      if (df.sparkSession.conf.getOption("spark.graft.checkpointDir").isDefined) cut()
+      else df.localCheckpoint(eager = false)
   }
 
   // NOTE (measured negative, r17 opt round): persist(MEMORY_AND_DISK)
@@ -3367,6 +3365,15 @@ object LlmQueries {
     s.read.parquet(path)
   }
 
+  /** The CC loops' lineage cut: a parquet round-trip under an explicit
+    * `checkpointDir`, else the pack-wide [[CutOps.cut]].
+    */
+  private def ccCut(checkpointDir: Option[String])(df: DataFrame): DataFrame =
+    checkpointDir match {
+      case Some(dir) => reliableParquetCut(df, dir)
+      case None => df.cut()
+    }
+
   private def codecParallelism(s: SparkSession): Int = {
     val p = s.conf.getOption("spark.graft.codec.parallelism").map(_.toInt)
       .getOrElse(s.sparkContext.defaultParallelism)
@@ -3389,13 +3396,9 @@ object LlmQueries {
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 25,
       checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) => reliableParquetCut(df, dir)
-      case None => df.cut()
-    }
-    val edges = cut(pairs.select(col("ida").as("src"), col("idb").as("dst"))
+    val edges = ccCut(checkpointDir)(pairs.select(col("ida").as("src"), col("idb").as("dst"))
       .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
-    var labels = cut(edges.select(col("src").as("doc_id")).distinct()
+    var labels = ccCut(checkpointDir)(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id")))
     var converged = false
     var iter = 0
@@ -3431,7 +3434,7 @@ object LlmQueries {
         .select(col("src").as("doc_id"), col("nl").as("label"),
           lit(false).as("old"))
       val obs = org.apache.spark.sql.Observation()
-      val next = cut(labels
+      val next = ccCut(checkpointDir)(labels
         .select(col("doc_id"), col("label"), lit(true).as("old"))
         .unionAll(prop)
         .groupBy("doc_id").agg(min(col("label")).as("label"),
@@ -3506,11 +3509,7 @@ object LlmQueries {
       roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
       : DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    def cut(df: DataFrame): DataFrame = checkpointDir match {
-      case Some(dir) => reliableParquetCut(df, dir)
-      case None => df.cut()
-    }
-    var edges = cut(pairs
+    var edges = ccCut(checkpointDir)(pairs
       .select(greatest(col("ida"), col("idb")).as("u"),
         least(col("ida"), col("idb")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -3522,7 +3521,7 @@ object LlmQueries {
       // fixpoint signature rides the cut's materialization job (observe);
       // decimal sum: a long sum of 2^63-range hashes overflows under ANSI
       val obs = org.apache.spark.sql.Observation()
-      edges = cut(smallStar(largeStar(edges))
+      edges = ccCut(checkpointDir)(smallStar(largeStar(edges))
         .observe(obs, count(lit(1)).as("n"),
           sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h")))
       val sig = (obs.get("n").asInstanceOf[Long],

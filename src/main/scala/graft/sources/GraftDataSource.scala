@@ -79,22 +79,53 @@ abstract class GraftTableProvider(format: GraftFormat)
   }
 }
 
+/** How the planner cut a chunk from its file, and so how the reader enters
+  * it. Chosen once per file by GraftScan; GraftPartitionReader reads it back.
+  */
+sealed trait ChunkKind extends Serializable
+object ChunkKind {
+  /** The whole file, or a raw-offset cut of an uncompressed splittable file
+    * (Hadoop line convention: a mid-file chunk drops its first partial line).
+    */
+  case object Plain extends ChunkKind
+  /** BGZF virtual range [vStart, vEnd) from an index sibling (region
+    * pruning, or a full-scan cut at indexed record starts).
+    */
+  case object Virtual extends ChunkKind
+  /** Raw compressed-offset cut of a bgzipped line file: the reader aligns to
+    * the first BGZF block at/after the cut, then to lines.
+    */
+  case object Block extends ChunkKind
+  /** Raw compressed-offset cut of a BGZF record file (BAM/BCF/FASTQ): the
+    * reader aligns to a block and the format re-finds a record start.
+    */
+  case object Record extends ChunkKind
+  /** Cut at a format-provided exact container start (`.crai`, FCS stride). */
+  case object Aligned extends ChunkKind
+  /** Raw cut of a container file (CRAM, mzML): the format re-finds the
+    * first container it owns at task open.
+    */
+  case object Container extends ChunkKind
+}
+
 /** One chunk of one file; a partition holds one or more chunks (small files
-  * are packed together, big splittable files are cut at record boundaries).
-  * `vStart`/`vEnd` >= 0 marks a BGZF virtual-position chunk produced by an
-  * index query — the reader seeks to the block and inflates only that range.
+  * are packed together, big files are cut as `kind` says). `vStart`/`vEnd`
+  * are the BGZF virtual bounds of a [[ChunkKind.Virtual]] chunk — the reader
+  * seeks to the block and inflates only that range.
   */
 final case class FileChunk(path: String, start: Long, length: Long, fileSize: Long,
                            partValues: Array[String],
                            vStart: Long = -1L, vEnd: Long = -1L,
-                           blockSplit: Boolean = false,
-                           recordSplit: Boolean = false,
-                           alignedSplit: Boolean = false,
-                           containerSplit: Boolean = false) {
-  def isWholeFile: Boolean =
-    vStart < 0 && !blockSplit && !recordSplit && !alignedSplit &&
-      !containerSplit && start == 0 && length >= fileSize
-  def isBgzfChunk: Boolean = vStart >= 0
+                           kind: ChunkKind = ChunkKind.Plain) {
+  def isBgzfChunk: Boolean = kind == ChunkKind.Virtual
+  def isWholeFile: Boolean = kind == ChunkKind.Plain && start == 0 && length >= fileSize
+  /** A mid-file raw cut of an uncompressed file. */
+  def isSplit: Boolean = kind == ChunkKind.Plain && start > 0
+  /** The decoded stream begins at the file's first byte (in-stream headers present). */
+  def startsAtFileStart: Boolean = if (isBgzfChunk) vStart == 0L else start == 0L
+  /** Raw cut offset a container format resumes from (0 for every other kind). */
+  def startOffset: Long =
+    if (kind == ChunkKind.Aligned || kind == ChunkKind.Container) start else 0L
 }
 
 final case class GraftInputPartition(chunks: Array[FileChunk]) extends InputPartition
@@ -656,59 +687,86 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
 
     val hadoopConf = spark.sparkContext.hadoopConfiguration
 
-    // Cut chunks: index-driven BGZF virtual ranges when a region + tabix
-    // index are available; otherwise whole file, or record-aligned splits for
-    // big uncompressed splittable files.
+    val fmt = table.format
+
+    // One decision per file: index-driven BGZF virtual ranges when a region
+    // and an index sibling are available; otherwise a file that fits one
+    // split stays whole, and a bigger one is cut by the first strategy below
+    // that applies (the whole file when none does).
     def fileChunks(st: FileStatus, vals: Array[String]): Seq[FileChunk] = {
       val p = st.getPath.toString
       val size = st.getLen
-      val canSplit = table.format.splittable && !Codecs.isCompressed(st.getPath.getName)
+      val name = st.getPath.getName.toLowerCase
       val indexed: Option[Seq[FileChunk]] =
         if (region.isEmpty) None
         else {
-          val name = st.getPath.getName.toLowerCase
           val active = GraftScan.activeIndexLookups.incrementAndGet()
           GraftScan.maxConcurrentIndexLookups.accumulateAndGet(active, math.max)
-          try {
-            val idxOpt = GraftScan.cachedIndex(st) {
-              if (name.endsWith(".bam")) BaiIndex.forBam(st.getPath, hadoopConf)
-              else if (name.endsWith(".bcf")) CsiIndex.forBcf(st.getPath, hadoopConf)
-              else if (Codecs.isCompressed(name)) TabixIndex.forFile(st.getPath, hadoopConf)
-              else None
+          try indexOf(st, name).map { idx =>
+            // 1-based inclusive -> 0-based half-open; empty when the index
+            // proves the file has no records for any region. For 0-based
+            // half-open formats (BED) WHERE-derived bounds are already in
+            // file coordinates, so widen the query end by one — residual
+            // filters keep the scan exact, widening can never drop a row.
+            val ranges = region.flatMap { case (chrom, lo, hi) =>
+              val qHi = if (fmt.zeroBasedHalfOpen) hi + 1 else hi
+              idx.query(chrom, lo - 1, qHi)
             }
-            idxOpt.map { idx =>
-              // 1-based inclusive -> 0-based half-open; empty when the index
-              // proves the file has no records for any region. For 0-based
-              // half-open formats (BED) WHERE-derived bounds are already in
-              // file coordinates, so widen the query end by one — residual
-              // filters keep the scan exact, widening can never drop a row.
-              val ranges = region.flatMap { case (chrom, lo, hi) =>
-                val qHi = if (table.format.zeroBasedHalfOpen) hi + 1 else hi
-                idx.query(chrom, lo - 1, qHi)
-              }
-              // Merge overlapping/duplicate virtual ranges ACROSS regions —
-              // two nearby regions can map to intersecting chunk lists, and a
-              // shared BGZF range decoded twice would duplicate every row
-              // that passes the any-region filter (each idx.query merges only
-              // within itself).
-              GraftScan.mergeVirtualRanges(ranges).map { case (vs, ve) =>
-                val approx = math.max(1L, (ve >>> 16) - (vs >>> 16) + (1L << 16))
-                FileChunk(p, 0, approx, size, vals, vs, ve)
-              }
+            // Merge overlapping/duplicate virtual ranges ACROSS regions —
+            // two nearby regions can map to intersecting chunk lists, and a
+            // shared BGZF range decoded twice would duplicate every row
+            // that passes the any-region filter (each idx.query merges only
+            // within itself).
+            GraftScan.mergeVirtualRanges(ranges).map { case (vs, ve) =>
+              val approx = math.max(1L, (ve >>> 16) - (vs >>> 16) + (1L << 16))
+              FileChunk(p, 0, approx, size, vals, vs, ve, ChunkKind.Virtual)
             }
           } finally GraftScan.activeIndexLookups.decrementAndGet()
         }
       indexed.getOrElse {
-        if (canSplit && size > maxSplit) {
-          (0L until size by maxSplit).map { off =>
-            FileChunk(p, off, math.min(maxSplit, size - off), size, vals)
-          }
-        } else bgzfFullScanChunks(st, vals, maxSplit)
-          .orElse(bgzfBlockSplitChunks(st, vals, maxSplit))
-          .orElse(bgzfRecordSplitChunks(st, vals, maxSplit))
-          .orElse(containerResyncSplitChunks(st, vals, maxSplit))
-          .orElse(alignedCutChunks(st, vals, maxSplit))
+        if (size <= maxSplit) Seq(FileChunk(p, 0, size, size, vals))
+        else if (fmt.splittable && !Codecs.isCompressed(name)) rawCuts(st, vals, ChunkKind.Plain)
+        else bgzfFullScanChunks(st, vals, name)
+          .orElse(rawCutKind(st, name).map(rawCuts(st, vals, _)))
+          .orElse(alignedCutChunks(st, vals))
           .getOrElse(Seq(FileChunk(p, 0, size, size, vals)))
+      }
+    }
+
+    /** The index sibling a region query or a full-scan cut reads: `.bai` for
+      * BAM, `.csi` for BCF, `.tbi` for compressed text. Memoized per data
+      * file; a miss is not (GraftScan.indexes).
+      */
+    def indexOf(st: FileStatus, name: String): Option[TabixIndex] =
+      GraftScan.indexes(GraftScan.fileKey(st)) {
+        if (name.endsWith(".bam")) BaiIndex.forBam(st.getPath, hadoopConf)
+        else if (name.endsWith(".bcf")) CsiIndex.forBcf(st.getPath, hadoopConf)
+        else if (Codecs.isCompressed(name)) TabixIndex.forFile(st.getPath, hadoopConf)
+        else None
+      }
+
+    /** `maxSplit`-sized cuts at raw byte offsets, entered as `kind` says. */
+    def rawCuts(st: FileStatus, vals: Array[String], kind: ChunkKind): Seq[FileChunk] = {
+      val size = st.getLen
+      (0L until size by maxSplit).map { off =>
+        FileChunk(st.getPath.toString, off, math.min(maxSplit, size - off), size, vals,
+          kind = kind)
+      }
+    }
+
+    /** Chunks [0, v1), [v1, v2), ..., [vn, EOF) from ascending BGZF virtual
+      * record starts; each length is the compressed span (the pack weight).
+      */
+    def virtualCuts(st: FileStatus, vals: Array[String], points: Seq[Long]): Seq[FileChunk] = {
+      val size = st.getLen
+      val bounds = 0L +: points
+      bounds.indices.map { i =>
+        val vs = bounds(i)
+        val ve = if (i + 1 < bounds.length) bounds(i + 1) else Long.MaxValue
+        val cLen =
+          if (ve == Long.MaxValue) math.max(1L, size - (vs >>> 16))
+          else math.max(1L, (ve >>> 16) - (vs >>> 16))
+        FileChunk(st.getPath.toString, 0, cLen, size, vals, vs, ve, ChunkKind.Virtual)
       }
     }
 
@@ -723,16 +781,13 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       * decoding one block and checking the byte there is '>'; any mismatch
       * abandons splitting (one task, never a mis-split).
       */
-    def fastaFaiGziChunks(st: FileStatus, vals: Array[String],
-                          maxSplit: Long): Option[Seq[FileChunk]] = {
-      val p = st.getPath.toString
-      val size = st.getLen
+    def fastaFaiGziChunks(st: FileStatus, vals: Array[String]): Option[Seq[FileChunk]] = {
       val fs = st.getPath.getFileSystem(hadoopConf)
-      // cut points memoized per (file, mtime, size, maxSplit): each cut's
-      // validation decodes one BGZF block on the driver. Any index-read
-      // failure (truncated .gzi from a partial copy, malformed .fai line)
-      // abandons SPLITTING, never the query — one task is slow, not wrong.
-      val pointsOpt = GraftScan.cachedFastaCuts(st, maxSplit) {
+      // cut points memoized per (file, maxSplit): each cut's validation
+      // decodes one BGZF block on the driver. Any index-read failure
+      // (truncated .gzi from a partial copy, malformed .fai line) abandons
+      // SPLITTING, never the query — one task is slow, not wrong.
+      GraftScan.fastaCuts((GraftScan.fileKey(st), maxSplit)) {
         try {
           if (!FaiIndex.exists(fs, st.getPath) ||
               !GziIndex.exists(fs, st.getPath)) None
@@ -771,139 +826,72 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
             }
           }
         } catch { case _: Exception => None }
+      }.map(virtualCuts(st, vals, _))
+    }
+
+    /** Index-free split at raw byte offsets, for a big file no index covers:
+      * the driver cuts in O(1) (one memoized sniff, no per-record I/O) and
+      * each reader aligns itself to the first boundary it owns. The kind
+      * says how:
+      *   - Block: bgzipped one-line-per-record text with no tabix sibling
+      *     (the .vcf.gz/.gff.gz landing shape) — the reader finds its first
+      *     BGZF block by validated magic scan and aligns to lines by the
+      *     Hadoop convention at block granularity (BgzfBlockSplitInputStream);
+      *   - Record: an unindexed BGZF record file (BAM/BCF with no .bai/.csi,
+      *     bgzipped FASTQ) — the format re-finds the first record whose
+      *     start byte it owns (hadoop-bam SplitGuesser; BamFormat.resyncRecords);
+      *   - Container: an unindexed container file (CRAM with no `.crai`,
+      *     mzML) — the format re-finds the first container it owns
+      *     (CramFormat.resyncContainerStart, the same pattern at container
+      *     granularity), so planning cost is independent of container count.
+      * Plain gzip cannot be entered mid-stream, so the BGZF kinds are gated
+      * on a 16-byte sniff. An index sibling always wins: bgzfFullScanChunks
+      * runs first, and a container format's sibling (`.crai`) vetoes the
+      * resync here, checked on every plan outside the memo — a sibling
+      * dropped next to an already-planned file must switch the next scan
+      * to the indexed path.
+      */
+    def rawCutKind(st: FileStatus, name: String): Option[ChunkKind] = {
+      val key = GraftScan.fileKey(st)
+      def fs = st.getPath.getFileSystem(hadoopConf)
+      def bgzf: Boolean = GraftScan.bgzfSniffs(key) {
+        try {
+          val in = fs.open(st.getPath)
+          try Bgzf.looksLikeBgzf(new java.io.BufferedInputStream(in, 64))
+          finally in.close()
+        } catch { case _: Exception => false }
       }
-      pointsOpt.map { points =>
-        val bounds = 0L +: points
-        bounds.indices.map { i =>
-          val vs = bounds(i)
-          val ve = if (i + 1 < bounds.length) bounds(i + 1) else Long.MaxValue
-          val cLen =
-            if (ve == Long.MaxValue) math.max(1L, size - (vs >>> 16))
-            else math.max(1L, (ve >>> 16) - (vs >>> 16))
-          FileChunk(p, 0, cLen, size, vals, vs, ve)
+      def resyncable: Boolean =
+        !fmt.resyncIndexSibling(st.getPath).exists(ip =>
+          try fs.exists(ip) catch { case _: Exception => false }) &&
+        GraftScan.resyncSniffs(key) {
+          try fmt.resyncSplitSniff(fs, st.getPath)
+          catch { case _: Exception => false }
         }
-      }
-    }
-
-    /** Index-free split of a big bgzipped one-line-per-record text file
-      * (.vcf.gz/.gff.gz/... with NO tabix sibling — the common landing-zone
-      * shape): cut at raw compressed offsets; each reader finds its first
-      * BGZF block boundary by validated magic scan and aligns to lines by
-      * the Hadoop convention at block granularity
-      * (BgzfBlockSplitInputStream). Gated on a 16-byte BGZF sniff — plain
-      * gzip cannot be entered mid-stream and stays one task.
-      */
-    def bgzfBlockSplitChunks(st: FileStatus, vals: Array[String],
-                             maxSplit: Long): Option[Seq[FileChunk]] = {
-      val p = st.getPath.toString
-      val size = st.getLen
-      if (size <= maxSplit || !table.format.lineRecords) return None
-      val name = st.getPath.getName.toLowerCase
-      if (!(name.endsWith(".gz") || name.endsWith(".bgz"))) return None
-      val isBgzf = GraftScan.cachedBgzfSniff(st) {
-        try {
-          val in = st.getPath.getFileSystem(hadoopConf).open(st.getPath)
-          try Bgzf.looksLikeBgzf(new java.io.BufferedInputStream(in, 64))
-          finally in.close()
-        } catch { case _: Exception => false }
-      }
-      if (!isBgzf) return None
-      Some((0L until size by maxSplit).map { off =>
-        FileChunk(p, off, math.min(maxSplit, size - off), size, vals,
-          blockSplit = true)
-      })
-    }
-
-    /** Index-free split of a big UNINDEXED BGZF binary file (BAM/BCF with
-      * no .bai/.csi sibling — the landing-zone shape before `samtools
-      * index` runs): cut at raw compressed offsets; each reader aligns to
-      * the first BGZF block at/after its cut and the FORMAT re-finds the
-      * first record boundary it owns (hadoop-bam SplitGuesser technique —
-      * see BamFormat.resyncRecords). Only engages for formats declaring
-      * `bgzfRecordResync`; runs after bgzfFullScanChunks so an index
-      * sibling, whose virtual offsets are exact record starts, always
-      * wins.
-      */
-    def bgzfRecordSplitChunks(st: FileStatus, vals: Array[String],
-                              maxSplit: Long): Option[Seq[FileChunk]] = {
-      val p = st.getPath.toString
-      val size = st.getLen
-      if (size <= maxSplit || !table.format.bgzfRecordResync) return None
-      // BAM/BCF are BGZF by definition; other resync formats (FASTA/FASTQ)
-      // engage only on compressed names — the 16-byte sniff below then
-      // separates BGZF (splittable) from plain gzip (one task, correct).
-      val name = st.getPath.getName.toLowerCase
-      if (!(name.endsWith(".bam") || name.endsWith(".bcf") ||
-            Codecs.isCompressed(name))) return None
-      val isBgzf = GraftScan.cachedBgzfSniff(st) {
-        try {
-          val in = st.getPath.getFileSystem(hadoopConf).open(st.getPath)
-          try Bgzf.looksLikeBgzf(new java.io.BufferedInputStream(in, 64))
-          finally in.close()
-        } catch { case _: Exception => false }
-      }
-      if (!isBgzf) return None
-      Some((0L until size by maxSplit).map { off =>
-        FileChunk(p, off, math.min(maxSplit, size - off), size, vals,
-          recordSplit = true)
-      })
-    }
-
-    /** Index-free split of a big unindexed container file (CRAM with no
-      * `.crai` sibling) by TASK-OPEN RESYNC: cut at raw offsets in O(1)
-      * driver work — one cached 6-byte magic sniff, no per-container driver
-      * I/O — and let each reader align itself to the first CRC-validated
-      * container start it owns (CramFormat.resyncContainerStart; the
-      * BAM/BCF SplitGuesser pattern at container granularity). This is the
-      * scale-safe path for object-store CRAMs: the alignedCutChunks sweep
-      * below, even windowed + parallel, is O(containers) driver round-trips
-      * when containers outgrow the read-ahead window (every real CRAM —
-      * ~1-5 MB containers). With a `.crai` the sweep path wins instead:
-      * indexed starts are exact and one small read. Set
-      * `graft.cram.resyncSplit.enabled=false` to fall back to the sweep.
-      */
-    def containerResyncSplitChunks(st: FileStatus, vals: Array[String],
-                                   maxSplit: Long): Option[Seq[FileChunk]] = {
-      val p = st.getPath.toString
-      val size = st.getLen
-      if (size <= maxSplit || !table.format.containerResync) return None
-      if (!hadoopConf.getBoolean(
-          s"graft.${table.format.shortName}.resyncSplit.enabled", true))
-        return None
-      // index-sibling veto OUTSIDE the sniff cache: a .crai dropped next to
-      // an already-planned file must flip the NEXT scan to the indexed
-      // path, not wait for (path, mtime, len) cache eviction
-      if (table.format.resyncIndexSibling(st.getPath).exists(ip =>
-          try st.getPath.getFileSystem(hadoopConf).exists(ip)
-          catch { case _: Exception => false }))
-        return None
-      val ok = GraftScan.cachedContainerSniff(st) {
-        try table.format.resyncSplitSniff(
-          st.getPath.getFileSystem(hadoopConf), st.getPath)
-        catch { case _: Exception => false }
-      }
-      if (!ok) return None
-      Some((0L until size by maxSplit).map { off =>
-        FileChunk(p, off, math.min(maxSplit, size - off), size, vals,
-          containerSplit = true)
-      })
+      // BAM/BCF are BGZF by definition; other record formats (FASTQ/FASTA)
+      // engage on any compressed name and the sniff separates BGZF from
+      // plain gzip (one task, correct)
+      def recordNamed = GraftScan.bgzfNamed(name) || Codecs.isCompressed(name)
+      if (fmt.lineRecords && GraftScan.gzNamed(name) && bgzf) Some(ChunkKind.Block)
+      else if (fmt.bgzfRecordResync && recordNamed && bgzf) Some(ChunkKind.Record)
+      else if (fmt.containerResync && resyncable) Some(ChunkKind.Container)
+      else None
     }
 
     /** Full-scan split of a big file at format-provided aligned cut points
-      * (self-delimiting container/record starts — CRAM container
-      * boundaries): cuts are grouped into ~maxSplit-sized chunks, each
+      * (self-delimiting container/record starts — `.crai` container offsets,
+      * FCS event stride): cuts are grouped into ~maxSplit-sized chunks, each
       * reader seeks to its cut and decodes exactly the containers starting
-      * inside [start, start+length). The cut sweep is driver-side, memoized,
-      * and fault-tolerant — any failure falls back to one task, never a
-      * mis-split. Formats without aligned cuts return null at zero cost.
+      * inside [start, start+length). The cut list is memoized and
+      * fault-tolerant — any failure (an unreadable `.crai`) falls back to
+      * one task, never a mis-split. Formats without aligned cuts return
+      * null at zero cost.
       */
-    def alignedCutChunks(st: FileStatus, vals: Array[String],
-                         maxSplit: Long): Option[Seq[FileChunk]] = {
+    def alignedCutChunks(st: FileStatus, vals: Array[String]): Option[Seq[FileChunk]] = {
       val p = st.getPath.toString
       val size = st.getLen
-      if (size <= maxSplit) return None
-      val cuts = GraftScan.cachedAlignedCuts(st) {
-        try Option(table.format.alignedCutOffsets(
+      val cuts = GraftScan.alignedCuts(GraftScan.fileKey(st)) {
+        try Option(fmt.alignedCutOffsets(
           st.getPath.getFileSystem(hadoopConf), st.getPath, size))
           .filter(_.nonEmpty)
         catch { case _: Exception => None }
@@ -917,7 +905,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
         else {
           bounds += size
           Some(bounds.sliding(2).map { w =>
-            FileChunk(p, w(0), w(1) - w(0), size, vals, alignedSplit = true)
+            FileChunk(p, w(0), w(1) - w(0), size, vals, kind = ChunkKind.Aligned)
           }.toSeq)
         }
       }
@@ -932,34 +920,21 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       * unmapped reads) are kept. Coverage is purely positional — every
       * decompressed byte lands in exactly one piece — so the result is
       * independent of the chunking (BgzfSplitSpec asserts invariance).
-      * Without an index the file stays one task: BGZF blocks are
-      * self-delimiting but record boundaries inside them are not
-      * discoverable without decoding. (The reference's BGZF-aware splits,
-      * exon/exon-core/src/datasources/bam; re-planned here at the DSv2
-      * partition level so a 300 GB production BAM fans out over the cluster
-      * instead of decoding on one core.)
+      * Without an index the raw-offset kinds above take over. (The
+      * reference's BGZF-aware splits, exon/exon-core/src/datasources/bam;
+      * re-planned here at the DSv2 partition level so a 300 GB production
+      * BAM fans out over the cluster instead of decoding on one core.)
       */
     def bgzfFullScanChunks(st: FileStatus, vals: Array[String],
-                           maxSplit: Long): Option[Seq[FileChunk]] = {
-      val p = st.getPath.toString
-      val size = st.getLen
-      if (size <= maxSplit) return None
-      val name = st.getPath.getName.toLowerCase
-      // .bam/.bcf are BGZF natively; .gz/.bgz text is BGZF iff a tabix
-      // sibling exists (plain gzip never has one). Other codecs never split.
-      if (!(name.endsWith(".bam") || name.endsWith(".bcf") ||
-            name.endsWith(".gz") || name.endsWith(".bgz"))) return None
+                           name: String): Option[Seq[FileChunk]] =
       // bgzipped FASTA with .fai + .gzi siblings: record starts derive from
       // the .fai (multi-line records — the line-split path can't apply)
-      if ((name.endsWith(".gz") || name.endsWith(".bgz")) &&
-          table.format.splittable && !table.format.lineRecords)
-        return fastaFaiGziChunks(st, vals, maxSplit)
-      val idxOpt = GraftScan.cachedIndex(st) {
-        if (name.endsWith(".bam")) BaiIndex.forBam(st.getPath, hadoopConf)
-        else if (name.endsWith(".bcf")) CsiIndex.forBcf(st.getPath, hadoopConf)
-        else TabixIndex.forFile(st.getPath, hadoopConf)
-      }
-      idxOpt.flatMap { idx =>
+      if (GraftScan.gzNamed(name) && fmt.splittable && !fmt.lineRecords)
+        fastaFaiGziChunks(st, vals)
+      // .bam/.bcf are BGZF natively; .gz/.bgz text is BGZF iff a tabix
+      // sibling exists (plain gzip never has one). Other codecs never split.
+      else if (!GraftScan.bgzfNamed(name)) None
+      else indexOf(st, name).flatMap { idx =>
         val starts = idx.bins.iterator
           .flatMap(_.valuesIterator).flatten.map(_._1).toArray
         java.util.Arrays.sort(starts)
@@ -977,20 +952,8 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
           }
           i += 1
         }
-        if (points.isEmpty) None
-        else {
-          val bounds = 0L +: points.toSeq
-          Some(bounds.indices.map { i =>
-            val vs = bounds(i)
-            val ve = if (i + 1 < bounds.length) bounds(i + 1) else Long.MaxValue
-            val cLen =
-              if (ve == Long.MaxValue) math.max(1L, size - (vs >>> 16))
-              else math.max(1L, (ve >>> 16) - (vs >>> 16))
-            FileChunk(p, 0, cLen, size, vals, vs, ve)
-          })
-        }
+        if (points.isEmpty) None else Some(virtualCuts(st, vals, points.toSeq))
       }
-    }
 
     // Index pruning opens one .tbi/.bai/.csi per file; at tens of thousands
     // of indexed files on an object store (~10 ms RTT each) a serial driver
@@ -999,13 +962,8 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     // BGZF-split-eligible (the full-scan split loads the same indexes);
     // only plans that touch no index at all stay serial (pure metadata
     // math).
-    def bgzfEligible(st: FileStatus): Boolean = {
-      val n = st.getPath.getName.toLowerCase
-      n.endsWith(".bam") || n.endsWith(".bcf") ||
-        n.endsWith(".gz") || n.endsWith(".bgz")
-    }
     val needsIndexes = region.nonEmpty || pruned.exists { case (st, _) =>
-      bgzfEligible(st) && st.getLen > maxSplit
+      GraftScan.bgzfNamed(st.getPath.getName.toLowerCase) && st.getLen > maxSplit
     }
     val chunks: Seq[FileChunk] =
       if (!needsIndexes || pruned.size <= 1)
@@ -1096,6 +1054,32 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
   }
 }
 
+/** Bounded memo of driver-side planning work (index parses, sniffs, cut
+  * points), keyed by a data file's (path, mtime, len[, maxSplit]): repeat
+  * queries over an unchanged corpus skip the object-store round trips, and
+  * a rewritten file re-keys. At `capacity` the least recently used entry is
+  * evicted — one entry, never the map; correctness never depends on a hit.
+  * No lock is held across a load: a concurrent duplicate load is harmless
+  * (values are immutable, last write wins), while holding the lock across
+  * an object-store fetch would serialize the planning fan-out. A loaded
+  * value that `keep` rejects is returned but not memoized.
+  */
+private[sources] final class PlanMemo[K, V](capacity: Int = 4096,
+                                            keep: V => Boolean = (_: V) => true) {
+  private val map = new java.util.LinkedHashMap[K, V](256, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+      size() > capacity
+  }
+
+  def apply(key: K)(load: => V): V =
+    map.synchronized(if (map.containsKey(key)) Some(map.get(key)) else None)
+      .getOrElse {
+        val v = load
+        if (keep(v)) map.synchronized(map.put(key, v))
+        v
+      }
+}
+
 object GraftScan {
   /** Test instrumentation: high-water mark of concurrent per-file index
     * lookups during planInputPartitions (proves the pruning fan-out).
@@ -1109,14 +1093,11 @@ object GraftScan {
   private[sources] val activeListings = new java.util.concurrent.atomic.AtomicInteger
   private[sources] val maxConcurrentListings = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Exact row count from `.fai` siblings — defined only when EVERY file in
-    * the set is an uncompressed FASTA with an index (one .fai line per
-    * sequence). Counts are cached by (path, mtime, length); the .fai itself
-    * is tiny, so a miss costs one small read, never a data-file scan.
+  /** Exact row count from index siblings — defined only when EVERY file in
+    * the set has one (see perFile below). Counts are memoized per data file;
+    * the index itself is tiny, so a miss costs one small read, never a
+    * data-file scan.
     */
-  private val faiCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), java.lang.Long]()
-
   private[sources] def indexRowCount(format: GraftFormat,
       files: Seq[(FileStatus, Array[String])],
       conf: org.apache.hadoop.conf.Configuration): Option[Long] = {
@@ -1141,139 +1122,63 @@ object GraftScan {
     val it = files.iterator
     while (it.hasNext) {
       val st = it.next()._1
-      val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-      var c = faiCountCache.get(key)
-      if (c == null) {
-        perFile(st) match {
-          case Some(n) =>
-            if (faiCountCache.size > 65536) faiCountCache.clear()
-            c = java.lang.Long.valueOf(n)
-            faiCountCache.put(key, c)
-          case None => return None
-        }
+      rowCounts(fileKey(st))(perFile(st)) match {
+        case Some(n) => total += n
+        case None => return None
       }
-      total += c.longValue
     }
     Some(total)
   }
 
-  /** Driver-side cache of parsed .tbi/.bai/.csi indexes, keyed by the data
-    * file's (path, mtime, length): repeated region queries over the same
-    * corpus skip the per-file index fetch+parse entirely (at object-store
-    * RTTs that is the dominant planning cost). TabixIndex is immutable, so
-    * sharing across queries and planner threads is safe.
-    *
-    * Misses (no index sibling) are NOT cached: an index dropped next to an
-    * existing data file must be picked up by the next query, not ignored
-    * for the JVM lifetime. Bounded LRU (insertion order) — eviction drops
-    * only the oldest entry, never the whole map; correctness never depends
-    * on a hit.
+  /** A data file's identity in the planning memos: a rewrite changes its
+    * mtime or length, so it re-keys.
     */
-  private val indexCacheCapacity = 4096
-  private val indexCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), TabixIndex](256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), TabixIndex]): Boolean =
-          size() > indexCacheCapacity
-      })
+  private type FileKey = (String, Long, Long)
+  private def fileKey(st: FileStatus): FileKey =
+    (st.getPath.toString, st.getModificationTime, st.getLen)
 
-  private[sources] def cachedIndex(st: FileStatus)(
-      load: => Option[TabixIndex]): Option[TabixIndex] = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-    Option(indexCache.get(key)).orElse {
-      // Not synchronized around the load: a concurrent duplicate parse is
-      // harmless (immutable value, last-write-wins), while holding the map
-      // lock across an object-store fetch would serialize the pruning pool.
-      val loaded = load
-      loaded.foreach(idx => indexCache.put(key, idx))
-      loaded
-    }
-  }
+  /** `.gz`/`.bgz`: compressed text that is BGZF when a sniff or an index says so. */
+  private def gzNamed(lowerName: String): Boolean =
+    lowerName.endsWith(".gz") || lowerName.endsWith(".bgz")
 
-  // BGZF sniff results (16-byte probe) and fai+gzi full-scan cut points:
-  // both are per-(file, mtime, size[, maxSplit]) planning work that repeat
-  // queries would otherwise redo — one open per big .gz per PLAN is an RTT
-  // per file on an object store. Same LRU discipline as the index cache.
-  private val bgzfSniffCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), java.lang.Boolean](
-        256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), java.lang.Boolean]): Boolean =
-          size() > indexCacheCapacity
-      })
+  /** Names that can be BGZF and carry a `.bai`/`.csi`/`.tbi` sibling. */
+  private def bgzfNamed(lowerName: String): Boolean =
+    gzNamed(lowerName) || lowerName.endsWith(".bam") || lowerName.endsWith(".bcf")
 
-  private[sources] def cachedBgzfSniff(st: FileStatus)(probe: => Boolean): Boolean = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-    val c = bgzfSniffCache.get(key)
-    if (c != null) c.booleanValue()
-    else { val v = probe; bgzfSniffCache.put(key, java.lang.Boolean.valueOf(v)); v }
-  }
-
-  private val containerSniffCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), java.lang.Boolean](
-        256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), java.lang.Boolean]): Boolean =
-          size() > indexCacheCapacity
-      })
-
-  /** Memoized resync-splittability sniff for container formats (CRAM magic
-    * + no index sibling) — the only driver I/O the task-open resync split
-    * does, so planning stays O(1) per file on an object store.
+  /** Parsed .tbi/.bai/.csi indexes: repeated region queries over the same
+    * corpus skip the per-file index fetch and parse (at object-store RTTs
+    * the dominant planning cost). TabixIndex is immutable, so sharing
+    * across queries and planner threads is safe. A miss (no index sibling)
+    * is NOT memoized: an index dropped next to an existing data file must
+    * be picked up by the next query, not ignored for the JVM lifetime.
     */
-  private[sources] def cachedContainerSniff(st: FileStatus)(probe: => Boolean): Boolean = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-    val c = containerSniffCache.get(key)
-    if (c != null) c.booleanValue()
-    else { val v = probe; containerSniffCache.put(key, java.lang.Boolean.valueOf(v)); v }
-  }
+  private val indexes = new PlanMemo[FileKey, Option[TabixIndex]](keep = _.isDefined)
 
-  private val fastaCutCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long, Long), Option[Seq[Long]]](
-        256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long, Long), Option[Seq[Long]]]): Boolean =
-          size() > indexCacheCapacity
-      })
+  /** Index row counts (indexRowCount); a file without one is not memoized. */
+  private val rowCounts = new PlanMemo[FileKey, Option[Long]](keep = _.isDefined)
 
-  /** Validated fasta fai+gzi cut virtual offsets, or None when splitting
-    * was abandoned — memoized because each cut's validation decodes one
-    * BGZF block on the driver.
+  /** 16-byte BGZF sniffs: one open per big .gz per PLAN is an RTT per file
+    * on an object store.
     */
-  private[sources] def cachedFastaCuts(st: FileStatus, maxSplit: Long)(
-      compute: => Option[Seq[Long]]): Option[Seq[Long]] = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen, maxSplit)
-    val c = fastaCutCache.get(key)
-    if (c != null) c
-    else { val v = compute; fastaCutCache.put(key, v); v }
-  }
+  private val bgzfSniffs = new PlanMemo[FileKey, Boolean]()
 
-  private val alignedCutCache =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(String, Long, Long), Option[Array[Long]]](
-        256, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(String, Long, Long), Option[Array[Long]]]): Boolean =
-          size() > indexCacheCapacity
-      })
-
-  /** Format-provided aligned cut offsets (CRAM container starts), or None
-    * when the format has none / the sweep refused — memoized because the
-    * no-index sweep reads one header per container on the driver. Keyed
-    * without maxSplit: the offsets are maxSplit-independent; chunk grouping
-    * is recomputed cheaply per plan.
+  /** Container resync sniffs (GraftFormat.resyncSplitSniff) — the only
+    * driver I/O the Container split does, so planning stays O(1) per file.
     */
-  private[sources] def cachedAlignedCuts(st: FileStatus)(
-      compute: => Option[Array[Long]]): Option[Array[Long]] = {
-    val key = (st.getPath.toString, st.getModificationTime, st.getLen)
-    val c = alignedCutCache.get(key)
-    if (c != null) c
-    else { val v = compute; alignedCutCache.put(key, v); v }
-  }
+  private val resyncSniffs = new PlanMemo[FileKey, Boolean]()
+
+  /** Validated fasta fai+gzi cut virtual offsets per maxSplit, or None when
+    * splitting was abandoned — each cut's validation decodes one BGZF block
+    * on the driver.
+    */
+  private val fastaCuts = new PlanMemo[(FileKey, Long), Option[Seq[Long]]]()
+
+  /** Format-provided aligned cut offsets (`.crai` container starts, FCS
+    * stride), or None when the format has none or they could not be read.
+    * Keyed without maxSplit: the offsets do not depend on it, and chunk
+    * grouping is recomputed cheaply per plan.
+    */
+  private val alignedCuts = new PlanMemo[FileKey, Option[Array[Long]]]()
 
   /** Coalesce BGZF virtual-position ranges: sort by start, merge any that
     * overlap or touch. Ranges are (vStart, vEnd) virtual offsets; a record
@@ -1580,33 +1485,30 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
       fs.openFile(path).withFileStatus(status).build())
     val raw = open()
     val compressed = Codecs.isCompressed(path.getName)
-    val isSplit = c.start > 0 && !c.isBgzfChunk && !c.blockSplit &&
-      !c.recordSplit && !c.alignedSplit && !c.containerSplit
     var resync: BgzfResyncInputStream = null
-    val mkLines: () => ByteLineReader =
-      if (c.recordSplit) {
+    def noLines(what: String): () => ByteLineReader =
+      () => throw new IllegalStateException(s"$what chunks have no line view")
+    val mkLines: () => ByteLineReader = c.kind match {
+      case ChunkKind.Record =>
         // binary record-resync chunk: the FORMAT consumes `resync` directly
         // (BAM/BCF record boundaries are not lines)
         resync = new BgzfResyncInputStream(raw, c.start, c.start + c.length,
           c.fileSize)
         stream = resync
-        () => throw new IllegalStateException(
-          "record-resync chunks have no line view")
-      } else if (c.alignedSplit) {
+        noLines("record-resync")
+      case ChunkKind.Aligned =>
         // aligned container chunk (CRAM): the cut IS a container start, so
         // the format consumes the raw stream from there directly
         if (c.start > 0) raw.seek(c.start)
         stream = raw
-        () => throw new IllegalStateException(
-          "aligned container chunks have no line view")
-      } else if (c.containerSplit) {
-        // container-resync chunk (CRAM): the cut is a RAW offset; the
-        // format re-finds the first CRC-validated container start it owns
-        // and seeks there itself (task-open resync)
+        noLines("aligned container")
+      case ChunkKind.Container =>
+        // container-resync chunk (CRAM, mzML): the cut is a RAW offset; the
+        // format re-finds the first container start it owns and seeks
+        // there itself (task-open resync)
         stream = raw
-        () => throw new IllegalStateException(
-          "container-resync chunks have no line view")
-      } else if (c.blockSplit) {
+        noLines("container-resync")
+      case ChunkKind.Block =>
         stream = new BgzfBlockSplitInputStream(raw, c.start, c.start + c.length,
           c.fileSize)
         val s = stream
@@ -1618,15 +1520,15 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
           if (c.start > 0) r.readLine()
           r
         }
-      } else if (c.isBgzfChunk) {
+      case ChunkKind.Virtual =>
         stream = new BgzfChunkInputStream(raw, c.vStart, c.vEnd)
         val s = stream
         () => new ByteLineReader(s, 0L)
-      } else if (compressed) {
+      case ChunkKind.Plain if compressed =>
         stream = Codecs.wrap(path.getName, raw)
         val s = stream
         () => new ByteLineReader(s, 0L)
-      } else if (isSplit) {
+      case ChunkKind.Plain if c.isSplit =>
         stream = raw
         () => {
           // Hadoop convention: back up one byte and discard one (partial)
@@ -1636,25 +1538,22 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
           r.readLine()
           r
         }
-      } else {
+      case ChunkKind.Plain =>
         stream = raw
         val s = stream
         () => new ByteLineReader(s, 0L)
-      }
+    }
     val end = if (c.isWholeFile || compressed || c.isBgzfChunk) Long.MaxValue
               else c.start + c.length
     partVals = c.partValues.map(v =>
       (if (v == null) null else UTF8String.fromString(v)): Any)
     val reopen = () => open(): java.io.InputStream
     it = format.records(
-      new RecordInput(mkLines, stream, end, isSplit, c.isBgzfChunk, reopen, path, fs,
-        startsAtFileStart = !isSplit && (!c.isBgzfChunk || c.vStart == 0L) &&
-          (!c.blockSplit || c.start == 0L) && (!c.recordSplit || c.start == 0L) &&
-          (!c.alignedSplit || c.start == 0L) &&
-          (!c.containerSplit || c.start == 0L),
+      new RecordInput(mkLines, stream, end, c.isSplit, c.isBgzfChunk, reopen, path, fs,
+        startsAtFileStart = c.startsAtFileStart,
         resync = resync,
-        startOffset = if (c.alignedSplit || c.containerSplit) c.start else 0L,
-        containerResyncSplit = c.containerSplit,
+        startOffset = c.startOffset,
+        containerResyncSplit = c.kind == ChunkKind.Container,
         fileSize = c.fileSize),
       dataSchema, parseCols)
     true

@@ -79,9 +79,10 @@ trait GraftFormat extends Serializable {
     * of big files the other strategies can't cut: the planner cuts at raw
     * offsets in O(1) driver work (one cached [[resyncSplitSniff]], no
     * per-record driver I/O) and each reader aligns itself to the first
-    * boundary it owns. Preferred over [[alignedCutOffsets]]' driver sweep
-    * whenever no index sibling provides exact starts. Formats setting this
-    * must handle `input.containerResyncSplit` in records() and override
+    * boundary it owns. It is the split whenever no index sibling
+    * ([[resyncIndexSibling]]) exists; the indexed path reads exact starts
+    * through [[alignedCutOffsets]] instead. Formats setting this must
+    * handle `input.containerResyncSplit` in records() and override
     * [[resyncSplitSniff]].
     */
   def containerResync: Boolean = false
@@ -107,12 +108,13 @@ trait GraftFormat extends Serializable {
 
   /** Ascending raw-byte offsets of self-delimiting container/record starts
     * usable as cut points for a whole-file split of one big file (CRAM
-    * container boundaries). Null when the format has none. Driver-side and
-    * memoized by the planner; implementations must be cheap relative to
-    * the scan they parallelize (an index read, or one header-skipping
-    * sweep). Readers of the resulting chunks see `startOffset`/`end` on
-    * RecordInput and must decode exactly the containers starting inside
-    * [startOffset, end).
+    * container starts from the `.crai`, FCS event stride). Null when the
+    * format has none, and for a CRAM without a `.crai`. Driver-side and
+    * memoized by the planner; implementations must be one small read (an
+    * index, a metadata header), never a pass over the file, and a failure
+    * (an unreadable `.crai`) plans the file as one task. Readers of the
+    * resulting chunks see `startOffset`/`end` on RecordInput and must
+    * decode exactly the containers starting inside [startOffset, end).
     */
   def alignedCutOffsets(fs: org.apache.hadoop.fs.FileSystem,
                         path: org.apache.hadoop.fs.Path,

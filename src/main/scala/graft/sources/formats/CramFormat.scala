@@ -444,15 +444,14 @@ class CramFormat(refPath: Option[String],
     }
   }
 
-  /** Container starts usable as full-scan cut points (index-free CRAM
-    * split). Prefer the `.crai` sibling — its containerOffsets are true
-    * container starts, one small gzip'd read. Without one, a driver-side
-    * header-skipping sweep chains container lengths (positioned reads of
-    * ~100 header bytes per container, no payload decoded). Memoized by the
-    * planner (GraftScan.cachedAlignedCuts). Any subset of true container
-    * starts is a valid cut set: a chunk decodes every container starting
-    * inside its bounds, so containers absent from the cut list are simply
-    * owned by the preceding cut's chunk.
+  /** `.crai` container starts as full-scan cut points — true container
+    * starts from one small gzip'd read, memoized by the planner
+    * (GraftScan.alignedCuts). Null without a `.crai`: an unindexed CRAM is
+    * cut at raw offsets and resynced at task open (resyncContainerStart).
+    * Any subset of true container starts is a valid cut set: a chunk
+    * decodes every container starting inside its bounds, so containers
+    * absent from the cut list are simply owned by the preceding cut's
+    * chunk.
     */
   override def alignedCutOffsets(fs: org.apache.hadoop.fs.FileSystem,
                                  path: org.apache.hadoop.fs.Path,
@@ -461,56 +460,18 @@ class CramFormat(refPath: Option[String],
       case Some(entries) if entries.nonEmpty =>
         entries.iterator.map(_.containerOffset)
           .filter(o => o > 26 && o < fileSize).toArray.distinct.sorted
-      case _ => sweepContainerStarts(fs, path, fileSize)
+      case _ => null
     }
-
-  /** One header-skipping sweep over an unindexed CRAM: read each container
-    * header, chain `headerBytes + length` to the next. Returns ascending
-    * data-container starts (FILE_HEADER container excluded), or null to
-    * refuse splitting (malformed/unsupported stream — the whole-file reader
-    * will raise the real error; a refusal here only costs parallelism).
-    *
-    * Scale design (the round-11 finding): a naive chain does one positioned
-    * driver read PER CONTAINER — an O(containers) planning stall on a 300 GB
-    * object-store CRAM (~300k serial GETs). Two fixes compose here:
-    *   1. a forward read-ahead window ([[SweepWindow]]) so one positioned
-    *      read serves every container header starting inside it — read count
-    *      scales with file-size/window for small containers and is <=
-    *      file-size/window + containers-larger-than-a-window always;
-    *   2. above `graft.cram.sweep.parallelThreshold` bytes the sweep fans
-    *      out over `graft.cram.sweep.threads` driver threads, each
-    *      resynchronising inside its byte segment via the container header's
-    *      own CRC32 (spec §9: the header ends with a CRC of its preceding
-    *      bytes — a ~2^-32-per-offset validator, double-checked against the
-    *      next chained header). Segment chains are stitched exactly: every
-    *      reported first-start must equal the previous segment's exit
-    *      position and the last chain must land on EOF, else the whole
-    *      result is discarded for the serial sweep. False resyncs can cost
-    *      a fallback, never a wrong cut.
-    */
-  private def sweepContainerStarts(fs: org.apache.hadoop.fs.FileSystem,
-                                   path: org.apache.hadoop.fs.Path,
-                                   fileSize: Long): Array[Long] = {
-    if (fileSize < 26) return null
-    val conf = fs.getConf
-    val winSize = math.max(1 << 13,
-      conf.getInt("graft.cram.sweep.window", 1 << 16))
-    val parThreshold =
-      conf.getLong("graft.cram.sweep.parallelThreshold", 64L << 20)
-    val threads = conf.getInt("graft.cram.sweep.threads", 8)
-    val minSeg =
-      math.max(winSize.toLong, conf.getLong("graft.cram.sweep.minSegment", 8L << 20))
-    if (fileSize >= parThreshold && threads > 1)
-      sweepParallel(fs, path, fileSize, winSize, threads, minSeg)
-    else sweepSerial(fs, path, fileSize, winSize)
-  }
 
   /** Max container-header bytes fetched per probe. A 3.0 header is
     * 4 + 4 itf8 + 2 ltf8 + (2 + nLandmarks) itf8 + 4 bytes — under 100 for
     * typical single-slice containers; 4 KB covers ~800 landmarks. Jumbo
-    * headers get one full-window retry in [[chainContainers]].
+    * headers get bigger retries in [[SweepWindow.spanAt]].
     */
   private val HdrNeed = 4096
+
+  /** Read-ahead window of the task-open resync scan. */
+  private val ResyncWindow = 1 << 16
 
   /** Parse + CRC-verify one container header at buf(off..off+avail), with
     * `pos` its absolute file offset. Three-state result:
@@ -521,17 +482,17 @@ class CramFormat(refPath: Option[String],
     *     the verdict needs more bytes (jumbo header, many landmarks). The
     *     caller MUST retry with a bigger buffer: treating -2 as -1 at a
     *     true container start would silently drop that container's records
-    *     in a resync scan, and silently fall a whole sweep back to serial.
+    *     in a resync scan.
     *   - -3: the header is CRC-VALID but its payload runs past EOF — a
     *     truncated file (partial copy), not garbage. The task-open resync
     *     MUST raise this loudly: treating it as -1 would skip the
     *     container and return silently fewer rows, where the whole-file
     *     reader raises "truncated container". (A false -3 needs a CRC
     *     match on plausible fields at a random offset, ~2^-58 per byte.)
-    * The CRC check is what makes this usable as a resync validator, not
-    * just a chain-follower. Every field is bounds-checked against `avail`
-    * BEFORE its value is judged, so stale window bytes past `avail` can
-    * never turn "truncated" into a semantic accept/reject.
+    * The CRC check is what makes this usable as a resync validator. Every
+    * field is bounds-checked against `avail` BEFORE its value is judged, so
+    * stale window bytes past `avail` can never turn "truncated" into a
+    * semantic accept/reject.
     */
   private[sources] def containerSpanAt(buf: Array[Byte], off: Int, avail: Int,
                                        pos: Long, fileSize: Long): Long = {
@@ -590,24 +551,22 @@ class CramFormat(refPath: Option[String],
     } catch { case _: ArrayIndexOutOfBoundsException => trunc }
   }
 
-  /** Forward read-ahead window over positioned reads. One refill serves
-    * every container header starting inside it; `reads` counts refills so
-    * tests can assert the sweep's I/O bound (S3CramSweepSpec: GETs scale
-    * with file-size/window, not container count).
+  /** Forward read-ahead window over positioned reads: one refill serves
+    * every candidate header starting inside it, so a resync scan costs a
+    * ranged GET per window, not per probed offset.
     */
   private final class SweepWindow(in: org.apache.hadoop.fs.FSDataInputStream,
                                   fileSize: Long, val winSize: Int) {
     val buf = new Array[Byte](winSize)
     private var winStart = -1L
     private var winLen = 0
-    var reads = 0L
     /** Buffer offset of `pos`, with min(need, EOF-pos) bytes available. */
     def ensure(pos: Long, need: Int): Int = {
       val want = math.min(math.min(need, winSize).toLong, fileSize - pos).toInt
       if (winStart < 0 || pos < winStart || pos + want > winStart + winLen) {
         val n = math.min(winSize.toLong, fileSize - pos).toInt
         in.readFully(pos, buf, 0, n)
-        winStart = pos; winLen = n; reads += 1
+        winStart = pos; winLen = n
       }
       (pos - winStart).toInt
     }
@@ -633,140 +592,11 @@ class CramFormat(refPath: Option[String],
         val n = math.min(cap, fileSize - pos).toInt
         val big = new Array[Byte](n)
         in.readFully(pos, big, 0, n)
-        reads += 1
         span = containerSpanAt(big, 0, n, pos, fileSize)
         cap *= 2
       }
       if (span == -2L) -1L else span
     }
-  }
-
-  /** Chain CRC-validated container headers from `from` (a true container
-    * start) while pos < stop, appending each start (the first only when
-    * `includeFrom`) to `out`. Returns the exit position — the first
-    * container start >= stop, or fileSize when the chain ends exactly at
-    * EOF — or -1 on any invalid header.
-    */
-  private def chainContainers(w: SweepWindow, from: Long, stop: Long,
-                              fileSize: Long, out: mutable.ArrayBuffer[Long],
-                              includeFrom: Boolean): Long = {
-    var pos = from
-    var first = !includeFrom
-    while (pos < stop) {
-      val span = w.spanAt(pos) // jumbo retries live in spanAt
-      if (span < 0) return -1L
-      if (!first) out += pos
-      first = false
-      pos += span
-    }
-    pos
-  }
-
-  private def sweepSerial(fs: org.apache.hadoop.fs.FileSystem,
-                          path: org.apache.hadoop.fs.Path,
-                          fileSize: Long, winSize: Int): Array[Long] = {
-    val in = fs.open(path)
-    try {
-      val w = new SweepWindow(in, fileSize, winSize)
-      val off = w.ensure(0L, 26)
-      val b = w.buf
-      if (!(b(off) == 'C' && b(off + 1) == 'R' && b(off + 2) == 'A' &&
-            b(off + 3) == 'M' && b(off + 4) == 3)) return null
-      val out = mutable.ArrayBuffer[Long]()
-      // container at 26 is the FILE_HEADER container: chained, not emitted
-      if (chainContainers(w, 26L, fileSize, fileSize, out,
-          includeFrom = false) != fileSize) null
-      else out.toArray
-    } catch { case _: Exception => null }
-    finally in.close()
-  }
-
-  /** Byte-segment result: starts found in [seg, segEnd), the first of them
-    * (-1 when the segment is interior to one spanning container), and the
-    * chain's exit position (first start >= segEnd).
-    */
-  private final case class SweepSeg(starts: Array[Long], first: Long,
-                                    exit: Long, ok: Boolean)
-
-  private def sweepParallel(fs: org.apache.hadoop.fs.FileSystem,
-                            path: org.apache.hadoop.fs.Path, fileSize: Long,
-                            winSize: Int, threads: Int,
-                            minSeg: Long): Array[Long] = {
-    val t = math.min(threads.toLong, math.max(1L, (fileSize - 26) / minSeg)).toInt
-    if (t <= 1) return sweepSerial(fs, path, fileSize, winSize)
-    def serial(): Array[Long] = sweepSerial(fs, path, fileSize, winSize)
-    val bounds = Array.tabulate(t + 1)(i => 26L + (fileSize - 26L) * i / t)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(t)
-    try {
-      val futs = (0 until t).map { i =>
-        pool.submit(new java.util.concurrent.Callable[SweepSeg] {
-          override def call(): SweepSeg = try {
-            val in = fs.open(path)
-            try {
-              val w = new SweepWindow(in, fileSize, winSize)
-              val out = mutable.ArrayBuffer[Long]()
-              if (i == 0) {
-                val off = w.ensure(0L, 26)
-                val b = w.buf
-                if (!(b(off) == 'C' && b(off + 1) == 'R' && b(off + 2) == 'A' &&
-                      b(off + 3) == 'M' && b(off + 4) == 3))
-                  return SweepSeg(Array.empty, -1L, -1L, ok = false)
-                val exit = chainContainers(w, 26L, bounds(1), fileSize, out,
-                  includeFrom = false)
-                SweepSeg(out.toArray, 26L, exit, exit >= 0)
-              } else {
-                // resync: first offset in the segment whose header CRC-parses
-                // AND whose chained successor does too (or lands on EOF).
-                // spanAt's jumbo escalation means a true start with a >4 KB
-                // header is still confirmed here, not skipped into a serial
-                // fallback.
-                var cand = bounds(i)
-                var found = -1L
-                while (found < 0 && cand < bounds(i + 1)) {
-                  val span = w.spanAt(cand)
-                  if (span > 0) {
-                    val next = cand + span
-                    if (next == fileSize || w.spanAt(next) > 0) found = cand
-                  }
-                  if (found < 0) cand += 1
-                }
-                if (found < 0) SweepSeg(Array.empty, -1L, -1L, ok = true)
-                else {
-                  val exit = chainContainers(w, found, bounds(i + 1), fileSize,
-                    out, includeFrom = true)
-                  SweepSeg(out.toArray, found, exit, exit >= 0)
-                }
-              }
-            } finally in.close()
-          } catch {
-            case _: Exception => SweepSeg(Array.empty, -1L, -1L, ok = false)
-          }
-        })
-      }
-      val segs = futs.map(_.get())
-      if (segs.exists(!_.ok)) return serial()
-      if (segs(0).first != 26L) return serial()
-      val all = mutable.ArrayBuffer[Long]()
-      all ++= segs(0).starts
-      var expected = segs(0).exit
-      var i = 1
-      while (i < t) {
-        val s = segs(i)
-        if (expected >= bounds(i + 1)) {
-          // one container spans this whole segment; any "start" the resync
-          // reported there would be a false positive
-          if (s.first >= 0) return serial()
-        } else {
-          if (s.first != expected) return serial()
-          all ++= s.starts
-          expected = s.exit
-        }
-        i += 1
-      }
-      if (expected != fileSize) return serial()
-      all.toArray
-    } catch { case _: Exception => serial() }
-    finally pool.shutdown()
   }
 
   /** File definition: magic "CRAM", major.minor, 20-byte file id. Decoding
@@ -837,18 +667,17 @@ class CramFormat(refPath: Option[String],
     * when no container starts inside [from, until) — the chunk is interior
     * to one spanning container and owns nothing. A candidate is accepted
     * only when its header CRC-parses AND its chained successor does too (or
-    * lands exactly on EOF) — the same double confirmation as the driver-side
-    * parallel sweep, ~2^-64 false-positive odds per offset. This is the
-    * task-open half of the resync split: the driver cuts at raw offsets in
-    * O(1) and each task aligns itself here (the BAM/BCF SplitGuesser
-    * pattern — GraftDataSource.bgzfRecordSplitChunks — at container
-    * granularity), so planning cost is independent of container count even
-    * on a 300 GB object-store CRAM.
+    * lands exactly on EOF), ~2^-64 false-positive odds per offset. This is
+    * the task-open half of the resync split: the driver cuts at raw offsets
+    * in O(1) and each task aligns itself here (the BAM/BCF SplitGuesser
+    * pattern — ChunkKind.Record — at container granularity), so planning
+    * cost is independent of container count even on a 300 GB object-store
+    * CRAM.
     */
-  private def resyncContainerStart(in: org.apache.hadoop.fs.FSDataInputStream,
-                                   from: Long, until: Long, fileSize: Long,
-                                   winSize: Int): Long = {
-    val w = new SweepWindow(in, fileSize, winSize)
+  private[sources] def resyncContainerStart(in: org.apache.hadoop.fs.FSDataInputStream,
+                                            from: Long, until: Long,
+                                            fileSize: Long): Long = {
+    val w = new SweepWindow(in, fileSize, ResyncWindow)
     var cand = from
     while (cand < until) {
       val span = w.spanAt(cand)
@@ -876,23 +705,19 @@ class CramFormat(refPath: Option[String],
     // `.crai` index when one sits next to the file.
     val sin = new StreamIn(input.stream)
     if (input.startOffset > 0) {
-      // Mid-file chunk of an index-free container split. Two planner
-      // flavors: aligned chunks (`.crai`-derived cuts, or the conf-gated
-      // driver sweep) arrive with the stream already positioned at a true
-      // container start; resync chunks arrive at a RAW cut offset and the
-      // task aligns itself to the first CRC-validated container start it
-      // owns. Either way the file definition and @SQ names come from the
-      // head of the file, cached per path.
+      // Mid-file chunk of a container split. Two planner kinds: aligned
+      // chunks (`.crai`-derived cuts) arrive with the stream already
+      // positioned at a true container start; resync chunks (no `.crai`)
+      // arrive at a RAW cut offset and the task aligns itself to the first
+      // CRC-validated container start it owns. Either way the file
+      // definition and @SQ names come from the head of the file, cached
+      // per path.
       val start0 =
         if (!input.containerResyncSplit) input.startOffset
         else {
           val raw = input.stream.asInstanceOf[org.apache.hadoop.fs.FSDataInputStream]
-          val conf = if (input.fs != null) input.fs.getConf
-                     else new org.apache.hadoop.conf.Configuration()
-          val winSize = math.max(1 << 13,
-            conf.getInt("graft.cram.sweep.window", 1 << 16))
           val found = resyncContainerStart(raw, input.startOffset, input.end,
-            input.fileSize, winSize)
+            input.fileSize)
           if (found >= 0) raw.seek(found) // positioned probes didn't move it
           found
         }

@@ -871,23 +871,39 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   test("l-pack cuts: spark.graft.checkpointDir switches every cut to reliable mode") {
     // q64's conf now governs the whole pack (CutOps): results identical,
     // and checkpoint parts actually land under the dir. l79 exercises a
-    // cut per Lloyd iteration; l76 cuts the eval shingle set.
+    // cut per Lloyd iteration; l76 cuts the eval shingle set. l62 chains
+    // ten lazy cuts with no action in between: in reliable mode each of
+    // them (and the two hoisted cuts before them) must be written. Its
+    // joins run as shuffles, as at scale: a broadcast of the previous
+    // round's result is a job of its own that would write that round's
+    // checkpoint as a side effect, and hide a chain that writes only its
+    // topmost cut.
     graft.GraftSession.registerAll(spark)
     val d = "/root/testdata/sf0.001"
-    val expected = graft.queries.LlmQueries.queries("l79_kmeans_train")(spark, d)
-      .collect().map(_.toString).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpack_ckpt")
-    spark.conf.set("spark.graft.checkpointDir", dir.toString)
-    try {
-      val got = graft.queries.LlmQueries.queries("l79_kmeans_train")(spark, d)
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val savedBcast = spark.conf.getOption(bcast)
+    for ((q, minCheckpoints) <- Seq("l79_kmeans_train" -> 1, "l62_copy_pagerank" -> 12)) {
+      val expected = graft.queries.LlmQueries.queries(q)(spark, d)
         .collect().map(_.toString).toSeq
-      assert(got == expected)
-      val wrote = java.nio.file.Files.walk(dir).iterator().asScala
-        .exists(p => p.getFileName.toString.startsWith("part-"))
-      assert(wrote, s"no checkpoint parts written under $dir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      val dir = java.nio.file.Files.createTempDirectory("graft_lpack_ckpt")
+      spark.conf.set("spark.graft.checkpointDir", dir.toString)
+      if (q == "l62_copy_pagerank") spark.conf.set(bcast, "-1")
+      try {
+        val got = graft.queries.LlmQueries.queries(q)(spark, d)
+          .collect().map(_.toString).toSeq
+        assert(got == expected, q)
+        // one rdd-<id> directory per written checkpoint, each with its parts
+        val written = java.nio.file.Files.walk(dir).iterator().asScala
+          .filter(p => p.getFileName.toString.startsWith("rdd-") &&
+            Option(p.toFile.list()).exists(_.exists(_.startsWith("part-"))))
+          .size
+        assert(written >= minCheckpoints,
+          s"$q: $written checkpoint(s) written under $dir, want >= $minCheckpoints")
+      } finally {
+        spark.conf.unset("spark.graft.checkpointDir")
+        savedBcast.fold(spark.conf.unset(bcast))(spark.conf.set(bcast, _))
+        org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+      }
     }
   }
 

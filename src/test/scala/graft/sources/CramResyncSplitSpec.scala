@@ -6,21 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 import graft.tools.MiniS3
 
-/** Task-open resync split of unindexed CRAMs (GraftScan.
-  * containerResyncSplitChunks + CramFormat.resyncContainerStart): the
-  * scale-safe successor to the driver-side container sweep. The planner
-  * cuts at RAW offsets in O(1) driver work (one cached 6-byte magic sniff)
-  * and each task aligns itself to the first CRC-validated container start
-  * it owns — planning cost is independent of container count, which the
-  * sweep could not achieve once containers outgrew its read-ahead window
-  * (every real ~1-5 MB-container CRAM). Pinned here:
+/** Task-open resync split of unindexed CRAMs (ChunkKind.Container +
+  * CramFormat.resyncContainerStart). The planner cuts at RAW offsets in
+  * O(1) driver work (one cached 6-byte magic sniff) and each task aligns
+  * itself to the first CRC-validated container start it owns — planning
+  * cost is independent of container count, which a driver-side sweep of
+  * container headers could not achieve once containers outgrew its
+  * read-ahead window (every real ~1-5 MB-container CRAM). Pinned here:
   *   - rows are invariant to the chunking, across cut sizes (cuts land
   *     inside the FILE_HEADER container, mid-container, and on container
   *     starts);
   *   - planning an unindexed CRAM on an object store costs O(1) GETs on
-  *     the object — the sweep's file-size/window bound is gone entirely;
-  *   - `graft.cram.resyncSplit.enabled=false` falls back to the sweep path
-  *     (alignedCutChunks), which stays row-correct;
+  *     the object, at the many-small-containers and the realistic shape;
+  *   - a `.crai` appearing next to a planned file switches the next plan
+  *     to the indexed (aligned) split;
   *   - region reads on resync chunks still prune by container header and
   *     filter exactly;
   *   - containerSpanAt's three-state verdict: a plausible header that
@@ -38,24 +37,11 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  /** The resync-split kill switch lives on the HADOOP conf (the planner and
-    * the task readers both see it there); global to the shared session, so
-    * save/restore.
-    */
-  private def withHadoopConf[T](kvs: (String, String)*)(body: => T): T = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val saved = kvs.map { case (k, _) => k -> Option(conf.get(k)) }
-    try { kvs.foreach { case (k, v) => conf.set(k, v) }; body }
-    finally saved.foreach { case (k, vOpt) =>
-      vOpt match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
-    }
-  }
-
   /** One-shard sorted CRAM through the engine's own sink; `.crai` deleted
     * unless `keepCrai`. Parameterized over records-per-container: 200
     * gives the many-small-containers shape, ~10000 the REALISTIC one
-    * (real CRAMs carry ~1-5 MB containers whose headers outgrow the
-    * sweep's read-ahead window — the shape that degraded the r12 sweep).
+    * (real CRAMs carry ~1-5 MB containers, far past a 64 KiB read-ahead
+    * window).
     */
   private def mkCram(dirName: String, n: Long, perContainer: Int,
                      keepCrai: Boolean = false): java.io.File = {
@@ -90,7 +76,7 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
     mkCram("cram_resync_split", 10000L, 200)
 
   /** 40k records, 10000/container -> 4 big data containers, each far past
-    * the sweep's 64 KiB read-ahead window — the realistic shape.
+    * the resync's 64 KiB read-ahead window — the realistic shape.
     */
   private lazy val bigContainerCram: java.io.File =
     mkCram("cram_resync_split_big", 40000L, 10000)
@@ -130,20 +116,6 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("resyncSplit.enabled=false falls back to the driver sweep; rows invariant") {
-    val whole = read(cramFile.getAbsolutePath)
-    withHadoopConf("graft.cram.resyncSplit.enabled" -> "false") {
-      withConf("spark.sql.files.maxPartitionBytes" -> "32768",
-               "spark.sql.files.openCostInBytes" -> "4096") {
-        val split = read(cramFile.getAbsolutePath)
-        val parts = split.rdd.getNumPartitions
-        assert(parts >= 4, s"sweep fallback did not engage: $parts partition(s)")
-        assert(split.except(whole).count() == 0 && whole.except(split).count() == 0,
-          "sweep fallback scan produced different rows")
-      }
-    }
-  }
-
   test("region read on a resync-split unindexed cram prunes and filters exactly") {
     withConf("spark.sql.files.maxPartitionBytes" -> "32768",
              "spark.sql.files.openCostInBytes" -> "4096") {
@@ -176,9 +148,9 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
         import scala.jdk.CollectionConverters._
         val gets = s3.requests.asScala
           .filter(r => r._1 == "GET" && r._2.endsWith("u.cram"))
-        // the whole planning cost on the object: the 6-byte magic sniff.
-        // The sweep needed file-size/window GETs here; a real ~1-5 MB-
-        // container CRAM degraded it to one GET per container.
+        // the whole planning cost on the object: the 6-byte magic sniff,
+        // where a driver-side container sweep would need a GET per window
+        // or per container
         assert(gets.size <= 2,
           s"planning issued ${gets.size} GETs on the object; " +
             "task-open resync must plan in O(1)")
@@ -202,19 +174,17 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
     }.flatMap(_.batch.planInputPartitions())
       .collect { case g: GraftInputPartition => g }.flatMap(_.chunks)
 
-  test("realistic container shape (~10k records/container): resync and sweep arms both exact") {
+  test("realistic container shape (~10k records/container): resync split exact") {
     val whole = read(bigContainerCram.getAbsolutePath)
     assert(whole.count() == 40000L)
-    // container starts (driver sweep on local disk) to size the assertions
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      new org.apache.hadoop.conf.Configuration()).getRaw
-    val cuts = new graft.sources.formats.CramFormat(None, Nil).alignedCutOffsets(
-      fs, new org.apache.hadoop.fs.Path(bigContainerCram.getAbsolutePath),
-      bigContainerCram.length())
-    assert(cuts != null && cuts.length <= 8,
-      s"fixture must have FEW BIG containers, sweep saw ${cuts.length}")
-    assert(bigContainerCram.length() / math.max(1, cuts.length) > 65536,
-      "containers must outgrow the sweep's 64 KiB window to be the realistic shape")
+    // container starts (test-side chain) to size the assertions
+    val starts = CramResyncSplitSpec.containerStarts(
+      new graft.sources.formats.CramFormat(None, Nil),
+      java.nio.file.Files.readAllBytes(bigContainerCram.toPath))
+    assert(starts.length <= 8,
+      s"fixture must have FEW BIG containers, the chain saw ${starts.length}")
+    assert(bigContainerCram.length() / starts.length > 65536,
+      "containers must outgrow the 64 KiB resync window to be the realistic shape")
     withConf("spark.sql.files.maxPartitionBytes" -> "65536",
              "spark.sql.files.openCostInBytes" -> "4096") {
       val split = read(bigContainerCram.getAbsolutePath)
@@ -222,15 +192,10 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
         s"resync split did not engage: ${split.rdd.getNumPartitions}")
       assert(split.except(whole).count() == 0 && whole.except(split).count() == 0,
         "resync rows differ at the big-container shape")
-      withHadoopConf("graft.cram.resyncSplit.enabled" -> "false") {
-        val sweep = read(bigContainerCram.getAbsolutePath)
-        assert(sweep.except(whole).count() == 0 && whole.except(sweep).count() == 0,
-          "sweep-fallback rows differ at the big-container shape")
-      }
     }
   }
 
-  test("realistic shape on S3: resync plans in O(1) GETs; sweep fallback SEEKS (O(containers), not O(bytes/window))") {
+  test("realistic shape on S3: resync plans in O(1) GETs") {
     val s3 = new MiniS3().start()
     val conf = spark.sparkContext.hadoopConfiguration
     val keys = Seq("fs.s3.impl", "fs.s3.endpoint", "fs.s3.impl.disable.cache")
@@ -251,20 +216,6 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
         val resyncGets = getsOn("big.cram") - before
         assert(resyncGets <= 2,
           s"resync planning issued $resyncGets GETs at the realistic shape; must be O(1)")
-        withHadoopConf("graft.cram.resyncSplit.enabled" -> "false") {
-          val b2 = getsOn("big.cram")
-          assert(read("s3://graft-bigc/big.cram").rdd.getNumPartitions >= 2)
-          val sweepGets = getsOn("big.cram") - b2
-          // big containers: the windowed sweep must SEEK container to
-          // container (one ranged header read each), never stream every
-          // 64 KiB window of payload
-          val containers = 8
-          assert(sweepGets <= containers + 4,
-            s"sweep planning issued $sweepGets GETs; seeking bound is ${containers + 4}")
-          assert(sweepGets < bigContainerCram.length() / 65536,
-            s"sweep planning issued $sweepGets GETs — streamed the payload " +
-              s"instead of seeking (window count ${bigContainerCram.length() / 65536})")
-        }
       }
     } finally {
       s3.stop()
@@ -284,15 +235,13 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
       withConf("spark.sql.files.maxPartitionBytes" -> "32768",
                "spark.sql.files.openCostInBytes" -> "4096") {
         val first = chunksOf(read(f.getAbsolutePath))
-        assert(first.nonEmpty && first.forall(_.containerSplit),
+        assert(first.nonEmpty && first.forall(_.kind == ChunkKind.Container),
           "without the .crai the plan must be resync chunks")
         assert(hidden.renameTo(crai)) // the index appears between two scans
         val second = chunksOf(read(f.getAbsolutePath))
-        assert(second.nonEmpty && second.forall(c => !c.containerSplit),
-          "with the .crai present the next plan must leave the resync path " +
-            "(stale (path, mtime, len) sniff cache)")
-        assert(second.exists(_.alignedSplit),
-          "the .crai's exact cuts must drive an aligned split")
+        assert(second.nonEmpty && second.forall(_.kind == ChunkKind.Aligned),
+          "with the .crai present the next plan must be the .crai's aligned " +
+            "split (stale (path, mtime, len) sniff memo)")
         // and the indexed plan reads the same rows
         val whole = read(f.getAbsolutePath)
         assert(whole.count() == 4000L)
@@ -367,5 +316,26 @@ class CramResyncSplitSpec extends AnyFunSuite with SharedSpark {
     val bad = full.clone()
     bad(hdr.length - 1) = (bad(hdr.length - 1) ^ 0x55).toByte
     assert(fmt.containerSpanAt(bad, 0, bad.length, 0L, fileSize) == -1L)
+  }
+}
+
+object CramResyncSplitSpec {
+  /** Every container start of a whole CRAM file, chained from the
+    * FILE_HEADER container at offset 26 through `containerSpanAt` with the
+    * whole file as the buffer; fails unless the chain lands exactly on EOF.
+    */
+  def containerStarts(fmt: graft.sources.formats.CramFormat,
+                      bytes: Array[Byte]): Seq[Long] = {
+    val starts = scala.collection.mutable.ArrayBuffer[Long]()
+    var pos = 26L
+    while (pos < bytes.length) {
+      val span = fmt.containerSpanAt(bytes, pos.toInt, bytes.length - pos.toInt,
+        pos, bytes.length.toLong)
+      require(span > 0, s"no valid container header at $pos (verdict $span)")
+      starts += pos
+      pos += span
+    }
+    require(pos == bytes.length, s"container chain overran EOF: $pos")
+    starts.toSeq
   }
 }

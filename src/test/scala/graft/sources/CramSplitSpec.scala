@@ -5,13 +5,13 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
-/** Index-free CRAM container splits (GraftScan.alignedCutChunks +
-  * CramFormat.alignedCutOffsets): a big CRAM full scan must fan out over
-  * parallel container-aligned chunks — via the `.crai` sibling's container
-  * offsets when one exists, and via a driver-side header-skipping sweep
-  * when it doesn't (the landing-zone shape). Rows must be invariant to the
-  * chunking: each container is decoded by exactly the chunk owning its
-  * start offset.
+/** CRAM container splits: a big CRAM full scan must fan out over parallel
+  * chunks — at the `.crai` sibling's container offsets when one exists
+  * (GraftScan.alignedCutChunks + CramFormat.alignedCutOffsets), and by
+  * task-open resync when it doesn't (the landing-zone shape; see
+  * CramResyncSplitSpec). Rows must be invariant to the chunking: each
+  * container is decoded by exactly the chunk owning its start offset. A
+  * `.crai` that cannot be read plans the file as one task.
   */
 class CramSplitSpec extends AnyFunSuite with SharedSpark {
 
@@ -25,7 +25,7 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
 
   /** One-shard sorted CRAM through the engine's own sink (10k records per
     * container -> ~8 data containers), written with its `.crai`. A second
-    * copy has the `.crai` removed for the sweep arm.
+    * copy has the `.crai` removed for the index-free arm.
     */
   private lazy val (cramDir, cramNoIdxDir): (String, String) = {
     val dir = graft.TestTmp.dir("cram_split").toString + "/t"
@@ -50,7 +50,7 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
       .repartitionByRange(1, col("reference"), col("start"))
       .sortWithinPartitions("reference", "start")
       .write.format("cram").mode("overwrite").option("refs", refs).save(dir)
-    // second copy without the .crai: forces the header-skipping sweep
+    // second copy without the .crai: the index-free (resync) arm
     val ni = graft.TestTmp.dir("cram_split_noidx").toString + "/t"
     new java.io.File(ni).mkdirs()
     new java.io.File(dir).listFiles().foreach { f =>
@@ -86,9 +86,8 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  // NOTE: since the task-open resync split landed, the no-.crai planner
-  // path is containerResyncSplitChunks by default (CramResyncSplitSpec);
-  // the conf-gated sweep fallback is covered there too.
+  // the no-.crai planner path is the task-open resync (ChunkKind.Container;
+  // CramResyncSplitSpec covers it in depth)
   test("unindexed cram (no .crai) splits index-free (task-open resync)") {
     val whole = read(cramNoIdxDir)
     assert(whole.count() == 80000L)
@@ -122,22 +121,45 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("sweep offsets equal the .crai container offsets") {
+    // the sweep is test-side: chain containerSpanAt from the FILE_HEADER
+    // container at offset 26 through the no-index copy to EOF
+    val nf = new java.io.File(cramNoIdxDir).listFiles()
+      .filter(_.getName.endsWith(".cram")).minBy(_.getName)
+    val fmt = new graft.sources.formats.CramFormat(None, Nil)
+    val swept = CramResyncSplitSpec.containerStarts(fmt,
+      java.nio.file.Files.readAllBytes(nf.toPath))
+    assert(swept.length >= 4, s"sweep found only ${swept.length} containers")
     val f = new java.io.File(cramDir).listFiles()
       .filter(_.getName.endsWith(".cram")).minBy(_.getName)
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       new org.apache.hadoop.conf.Configuration()).getRaw
-    val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-    val fmt = new graft.sources.formats.CramFormat(None, Nil)
-    val viaCrai = fmt.alignedCutOffsets(fs, p, f.length())
-    // the no-index copy must resolve through the sweep
-    val nf = new java.io.File(cramNoIdxDir).listFiles()
-      .filter(_.getName.endsWith(".cram")).minBy(_.getName)
-    val swept = fmt.alignedCutOffsets(fs,
-      new org.apache.hadoop.fs.Path(nf.getAbsolutePath), nf.length())
-    assert(swept != null && swept.nonEmpty, "sweep returned no offsets")
+    val viaCrai = fmt.alignedCutOffsets(fs,
+      new org.apache.hadoop.fs.Path(f.getAbsolutePath), f.length())
+    assert(viaCrai != null && viaCrai.nonEmpty, ".crai returned no offsets")
     // crai offsets (data containers) are a subset of the swept container
-    // starts (which also include the EOF container)
+    // starts (which also include the FILE_HEADER and EOF containers)
     assert(viaCrai.toSet.subsetOf(swept.toSet),
       "crai offsets are not all true container starts per the sweep")
+    // and the no-index copy has no aligned cuts: it is resynced instead
+    assert(fmt.alignedCutOffsets(fs, new org.apache.hadoop.fs.Path(nf.getAbsolutePath),
+      nf.length()) == null)
+  }
+
+  test("an unreadable .crai plans the file as one task with the whole-file rows") {
+    val src = new java.io.File(cramNoIdxDir).listFiles()
+      .filter(_.getName.endsWith(".cram")).minBy(_.getName)
+    val dir = graft.TestTmp.dir("cram_bad_crai").toFile
+    val f = new java.io.File(dir, src.getName)
+    java.nio.file.Files.copy(src.toPath, f.toPath)
+    java.nio.file.Files.write(new java.io.File(dir, src.getName + ".crai").toPath,
+      "this is not a gzip'd crai\n".getBytes("US-ASCII"))
+    val whole = read(cramNoIdxDir)
+    withConf("spark.sql.files.maxPartitionBytes" -> "262144",
+             "spark.sql.files.openCostInBytes" -> "16384") {
+      val df = read(f.getAbsolutePath)
+      assert(df.rdd.getNumPartitions == 1,
+        s"an unreadable .crai must plan one task, got ${df.rdd.getNumPartitions}")
+      assertSameRows(df, whole)
+    }
   }
 }

@@ -5,25 +5,17 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 import graft.tools.MiniS3
 
-/** Scale gates for the unindexed-CRAM container sweep
-  * (CramFormat.sweepContainerStarts) — the round-11 finding was that it
-  * issued one positioned driver read PER CONTAINER, an O(containers)
-  * planning stall on a 300 GB object-store CRAM. These tests pin the fixed
-  * I/O shape on the wire, through the from-scratch S3 filesystem against an
-  * in-process S3 server:
-  *   - GET count during cut planning scales with file-size/window, not with
-  *     container count (the forward read-ahead window);
-  *   - sweep GETs seek (non-zero Range headers), never restart at byte 0;
-  *   - the parallel CRC-resync sweep returns exactly the serial sweep's
-  *     cuts, and a full split scan over S3 returns exactly the local rows;
-  *   - a truncated stream is refused (null cuts -> one task), never
-  *     mis-split.
+/** Unindexed CRAM container splits against an in-process S3 server: a
+  * full split scan over the from-scratch S3 filesystem returns exactly the
+  * local rows, and the task-open resync (CramFormat.resyncContainerStart)
+  * confirms container starts whose headers outgrow its first probe. The
+  * resync's planning GET bound and its loud truncation error are pinned in
+  * CramResyncSplitSpec.
   */
 class S3CramSweepSpec extends AnyFunSuite with SharedSpark {
 
   /** Many-container unindexed CRAM: 8000 records, 100 per container ->
-    * ~80 data containers, a shape where the old per-container sweep would
-    * issue ~80 GETs but a windowed sweep needs ~fileSize/64K.
+    * ~80 data containers, so most resync cuts land mid-container.
     */
   private lazy val cramFile: java.io.File = {
     val dir = graft.TestTmp.dir("cram_sweep_s3").toString + "/t"
@@ -53,18 +45,6 @@ class S3CramSweepSpec extends AnyFunSuite with SharedSpark {
     f
   }
 
-  private def localFs(extra: (String, String)*): org.apache.hadoop.fs.FileSystem = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    extra.foreach { case (k, v) => conf.set(k, v) }
-    org.apache.hadoop.fs.FileSystem.getLocal(conf).getRaw
-  }
-
-  private def sweepLocal(extra: (String, String)*): Array[Long] = {
-    val fs = localFs(extra: _*)
-    new graft.sources.formats.CramFormat(None, Nil).alignedCutOffsets(fs,
-      new org.apache.hadoop.fs.Path(cramFile.getAbsolutePath), cramFile.length())
-  }
-
   /** The fs.s3.* keys are GLOBAL (shared SparkSession hadoopConfiguration)
     * — save/restore them so this suite cannot leave a later suite pointed
     * at a stopped MiniS3 port.
@@ -85,70 +65,15 @@ class S3CramSweepSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("sweep GET count scales with file-size/window, not container count") {
-    val serialCuts = sweepLocal()
-    assert(serialCuts != null && serialCuts.length >= 60,
-      s"fixture must have many containers, sweep saw ${Option(serialCuts).map(_.length)}")
-    withS3 { (s3, conf) =>
-      s3.put("graft-sweep", "u.cram",
-        java.nio.file.Files.readAllBytes(cramFile.toPath))
-      val p = new org.apache.hadoop.fs.Path("s3://graft-sweep/u.cram")
-      val fs = p.getFileSystem(conf)
-      val cuts = new graft.sources.formats.CramFormat(None, Nil)
-        .alignedCutOffsets(fs, p, cramFile.length())
-      assert(cuts != null && cuts.sameElements(serialCuts),
-        "S3 sweep must produce the local sweep's cuts")
-      import scala.jdk.CollectionConverters._
-      val gets = s3.requests.asScala
-        .filter(r => r._1 == "GET" && r._2.endsWith("u.cram"))
-      val winBound = cramFile.length() / 65536 + 4 // window refills + magic
-      assert(gets.size <= winBound,
-        s"sweep issued ${gets.size} GETs; windowed bound is $winBound " +
-          s"(old per-container shape would be ~${serialCuts.length})")
-      assert(gets.size * 4 < serialCuts.length,
-        s"GET count ${gets.size} must be far under container count ${serialCuts.length}")
-      // object-store sanity: the sweep seeks; all but the first GET carry a
-      // non-zero Range offset rather than rereading from byte 0
-      val offsets = gets.flatMap(_._3).map { h =>
-        h.stripPrefix("bytes=").takeWhile(_ != '-').toLong
-      }
-      assert(offsets.count(_ > 0) >= gets.size - 1,
-        s"sweep GETs must be ranged seeks, saw offsets $offsets")
-    }
-  }
-
-  test("parallel CRC-resync sweep returns exactly the serial cuts") {
-    val serial = sweepLocal()
-    val parallel = sweepLocal(
-      "graft.cram.sweep.parallelThreshold" -> "1",
-      "graft.cram.sweep.minSegment" -> "16384",
-      "graft.cram.sweep.window" -> "16384",
-      "graft.cram.sweep.threads" -> "4")
-    assert(parallel != null, "parallel sweep refused a well-formed stream")
-    assert(parallel.sameElements(serial),
-      s"parallel sweep diverged: serial ${serial.length} cuts, " +
-        s"parallel ${parallel.length}")
-  }
-
-  test("parallel sweep with more threads than segments degrades to serial result") {
-    val serial = sweepLocal()
-    val parallel = sweepLocal(
-      "graft.cram.sweep.parallelThreshold" -> "1",
-      "graft.cram.sweep.minSegment" -> (cramFile.length() * 2).toString,
-      "graft.cram.sweep.threads" -> "8")
-    assert(parallel != null && parallel.sameElements(serial))
-  }
-
-  test("jumbo container headers (>4 KB, many landmarks) chain and resync, not serial-fallback") {
+  test("jumbo container headers (>4 KB, many landmarks): the task-open resync confirms every start") {
     // Hand-built stream via the sink's own codec: file definition +
     // FILE_HEADER container + a container whose header carries 1500
-    // ascending landmarks (~4.6 KB header — past the 4 KB probe, so only
-    // the -2 bigger-buffer escalation can confirm it) + two normal
-    // containers + EOF. The sweep never decodes payloads, so zero-filled
-    // bodies are fine. Serial chain must walk through the jumbo header,
-    // and the parallel CRC-resync sweep (whose segment boundaries land
-    // inside and before it) must return exactly the serial cuts instead
-    // of failing the stitch and falling back — the round-12 advice gap.
+    // ascending landmarks (~4.6 KB header — past the 4 KB first probe, so
+    // only the -2 bigger-buffer escalation can confirm it) + two normal
+    // containers + EOF. Neither the chain nor the resync decodes payloads,
+    // so zero-filled bodies are fine. The resync, started just past each
+    // predecessor's start, must land exactly on the next true start
+    // instead of skipping the jumbo one (which would drop its records).
     import graft.sources.CramCodec._
     val out = new java.io.ByteArrayOutputStream()
     out.write("CRAM".getBytes("US-ASCII")); out.write(3); out.write(0)
@@ -172,40 +97,25 @@ class S3CramSweepSpec extends AnyFunSuite with SharedSpark {
     starts += out.size().toLong
     val eof = eofContainer()
     out.write(eof, 0, eof.length)
+    val bytes = out.toByteArray
     val dir = graft.TestTmp.dir("cram_jumbo")
     val f = java.nio.file.Paths.get(dir.toString, "jumbo.cram")
-    java.nio.file.Files.write(f, out.toByteArray)
+    java.nio.file.Files.write(f, bytes)
     val fmt = new graft.sources.formats.CramFormat(None, Nil)
-    val p = new org.apache.hadoop.fs.Path(f.toString)
-    val serial = fmt.alignedCutOffsets(localFs(), p, out.size().toLong)
-    assert(serial != null && serial.toSeq == starts.toSeq,
-      s"serial sweep must chain through the jumbo header: got " +
-        s"${Option(serial).map(_.toSeq)}, want $starts")
-    val parallel = fmt.alignedCutOffsets(localFs(
-        "graft.cram.sweep.parallelThreshold" -> "1",
-        "graft.cram.sweep.minSegment" -> "16384",
-        "graft.cram.sweep.window" -> "16384",
-        "graft.cram.sweep.threads" -> "6"), p, out.size().toLong)
-    assert(parallel != null && parallel.sameElements(serial),
-      "parallel sweep must confirm the jumbo start via the -2 escalation, " +
-        "not fall back or diverge")
-  }
-
-  test("truncated stream is refused (null cuts), never mis-split") {
-    val bytes = java.nio.file.Files.readAllBytes(cramFile.toPath)
-    val tdir = graft.TestTmp.dir("cram_sweep_trunc")
-    val tf = java.nio.file.Paths.get(tdir.toString, "trunc.cram")
-    java.nio.file.Files.write(tf, java.util.Arrays.copyOf(bytes, bytes.length - 10))
-    val fmt = new graft.sources.formats.CramFormat(None, Nil)
-    for (extra <- Seq(Seq.empty[(String, String)],
-        Seq("graft.cram.sweep.parallelThreshold" -> "1",
-            "graft.cram.sweep.minSegment" -> "16384",
-            "graft.cram.sweep.threads" -> "4"))) {
-      val fs = localFs(extra: _*)
-      val cuts = fmt.alignedCutOffsets(fs,
-        new org.apache.hadoop.fs.Path(tf.toString), bytes.length - 10L)
-      assert(cuts == null, s"truncated file must refuse splitting ($extra)")
-    }
+    assert(CramResyncSplitSpec.containerStarts(fmt, bytes) == 26L +: starts.toSeq,
+      "the header chain must walk through the jumbo header")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      new org.apache.hadoop.conf.Configuration()).getRaw
+    val in = fs.open(new org.apache.hadoop.fs.Path(f.toString))
+    try {
+      (26L +: starts.toSeq).sliding(2).foreach { case Seq(prev, next) =>
+        val found = fmt.resyncContainerStart(in, prev + 1, next + 1, bytes.length.toLong)
+        assert(found == next, s"resync from ${prev + 1} found $found, want $next")
+      }
+      // a range interior to the jumbo container's payload owns no start
+      assert(fmt.resyncContainerStart(in, starts(0) + 8192, starts(0) + 16384,
+        bytes.length.toLong) == -1L)
+    } finally in.close()
   }
 
   test("full split scan of the unindexed CRAM over S3 matches local rows") {
