@@ -1,13 +1,10 @@
 package graft.sources
 
 import java.io.{BufferedOutputStream, OutputStream}
-import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 /** BAM sink: binary alignment records inside BGZF with a sibling `.bai`
@@ -73,173 +70,62 @@ object BamHeader {
       require(i > 0, s"refs option entries must be name:length, got '$part'")
       (part.substring(0, i), part.substring(i + 1).trim.toInt)
     }
-}
 
-/** `.bai` writer: BAI binning (identical reg2bin to tabix, min_shift 14,
-  * depth 5) stored raw (uncompressed, no name table — SAMv1 spec §5.2),
-  * plus the metadata pseudo-bin 37450 per reference and the trailing
-  * n_no_coor count that [[BaiIndex.recordCount]] requires.
-  */
-final class BaiWriter(nRef: Int) {
-  private val bins = Array.fill(nRef)(
-    scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Long)]])
-  private val linear = Array.fill(nRef)(
-    scala.collection.mutable.ArrayBuffer.empty[Long])
-  private val offBeg = Array.fill(nRef)(-1L)
-  private val offEnd = Array.fill(nRef)(0L)
-  private val nMapped = Array.fill(nRef)(0L)
-  private val nUnmapped = Array.fill(nRef)(0L)
-  private var noCoor = 0L
-
-  private def reg2bin(beg: Long, end0: Long): Int = {
-    val end = end0 - 1
-    if ((beg >> 14) == (end >> 14)) (4681 + (beg >> 14)).toInt
-    else if ((beg >> 17) == (end >> 17)) (585 + (beg >> 17)).toInt
-    else if ((beg >> 20) == (end >> 20)) (73 + (beg >> 20)).toInt
-    else if ((beg >> 23) == (end >> 23)) (9 + (beg >> 23)).toInt
-    else if ((beg >> 26) == (end >> 26)) (1 + (beg >> 26)).toInt
-    else 0
-  }
-
-  def add(refId: Int, beg0: Long, end0: Long, vStart: Long, vEnd: Long,
-          mapped: Boolean): Unit = {
-    val b = reg2bin(beg0, end0)
-    val chunks = bins(refId).getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty)
-    if (chunks.nonEmpty && chunks.last._2 == vStart)
-      chunks(chunks.length - 1) = (chunks.last._1, vEnd)
-    else chunks += ((vStart, vEnd))
-    val lin = linear(refId)
-    var w = (beg0 >> 14).toInt
-    val wEnd = ((end0 - 1) >> 14).toInt
-    while (lin.length <= wEnd) lin += 0L
-    while (w <= wEnd) {
-      if (lin(w) == 0L || vStart < lin(w)) lin(w) = vStart
-      w += 1
-    }
-    if (offBeg(refId) < 0) offBeg(refId) = vStart
-    offEnd(refId) = vEnd
-    if (mapped) nMapped(refId) += 1 else nUnmapped(refId) += 1
-  }
-
-  def addNoCoor(): Unit = noCoor += 1
-
-  def write(out: OutputStream): Unit = {
-    val body = new java.io.ByteArrayOutputStream(1 << 16)
-    def i32(v: Int): Unit =
-      body.write(Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte))
-    def i64(v: Long): Unit = { i32(v.toInt); i32((v >> 32).toInt) }
-    body.write(Array[Byte]('B', 'A', 'I', 1))
-    i32(nRef)
-    (0 until nRef).foreach { r =>
-      val hasData = bins(r).nonEmpty
-      i32(if (hasData) bins(r).size + 1 else 0) // + pseudo-bin
-      bins(r).foreach { case (bin, chunks) =>
-        i32(bin)
-        i32(chunks.length)
-        chunks.foreach { case (s, e) => i64(s); i64(e) }
-      }
-      if (hasData) {
-        i32(37450); i32(2)
-        i64(offBeg(r)); i64(offEnd(r))
-        i64(nMapped(r)); i64(nUnmapped(r))
-      }
-      i32(linear(r).length)
-      linear(r).foreach(i64)
-    }
-    i64(noCoor)
-    out.write(body.toByteArray)
-  }
-}
-
-final class BamWriteBuilder(table: GraftTable, info: LogicalWriteInfo,
-                            options: Map[String, String])
-  extends WriteBuilder with SupportsTruncate {
-
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val dir = new Path(table.paths.head)
-      val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      val sconf = new SerializableHadoopConf(conf)
-      // Resolve the reference dictionary on the driver: every task needs the
-      // identical tid numbering or the per-part indexes would disagree.
-      val (text, refs) = options.get("headerfrom") match {
-        case Some(src) => BamHeader.read(new Path(src), conf)
-        case None => options.get("refs") match {
-          case Some(r) =>
-            val rs = BamHeader.parseRefsOption(r)
-            (BamHeader.synthesize(rs), rs)
-          case None => throw new IllegalArgumentException(
-            "bam write requires the target reference dictionary: pass " +
-              "option(\"headerFrom\", <existing .bam>) or " +
-              "option(\"refs\", \"name:len,name:len,...\") — the same " +
-              "@SQ requirement samtools imposes on SAM->BAM conversion")
-        }
-      }
-      new BamBatchWrite(table.paths.head, info.schema(), sconf,
-        UUID.randomUUID().toString, text, refs)
-    }
-  }
-}
-
-final class BamBatchWrite(dir: String, schema: StructType,
-                          conf: SerializableHadoopConf, jobId: String,
-                          headerText: String, refs: Array[(String, Int)])
-  extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val srcIdx: Array[Int] = formats.SamFormat.dataSchema.fieldNames.map { f =>
-      schema.fieldNames.indexWhere(_.equalsIgnoreCase(f))
-    }
-    new BamDataWriterFactory(dir, srcIdx, schema, conf, jobId, headerText, refs)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-}
-
-final class BamDataWriterFactory(dir: String, srcIdx: Array[Int], schema: StructType,
-                                 conf: SerializableHadoopConf, jobId: String,
-                                 headerText: String, refs: Array[(String, Int)])
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new BamDataWriter(dir, srcIdx, schema, conf, partitionId, taskId, jobId,
-      headerText, refs)
-}
-
-final class BamDataWriter(dir: String, srcIdx: Array[Int], schema: StructType,
-                          conf: SerializableHadoopConf, partitionId: Int,
-                          taskId: Long, jobId: String, headerText: String,
-                          refs: Array[(String, Int)])
-  extends DataWriter[InternalRow] {
-
-  private val fileName =
-    f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.bam"
-  private val tmpPath = new Path(new Path(new Path(dir, "_temporary"), jobId), fileName)
-  private val path = new Path(dir, fileName)
-
-  private val tidOf: java.util.HashMap[String, Integer] = {
+  /** Reference name -> tid, in dictionary order. */
+  def tids(refs: Array[(String, Int)]): java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer](refs.length * 2)
     refs.indices.foreach(i => m.put(refs(i)._1, i))
     m
   }
 
-  private var opened = false
-  private var raw: OutputStream = _
-  private var bgzf: BgzfWriter = _
-  private var bai: BaiWriter = _
+  /** The dictionary of a BAM or CRAM write, resolved on the driver: every
+    * task needs the identical tid numbering or the per-part indexes would
+    * disagree.
+    */
+  def resolve(sink: String, options: Map[String, String],
+              conf: Configuration): (String, Array[(String, Int)]) =
+    options.get("headerfrom") match {
+      case Some(src) => read(new Path(src), conf)
+      case None => options.get("refs") match {
+        case Some(r) =>
+          val rs = parseRefsOption(r)
+          (synthesize(rs), rs)
+        case None => throw new IllegalArgumentException(
+          s"$sink write requires the target reference dictionary: pass " +
+            "option(\"headerFrom\", <existing .bam>) or " +
+            "option(\"refs\", \"name:len,name:len,...\") — the same " +
+            "@SQ requirement samtools imposes on SAM->BAM conversion")
+      }
+    }
+}
+
+/** BAM job: the resolved header text and dictionary. */
+final class BamSink(headerText: String, refs: Array[(String, Int)]) extends SinkJob {
+  def dataSchema: StructType = formats.SamFormat.dataSchema
+  def extension: String = "bam"
+  def siblings: Seq[String] = Seq(".bai")
+  def open(out: OutputStream, fileName: String): SinkEncoder =
+    new BamEncoder(headerText, refs, out)
+}
+
+object BamSink {
+  def apply(options: Map[String, String], conf: Configuration): BamSink = {
+    val (text, refs) = BamHeader.resolve("bam", options, conf)
+    new BamSink(text, refs)
+  }
+}
+
+private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
+                               raw: OutputStream) extends SinkEncoder {
+
+  private val tidOf = BamHeader.tids(refs)
+
+  private val bgzf = new BgzfWriter(new BufferedOutputStream(raw, 1 << 16))
+  private val bai = new BaiWriter(refs.length)
   private var lastTid = -1
   private var lastPos = -1L
   private var sawNoCoor = false
 
-  private val dataTypes = formats.SamFormat.dataSchema.fields.map(_.dataType)
   private val SeqNibble: Array[Byte] = {
     val a = Array.fill[Byte](128)(15) // unknown base -> N
     "=ACMGRSVTWYHKDBN".zipWithIndex.foreach { case (c, i) => a(c.toInt) = i.toByte }
@@ -253,35 +139,22 @@ final class BamDataWriter(dir: String, srcIdx: Array[Int], schema: StructType,
   }
   private val IntRe = "-?\\d+".r.pattern
 
-  private def open(): Unit = {
-    opened = true
-    val fs = tmpPath.getFileSystem(conf.value)
-    raw = fs.create(tmpPath, true)
-    bgzf = new BgzfWriter(new BufferedOutputStream(raw, 1 << 16))
-    bai = new BaiWriter(refs.length)
-    val body = new java.io.ByteArrayOutputStream(1 << 14)
-    def i32(v: Int): Unit =
-      body.write(Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte))
-    body.write(Array[Byte]('B', 'A', 'M', 1))
+  // one record buffer per part, reset per record
+  private val body = new LeOut(new java.io.ByteArrayOutputStream(1 << 14))
+
+  locally {
+    body.bytes(Array[Byte]('B', 'A', 'M', 1))
     val text = headerText.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    i32(text.length); body.write(text)
-    i32(refs.length)
+    body.i32(text.length); body.bytes(text)
+    body.i32(refs.length)
     refs.foreach { case (name, len) =>
       val nb = (name + "\u0000").getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      i32(nb.length); body.write(nb); i32(len)
+      body.i32(nb.length); body.bytes(nb); body.i32(len)
     }
-    bgzf.write(body.toByteArray)
+    bgzf.write(body.os.toByteArray)
   }
 
-  override def write(row: InternalRow): Unit = {
-    if (!opened) open()
-    val v = new Array[Any](srcIdx.length)
-    var i = 0
-    while (i < srcIdx.length) {
-      val s = srcIdx(i)
-      v(i) = if (s < 0 || row.isNullAt(s)) null else row.get(s, dataTypes(i))
-      i += 1
-    }
+  override def write(v: Array[Any]): Unit = {
     val ref = if (v(2) == null) null else v(2).toString
     val refId =
       if (ref == null) -1
@@ -344,37 +217,34 @@ final class BamDataWriter(dir: String, srcIdx: Array[Int], schema: StructType,
       nCigar = cigarOps.length
     }
     val end0 = if (pos0 < 0) 0L else pos0 + math.max(refLen, 1L)
-    val bin = if (pos0 >= 0) baiBin(pos0, end0) else 4680
+    val bin = if (pos0 >= 0) TabixIndex.reg2bin(pos0, end0) else 4680
 
     val nameBytes = (name + "\u0000").getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val blockSize = 32 + nameBytes.length + 4 * nCigar + (lSeq + 1) / 2 + lSeq
-    val body = new java.io.ByteArrayOutputStream(blockSize + 64)
-    def i32(x: Int): Unit =
-      body.write(Array[Byte](x.toByte, (x >> 8).toByte, (x >> 16).toByte, (x >> 24).toByte))
+    body.os.reset()
     // block_size is patched in at the end (tags length unknown until encoded)
-    i32(refId); i32(pos0.toInt)
-    body.write(nameBytes.length); body.write(mapq)
-    body.write(bin & 0xff); body.write((bin >> 8) & 0xff)
-    body.write(nCigar & 0xff); body.write((nCigar >> 8) & 0xff)
-    body.write(flag & 0xff); body.write((flag >> 8) & 0xff)
-    i32(lSeq); i32(nextRefId); i32(-1 /* next_pos: not in scan schema */)
-    i32(0 /* tlen: not in scan schema */)
-    body.write(nameBytes)
-    cigarOps.foreach(i32)
+    body.i32(refId); body.i32(pos0.toInt)
+    body.u8(nameBytes.length); body.u8(mapq)
+    body.i16(bin)
+    body.i16(nCigar)
+    body.i16(flag)
+    body.i32(lSeq); body.i32(nextRefId); body.i32(-1 /* next_pos: not in scan schema */)
+    body.i32(0 /* tlen: not in scan schema */)
+    body.bytes(nameBytes)
+    cigarOps.foreach(body.i32)
     if (lSeq > 0) {
       var si = 0
       while (si < lSeq) {
         val hi = SeqNibble(seq.charAt(si) & 0x7f) << 4
         val lo = if (si + 1 < lSeq) SeqNibble(seq.charAt(si + 1) & 0x7f) else 0
-        body.write(hi | lo)
+        body.u8(hi | lo)
         si += 2
       }
       v(9) match {
-        case null => (0 until lSeq).foreach(_ => body.write(0xff))
+        case null => (0 until lSeq).foreach(_ => body.u8(0xff))
         case arr: ArrayData =>
           var qi = 0
           while (qi < lSeq) {
-            body.write((if (qi < arr.numElements()) arr.getLong(qi) else 0xffL).toInt)
+            body.u8((if (qi < arr.numElements()) arr.getLong(qi) else 0xffL).toInt)
             qi += 1
           }
       }
@@ -387,19 +257,19 @@ final class BamDataWriter(dir: String, srcIdx: Array[Int], schema: StructType,
           val t = tags.getStruct(ti, 2)
           val tag = t.getUTF8String(0).toString
           val value = if (t.isNullAt(1)) "" else t.getUTF8String(1).toString
-          body.write(tag.charAt(0)); body.write(tag.charAt(1))
+          body.u8(tag.charAt(0)); body.u8(tag.charAt(1))
           if (IntRe.matcher(value).matches() &&
               value.toLong >= Int.MinValue && value.toLong <= Int.MaxValue) {
-            body.write('i'); i32(value.toInt)
+            body.u8('i'); body.i32(value.toInt)
           } else {
-            body.write('Z')
-            body.write((value + "\u0000").getBytes(
+            body.u8('Z')
+            body.bytes((value + "\u0000").getBytes(
               java.nio.charset.StandardCharsets.US_ASCII))
           }
           ti += 1
         }
     }
-    val rec = body.toByteArray
+    val rec = body.os.toByteArray
     val full = new Array[Byte](rec.length + 4)
     val bs = rec.length
     full(0) = bs.toByte; full(1) = (bs >> 8).toByte
@@ -413,39 +283,10 @@ final class BamDataWriter(dir: String, srcIdx: Array[Int], schema: StructType,
     else bai.addNoCoor()
   }
 
-  private def baiBin(beg: Long, end0: Long): Int = {
-    val end = end0 - 1
-    if ((beg >> 14) == (end >> 14)) (4681 + (beg >> 14)).toInt
-    else if ((beg >> 17) == (end >> 17)) (585 + (beg >> 17)).toInt
-    else if ((beg >> 20) == (end >> 20)) (73 + (beg >> 20)).toInt
-    else if ((beg >> 23) == (end >> 23)) (9 + (beg >> 23)).toInt
-    else if ((beg >> 26) == (end >> 26)) (1 + (beg >> 26)).toInt
-    else 0
+  override def finish(): Seq[(String, OutputStream => Unit)] = {
+    close()
+    Seq(".bai" -> (os => bai.write(os)))
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) {
-      val fs = path.getFileSystem(conf.value)
-      bgzf.finish()
-      raw.close()
-      val baiTmp = tmpPath.suffix(".bai")
-      val bs = fs.create(baiTmp, true)
-      try bai.write(bs) finally bs.close()
-      if (!fs.rename(baiTmp, path.suffix(".bai")))
-        throw new java.io.IOException(s"failed to commit $baiTmp")
-      if (!fs.rename(tmpPath, path))
-        throw new java.io.IOException(s"failed to commit $tmpPath -> $path")
-    }
-    GraftCommitted
-  }
-
-  override def abort(): Unit = {
-    if (opened) {
-      try { bgzf.finish(); raw.close() } catch { case _: Throwable => () }
-      val fs = tmpPath.getFileSystem(conf.value)
-      fs.delete(tmpPath, false)
-      fs.delete(tmpPath.suffix(".bai"), false)
-    }
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = { bgzf.finish(); raw.close() }
 }

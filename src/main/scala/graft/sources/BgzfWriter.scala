@@ -31,6 +31,7 @@ final class BgzfWriter(out: OutputStream) {
   private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
   private val crc = new CRC32()
   private val scratch = new Array[Byte](1 << 17)
+  private val le = new LeOut(out)
 
   def virtualPos: Long = (compressedOffset << 16) | bufLen
 
@@ -69,14 +70,11 @@ final class BgzfWriter(out: OutputStream) {
       ((bsize - 1) & 0xff).toByte, (((bsize - 1) >> 8) & 0xff).toByte)
     out.write(hdr)
     out.write(scratch, 0, clen)
-    writeIntLE(crc.getValue.toInt)
-    writeIntLE(bufLen)
+    le.i32(crc.getValue.toInt)
+    le.i32(bufLen)
     compressedOffset += bsize
     bufLen = 0
   }
-
-  private def writeIntLE(v: Int): Unit =
-    out.write(Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte))
 
   /** Flush remaining data, append the spec's empty EOF member, and release
     * the native deflate state (finalization would leak it until GC).
@@ -95,98 +93,4 @@ object BgzfWriter {
     0x1f, 0x8b, 0x08, 0x04, 0x00, 0x00, 0x00, 0x00, 0x00, 0xff,
     0x06, 0x00, 0x42, 0x43, 0x02, 0x00, 0x1b, 0x00, 0x03, 0x00,
     0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00, 0x00).map(_.toByte)
-}
-
-/** Tabix (.tbi) index writer: UCSC binning (min_shift 14, depth 5) with
-  * the 16 kb linear index, serialized per the public tabix spec and
-  * BGZF-compressed. Records must arrive in file order (ascending
-  * reference, ascending start) — the same precondition tabix itself
-  * imposes on the data file.
-  */
-final class TabixWriter(initialNames: Seq[String] = Nil) {
-  private val names = scala.collection.mutable.ArrayBuffer[String](initialNames: _*)
-  private val byName = scala.collection.mutable.HashMap[String, Int](
-    initialNames.zipWithIndex: _*)
-  private val bins = scala.collection.mutable.ArrayBuffer.fill(names.length)(
-    scala.collection.mutable.LinkedHashMap.empty[Int, scala.collection.mutable.ArrayBuffer[(Long, Long)]])
-  private val linear = scala.collection.mutable.ArrayBuffer.fill(names.length)(
-    scala.collection.mutable.ArrayBuffer.empty[Long])
-
-  /** Reference id for `name`, appended on first sight — so a sink can
-    * discover sequence names in record order instead of up front.
-    */
-  def tid(name: String): Int = byName.getOrElseUpdate(name, {
-    names += name
-    bins += scala.collection.mutable.LinkedHashMap.empty
-    linear += scala.collection.mutable.ArrayBuffer.empty
-    names.length - 1
-  })
-
-  /** Smallest bin fully containing [beg, end0) (0-based half-open). */
-  private def reg2bin(beg: Long, end0: Long): Int = {
-    val end = end0 - 1
-    if ((beg >> 14) == (end >> 14)) (4681 + (beg >> 14)).toInt
-    else if ((beg >> 17) == (end >> 17)) (585 + (beg >> 17)).toInt
-    else if ((beg >> 20) == (end >> 20)) (73 + (beg >> 20)).toInt
-    else if ((beg >> 23) == (end >> 23)) (9 + (beg >> 23)).toInt
-    else if ((beg >> 26) == (end >> 26)) (1 + (beg >> 26)).toInt
-    else 0
-  }
-
-  /** Register one record spanning [beg0, end0) that occupies virtual
-    * positions [vStart, vEnd) in the BGZF data file.
-    */
-  def add(refId: Int, beg0: Long, end0: Long, vStart: Long, vEnd: Long): Unit = {
-    val b = reg2bin(beg0, end0)
-    val chunks = bins(refId).getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty)
-    if (chunks.nonEmpty && chunks.last._2 == vStart)
-      chunks(chunks.length - 1) = (chunks.last._1, vEnd)
-    else chunks += ((vStart, vEnd))
-    val lin = linear(refId)
-    var w = (beg0 >> 14).toInt
-    val wEnd = ((end0 - 1) >> 14).toInt
-    while (lin.length <= wEnd) lin += 0L
-    while (w <= wEnd) {
-      if (lin(w) == 0L || vStart < lin(w)) lin(w) = vStart
-      w += 1
-    }
-  }
-
-  /** Serialize to `out` (BGZF-compressed, "TBI\1"). The preset header
-    * (format flags, seq/begin/end column numbers) defaults to tabix's VCF
-    * preset; pass e.g. (0, 1, 4, 5) for GFF so external tabix consumers
-    * re-cut lines correctly (our own reader is preset-independent).
-    */
-  def write(out: OutputStream, format: Int = 2, seqCol: Int = 1,
-            begCol: Int = 2, endCol: Int = 0): Unit = {
-    val body = new java.io.ByteArrayOutputStream()
-    def i32(v: Int): Unit =
-      body.write(Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte))
-    def i64(v: Long): Unit = { i32(v.toInt); i32((v >> 32).toInt) }
-    body.write(Array[Byte]('T', 'B', 'I', 1))
-    i32(names.length)
-    i32(format); i32(seqCol); i32(begCol); i32(endCol)
-    i32('#'.toInt); i32(0) // meta char, skip
-    val nm = names.map(_ + "\u0000").mkString.getBytes("US-ASCII")
-    i32(nm.length)
-    body.write(nm)
-    names.indices.foreach { r =>
-      i32(bins(r).size)
-      bins(r).foreach { case (bin, chunks) =>
-        i32(bin)
-        i32(chunks.length)
-        chunks.foreach { case (s, e) => i64(s); i64(e) }
-      }
-      i32(linear(r).length)
-      linear(r).foreach(i64)
-    }
-    val w = new BgzfWriter(out)
-    w.write(body.toByteArray)
-    w.finish()
-  }
-
-  def write(path: java.nio.file.Path): Unit = {
-    val fos = java.nio.file.Files.newOutputStream(path)
-    try write(fos) finally fos.close()
-  }
 }

@@ -1,11 +1,7 @@
 package graft.sources
 
-import java.nio.{ByteBuffer, ByteOrder}
-import java.util.UUID
+import java.io.OutputStream
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
@@ -37,83 +33,44 @@ import scala.collection.mutable
   * chromosome are refused loudly (wig semantics), mirroring the
   * coordinate-sort refusal of the BAM/tabix sinks.
   */
-final class BigWigWriteBuilder(table: GraftTable, info: LogicalWriteInfo,
-                               options: Map[String, String])
-  extends WriteBuilder with SupportsTruncate {
+final class BigWigSink(zooms: Array[Int], compress: Boolean) extends SinkJob {
+  def dataSchema: StructType = formats.BigWigValueFormat.dataSchema
+  def extension: String = "bw"
+  def siblings: Seq[String] = Nil
+  override def checkInput(input: StructType): Unit =
+    dataSchema.fieldNames.foreach { f =>
+      require(input.fieldNames.exists(_.equalsIgnoreCase(f)),
+        s"bigwig write: input is missing required column '$f' " +
+          s"(need name, start, end, value)")
+    }
+  def open(out: OutputStream, fileName: String): SinkEncoder =
+    new BigWigEncoder(zooms, compress, out)
+}
 
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val dir = new Path(table.paths.head)
-      val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      val zoomsRaw = options.getOrElse("zoomlevels", "1000,10000")
-      val zooms = zoomsRaw.split(",").map(_.trim).filter(_.nonEmpty).map { t =>
-        try t.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"bigwig write: bad zoomLevels entry '$t' in '$zoomsRaw' " +
-              "(expect comma-separated positive ints)")
-        }
-      }.distinct.sorted
-      require(zooms.forall(_ > 0),
-        s"bigwig write: zoomLevels must be positive (got '$zoomsRaw')")
-      val compress = options.getOrElse("compression", "zlib") match {
-        case "zlib" => true
-        case "none" => false
-        case other => throw new IllegalArgumentException(
-          s"bigwig write: unsupported compression '$other' (zlib|none)")
+object BigWigSink {
+  def apply(options: Map[String, String]): BigWigSink = {
+    val zoomsRaw = options.getOrElse("zoomlevels", "1000,10000")
+    val zooms = zoomsRaw.split(",").map(_.trim).filter(_.nonEmpty).map { t =>
+      try t.toInt catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"bigwig write: bad zoomLevels entry '$t' in '$zoomsRaw' " +
+            "(expect comma-separated positive ints)")
       }
-      new BigWigBatchWrite(table.paths.head, info.schema(),
-        new SerializableHadoopConf(conf), UUID.randomUUID().toString,
-        zooms, compress)
+    }.distinct.sorted
+    require(zooms.forall(_ > 0),
+      s"bigwig write: zoomLevels must be positive (got '$zoomsRaw')")
+    val compress = options.getOrElse("compression", "zlib") match {
+      case "zlib" => true
+      case "none" => false
+      case other => throw new IllegalArgumentException(
+        s"bigwig write: unsupported compression '$other' (zlib|none)")
     }
+    new BigWigSink(zooms, compress)
   }
 }
 
-final class BigWigBatchWrite(dir: String, schema: StructType,
-                             conf: SerializableHadoopConf, jobId: String,
-                             zooms: Array[Int], compress: Boolean)
-  extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val srcIdx: Array[Int] = formats.BigWigValueFormat.dataSchema.fieldNames.map { f =>
-      val i = schema.fieldNames.indexWhere(_.equalsIgnoreCase(f))
-      require(i >= 0, s"bigwig write: input is missing required column '$f' " +
-        s"(need name, start, end, value)")
-      i
-    }
-    new BigWigDataWriterFactory(dir, srcIdx, conf, jobId, zooms, compress)
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-}
-
-final class BigWigDataWriterFactory(dir: String, srcIdx: Array[Int],
-                                    conf: SerializableHadoopConf, jobId: String,
-                                    zooms: Array[Int], compress: Boolean)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new BigWigDataWriter(dir, srcIdx, conf, partitionId, taskId, jobId, zooms,
-      compress)
-}
-
-final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
-                             conf: SerializableHadoopConf, partitionId: Int,
-                             taskId: Long, jobId: String, zooms: Array[Int],
-                             compress: Boolean)
-  extends DataWriter[InternalRow] {
-
-  private val fileName =
-    f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.bw"
-  private val tmpPath = new Path(new Path(new Path(dir, "_temporary"), jobId), fileName)
-  private val path = new Path(dir, fileName)
+private final class BigWigEncoder(zooms: Array[Int], compress: Boolean,
+                                  dest: OutputStream) extends SinkEncoder {
 
   // (name, start, end, value) buffered per task; sorted per chrom at commit
   private val rows = mutable.ArrayBuffer[(String, Int, Int, Float)]()
@@ -122,52 +79,24 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
   // per row so a null surfaces as a named error, not an NPE mid-task.
   private val colNames = Array("name", "start", "end", "value")
 
-  override def write(row: InternalRow): Unit = {
+  override def write(values: Array[Any]): Unit = {
     var i = 0
     while (i < 4) {
-      if (row.isNullAt(srcIdx(i))) throw new IllegalArgumentException(
+      if (values(i) == null) throw new IllegalArgumentException(
         s"bigwig write: null in required column '${colNames(i)}'")
       i += 1
     }
-    val name = row.getUTF8String(srcIdx(0)).toString
-    val s = row.getInt(srcIdx(1))
-    val e = row.getInt(srcIdx(2))
-    val v = row.getFloat(srcIdx(3))
+    val name = values(0).toString
+    val s = values(1).asInstanceOf[Int]
+    val e = values(2).asInstanceOf[Int]
+    val v = values(3).asInstanceOf[Float]
     require(s >= 0 && e > s, s"bigwig write: bad interval $name:$s-$e")
     rows += ((name, s, e, v))
   }
 
   // ---- little-endian byte building ----------------------------------
-  private final class Buf {
-    val out = new java.io.ByteArrayOutputStream(1 << 12)
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-    }
-    def u64(v: Long): Unit = { u32(v.toInt); u32((v >> 32).toInt) }
-    def f32(v: Float): Unit = u32(java.lang.Float.floatToIntBits(v))
-    def f64(v: Double): Unit = u64(java.lang.Double.doubleToLongBits(v))
-    def bytes(b: Array[Byte]): Unit = out.write(b)
-    def size: Int = out.size()
-    def toArray: Array[Byte] = out.toByteArray
-  }
-
-  /** Little-endian writer over a stream — same surface as Buf, but emits
-    * directly to the (buffered) file stream instead of accumulating.
-    */
-  private final class LEOut(os: java.io.OutputStream) {
-    def u8(v: Int): Unit = os.write(v & 0xff)
-    def u16(v: Int): Unit = { os.write(v & 0xff); os.write((v >> 8) & 0xff) }
-    def u32(v: Int): Unit = {
-      os.write(v & 0xff); os.write((v >> 8) & 0xff)
-      os.write((v >> 16) & 0xff); os.write((v >> 24) & 0xff)
-    }
-    def u64(v: Long): Unit = { u32(v.toInt); u32((v >> 32).toInt) }
-    def f64(v: Double): Unit = u64(java.lang.Double.doubleToLongBits(v))
-    def bytes(b: Array[Byte]): Unit = os.write(b)
-  }
+  private type Buf = LeOut[java.io.ByteArrayOutputStream]
+  private def newBuf(): Buf = new LeOut(new java.io.ByteArrayOutputStream(1 << 12))
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {
     if (!compress) return raw
@@ -204,25 +133,25 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
                     itemsPerSlot: Int): Array[Byte] = {
     require(blocks.size <= RTreeBlockSize * 0xffff,
       s"bigwig write: ${blocks.size} blocks exceed a two-level R-tree")
-    val b = new Buf
-    b.u32(0x2468ACE0)              // magic
-    b.u32(RTreeBlockSize)          // blockSize
-    b.u64(itemCount)               // items indexed (Kent semantics)
+    val b = newBuf()
+    b.i32(0x2468ACE0)              // magic
+    b.i32(RTreeBlockSize)          // blockSize
+    b.i64(itemCount)               // items indexed (Kent semantics)
     val (minCx, minS) = if (blocks.isEmpty) (0, 0)
       else (blocks.map(_._1.chromIx).min,
         blocks.filter(_._1.chromIx == blocks.map(_._1.chromIx).min).map(_._1.start).min)
     val (maxCx, maxE) = if (blocks.isEmpty) (0, 0)
       else (blocks.map(_._1.chromIx).max,
         blocks.filter(_._1.chromIx == blocks.map(_._1.chromIx).max).map(_._1.end).max)
-    b.u32(minCx); b.u32(minS); b.u32(maxCx); b.u32(maxE)
-    b.u64(endDataOffset)           // endFileOffset of the indexed data
-    b.u32(itemsPerSlot); b.u32(0)  // itemsPerSlot, reserved
+    b.i32(minCx); b.i32(minS); b.i32(maxCx); b.i32(maxE)
+    b.i64(endDataOffset)           // endFileOffset of the indexed data
+    b.i32(itemsPerSlot); b.i32(0)  // itemsPerSlot, reserved
     def leafNode(group: Seq[(Block, Long, Long)], buf: Buf): Unit = {
-      buf.u8(1); buf.u8(0); buf.u16(group.size)
+      buf.u8(1); buf.u8(0); buf.i16(group.size)
       group.foreach { case (blk, off, sz) =>
-        buf.u32(blk.chromIx); buf.u32(blk.start)
-        buf.u32(blk.chromIx); buf.u32(blk.end)
-        buf.u64(off); buf.u64(sz)
+        buf.i32(blk.chromIx); buf.i32(blk.start)
+        buf.i32(blk.chromIx); buf.i32(blk.end)
+        buf.i64(off); buf.i64(sz)
       }
     }
     if (blocks.size <= RTreeBlockSize) {
@@ -233,19 +162,19 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
       // computable because every leaf's byte size is fixed by its count
       val rootSize = 4 + groups.size * 24
       var childOff = treeOffset + 48 + rootSize
-      b.u8(0); b.u8(0); b.u16(groups.size)
+      b.u8(0); b.u8(0); b.i16(groups.size)
       groups.foreach { g =>
-        b.u32(g.head._1.chromIx); b.u32(g.head._1.start)
-        b.u32(g.last._1.chromIx); b.u32(g.last._1.end)
-        b.u64(childOff)
+        b.i32(g.head._1.chromIx); b.i32(g.head._1.start)
+        b.i32(g.last._1.chromIx); b.i32(g.last._1.end)
+        b.i64(childOff)
         childOff += 4 + g.size * 32
       }
       groups.foreach(g => leafNode(g, b))
     }
-    b.toArray
+    b.os.toByteArray
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def finish(): Seq[(String, OutputStream => Unit)] = {
     // per-chrom sorted, non-overlapping intervals; chrom ids in name order
     val byChrom = new java.util.TreeMap[String, mutable.ArrayBuffer[(Int, Int, Float)]]()
     rows.foreach { case (n, s, e, v) =>
@@ -268,13 +197,13 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
     val dataBlocks = mutable.ArrayBuffer[Block]()
     chromIvs.zipWithIndex.foreach { case (iv, cx) =>
       iv.grouped(ItemsPerSlot).foreach { sec =>
-        val raw = new Buf
-        raw.u32(cx); raw.u32(sec.head._1); raw.u32(sec.last._2)
-        raw.u32(0); raw.u32(0)          // itemStep, itemSpan (bedGraph)
+        val raw = newBuf()
+        raw.i32(cx); raw.i32(sec.head._1); raw.i32(sec.last._2)
+        raw.i32(0); raw.i32(0)          // itemStep, itemSpan (bedGraph)
         raw.u8(1); raw.u8(0)            // type=1 bedGraph, reserved
-        raw.u16(sec.length)
-        sec.foreach { case (s, e, v) => raw.u32(s); raw.u32(e); raw.f32(v) }
-        val rb = raw.toArray
+        raw.i16(sec.length)
+        sec.foreach { case (s, e, v) => raw.i32(s); raw.i32(e); raw.f32(v) }
+        val rb = raw.os.toByteArray
         dataBlocks += Block(cx, sec.head._1, sec.last._2, deflate(rb), rb.length)
       }
     }
@@ -310,14 +239,14 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
     }
     def zoomBlocks(recs: Seq[ZRec]): Seq[Block] =
       recs.grouped(ItemsPerSlot).map { sec =>
-        val raw = new Buf
+        val raw = newBuf()
         sec.foreach { r =>
-          raw.u32(r.cx); raw.u32(r.start); raw.u32(r.end)
-          raw.u32(r.valid.toInt)
+          raw.i32(r.cx); raw.i32(r.start); raw.i32(r.end)
+          raw.i32(r.valid.toInt)
           raw.f32(r.min.toFloat); raw.f32(r.max.toFloat)
           raw.f32(r.sum.toFloat); raw.f32(r.sumSq.toFloat)
         }
-        val rb = raw.toArray
+        val rb = raw.os.toByteArray
         Block(sec.head.cx, sec.head.start, sec.last.end, deflate(rb), rb.length)
       }.toSeq
     val zoomData: Array[(Int, Seq[ZRec], Seq[Block])] =
@@ -330,17 +259,17 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
     val keySize = math.max(1, if (chromNames.isEmpty) 1
       else chromNames.map(_.getBytes("US-ASCII").length).max)
     val chromTree = {
-      val b = new Buf
-      b.u32(0x78CA8C91)
-      b.u32(math.max(1, chromNames.length)) // blockSize
-      b.u32(keySize); b.u32(8)              // keySize, valSize
-      b.u64(chromNames.length.toLong); b.u64(0L)
-      b.u8(1); b.u8(0); b.u16(chromNames.length)
+      val b = newBuf()
+      b.i32(0x78CA8C91)
+      b.i32(math.max(1, chromNames.length)) // blockSize
+      b.i32(keySize); b.i32(8)              // keySize, valSize
+      b.i64(chromNames.length.toLong); b.i64(0L)
+      b.u8(1); b.u8(0); b.i16(chromNames.length)
       chromNames.zipWithIndex.foreach { case (n, cx) =>
         val kb = java.util.Arrays.copyOf(n.getBytes("US-ASCII"), keySize)
-        b.bytes(kb); b.u32(cx); b.u32(chromSizes(cx))
+        b.bytes(kb); b.i32(cx); b.i32(chromSizes(cx))
       }
-      b.toArray
+      b.os.toByteArray
     }
 
     // ---- total summary over all data --------------------------------
@@ -398,47 +327,39 @@ final class BigWigDataWriter(dir: String, srcIdx: Array[Int],
     // the layout pass above) — no whole-file in-heap assembly, so a
     // shard's peak memory is its rows + compressed blocks, with no
     // Int-indexed full-file array and its ~2 GB ceiling.
-    val fs = tmpPath.getFileSystem(conf.value)
-    val rawOut = fs.create(tmpPath, true)
-    val bufOut = new java.io.BufferedOutputStream(rawOut, 1 << 16)
-    val file = new LEOut(bufOut)
+    val bufOut = new java.io.BufferedOutputStream(dest, 1 << 16)
+    val file = new LeOut(bufOut)
     try {
-    file.u32(BigWigWriteMagic.Magic)
-    file.u16(4)                         // version
-    file.u16(zooms.length)
-    file.u64(chromTreeOffset)
-    file.u64(fullDataOffset)
-    file.u64(fullIndexOffset)
-    file.u16(0); file.u16(0)            // fieldCount, definedFieldCount (wig)
-    file.u64(0L)                        // autoSqlOffset
-    file.u64(totalSummaryOffset)
-    file.u32(uncompressBufSize)
-    file.u64(0L)                        // reserved
+    file.i32(BigWigWriteMagic.Magic)
+    file.i16(4)                         // version
+    file.i16(zooms.length)
+    file.i64(chromTreeOffset)
+    file.i64(fullDataOffset)
+    file.i64(fullIndexOffset)
+    file.i16(0); file.i16(0)            // fieldCount, definedFieldCount (wig)
+    file.i64(0L)                        // autoSqlOffset
+    file.i64(totalSummaryOffset)
+    file.i32(uncompressBufSize)
+    file.i64(0L)                        // reserved
     placedZooms.foreach { case (rl, _, _, dataOff, indexOff, _) =>
-      file.u32(rl); file.u32(0); file.u64(dataOff); file.u64(indexOff)
+      file.i32(rl); file.i32(0); file.i64(dataOff); file.i64(indexOff)
     }
-    file.u64(tValid); file.f64(tMin); file.f64(tMax); file.f64(tSum); file.f64(tSumSq)
+    file.i64(tValid); file.f64(tMin); file.f64(tMax); file.f64(tSum); file.f64(tSumSq)
     file.bytes(chromTree)
-    file.u64(dataBlocks.size.toLong)
+    file.i64(dataBlocks.size.toLong)
     placedData.foreach { case (blk, _, _) => file.bytes(blk.payload) }
     file.bytes(fullIndexBytes)
     placedZooms.foreach { case (_, nRecs, placed, _, _, indexBytes) =>
-      file.u32(nRecs)
+      file.i32(nRecs)
       placed.foreach { case (blk, _, _) => file.bytes(blk.payload) }
       file.bytes(indexBytes)
     }
-    file.u32(BigWigWriteMagic.Magic)    // trailing magic, per Kent files
+    file.i32(BigWigWriteMagic.Magic)    // trailing magic, per Kent files
     } finally bufOut.close()
-    if (!fs.rename(tmpPath, path))
-      throw new java.io.IOException(s"bigwig write: rename to $path failed")
-    GraftCommitted
+    Nil
   }
 
-  override def abort(): Unit = {
-    val fs = tmpPath.getFileSystem(conf.value)
-    fs.delete(tmpPath, false)
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = dest.close()
 }
 
 private object BigWigWriteMagic { val Magic = 0x888FFC26 }

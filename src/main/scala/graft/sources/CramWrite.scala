@@ -1,12 +1,9 @@
 package graft.sources
 
 import java.io.{BufferedOutputStream, OutputStream}
-import java.util.UUID
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 /** CRAM 3.0 sink — reference-less ("no_ref") CRAM, the mode `samtools view
@@ -36,69 +33,24 @@ import org.apache.spark.sql.types.StructType
   * `option("refs", "name:len,...")` resolves the dictionary on the driver so
   * every task numbers references identically.
   */
-final class CramWriteBuilder(table: GraftTable, info: LogicalWriteInfo,
-                             options: Map[String, String])
-  extends WriteBuilder with SupportsTruncate {
-
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = {
-      val dir = new Path(table.paths.head)
-      val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      val sconf = new SerializableHadoopConf(conf)
-      val (text, refs) = options.get("headerfrom") match {
-        case Some(src) => BamHeader.read(new Path(src), conf)
-        case None => options.get("refs") match {
-          case Some(r) =>
-            val rs = BamHeader.parseRefsOption(r)
-            (BamHeader.synthesize(rs), rs)
-          case None => throw new IllegalArgumentException(
-            "cram write requires the target reference dictionary: pass " +
-              "option(\"headerFrom\", <existing .bam>) or " +
-              "option(\"refs\", \"name:len,name:len,...\")")
-        }
-      }
-      val containerRecords =
-        math.max(1, options.getOrElse("containerrecords", "10000").toInt)
-      new CramBatchWrite(table.paths.head, info.schema(), sconf,
-        UUID.randomUUID().toString, text, refs, containerRecords)
-    }
-  }
+final class CramSink(headerText: String, refs: Array[(String, Int)],
+                     containerRecords: Int) extends SinkJob {
+  def dataSchema: StructType = formats.SamFormat.dataSchema
+  def extension: String = "cram"
+  def siblings: Seq[String] = Seq(".crai")
+  def open(out: OutputStream, fileName: String): SinkEncoder =
+    new CramEncoder(headerText, refs, containerRecords, out, fileName)
 }
 
-final class CramBatchWrite(dir: String, schema: StructType,
-                           conf: SerializableHadoopConf, jobId: String,
-                           headerText: String, refs: Array[(String, Int)],
-                           containerRecords: Int = 10000)
-  extends BatchWrite {
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val srcIdx: Array[Int] = formats.SamFormat.dataSchema.fieldNames.map { f =>
-      schema.fieldNames.indexWhere(_.equalsIgnoreCase(f))
-    }
-    new CramDataWriterFactory(dir, srcIdx, conf, jobId, headerText, refs,
-      containerRecords)
+object CramSink {
+  def apply(options: Map[String, String], conf: Configuration): CramSink = {
+    val (text, refs) = BamHeader.resolve("cram", options, conf)
+    // records per container: 10k matches samtools' default granularity;
+    // tests set it lower to make many-container fixtures for the split
+    // sweeps
+    new CramSink(text, refs,
+      math.max(1, options.getOrElse("containerrecords", "10000").toInt))
   }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, jobId, conf.value)
-}
-
-final class CramDataWriterFactory(dir: String, srcIdx: Array[Int],
-                                  conf: SerializableHadoopConf, jobId: String,
-                                  headerText: String, refs: Array[(String, Int)],
-                                  containerRecords: Int = 10000)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new CramDataWriter(dir, srcIdx, conf, partitionId, taskId, jobId,
-      headerText, refs, containerRecords)
 }
 
 /** Low-level CRAM byte emitters shared by the writer and its spec. */
@@ -132,11 +84,6 @@ object CramCodec {
     }
   }
 
-  def i32le(out: java.io.ByteArrayOutputStream, v: Int): Unit = {
-    out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff)
-  }
-
   /** One block: method/ctype/cid/sizes/payload + CRC32 (spec §8). Payloads
     * above the gzip floor compress with method 1; tiny ones go raw.
     */
@@ -157,7 +104,7 @@ object CramCodec {
     val body = b.toByteArray
     val crc = new java.util.zip.CRC32()
     crc.update(body)
-    i32le(b, crc.getValue.toInt)
+    new LeOut(b).i32(crc.getValue.toInt)
     b.toByteArray
   }
 
@@ -166,7 +113,7 @@ object CramCodec {
                       nRec: Int, bases: Long,
                       nBlocks: Int, landmarks: Seq[Int]): Array[Byte] = {
     val h = new java.io.ByteArrayOutputStream(64)
-    i32le(h, length)
+    new LeOut(h).i32(length)
     itf8(h, refSeqId); itf8(h, aliStart); itf8(h, aliSpan); itf8(h, nRec)
     ltf8(h, 0L) // global record counter (informational)
     ltf8(h, bases)
@@ -175,7 +122,7 @@ object CramCodec {
     val body = h.toByteArray
     val crc = new java.util.zip.CRC32()
     crc.update(body)
-    i32le(h, crc.getValue.toInt)
+    new LeOut(h).i32(crc.getValue.toInt)
     h.toByteArray
   }
 
@@ -194,33 +141,15 @@ object CramCodec {
   }
 }
 
-final class CramDataWriter(dir: String, srcIdx: Array[Int],
-                           conf: SerializableHadoopConf, partitionId: Int,
-                           taskId: Long, jobId: String, headerText: String,
-                           refs: Array[(String, Int)],
-                           containerRecordsOpt: Int = 10000)
-  extends DataWriter[InternalRow] {
+private final class CramEncoder(headerText: String, refs: Array[(String, Int)],
+                                containerRecords: Int, raw: OutputStream,
+                                fileName: String) extends SinkEncoder {
 
   import CramCodec._
 
-  private val fileName =
-    f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.cram"
-  private val tmpPath = new Path(new Path(new Path(dir, "_temporary"), jobId), fileName)
-  private val path = new Path(dir, fileName)
-  // records per container: 10k matches samtools' default granularity; tests
-  // override it down to make many-container fixtures for the split sweeps
-  private val containerRecords = math.max(1, containerRecordsOpt)
+  private val tidOf = BamHeader.tids(refs)
 
-  private val tidOf: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](refs.length * 2)
-    refs.indices.foreach(i => m.put(refs(i)._1, i))
-    m
-  }
-
-  private var opened = false
-  private var raw: OutputStream = _
-  private var out: BufferedOutputStream = _
-  private val dataTypes = formats.SamFormat.dataSchema.fields.map(_.dataType)
+  private val out = new BufferedOutputStream(raw, 1 << 16)
   private val IntRe = "-?\\d+".r.pattern
 
   // one buffered row = the resolved per-record values; flushed per container
@@ -238,11 +167,7 @@ final class CramDataWriter(dir: String, srcIdx: Array[Int],
     written += bytes.length
   }
 
-  private def open(): Unit = {
-    opened = true
-    val fs = tmpPath.getFileSystem(conf.value)
-    raw = fs.create(tmpPath, true)
-    out = new BufferedOutputStream(raw, 1 << 16)
+  locally {
     // file definition: magic, 3.0, 20-byte id
     emit(Array[Byte]('C', 'R', 'A', 'M', 3, 0))
     val id = new Array[Byte](20)
@@ -252,21 +177,13 @@ final class CramDataWriter(dir: String, srcIdx: Array[Int],
     // FILE_HEADER container: i32 text length + SAM text in one block
     val text = headerText.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     val payload = new java.io.ByteArrayOutputStream(text.length + 4)
-    i32le(payload, text.length); payload.write(text, 0, text.length)
+    new LeOut(payload).i32(text.length); payload.write(text, 0, text.length)
     val blk = block(0 /* FILE_HEADER */, 0, payload.toByteArray)
     emit(containerHeader(blk.length, 0, 0, 0, 0, 0L, 1, Seq(0)))
     emit(blk)
   }
 
-  override def write(row: InternalRow): Unit = {
-    if (!opened) open()
-    val v = new Array[Any](srcIdx.length)
-    var i = 0
-    while (i < srcIdx.length) {
-      val s = srcIdx(i)
-      v(i) = if (s < 0 || row.isNullAt(s)) null else row.get(s, dataTypes(i))
-      i += 1
-    }
+  override def write(v: Array[Any]): Unit = {
     val ref = if (v(2) == null) null else v(2).toString
     val refId =
       if (ref == null) -1
@@ -571,37 +488,22 @@ final class CramDataWriter(dir: String, srcIdx: Array[Int],
       landmarks.head.toLong, (blockBytes.length - landmarks.head).toLong))
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (opened) {
-      flushContainer()
-      emit(CramCodec.eofContainer())
-      out.close()
-      val fs = path.getFileSystem(conf.value)
-      // `.crai` sibling: one gzip'd text line per slice (spec §4), so region
-      // readers prune this part's containers without decoding them
-      val craiTmp = tmpPath.suffix(".crai")
-      val cs = new java.util.zip.GZIPOutputStream(fs.create(craiTmp, true))
-      try {
-        craiEntries.foreach { case (seqId, start, span, cOff, sOff, sSize) =>
-          cs.write(s"$seqId\t$start\t$span\t$cOff\t$sOff\t$sSize\n"
-            .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-        }
-      } finally cs.close()
-      if (!fs.rename(craiTmp, path.suffix(".crai")))
-        throw new java.io.IOException(s"failed to commit $craiTmp")
-      if (!fs.rename(tmpPath, path))
-        throw new java.io.IOException(s"failed to commit $tmpPath -> $path")
-    }
-    GraftCommitted
+  override def finish(): Seq[(String, OutputStream => Unit)] = {
+    flushContainer()
+    emit(CramCodec.eofContainer())
+    out.close()
+    // `.crai` sibling: one gzip'd text line per slice (spec §4), so region
+    // readers prune this part's containers without decoding them
+    val crai = new java.io.ByteArrayOutputStream(64 * craiEntries.length + 32)
+    val cs = new java.util.zip.GZIPOutputStream(crai)
+    try {
+      craiEntries.foreach { case (seqId, start, span, cOff, sOff, sSize) =>
+        cs.write(s"$seqId\t$start\t$span\t$cOff\t$sOff\t$sSize\n"
+          .getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      }
+    } finally cs.close()
+    Seq(".crai" -> (os => crai.writeTo(os)))
   }
 
-  override def abort(): Unit = {
-    if (opened) {
-      try out.close() catch { case _: Throwable => () }
-      val fs = tmpPath.getFileSystem(conf.value)
-      fs.delete(tmpPath, false)
-      fs.delete(tmpPath.suffix(".crai"), false)
-    }
-  }
-  override def close(): Unit = ()
+  override def close(): Unit = out.close()
 }

@@ -385,24 +385,18 @@ final class GraftTable(val format: GraftFormat, private[sources] val options: Ma
   }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = format match {
-    case w: WritableGraftFormat =>
-      val writeOpts = info.options().asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-      new GraftWriteBuilder(this, w, info, this.options ++ writeOpts)
-    case formats.BamFormat =>
-      val writeOpts = info.options().asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-      new BamWriteBuilder(this, info, this.options ++ writeOpts)
-    case formats.BcfFormat =>
-      val writeOpts = info.options().asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-      new BcfWriteBuilder(this, info, this.options ++ writeOpts)
-    case _: formats.CramFormat =>
-      val writeOpts = info.options().asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-      new CramWriteBuilder(this, info, this.options ++ writeOpts)
-    case _: formats.BigWigValueFormat =>
-      val writeOpts = info.options().asScala.toMap.map { case (k, v) => k.toLowerCase -> v }
-      new BigWigWriteBuilder(this, info, this.options ++ writeOpts)
-    case _ => throw new UnsupportedOperationException(
-      s"${format.shortName} does not support writes")
+      : org.apache.spark.sql.connector.write.WriteBuilder = {
+    val writeOpts = options ++ info.options().asScala.map { case (k, v) => k.toLowerCase -> v }
+    val job: Configuration => SinkJob = format match {
+      case w: WritableGraftFormat => _ => TextSink(w, writeOpts)
+      case formats.BamFormat => BamSink(writeOpts, _)
+      case formats.BcfFormat => BcfSink(writeOpts, _)
+      case _: formats.CramFormat => CramSink(writeOpts, _)
+      case _: formats.BigWigValueFormat => _ => BigWigSink(writeOpts)
+      case _ => throw new UnsupportedOperationException(
+        s"${format.shortName} does not support writes")
+    }
+    new GraftWriteBuilder(this, info, job)
   }
 }
 
@@ -1176,9 +1170,11 @@ object GraftScan {
   /** Format-provided aligned cut offsets (`.crai` container starts, FCS
     * stride), or None when the format has none or they could not be read.
     * Keyed without maxSplit: the offsets do not depend on it, and chunk
-    * grouping is recomputed cheaply per plan.
+    * grouping is recomputed cheaply per plan. None is not memoized: a
+    * `.crai` added or repaired next to an unchanged CRAM is used by the
+    * next plan.
     */
-  private val alignedCuts = new PlanMemo[FileKey, Option[Array[Long]]]()
+  private val alignedCuts = new PlanMemo[FileKey, Option[Array[Long]]](keep = _.isDefined)
 
   /** Coalesce BGZF virtual-position ranges: sort by start, merge any that
     * overlap or touch. Ranges are (vStart, vEnd) virtual offsets; a record

@@ -4,15 +4,23 @@ import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
-import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-/** A format that can serialize records back to its text form (the Spark
-  * equivalent of the reference's `COPY ... STORED AS FASTA/FASTQ` sink,
-  * sinks/simple_record_sink.rs:81-119). Unlike the reference's single-file
-  * sink, each task writes its own part file — parallel by construction.
+/** Graft's sinks (the Spark equivalent of the reference's `COPY ... STORED
+  * AS FASTA/FASTQ`, sinks/simple_record_sink.rs:81-119). Unlike the
+  * reference's single-file sink, each task writes its own part file —
+  * parallel by construction. One commit protocol serves every format
+  * ([[GraftWriteBuilder]] down to [[GraftDataWriter]]); a format supplies
+  * only a [[SinkJob]] (options and header, resolved on the driver) and the
+  * [[SinkEncoder]] that job opens per part (rows in, sibling indexes out).
   */
 case object GraftCommitted extends WriterCommitMessage
 
@@ -60,98 +68,97 @@ trait IndexableGraftFormat extends WritableGraftFormat {
   def tabixPreset: (Int, Int, Int, Int) = (2, 1, 2, 0)
 }
 
-final class GraftWriteBuilder(table: GraftTable, format: WritableGraftFormat,
-                              info: LogicalWriteInfo, options: Map[String, String])
+/** The driver half of a sink: its options and header, resolved once per
+  * job and shipped to every task.
+  */
+trait SinkJob extends Serializable {
+  /** Columns the encoder reads, matched to the input columns by name. */
+  def dataSchema: StructType
+
+  /** Part file extension, without the leading dot. */
+  def extension: String
+
+  /** Suffixes of the sibling indexes a part may carry (".tbi", ...). */
+  def siblings: Seq[String]
+
+  /** Driver-side check of the input columns. */
+  def checkInput(input: StructType): Unit = ()
+
+  /** The encoder of one part file, writing to `out`. */
+  def open(out: OutputStream, fileName: String): SinkEncoder
+
+  /** Input position of each dataSchema column, -1 when absent. */
+  final def sourceIndexes(input: StructType): Array[Int] = {
+    checkInput(input)
+    dataSchema.fieldNames.map(f => input.fieldNames.indexWhere(_.equalsIgnoreCase(f)))
+  }
+}
+
+/** The task half of a sink: encodes the rows of one part file. */
+trait SinkEncoder {
+  /** One row in dataSchema order; `values` is reused for the next row. */
+  def write(values: Array[Any]): Unit
+
+  /** Ends the data file, closing its stream, and returns each sibling
+    * index to commit as (suffix, serializer).
+    */
+  def finish(): Seq[(String, OutputStream => Unit)]
+
+  /** Closes the stream of a part that will not be committed. */
+  def close(): Unit
+}
+
+final class GraftWriteBuilder(table: GraftTable, info: LogicalWriteInfo,
+                              resolve: Configuration => SinkJob)
   extends WriteBuilder with SupportsTruncate {
 
+  private val dir = table.paths.head
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
 
+  /** The job, resolved before the target is truncated (a rejected option
+    * leaves the old output in place), and the conf to ship with it.
+    */
+  private def prepare(): (SinkJob, SerializableHadoopConf) = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    val job = resolve(conf)
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    if (doTruncate && fs.exists(path)) fs.delete(path, true)
+    fs.mkdirs(path)
+    (job, new SerializableHadoopConf(conf))
+  }
+
   override def build(): Write = new Write {
+    // Per-job temp namespace (Spark's FileOutputCommitter does the same):
+    // two concurrent appends to one directory must not delete each
+    // other's in-flight task files at job commit/abort.
     override def toBatch: BatchWrite = {
-      val dir = new Path(table.paths.head)
-      val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      if (doTruncate && fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      // Per-job temp namespace (Spark's FileOutputCommitter does the same):
-      // two concurrent appends to one directory must not delete each
-      // other's in-flight task files at job commit/abort.
-      new GraftBatchWrite(format, table.paths.head, info.schema(),
-        new SerializableHadoopConf(conf),
-        options.getOrElse("compression", "none").toLowerCase,
-        UUID.randomUUID().toString)
+      val (job, conf) = prepare()
+      new GraftBatchWrite(job, dir, info.schema(), conf, UUID.randomUUID().toString)
     }
 
     // writeStream.format("fasta")... — append-only like Spark's file sink.
     // Each epoch's part names are deterministic (epoch, partition), so a
     // replayed epoch after failure overwrites its own files: idempotent
     // exactly-once output without a metadata log.
-    override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
+    override def toStreaming: StreamingWrite = {
       if (doTruncate)
         throw new UnsupportedOperationException(
-          s"${format.shortName} streaming sink is append-only (like Spark's " +
+          s"${table.format.shortName} streaming sink is append-only (like Spark's " +
             "file sink); use outputMode(\"append\")")
-      val dir = new Path(table.paths.head)
-      val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-      val fs = dir.getFileSystem(conf)
-      fs.mkdirs(dir)
-      new GraftStreamingWrite(format, table.paths.head, info.schema(),
-        new SerializableHadoopConf(conf),
-        options.getOrElse("compression", "none").toLowerCase,
-        info.queryId())
+      val (job, conf) = prepare()
+      new GraftStreamingWrite(job, dir, info.schema(), conf, info.queryId())
     }
   }
 }
 
-/** Streaming flavor of [[GraftBatchWrite]]: one job-temp namespace per
-  * (queryId, epoch), deterministic part names per (epoch, partition).
-  */
-final class GraftStreamingWrite(format: WritableGraftFormat, dir: String,
-                                schema: StructType, conf: SerializableHadoopConf,
-                                compression: String, queryId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    val srcIdx: Array[Int] = format.dataSchema.fieldNames.map { f =>
-      schema.fieldNames.indexWhere(_.equalsIgnoreCase(f))
-    }
-    new GraftStreamingDataWriterFactory(format, dir, srcIdx, schema, conf,
-      compression, queryId)
-  }
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, s"$queryId-$epochId", conf.value)
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftWriteTemp.clean(dir, s"$queryId-$epochId", conf.value)
-}
-
-final class GraftStreamingDataWriterFactory(format: WritableGraftFormat, dir: String,
-                                            srcIdx: Array[Int], schema: StructType,
-                                            conf: SerializableHadoopConf,
-                                            compression: String, queryId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(format, dir, srcIdx, schema, conf, compression,
-      partitionId, taskId, s"$queryId-$epochId", epoch = Some(epochId),
-      streamQueryId = Some(queryId))
-}
-
-final class GraftBatchWrite(format: WritableGraftFormat, dir: String, schema: StructType,
-                            conf: SerializableHadoopConf, compression: String,
-                            jobId: String)
+final class GraftBatchWrite(job: SinkJob, dir: String, schema: StructType,
+                            conf: SerializableHadoopConf, jobId: String)
   extends BatchWrite {
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    // Map the incoming dataframe columns onto dataSchema positions by name.
-    val srcIdx: Array[Int] = format.dataSchema.fieldNames.map { f =>
-      schema.fieldNames.indexWhere(_.equalsIgnoreCase(f))
-    }
-    new GraftDataWriterFactory(format, dir, srcIdx, schema, conf, compression, jobId)
-  }
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftDataWriterFactory(job, dir, job.sourceIndexes(schema), conf, jobId)
 
   // Task outputs land in dir/_temporary/<jobId> and are renamed into place
   // on task commit, so a task that dies mid-write never leaves a visible
@@ -171,10 +178,35 @@ final class GraftBatchWrite(format: WritableGraftFormat, dir: String, schema: St
     GraftWriteTemp.clean(dir, jobId, conf.value)
 }
 
-/** Job-temp cleanup shared by every graft sink (text and BAM). */
+/** Streaming flavor of [[GraftBatchWrite]]: one job-temp namespace per
+  * (queryId, epoch), deterministic part names per (epoch, partition).
+  */
+final class GraftStreamingWrite(job: SinkJob, dir: String, schema: StructType,
+                                conf: SerializableHadoopConf, queryId: String)
+  extends StreamingWrite {
+
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new GraftStreamingDataWriterFactory(job, dir, job.sourceIndexes(schema), conf, queryId)
+
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteTemp.clean(dir, s"$queryId-$epochId", conf.value)
+  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    GraftWriteTemp.clean(dir, s"$queryId-$epochId", conf.value)
+}
+
+final class GraftStreamingDataWriterFactory(job: SinkJob, dir: String, srcIdx: Array[Int],
+                                            conf: SerializableHadoopConf, queryId: String)
+  extends StreamingDataWriterFactory {
+
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    new GraftDataWriter(job, dir, srcIdx, conf, partitionId, taskId,
+      s"$queryId-$epochId", stream = Some((queryId, epochId)))
+}
+
+/** Job-temp cleanup shared by the batch and streaming writes. */
 object GraftWriteTemp {
-  def clean(dir: String, jobId: String,
-            conf: org.apache.hadoop.conf.Configuration): Unit = {
+  def clean(dir: String, jobId: String, conf: Configuration): Unit = {
     val parent = new Path(dir, "_temporary")
     val tmp = new Path(parent, jobId)
     val fs = tmp.getFileSystem(conf)
@@ -190,95 +222,155 @@ object GraftWriteTemp {
         }
       }
       if (fs.listStatus(parent).isEmpty) fs.delete(parent, false)
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
   }
 }
 
-final class GraftDataWriterFactory(format: WritableGraftFormat, dir: String,
-                                   srcIdx: Array[Int], schema: StructType,
-                                   conf: SerializableHadoopConf, compression: String,
-                                   jobId: String)
+final class GraftDataWriterFactory(job: SinkJob, dir: String, srcIdx: Array[Int],
+                                   conf: SerializableHadoopConf, jobId: String)
   extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(format, dir, srcIdx, schema, conf, compression, partitionId,
-      taskId, jobId)
+    new GraftDataWriter(job, dir, srcIdx, conf, partitionId, taskId, jobId)
 }
 
-final class GraftDataWriter(format: WritableGraftFormat, dir: String,
-                            srcIdx: Array[Int], schema: StructType,
-                            conf: SerializableHadoopConf, compression: String,
-                            partitionId: Int, taskId: Long, jobId: String,
-                            epoch: Option[Long] = None,
-                            streamQueryId: Option[String] = None)
+/** One task's part file: written under the job's temp namespace, opened on
+  * the first row (a task that receives none commits no file), and renamed
+  * into place with its sibling indexes at task commit.
+  */
+final class GraftDataWriter(job: SinkJob, dir: String, srcIdx: Array[Int],
+                            conf: SerializableHadoopConf, partitionId: Int,
+                            taskId: Long, jobId: String,
+                            stream: Option[(String, Long)] = None)
   extends DataWriter[InternalRow] {
 
-  private val ext = format.defaultExtensions.head + (compression match {
-    case "gzip" | "bgzf" => ".gz"
-    case "zstd" => ".zst"
-    case "none" | "" => ""
-    case other => throw new IllegalArgumentException(
-      s"unsupported write compression '$other' (gzip, bgzf, zstd, none)")
-  })
-  if (compression == "bgzf" &&
-      !(format.isInstanceOf[IndexableGraftFormat] || format.writesFai))
-    throw new IllegalArgumentException(
-      s"${format.shortName}: bgzf compression is for indexable formats " +
-        "(the point is the sibling .tbi or .fai+.gzi); use gzip here")
-  // bgzf mode family: coordinate formats index with tabix; fai formats
-  // (FASTA) keep uncompressed-domain .fai offsets + a .gzi block map
-  private val bgzfFai = compression == "bgzf" &&
-    !format.isInstanceOf[IndexableGraftFormat]
   // Batch parts get a random suffix (append-friendly, collision-free);
   // streaming parts are DETERMINISTIC per (queryId, epoch, partition) so a
   // replayed epoch overwrites its OWN output instead of duplicating it —
   // the queryId prefix scopes that overwrite: a different query (fresh
   // checkpoint, epochs restarting at 0) appending to the same directory
   // can never clobber this one's committed parts.
-  private val fileName = epoch match {
-    case Some(e) =>
-      val qid = streamQueryId.getOrElse("q")
-        .replaceAll("[^A-Za-z0-9]", "").take(8)
-      f"part-$qid%s-$e%06d-$partitionId%05d.$ext"
+  private val fileName = stream match {
+    case Some((queryId, epoch)) =>
+      val qid = queryId.replaceAll("[^A-Za-z0-9]", "").take(8)
+      f"part-$qid%s-$epoch%06d-$partitionId%05d.${job.extension}"
     case None =>
-      f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.$ext"
+      f"part-$partitionId%05d-$taskId-${UUID.randomUUID().toString.take(8)}.${job.extension}"
   }
-  // written under the job's temp namespace, renamed into place at task
-  // commit; concurrent attempts of one streaming (epoch, partition) get
-  // distinct temp names (taskId) — the commit coordinator lets only one
-  // attempt rename into place
-  private val tmpName = if (epoch.isDefined) s"$fileName.t$taskId" else fileName
+  // concurrent attempts of one streaming (epoch, partition) get distinct
+  // temp names (taskId) — the commit coordinator lets only one attempt
+  // rename into place
+  private val tmpName = if (stream.isDefined) s"$fileName.t$taskId" else fileName
   private val tmpPath = new Path(new Path(new Path(dir, "_temporary"), jobId), tmpName)
   private val path = new Path(dir, fileName)
 
-  private var opened = false
+  private val dataTypes = job.dataSchema.fields.map(_.dataType)
+  private val values = new Array[Any](srcIdx.length)
   private var raw: OutputStream = _
-  private var bgzf: BgzfWriter = _
-  private var tbi: TabixWriter = _
+  private var enc: SinkEncoder = _
+
+  override def write(row: InternalRow): Unit = {
+    var i = 0
+    while (i < srcIdx.length) {
+      val s = srcIdx(i)
+      values(i) = if (s < 0 || row.isNullAt(s)) null else row.get(s, dataTypes(i))
+      i += 1
+    }
+    if (enc == null) {
+      raw = tmpPath.getFileSystem(conf.value).create(tmpPath, true)
+      enc = job.open(raw, fileName)
+    }
+    enc.write(values)
+  }
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"failed to commit $from -> $to")
+
+  override def commit(): WriterCommitMessage = {
+    if (enc != null) {
+      val fs = path.getFileSystem(conf.value)
+      // a replayed streaming epoch re-commits the same deterministic names:
+      // clear the previous attempt's files so rename lands (idempotent)
+      if (stream.isDefined)
+        (path +: job.siblings.map(path.suffix)).foreach { p =>
+          if (fs.exists(p)) fs.delete(p, false)
+        }
+      enc.finish().foreach { case (suffix, serialize) =>
+        val tmp = tmpPath.suffix(suffix)
+        val os = fs.create(tmp, true)
+        try serialize(os) finally os.close()
+        rename(fs, tmp, path.suffix(suffix))
+      }
+      rename(fs, tmpPath, path)
+    }
+    GraftCommitted
+  }
+
+  override def abort(): Unit = {
+    if (raw != null) {
+      try { if (enc != null) enc.close() else raw.close() }
+      catch { case NonFatal(_) => () }
+      val fs = tmpPath.getFileSystem(conf.value)
+      (tmpPath +: job.siblings.map(tmpPath.suffix)).foreach(fs.delete(_, false))
+    }
+  }
+  override def close(): Unit = ()
+}
+
+/** Text sinks: plain, gzip or zstd part files, or bgzf with a sibling
+  * `.tbi` (coordinate formats) or `.fai` + `.gzi` (FASTA). An uncompressed
+  * part of a `.fai` format commits its `.fai` too.
+  */
+final class TextSink(format: WritableGraftFormat, compression: String) extends SinkJob {
+  private val indexable = format.isInstanceOf[IndexableGraftFormat]
+
+  val extension: String = format.defaultExtensions.head + (compression match {
+    case "gzip" | "bgzf" => ".gz"
+    case "zstd" => ".zst"
+    case "none" | "" => ""
+    case other => throw new IllegalArgumentException(
+      s"unsupported write compression '$other' (gzip, bgzf, zstd, none)")
+  })
+  if (compression == "bgzf" && !(indexable || format.writesFai))
+    throw new IllegalArgumentException(
+      s"${format.shortName}: bgzf compression is for indexable formats " +
+        "(the point is the sibling .tbi or .fai+.gzi); use gzip here")
+
+  def dataSchema: StructType = format.dataSchema
+  def siblings: Seq[String] = compression match {
+    case "bgzf" => if (indexable) Seq(".tbi") else Seq(".fai", ".gzi")
+    case "none" | "" => Seq(".fai")
+    case _ => Nil
+  }
+  def open(out: OutputStream, fileName: String): SinkEncoder =
+    new TextEncoder(format, compression, out)
+}
+
+object TextSink {
+  def apply(format: WritableGraftFormat, options: Map[String, String]): TextSink =
+    new TextSink(format, options.getOrElse("compression", "none").toLowerCase)
+}
+
+private final class TextEncoder(format: WritableGraftFormat, compression: String,
+                                raw: OutputStream) extends SinkEncoder {
+  // bgzf mode family: coordinate formats index with tabix; fai formats
+  // (FASTA) keep uncompressed-domain .fai offsets + a .gzi block map
+  private val bgzfFai = compression == "bgzf" &&
+    !format.isInstanceOf[IndexableGraftFormat]
+  private val bgzf =
+    if (compression == "bgzf") new BgzfWriter(new BufferedOutputStream(raw, 1 << 16))
+    else null
+  private val tbi = if (bgzf != null && !bgzfFai) new TabixWriter() else null
+  private val out: OutputStream = compression match {
+    case "gzip" => new java.util.zip.GZIPOutputStream(raw, 1 << 16)
+    case "zstd" => new com.github.luben.zstd.ZstdOutputStream(raw)
+    case "bgzf" => null
+    case _ => new BufferedOutputStream(raw, 1 << 16)
+  }
   // tabix precondition: per file, chroms grouped and starts ascending
   private var lastTid = -1
   private var lastBeg = -1L
-
-  private lazy val out: OutputStream = {
-    opened = true
-    val fs = tmpPath.getFileSystem(conf.value)
-    raw = fs.create(tmpPath, true)
-    val stream = compression match {
-      case "gzip" => new java.util.zip.GZIPOutputStream(raw, 1 << 16)
-      case "zstd" => new com.github.luben.zstd.ZstdOutputStream(raw)
-      case "bgzf" =>
-        bgzf = new BgzfWriter(new BufferedOutputStream(raw, 1 << 16))
-        tbi = if (bgzfFai) null else new TabixWriter()
-        null
-      case _ => new BufferedOutputStream(raw, 1 << 16)
-    }
-    format.fileHeader.foreach { h =>
-      val b = h.getBytes(UTF_8)
-      if (bgzf != null) bgzf.write(b) else stream.write(b)
-      plainOffset += b.length
-    }
-    stream
-  }
 
   // uncompressed byte position (drives faiLine): plain-file position for
   // uncompressed writes, pre-compression position for bgzf+fai writes
@@ -290,27 +382,18 @@ final class GraftDataWriter(format: WritableGraftFormat, dir: String,
     else null
 
   private val sb = new StringBuilder(1 << 14)
-  private val dataTypes = format.dataSchema.fields.map(_.dataType)
 
-  override def write(row: InternalRow): Unit = {
-    val values = new Array[Any](srcIdx.length)
-    var i = 0
-    while (i < srcIdx.length) {
-      val s = srcIdx(i)
-      values(i) = if (s < 0 || row.isNullAt(s)) null else row.get(s, dataTypes(i))
-      i += 1
-    }
+  format.fileHeader.foreach { h =>
+    val b = h.getBytes(UTF_8)
+    if (bgzf != null) bgzf.write(b) else out.write(b)
+    plainOffset += b.length
+  }
+
+  override def write(values: Array[Any]): Unit = {
     sb.setLength(0)
     format.writeRecord(values, sb)
     val bytes = sb.toString.getBytes(UTF_8)
-    out // force open (header)
-    if (bgzf != null && tbi == null) {
-      // bgzf+fai mode: uncompressed-domain index line, compressed output
-      if (faiSb != null)
-        format.faiLine(values, plainOffset).foreach(faiSb.append)
-      bgzf.write(bytes)
-      plainOffset += bytes.length
-    } else if (bgzf != null) {
+    if (tbi != null) {
       val (chrom, beg0, end0) = format.asInstanceOf[IndexableGraftFormat]
         .recordRegion(values)
       val t = tbi.tid(chrom)
@@ -327,67 +410,30 @@ final class GraftDataWriter(format: WritableGraftFormat, dir: String,
       bgzf.write(bytes)
       tbi.add(t, beg0, end0, vs, bgzf.virtualPos)
     } else {
+      // uncompressed, gzip/zstd, or bgzf+fai (uncompressed-domain index
+      // line, compressed output)
       if (faiSb != null)
         format.faiLine(values, plainOffset).foreach(faiSb.append)
-      out.write(bytes)
+      if (bgzf != null) bgzf.write(bytes) else out.write(bytes)
       plainOffset += bytes.length
     }
   }
 
-  override def commit(): WriterCommitMessage = {
-    // only close (and thereby create) the file if this task wrote anything
-    if (opened) {
-      val fs = path.getFileSystem(conf.value)
-      // a replayed streaming epoch re-commits the same deterministic names:
-      // clear the previous attempt's files so rename lands (idempotent)
-      if (epoch.isDefined) {
-        Seq(path, path.suffix(".tbi"), path.suffix(".fai"), path.suffix(".gzi"))
-          .foreach(p => if (fs.exists(p)) fs.delete(p, false))
-      }
-      if (bgzf != null) {
-        bgzf.finish()
-        raw.close()
-        if (tbi != null) {
-          // sibling index, committed with the same temp+rename discipline
-          val tbiTmp = tmpPath.suffix(".tbi")
-          val ts = fs.create(tbiTmp, true)
-          val (pf, pc, pb, pe) = format.asInstanceOf[IndexableGraftFormat].tabixPreset
-          try tbi.write(ts, pf, pc, pb, pe) finally ts.close()
-          if (!fs.rename(tbiTmp, path.suffix(".tbi")))
-            throw new java.io.IOException(s"failed to commit $tbiTmp")
-        } else {
-          // bgzf+fai mode: sibling .gzi from the writer's own block map
-          val gziTmp = tmpPath.suffix(".gzi")
-          val gs = fs.create(gziTmp, true)
-          try GziIndex.write(gs, bgzf.blockIndex) finally gs.close()
-          if (!fs.rename(gziTmp, path.suffix(".gzi")))
-            throw new java.io.IOException(s"failed to commit $gziTmp")
-        }
-      } else {
-        out.close()
-      }
-      if (faiSb != null && faiSb.nonEmpty) {
-        val faiTmp = tmpPath.suffix(".fai")
-        val fos = fs.create(faiTmp, true)
-        try fos.write(faiSb.toString.getBytes(UTF_8)) finally fos.close()
-        if (!fs.rename(faiTmp, path.suffix(".fai")))
-          throw new java.io.IOException(s"failed to commit $faiTmp")
-      }
-      if (!fs.rename(tmpPath, path))
-        throw new java.io.IOException(s"failed to commit $tmpPath -> $path")
-    }
-    GraftCommitted
+  override def finish(): Seq[(String, OutputStream => Unit)] = {
+    close()
+    val index: Seq[(String, OutputStream => Unit)] =
+      if (tbi != null) {
+        val (pf, pc, pb, pe) = format.asInstanceOf[IndexableGraftFormat].tabixPreset
+        Seq(".tbi" -> (os => tbi.write(os, pf, pc, pb, pe)))
+      } else if (bgzf != null) {
+        // bgzf+fai mode: sibling .gzi from the writer's own block map
+        Seq(".gzi" -> (os => GziIndex.write(os, bgzf.blockIndex)))
+      } else Nil
+    if (faiSb != null && faiSb.nonEmpty)
+      index :+ (".fai" -> ((os: OutputStream) => os.write(faiSb.toString.getBytes(UTF_8))))
+    else index
   }
-  override def abort(): Unit = {
-    if (opened) {
-      try { if (bgzf != null) { bgzf.finish(); raw.close() } else out.close() }
-      catch { case _: Throwable => () }
-      val fs = tmpPath.getFileSystem(conf.value)
-      fs.delete(tmpPath, false)
-      if (bgzf != null) fs.delete(tmpPath.suffix(".tbi"), false)
-      if (bgzf != null) fs.delete(tmpPath.suffix(".gzi"), false)
-      if (faiSb != null) fs.delete(tmpPath.suffix(".fai"), false)
-    }
-  }
-  override def close(): Unit = ()
+
+  override def close(): Unit =
+    if (bgzf != null) { bgzf.finish(); raw.close() } else out.close()
 }

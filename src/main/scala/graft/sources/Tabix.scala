@@ -48,6 +48,20 @@ final case class TabixIndex(names: Seq[String],
 
 object TabixIndex {
 
+  /** Smallest bin (min_shift 14, depth 5) fully containing [beg, end0),
+    * 0-based half-open: the bin the `.tbi`/`.bai`/`.csi` writers file a
+    * record under.
+    */
+  def reg2bin(beg: Long, end0: Long): Int = {
+    val end = end0 - 1
+    if ((beg >> 14) == (end >> 14)) (4681 + (beg >> 14)).toInt
+    else if ((beg >> 17) == (end >> 17)) (585 + (beg >> 17)).toInt
+    else if ((beg >> 20) == (end >> 20)) (73 + (beg >> 20)).toInt
+    else if ((beg >> 23) == (end >> 23)) (9 + (beg >> 23)).toInt
+    else if ((beg >> 26) == (end >> 26)) (1 + (beg >> 26)).toInt
+    else 0
+  }
+
   /** Generalized UCSC binning (csi-style min_shift/depth; tabix = 14/5):
     * bins overlapping [beg, end), 0-based half-open.
     */

@@ -5,7 +5,7 @@ import graft.SharedSpark
 import org.apache.spark.sql.functions._
 
 /** BAM sink round trip: the fixture-proven BAM reader must decode files
-  * produced by [[BamDataWriter]] identically to the htslib-produced
+  * produced by the BAM sink (BamEncoder) identically to the htslib-produced
   * original, region reads must prune through the self-written `.bai`, and
   * the `.bai` metadata pseudo-bins must answer `samtools idxstats`-shaped
   * counts for the sink's own output.

@@ -5,7 +5,7 @@ import graft.SharedSpark
 import org.apache.spark.sql.functions._
 
 /** CRAM sink round trip: the fixture-proven CRAM reader must decode files
-  * produced by [[CramDataWriter]] — no_ref (RR=false) CRAM 3.0, every base
+  * produced by the CRAM sink (CramEncoder) — no_ref (RR=false) CRAM 3.0, every base
   * verbatim in feature series — identically to the BAM original, with no
   * reference FASTA on either side.
   */

@@ -162,4 +162,23 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
       assertSameRows(df, whole)
     }
   }
+
+  test("a repaired .crai re-splits the file while the cram is unchanged") {
+    val src = new java.io.File(cramDir).listFiles()
+      .filter(_.getName.endsWith(".cram")).minBy(_.getName)
+    val dir = graft.TestTmp.dir("cram_repaired_crai").toFile
+    val f = new java.io.File(dir, src.getName)
+    java.nio.file.Files.copy(src.toPath, f.toPath)
+    val crai = new java.io.File(dir, src.getName + ".crai").toPath
+    java.nio.file.Files.write(crai, "this is not a gzip'd crai\n".getBytes("US-ASCII"))
+    withConf("spark.sql.files.maxPartitionBytes" -> "262144",
+             "spark.sql.files.openCostInBytes" -> "16384") {
+      assert(read(f.getAbsolutePath).rdd.getNumPartitions == 1)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(src.getPath + ".crai"), crai,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val parts = read(f.getAbsolutePath).rdd.getNumPartitions
+      assert(parts >= 3, s"the repaired .crai was not used: $parts partition(s)")
+      assertSameRows(read(f.getAbsolutePath), read(cramDir))
+    }
+  }
 }

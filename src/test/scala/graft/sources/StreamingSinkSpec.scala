@@ -92,8 +92,8 @@ class StreamingSinkSpec extends AnyFunSuite with SharedSpark {
     val out = graft.TestTmp.dir("ssink_replay").toString
     val conf = new SerializableHadoopConf(
       spark.sparkContext.hadoopConfiguration)
-    val sw = new GraftStreamingWrite(FastaFormatRef.fmt, out,
-      FastaFormatRef.fmt.dataSchema, conf, "none", "qidtest")
+    val sw = new GraftStreamingWrite(new TextSink(FastaFormatRef.fmt, "none"), out,
+      FastaFormatRef.fmt.dataSchema, conf, "qidtest")
     val factory = sw.createStreamingWriterFactory(
       new org.apache.spark.sql.connector.write.PhysicalWriteInfo {
         override def numPartitions(): Int = 1
