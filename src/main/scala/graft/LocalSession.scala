@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session shape shared by Bench, QTime and PlanDump, so
+/** The one local-session shape shared by Bench and PlanDump, so
   * their numbers and plans stay comparable by construction.
   *
   * AQE coalesces small shuffle reads by SIZE (parallelismFirst=false).
   * The SESSION default advisory is Spark's own 64m — the safe choice for a
   * real cluster, where a deployed jar must not silently shatter a 100 TB
-  * shuffle into 4 MB partitions. The BENCH HARNESS (Bench/QTime/PlanDump)
+  * shuffle into 4 MB partitions. The BENCH HARNESS (Bench/PlanDump)
   * passes an explicit 4m advisory instead: at the sf0.1 bench corpus the
   * q-pack's CPU-bound joins need their parallelism back (32m collapsed
   * q07's ~100 MB shuffles to a handful of tasks: 1.2s -> 3.0s), and 4m is

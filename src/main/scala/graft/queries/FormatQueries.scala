@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Lineage.CutOps
 
 /** Format-reader coverage over the reference's own test fixtures
   * (read-only at /root/reference/exon/exon-core/test-data/datasources).
@@ -483,10 +484,10 @@ object FormatQueries {
       val out = s"$dir/t"
       // repartitionByRange SAMPLES its input to pick bounds, and a plain-
       // gzip GFF is unsplittable — without a cut the whole file inflates
-      // and parses twice (sampling job + shuffle job). localCheckpoint
+      // and parses twice (sampling job + shuffle job). A lineage cut
       // pays one in-memory copy of the 96k rows instead.
       s.read.format("gff").load(s"$fx/gff-index/gencode.v38.polyAs.gff.gz")
-        .localCheckpoint()
+        .cut()
         .repartitionByRange(4, col("seqname"), col("start"))
         .sortWithinPartitions("seqname", "start")
         .write.format("gff").mode("overwrite")

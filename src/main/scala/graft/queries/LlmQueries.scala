@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Lineage.{CutOps, fixpoint}
 
 /** Training-data pipeline pack over the driver's `documents`/`embeddings`
   * tables: deduplication (exact, n-gram Jaccard, MinHash-LSH, SimHash),
@@ -755,7 +756,7 @@ object LlmQueries {
     // near-dup pairs (the step a dedup pipeline runs after pair
     // generation, so "keep one per cluster" works when A~B~C but A!~C).
     // Min-label propagation with a per-round lineage cut
-    // (localCheckpoint): rounds = cluster diameter, which for near-dup
+    // (Lineage.fixpoint): rounds = cluster diameter, which for near-dup
     // clusters is small; at much larger diameters swap in the
     // alternating small-star/large-star contraction (Kiveris et al.) on
     // the same edge DataFrame. Docs in no pair are their own implicit
@@ -772,16 +773,21 @@ object LlmQueries {
       connectedComponentsStar(jaccardPairs(s, d).select(col("ida"), col("idb")))
         .orderBy("doc_id")),
 
-    // Star contraction in RELIABLE-checkpoint mode (setCheckpointDir +
-    // df.checkpoint() per round) — the fault-tolerant configuration a
-    // 100 TB CC run needs (per-round cuts survive executor loss, unlike
-    // localCheckpoint's executor-local blocks). Same recursive-CTE oracle
-    // as l14/l21: both checkpoint modes are pinned to identical clusters.
+    // Star contraction with RELIABLE cuts (spark.graft.checkpointDir, a
+    // file-backed cut per round) — the fault-tolerant configuration a
+    // 100 TB CC run needs (the cuts survive executor loss, unlike the
+    // default executor-local blocks). The conf is set around the
+    // contraction only (every cut is eager in reliable mode) and restored;
+    // a directory already set is kept. Same recursive-CTE oracle as
+    // l14/l21: both cut modes are pinned to identical clusters.
     "l30_dup_clusters_ckpt" -> ((s, d) => {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
-      connectedComponentsStar(jaccardPairs(s, d).select(col("ida"), col("idb")),
-        checkpointDir = Some(ckpt.toString))
-        .orderBy("doc_id")
+      val pairs = jaccardPairs(s, d).select(col("ida"), col("idb"))
+      val saved = s.conf.getOption(Lineage.CheckpointDirKey)
+      s.conf.set(Lineage.CheckpointDirKey, saved.getOrElse(
+        java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString))
+      try connectedComponentsStar(pairs).orderBy("doc_id")
+      finally saved.fold(s.conf.unset(Lineage.CheckpointDirKey))(
+        s.conf.set(Lineage.CheckpointDirKey, _))
     }),
 
     // Exact duplicated-SPAN stats (the Lee et al. "Deduplicating Training
@@ -1834,7 +1840,7 @@ object LlmQueries {
     // set is non-empty confirms on the exact gram strings via a semi-join
     // against that (tiny near the answer) set, so a 64-bit collision —
     // a real event at 100 TB gram counts — can never inflate the answer.
-    // Token arrays are localCheckpoint'ed once and reused by every probe.
+    // Token arrays are cut once and reused by every probe.
     // Pinned by tools/pin_l50.py (independent Python Counter + binary
     // search over the same monotone predicate).
     "l50_longest_dup_span" -> ((s, d) =>
@@ -2312,28 +2318,23 @@ object LlmQueries {
         .filter(col("doc_id") > col("src"))
         .select(col("src"), col("doc_id").as("dst")).distinct()
         .cut()
-      var depth = documents(s, d).select(col("doc_id"), lit(0L).as("dp"))
+      val start = documents(s, d).select(col("doc_id"), lit(0L).as("dp"))
         .cut()
-      var prev = -1L
-      var cur = 0L
-      while (cur != prev) {
-        prev = cur
+      // depths only grow, so a round that raises none is the fixpoint
+      val depth = fixpoint("lineage relaxation", start, LineageRounds) { (cur, _) =>
         val nd = edges
-          .join(depth.select(col("doc_id").as("src"), col("dp").as("sdp")),
+          .join(cur.select(col("doc_id").as("src"), col("dp").as("sdp")),
             Seq("src"))
           .groupBy(col("dst")).agg((max(col("sdp")) + 1L).as("cand"))
-        // convergence sum rides the cut's materialization job (observe) —
-        // one job per round instead of two, same arithmetic
-        val obs = org.apache.spark.sql.Observation()
-        depth = depth
-          .join(nd.select(col("dst").as("doc_id"), col("cand")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            greatest(col("dp"), coalesce(col("cand"), lit(0L))).as("dp"))
-          .observe(obs, sum(col("dp")).as("s"))
-          .cut()
-        cur = obs.get("s").asInstanceOf[Long]
-      }
+        Lineage.Round(cur
+            .join(nd.select(col("dst").as("doc_id"), col("cand")),
+              Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              greatest(col("dp"), coalesce(col("cand"), lit(0L))).as("dp"),
+              (col("cand") > col("dp")).as("up")),
+          Seq(count(when(col("up"), 1)).as("raised")),
+          _("raised").asInstanceOf[Long] == 0L)
+      }.state
       depth.groupBy(col("dp"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_ids"))
         .select(col("dp").as("depth"), col("n_docs"), col("sum_ids"))
@@ -2614,7 +2615,7 @@ object LlmQueries {
         .select(col("doc_id"), split(col("text"), " ").as("w"))
       // NOT lineage-cut on purpose: the positioned-gram table is corpus-
       // sized (10M+ wide string rows at sf1) but cheap to rebuild — a
-      // localCheckpoint materialization measured SLOWER (13.9 s vs 7.5 s
+      // cut's materialization measured SLOWER (13.9 s vs 7.5 s
       // min at sf1) than letting both consumers recompute the explode.
       // Cuts pay for SMALL-output/EXPENSIVE subtrees (q64's baskets),
       // not large-output/cheap ones.
@@ -2890,7 +2891,7 @@ object LlmQueries {
       : (DataFrame, Seq[(Int, String, Long)]) = {
     // cutLazy: each round's rewrite materializes inside the immediately
     // following merge-pick action (one action per round instead of two);
-    // see CutOps.cutLazy and the r18 JobProbe note below.
+    // see Lineage.cutLazy and the r18 JobProbe note below.
     var vocab = vocab0.cutLazy()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     (1 to rounds).foreach { r =>
@@ -2916,7 +2917,7 @@ object LlmQueries {
       // tiny TakeOrdered over materialized rows) did NOT reduce the
       // round's action count — AQE materializes the union's internal
       // exchange as its own job, exactly offsetting the saved pick
-      // action (JobProbe: 15 -> 16 jobs; QTime parity 2/2 windows).
+      // action (JobProbe: 15 -> 16 jobs; timing parity 2/2 windows).
       // Reverted to the plain pick + cut pair.
       vocab = vocab.withColumn("syms",
         aggregate(col("syms"), array().cast("array<string>"),
@@ -3072,20 +3073,6 @@ object LlmQueries {
       .select(col("ida"), col("idb"), col("j"))
   }
 
-  /** Connected components over (ida, idb) pairs: (doc_id, cluster_id)
-    * with cluster_id = the component's minimum doc_id. Min-label
-    * propagation with a per-round lineage cut: rounds = component
-    * diameter, small for near-dup clusters; at larger diameters swap in
-    * alternating small-star/large-star contraction (Kiveris et al.) on
-    * the same edge DataFrame. Docs in no pair are implicit singletons and
-    * are not emitted.
-    *
-    * `checkpointDir`: when given, per-round cuts are RELIABLE checkpoints
-    * (HDFS/object store via setCheckpointDir) so a long CC run survives
-    * executor loss — the right mode for a 100 TB corpus. When absent, the
-    * cuts are localCheckpoint (executor-local blocks): faster, fine for
-    * bench/sandbox scale, not fault-tolerant.
-    */
   /** Shared DuckDB CTE chain deriving the image dHash truth from the
     * construction (l67/l68 oracles): block grid -> cells -> bits -> hashes
     * -> bands -> `fp(ida, idb, hia, loa, hib, lob)` confirmed pairs.
@@ -3302,78 +3289,6 @@ object LlmQueries {
     * tiny-payload corpora can cap the codec stage below core count
     * (A/B'd at the 500k-doc ratchet in BENCH_NOTES_r16).
     */
-  /** Lineage cut honoring `spark.graft.checkpointDir` (the q64 idiom,
-    * applied pack-wide): by default a localCheckpoint — right for the
-    * single-JVM bench, where executor loss is process death anyway — but
-    * on a real cluster (dynamic allocation, spot nodes) localCheckpoint
-    * blocks die with their executor, so setting the conf to an
-    * HDFS/object-store path switches every cut in the pack to a RELIABLE
-    * checkpoint with identical results.
-    */
-  private implicit class CutOps(df: DataFrame) {
-    def cut(): DataFrame = {
-      val s = df.sparkSession
-      s.conf.getOption("spark.graft.checkpointDir") match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          df.checkpoint()
-        case None => df.localCheckpoint()
-      }
-    }
-
-    /** Lazy lineage cut: same truncation + fault-tolerance routing as
-      * [[cut]], but materialization happens inside the NEXT action's job
-      * instead of an eager job of its own — for loop bodies whose next
-      * step is an immediate action anyway (the BPE merge pick), this
-      * halves the loop's action count, and per-ACTION driver latency is
-      * what dominates those loops (JobProbe r18: ~37 ms/action). NOT
-      * usable when an Observation must be read before the next action
-      * (the CC loops) — obs.get would wait forever on the unmaterialized
-      * cut. Under `spark.graft.checkpointDir` it is the eager [[cut]]: a
-      * lazy reliable checkpoint is written only by a later job that reaches
-      * it with no other marked RDD in between, so a chain of lazy cuts
-      * joined by shuffles (l62's rounds once they outgrow a broadcast)
-      * wrote only its topmost round.
-      */
-    def cutLazy(): DataFrame =
-      if (df.sparkSession.conf.getOption("spark.graft.checkpointDir").isDefined) cut()
-      else df.localCheckpoint(eager = false)
-  }
-
-  // NOTE (measured negative, r17 opt round): persist(MEMORY_AND_DISK)
-  // before each reliable checkpoint — the textbook fix for RDD
-  // checkpointing's write-job recompute — was tried and was SLOWER 3/3
-  // interleaved windows on l30 (3.1-3.6 s -> 3.8-4.9 s). The recompute
-  // only re-runs ONE round (each round's lineage is rooted at the
-  // previous checkpoint), so it is bounded at 2x round work, while the
-  // InMemoryRelation columnar encode + cache bookkeeping cost more than
-  // that round. Reverted; do not retry without a cheaper persist path.
-
-  /** Reliable lineage cut as a parquet round-trip: ONE job computes and
-    * writes (no RDD-checkpoint second pass re-running the round), and the
-    * returned frame scans the files — the same file-backed fault-tolerance
-    * `Dataset.checkpoint` gives, without its write-job recompute (the
-    * persist workaround above measured worse; this shape avoids the
-    * double-compute at the price of a parquet encode, cheap for the
-    * all-long frames the CC loops cut).
-    */
-  private val reliableCutSeq = new java.util.concurrent.atomic.AtomicLong()
-  private def reliableParquetCut(df: DataFrame, dir: String): DataFrame = {
-    val s = df.sparkSession
-    val path = s"$dir/cut_${reliableCutSeq.incrementAndGet()}"
-    df.write.mode("error").parquet(path)
-    s.read.parquet(path)
-  }
-
-  /** The CC loops' lineage cut: a parquet round-trip under an explicit
-    * `checkpointDir`, else the pack-wide [[CutOps.cut]].
-    */
-  private def ccCut(checkpointDir: Option[String])(df: DataFrame): DataFrame =
-    checkpointDir match {
-      case Some(dir) => reliableParquetCut(df, dir)
-      case None => df.cut()
-    }
-
   private def codecParallelism(s: SparkSession): Int = {
     val p = s.conf.getOption("spark.graft.codec.parallelism").map(_.toInt)
       .getOrElse(s.sparkContext.defaultParallelism)
@@ -3393,68 +3308,101 @@ object LlmQueries {
   private def lshFailOnDrop(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.lsh.failOnDrop").forall(_.toBoolean)
 
-  def connectedComponents(pairs: DataFrame, maxRounds: Int = 25,
-      checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    val edges = ccCut(checkpointDir)(pairs.select(col("ida").as("src"), col("idb").as("dst"))
-      .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst"))))
-    var labels = ccCut(checkpointDir)(edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("label", col("doc_id")))
-    var converged = false
-    var iter = 0
-    // Semi-naive ("delta-frontier") min propagation: round k joins edges
-    // only against the labels that CHANGED in round k-1 (round 1: all).
-    // An unchanged neighbor v already pushed cur(v) to every neighbor in
-    // the round after v's last change, so dropping it from the join leaves
-    // every per-round label state bit-identical to the full join (standard
-    // semi-naive evaluation; PropagationFrontierSpec pins round-by-round
-    // equality, LshCapSpec pins the final clusters against star
-    // contraction). Once the observed frontier row count is small the
-    // edges join flips to an explicit broadcast — late rounds scan the
-    // edge cut map-side instead of shuffling |E|+|V| rows per round
-    // (guide §3.1; at 100 TB the frontier collapses after the first
-    // rounds while |E| does not). The changed-count rides the cut's
-    // materialization job via observe() and doubles as the convergence
-    // test: 0 changes is exactly the old unchanged-label-sum fixpoint,
-    // detected on the same round.
-    val bcastFrontierRows =
-      pairs.sparkSession.conf.getOption("spark.graft.cc.broadcastFrontierRows")
-        .map(_.toLong).getOrElse(1000000L)
-    var frontier = labels.select(col("doc_id").as("dst"), col("label").as("nl"))
-    var frontierRows = Long.MaxValue // round-1 frontier is the full label set
-    while (!converged && iter < maxRounds) {
-      val fr =
-        if (frontierRows <= bcastFrontierRows) broadcast(frontier) else frontier
-      // The round keeps r17's ONE-exchange union+groupBy shape (a left
-      // join against a separately aggregated prop measured WORSE at sf0.1
-      // — extra exchange + join stage per round); the delta is only WHAT
-      // joins the edges: the frontier instead of the full label table.
-      // Once broadcast, the edge side of the round is map-only.
-      val prop = edges.join(fr, "dst")
-        .select(col("src").as("doc_id"), col("nl").as("label"),
-          lit(false).as("old"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = ccCut(checkpointDir)(labels
-        .select(col("doc_id"), col("label"), lit(true).as("old"))
-        .unionAll(prop)
-        .groupBy("doc_id").agg(min(col("label")).as("label"),
-          min(when(col("old"), col("label"))).as("lold"))
-        // every doc_id has exactly one `old` row, so lold is its previous
-        // label and never null
-        .select(col("doc_id"), col("label"), (col("label") < col("lold")).as("chg"))
-        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("nchg")))
-      // nchg is null iff there are no labels at all (empty pairs input):
-      // nothing can ever change, so that is converged too
-      val n = obs.get("nchg")
-      frontierRows = if (n == null) 0L else n.asInstanceOf[Long]
-      converged = frontierRows == 0L
-      labels = next
-      frontier = next.filter(col("chg"))
-        .select(col("doc_id").as("dst"), col("label").as("nl"))
-      iter += 1
-    }
-    require(converged, s"label propagation did not converge in $iter rounds")
-    labels.select(col("doc_id"), col("label").as("cluster_id"))
+  /** Connected components over (ida, idb) pairs: (doc_id, cluster_id)
+    * with cluster_id = the component's minimum doc_id. Min-label
+    * propagation with a per-round lineage cut: rounds = component
+    * diameter, small for near-dup clusters; at larger diameters swap in
+    * alternating small-star/large-star contraction (Kiveris et al.) on
+    * the same edge DataFrame. Docs in no pair are implicit singletons and
+    * are not emitted. Under `spark.graft.checkpointDir` every round's cut
+    * is reliable ([[Lineage]]), so a long run survives executor loss.
+    */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
+    val edges = pairs.select(col("ida").as("src"), col("idb").as("dst"))
+      .unionAll(pairs.select(col("idb").as("src"), col("ida").as("dst"))).cut()
+    fixpoint("label propagation", propagationStart(edges), PropagationRounds)(
+        propagationRound(edges, _, _))
+      .state.select(col("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** Round cap of [[connectedComponents]] (rounds = component diameter). */
+  private val PropagationRounds = 25
+
+  /** Bytes per frontier row, (dst, nl) longs, for the broadcast bound. */
+  private val FrontierRowBytes = 16L
+
+  /** Round-0 labels over the symmetrized edges: every node labels itself,
+    * and every row counts as changed, so round 1 joins the full set.
+    */
+  private[queries] def propagationStart(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("doc_id")).distinct()
+      .select(col("doc_id"), col("doc_id").as("label"), lit(true).as("chg")).cut()
+
+  /** One min-label propagation round over `labels` (doc_id, label, chg).
+    * Semi-naive ("delta-frontier"): the edges join only the labels that
+    * CHANGED last round. An unchanged neighbor v already pushed its label
+    * to every neighbor in the round after v's last change, so dropping it
+    * from the join leaves every per-round label state bit-identical to the
+    * full join (standard semi-naive evaluation; PropagationFrontierSpec
+    * pins round-by-round equality, LshCapSpec the final clusters against
+    * star contraction). The round keeps one exchange (union + groupBy; a
+    * left join against a separately aggregated prop measured worse at
+    * sf0.1, an extra exchange and join stage per round). The changed-row
+    * count is observed on the round's cut and is both the convergence test
+    * (0 changes is the old unchanged-label fixpoint, on the same round) and
+    * the next frontier's size: once rows × 16 B fits Spark's own
+    * `spark.sql.autoBroadcastJoinThreshold` the frontier is broadcast, and
+    * late rounds scan the edge cut map-side instead of shuffling |E|+|V|
+    * rows (at 100 TB the frontier collapses after the first rounds while
+    * |E| does not).
+    */
+  private[queries] def propagationRound(edges: DataFrame, labels: DataFrame,
+      last: Option[Map[String, Any]]): Lineage.Round = {
+    val frontier = labels.filter(col("chg"))
+      .select(col("doc_id").as("dst"), col("label").as("nl"))
+    val bcastBytes = edges.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+    val small = last.exists(_("nchg").asInstanceOf[Long] * FrontierRowBytes <= bcastBytes)
+    val prop = edges.join(if (small) broadcast(frontier) else frontier, "dst")
+      .select(col("src").as("doc_id"), col("nl").as("label"), lit(false).as("old"))
+    val next = labels
+      .select(col("doc_id"), col("label"), lit(true).as("old"))
+      .unionAll(prop)
+      .groupBy("doc_id").agg(min(col("label")).as("label"),
+        min(when(col("old"), col("label"))).as("lold"))
+      // every doc_id has exactly one `old` row, so lold is its previous
+      // label and never null
+      .select(col("doc_id"), col("label"), (col("label") < col("lold")).as("chg"))
+    Lineage.Round(next, Seq(count(when(col("chg"), 1)).as("nchg")),
+      _("nchg").asInstanceOf[Long] == 0L)
+  }
+
+  /** One star-contraction half-round. Each star used to be a groupBy(u) +
+    * join back on u — two exchanges of the edge list per star plus the join
+    * itself. min() OVER (PARTITION BY u) attaches the same per-u minimum in
+    * ONE exchange (guide §2.4: two operations keyed the same way share one
+    * partitioning), and large-star's trailing distinct is dropped because
+    * small-star's final distinct canonicalizes the round's edge set anyway
+    * (duplicate intermediate edges change no min and no output set).
+    * 6 exchanges per round -> 3; identical results (LshCapSpec pins
+    * star == propagation; the before/after round plans are in plans/r17).
+    */
+  private[graft] def largeStar(e: DataFrame): DataFrame = {
+    val nbrs = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
+    val w = Window.partitionBy(col("u"))
+    nbrs.withColumn("m", least(min(col("v")).over(w), col("u")))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+  }
+  private[graft] def smallStar(e: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("u"))
+    val withM = e.withColumn("m", min(col("v")).over(w))
+    withM.select(col("u"), col("m").as("v"))
+      .unionAll(withM.filter(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v")))
+      .filter(col("u") =!= col("v")).distinct()
   }
 
   /** Connected components by alternating large-star / small-star
@@ -3476,69 +3424,38 @@ object LlmQueries {
     * (node -> component minimum), so labels fall out directly; roots
     * label themselves, matching [[connectedComponents]] exactly.
     */
-  /** One star-contraction half-round. Each star used to be a groupBy(u) +
-    * join back on u — two exchanges of the edge list per star plus the join
-    * itself. min() OVER (PARTITION BY u) attaches the same per-u minimum in
-    * ONE exchange (guide §2.4: two operations keyed the same way share one
-    * partitioning), and large-star's trailing distinct is dropped because
-    * small-star's final distinct canonicalizes the round's edge set anyway
-    * (duplicate intermediate edges change no min and no output set).
-    * 6 exchanges per round -> 3; identical results (LshCapSpec pins
-    * star == propagation). Object-level (not nested) so the round plan can
-    * be dumped as before/after evidence (tools/StageProbe).
-    */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
-    val nbrs = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-    val w = Window.partitionBy(col("u"))
-    nbrs.withColumn("m", least(min(col("v")).over(w), col("u")))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-  }
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("u"))
-    val withM = e.withColumn("m", min(col("v")).over(w))
-    withM.select(col("u"), col("m").as("v"))
-      .unionAll(withM.filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
-  }
+  def connectedComponentsStar(pairs: DataFrame): DataFrame =
+    starComponents(pairs).state
 
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20,
-      checkpointDir: Option[String] = None,
-      roundsOut: Option[java.util.concurrent.atomic.AtomicInteger] = None)
-      : DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    var edges = ccCut(checkpointDir)(pairs
+  /** [[connectedComponentsStar]]'s (doc_id, cluster_id) labels and the
+    * contraction rounds they took.
+    */
+  private[graft] def starComponents(pairs: DataFrame): Lineage.Fixpoint = {
+    val start = pairs
       .select(greatest(col("ida"), col("idb")).as("u"),
         least(col("ida"), col("idb")).as("v"))
-      .filter(col("u") =!= col("v")).distinct())
-
-    var converged = false
-    var iter = 0
-    var prev: Option[(Long, String)] = None
-    while (!converged && iter < maxRounds) {
-      // fixpoint signature rides the cut's materialization job (observe);
-      // decimal sum: a long sum of 2^63-range hashes overflows under ANSI
-      val obs = org.apache.spark.sql.Observation()
-      edges = ccCut(checkpointDir)(smallStar(largeStar(edges))
-        .observe(obs, count(lit(1)).as("n"),
-          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h")))
-      val sig = (obs.get("n").asInstanceOf[Long],
-        String.valueOf(obs.get("h").asInstanceOf[java.math.BigDecimal]))
-      converged = sig._1 == 0 || prev.contains(sig)
-      prev = Some(sig)
-      iter += 1
+      .filter(col("u") =!= col("v")).distinct().cut()
+    // decimal hash sum: a long sum of 2^63-range hashes overflows under ANSI
+    val fp = fixpoint("star contraction", start, StarRounds) { (edges, last) =>
+      Lineage.Round(smallStar(largeStar(edges)),
+        Seq(count(lit(1)).as("n"),
+          sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("h")),
+        m => m("n").asInstanceOf[Long] == 0L || last.contains(m))
     }
-    require(converged, s"star contraction did not converge in $iter rounds")
-    roundsOut.foreach(_.set(iter))
+    val edges = fp.state
     val roots = edges.select(col("v")).distinct()
       .join(edges.select(col("u")).distinct(),
         col("v") === col("u"), "left_anti")
       .select(col("v").as("doc_id"), col("v").as("cluster_id"))
-    edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
-      .unionAll(roots)
+    fp.copy(state = edges.select(col("u").as("doc_id"), col("v").as("cluster_id"))
+      .unionAll(roots))
   }
+
+  /** Round cap of [[connectedComponentsStar]]: O(log^2 n) rounds. */
+  private val StarRounds = 20
+
+  /** Round cap of l59's relaxation (rounds = provenance DAG depth + 1). */
+  private val LineageRounds = 64
 
   private val allStopwords =
     """'the','a','of','to','and','in','is','it','der','die','und','das','ist',

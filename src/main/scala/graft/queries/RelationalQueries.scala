@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import Lineage.CutOps
 
 /** TPC-H-shaped relational coverage over the driver's testdata.
   *
@@ -1108,24 +1109,12 @@ object RelationalQueries {
       // join) otherwise each re-run the full lineitem scan + basket
       // shuffle — at sf1 that tripled the heaviest stage and its rep
       // variance (memory pressure from three concurrent basket builds).
-      // Materialization mode is a CONSCIOUS choice (same idiom as l30's
-      // star contraction): localCheckpoint blocks live only on executors
-      // with no lineage, so on a real cluster (dynamic allocation, spot
-      // nodes) an executor loss makes the baskets unrecoverable — set
-      // spark.graft.checkpointDir to an HDFS/object-store path there and
-      // the cut becomes a RELIABLE checkpoint instead. Default stays
-      // localCheckpoint for the single-JVM bench, where executor loss is
-      // process death anyway and the reliable write would only add IO.
-      val basketsLineage = lineitem(s, d)
+      // The cut follows the packs' one policy (Lineage): executor-local
+      // by default, reliable under spark.graft.checkpointDir.
+      val baskets = lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(collect_set(col("l_partkey")).as("parts"))
-      val ckptDir = s.conf.getOption("spark.graft.checkpointDir")
-      val baskets = ckptDir match {
-        case Some(dir) =>
-          s.sparkContext.setCheckpointDir(dir)
-          basketsLineage.checkpoint()
-        case None => basketsLineage.localCheckpoint()
-      }
+        .cut()
       // overflow count + kept-order total in ONE scalar aggregate (one
       // 1-row broadcast instead of two, one fewer basket recomputation)
       val totOvf = baskets.agg(
@@ -1238,9 +1227,9 @@ object RelationalQueries {
         sys.props.get("java.io.tmpdir").getOrElse("/tmp"), "graft_gate_q71")
       gate.mkdirs()
       val out = new java.io.File(gate, "t").getAbsolutePath
-      // NOTE (measured negative, r17 opt round): a localCheckpoint here —
+      // NOTE (measured negative, r17 opt round): a lineage cut here —
       // repartitionByRange's sampling does re-run the merge subtree — lost
-      // or tied 5/6 interleaved QTime windows: the range-derived merge is
+      // or tied 5/6 interleaved timing windows: the range-derived merge is
       // cheaper to recompute than to materialize (the f36 gz-input cut is
       // the shape where the same idea wins). Don't retry without new data.
       indexedMergeRows(s)

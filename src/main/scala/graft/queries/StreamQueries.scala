@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import Lineage.CutOps
 
 /** Driver-graded Structured Streaming gates — the streaming surface
   * (graft micro-batch file source, watermarked windowed aggregation with
@@ -375,7 +376,7 @@ object StreamQueries {
         .filter(size(col("w")) >= 3)
         .select(col("doc_id"), explode(expr(shingleExpr)).as("sh"))
       val evalSh = batchPosts.filter(col("doc_id") % 97 === 0)
-        .select(col("sh")).distinct().localCheckpoint()
+        .select(col("sh")).distinct().cut()
       val mBits = LlmQueries.bloomBits(evalSh.count())
       // bounded collect: the probe set is <= 40 rows by construction
       val probeDocs = Tables.documents(s, d)

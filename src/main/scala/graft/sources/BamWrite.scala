@@ -139,8 +139,10 @@ private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
   }
   private val IntRe = "-?\\d+".r.pattern
 
-  // one record buffer per part, reset per record
-  private val body = new LeOut(new java.io.ByteArrayOutputStream(1 << 14))
+  // one record buffer per part, reset per record; its bytes go to the
+  // BGZF writer in place, behind a reused block_size prefix
+  private val body = new LeOut(new RecordBuffer(1 << 14))
+  private val blockSize = new Array[Byte](4)
 
   locally {
     body.bytes(Array[Byte]('B', 'A', 'M', 1))
@@ -151,7 +153,7 @@ private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
       val nb = (name + "\u0000").getBytes(java.nio.charset.StandardCharsets.US_ASCII)
       body.i32(nb.length); body.bytes(nb); body.i32(len)
     }
-    bgzf.write(body.os.toByteArray)
+    bgzf.write(body.os.bytes, 0, body.os.size())
   }
 
   override def write(v: Array[Any]): Unit = {
@@ -221,7 +223,7 @@ private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
 
     val nameBytes = (name + "\u0000").getBytes(java.nio.charset.StandardCharsets.US_ASCII)
     body.os.reset()
-    // block_size is patched in at the end (tags length unknown until encoded)
+    // block_size goes out ahead of the buffer once the tags are encoded
     body.i32(refId); body.i32(pos0.toInt)
     body.u8(nameBytes.length); body.u8(mapq)
     body.i16(bin)
@@ -269,15 +271,13 @@ private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
           ti += 1
         }
     }
-    val rec = body.os.toByteArray
-    val full = new Array[Byte](rec.length + 4)
-    val bs = rec.length
-    full(0) = bs.toByte; full(1) = (bs >> 8).toByte
-    full(2) = (bs >> 16).toByte; full(3) = (bs >> 24).toByte
-    System.arraycopy(rec, 0, full, 4, rec.length)
+    val bs = body.os.size()
+    blockSize(0) = bs.toByte; blockSize(1) = (bs >> 8).toByte
+    blockSize(2) = (bs >> 16).toByte; blockSize(3) = (bs >> 24).toByte
 
     val vStart = bgzf.virtualPos
-    bgzf.write(full)
+    bgzf.write(blockSize)
+    bgzf.write(body.os.bytes, 0, bs)
     if (refId >= 0 && pos0 >= 0)
       bai.add(refId, pos0, end0, vStart, bgzf.virtualPos, (flag & 4) == 0)
     else bai.addNoCoor()
@@ -289,4 +289,12 @@ private final class BamEncoder(headerText: String, refs: Array[(String, Int)],
   }
 
   override def close(): Unit = { bgzf.finish(); raw.close() }
+}
+
+/** A ByteArrayOutputStream whose filled prefix `bytes(0 until size)` is
+  * read in place, without the copy `toByteArray` makes.
+  */
+private final class RecordBuffer(capacity: Int)
+    extends java.io.ByteArrayOutputStream(capacity) {
+  def bytes: Array[Byte] = buf
 }

@@ -878,8 +878,9 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       * reader seeks to its cut and decodes exactly the containers starting
       * inside [start, start+length). The cut list is memoized and
       * fault-tolerant — any failure (an unreadable `.crai`) falls back to
-      * one task, never a mis-split. Formats without aligned cuts return
-      * null at zero cost.
+      * one task, never a mis-split, with one WARN naming the file, its
+      * index and the cause. Formats without aligned cuts return null at
+      * zero cost.
       */
     def alignedCutChunks(st: FileStatus, vals: Array[String]): Option[Seq[FileChunk]] = {
       val p = st.getPath.toString
@@ -888,7 +889,13 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
         try Option(fmt.alignedCutOffsets(
           st.getPath.getFileSystem(hadoopConf), st.getPath, size))
           .filter(_.nonEmpty)
-        catch { case _: Exception => None }
+        catch {
+          case e: Exception =>
+            val idx = fmt.resyncIndexSibling(st.getPath).fold("")(i => s" from $i")
+            GraftScan.log.warn(s"cannot read the cut points of $p$idx, " +
+              s"planning it as one task: $e")
+            None
+        }
       }
       cuts.flatMap { offs =>
         val bounds = scala.collection.mutable.ArrayBuffer[Long](0L)
@@ -1075,6 +1082,7 @@ private[sources] final class PlanMemo[K, V](capacity: Int = 4096,
 }
 
 object GraftScan {
+  private[sources] val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftScan])
   /** Test instrumentation: high-water mark of concurrent per-file index
     * lookups during planInputPartitions (proves the pruning fan-out).
     */

@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.queries.Lineage.CutOps
 
 /** Image near-dup pipeline ratchet with mechanical drop accounting.
   *
@@ -53,24 +54,23 @@ object ImageRatchet {
       val p = graft.queries.LlmQueries
         .bandedHashPairs(hashes, maxBucket, failOnDrop = false,
           maxHamming = 6, what = "image dHash")
-        .localCheckpoint()
+        .cut()
       p.count()
       p
     }
     val nPairs = pairs.count()
 
-    val rounds = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val (keep, tCc) = timed {
-      val cc = graft.queries.LlmQueries
-        .connectedComponentsStar(pairs, roundsOut = Some(rounds))
-      cc.agg(count(lit(1)),
-        sum(when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L))).head()
+    val ((keep, rounds), tCc) = timed {
+      val cc = graft.queries.LlmQueries.starComponents(pairs)
+      (cc.state.agg(count(lit(1)),
+        sum(when(col("doc_id") === col("cluster_id"), 1L).otherwise(0L))).head(),
+        cc.rounds)
     }
 
     println(s"""{"metric":"image_ratchet","sf":"$sfDir","docs":$nDocs,""" +
       s""""max_bucket_cap":$maxBucket,"live_buckets":$liveBuckets,""" +
       s""""dropped_buckets":$droppedBuckets,"max_bucket_k":$maxK,""" +
-      s""""pairs":$nPairs,"cc_rounds":${rounds.get},""" +
+      s""""pairs":$nPairs,"cc_rounds":$rounds,""" +
       s""""clustered_docs":${keep.getLong(0)},"keepers":${keep.getLong(1)},""" +
       f""""sec":{"hash":$tHash%.1f,"hist":$tHist%.1f,"pairs":$tPairs%.1f,"cc":$tCc%.1f}}""")
     s.stop()

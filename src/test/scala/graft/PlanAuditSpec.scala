@@ -789,7 +789,7 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
       val got = RelationalQueries.queries("q64_part_cooccurrence")(spark, d)
         .collect().map(_.toString).toSeq
       assert(got == expected)
-      // the reliable checkpoint actually wrote RDD blocks under the dir
+      // the reliable cut actually wrote its parts under the dir
       val wrote = java.nio.file.Files.walk(dir).iterator().asScala
         .exists(p => p.getFileName.toString.startsWith("part-"))
       assert(wrote, s"no checkpoint parts written under $dir")
@@ -869,20 +869,22 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("l-pack cuts: spark.graft.checkpointDir switches every cut to reliable mode") {
-    // q64's conf now governs the whole pack (CutOps): results identical,
-    // and checkpoint parts actually land under the dir. l79 exercises a
-    // cut per Lloyd iteration; l76 cuts the eval shingle set. l62 chains
-    // ten lazy cuts with no action in between: in reliable mode each of
-    // them (and the two hoisted cuts before them) must be written. Its
-    // joins run as shuffles, as at scale: a broadcast of the previous
-    // round's result is a job of its own that would write that round's
-    // checkpoint as a side effect, and hide a chain that writes only its
-    // topmost cut.
+    // One conf governs every pack's cuts (Lineage): results identical to
+    // local mode, and every cut is written under the dir. l79 cuts once
+    // per Lloyd iteration; l14/l21/l59 run the fixpoint driver (a cut per
+    // round); l38 chains lazy cuts behind its merge picks; l52 cuts per
+    // label round. l62 chains ten lazy cuts with no action in between: in
+    // reliable mode each of them (and the two hoisted cuts before them)
+    // must be written. Its joins run as shuffles, as at scale, so no
+    // broadcast job can write a round as a side effect.
     graft.GraftSession.registerAll(spark)
     val d = "/root/testdata/sf0.001"
     val bcast = "spark.sql.autoBroadcastJoinThreshold"
     val savedBcast = spark.conf.getOption(bcast)
-    for ((q, minCheckpoints) <- Seq("l79_kmeans_train" -> 1, "l62_copy_pagerank" -> 12)) {
+    for ((q, minCuts) <- Seq("l79_kmeans_train" -> 3, "l62_copy_pagerank" -> 12,
+        "l14_dup_clusters" -> 5, "l21_dup_clusters_star" -> 4,
+        "l38_bpe_merges" -> 4, "l52_label_propagation" -> 6,
+        "l59_copy_lineage" -> 5)) {
       val expected = graft.queries.LlmQueries.queries(q)(spark, d)
         .collect().map(_.toString).toSeq
       val dir = java.nio.file.Files.createTempDirectory("graft_lpack_ckpt")
@@ -892,13 +894,13 @@ class PlanAuditSpec extends AnyFunSuite with SharedSpark {
         val got = graft.queries.LlmQueries.queries(q)(spark, d)
           .collect().map(_.toString).toSeq
         assert(got == expected, q)
-        // one rdd-<id> directory per written checkpoint, each with its parts
+        // one cut_<n> directory per written cut, each with its parts
         val written = java.nio.file.Files.walk(dir).iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith("rdd-") &&
+          .filter(p => p.getFileName.toString.startsWith("cut_") &&
             Option(p.toFile.list()).exists(_.exists(_.startsWith("part-"))))
           .size
-        assert(written >= minCheckpoints,
-          s"$q: $written checkpoint(s) written under $dir, want >= $minCheckpoints")
+        assert(written >= minCuts,
+          s"$q: $written cut(s) written under $dir, want >= $minCuts")
       } finally {
         spark.conf.unset("spark.graft.checkpointDir")
         savedBcast.fold(spark.conf.unset(bcast))(spark.conf.set(bcast, _))

@@ -9,6 +9,12 @@ import graft.SharedSpark
   */
 class LshCapSpec extends AnyFunSuite with SharedSpark {
 
+  /** `body` with every cut reliable, written under `dir`. */
+  private def reliably[T](dir: String)(body: => T): T = {
+    spark.conf.set(Lineage.CheckpointDirKey, dir)
+    try body finally spark.conf.unset(Lineage.CheckpointDirKey)
+  }
+
   private def corpus(rows: Seq[(Long, String)]) = {
     import spark.implicits._
     rows.toDF("doc_id", "text")
@@ -170,14 +176,16 @@ class LshCapSpec extends AnyFunSuite with SharedSpark {
     val gotBcast = LlmQueries.connectedComponents(pairs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(gotBcast == expect)
-    // force the shuffle-join arm for every round (frontier never small
-    // enough to broadcast): results must be identical
-    spark.conf.set("spark.graft.cc.broadcastFrontierRows", "0")
+    // force the shuffle-join arm for every round (no frontier fits a -1
+    // broadcast threshold): results must be identical
+    val bcast = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(bcast)
+    spark.conf.set(bcast, "-1")
     try {
       val gotShuffle = LlmQueries.connectedComponents(pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       assert(gotShuffle == expect)
-    } finally spark.conf.unset("spark.graft.cc.broadcastFrontierRows")
+    } finally saved.fold(spark.conf.unset(bcast))(spark.conf.set(bcast, _))
   }
 
   test("connected components: transitivity across chained pairs, disjoint clusters") {
@@ -200,11 +208,11 @@ class LshCapSpec extends AnyFunSuite with SharedSpark {
   test("connected components: reliable-checkpoint mode matches, writes file-backed cuts") {
     import spark.implicits._
     val ckpt = graft.TestTmp.dir("graft_cc_ckpt").toString
-    // Diameter ~ maxRounds: a 24-edge chain under the default 25-round cap
+    // Diameter ~ the round cap: a 24-edge chain under the 25-round cap
     // exercises the convergence bound in the mode a 100 TB run would use.
     val chain = (0L until 24L).map(i => (i, i + 1)).toDF("ida", "idb")
-    val got = LlmQueries.connectedComponents(chain, checkpointDir = Some(ckpt))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val got = reliably(ckpt)(LlmQueries.connectedComponents(chain)
+      .collect().map(r => (r.getLong(0), r.getLong(1))))
     assert(got.length == 25 && got.forall(_._2 == 0L))
     // the reliable cut is a parquet round-trip (one job, no RDD-checkpoint
     // write-pass recompute): the invariant is FILE-BACKED per-round cuts
@@ -230,7 +238,7 @@ class LshCapSpec extends AnyFunSuite with SharedSpark {
 
   test("star contraction converges in O(log^2) rounds where propagation cannot") {
     import spark.implicits._
-    // diameter-120 chain: propagation would need 120 rounds (its default
+    // diameter-120 chain: propagation would need 120 rounds (its round
     // cap is 25); star contraction collapses it within 20
     val chain = (0L until 120L).map(i => (i, i + 1)).toDF("ida", "idb")
     val got = LlmQueries.connectedComponentsStar(chain)
@@ -244,8 +252,8 @@ class LshCapSpec extends AnyFunSuite with SharedSpark {
     import spark.implicits._
     val ckpt = graft.TestTmp.dir("graft_ccstar_ckpt").toString
     val pairs = Seq((5L, 9L), (9L, 2L), (30L, 40L)).toDF("ida", "idb")
-    val got = LlmQueries.connectedComponentsStar(pairs, checkpointDir = Some(ckpt))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = reliably(ckpt)(LlmQueries.connectedComponentsStar(pairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap)
     assert(got == Map(5L -> 2L, 9L -> 2L, 2L -> 2L, 30L -> 30L, 40L -> 30L))
     val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
       .filter(p => p.getFileName.toString.startsWith("cut_")).count()

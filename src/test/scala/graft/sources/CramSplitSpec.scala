@@ -156,11 +156,38 @@ class CramSplitSpec extends AnyFunSuite with SharedSpark {
     val whole = read(cramNoIdxDir)
     withConf("spark.sql.files.maxPartitionBytes" -> "262144",
              "spark.sql.files.openCostInBytes" -> "16384") {
-      val df = read(f.getAbsolutePath)
-      assert(df.rdd.getNumPartitions == 1,
-        s"an unreadable .crai must plan one task, got ${df.rdd.getNumPartitions}")
-      assertSameRows(df, whole)
+      val (parts, warned) = plannerWarnings(read(f.getAbsolutePath).rdd.getNumPartitions)
+      assert(parts == 1, s"an unreadable .crai must plan one task, got $parts")
+      // the refusal is logged once, naming the CRAM, its .crai and the cause
+      val named = warned.filter(w => w.contains(f.getAbsolutePath) &&
+        w.contains(f.getName + ".crai") && w.contains("Not in GZIP format"))
+      assert(named.size == 1, warned.mkString("\n"))
+      assertSameRows(read(f.getAbsolutePath), whole)
     }
+  }
+
+  /** `body`'s result and the WARN messages the scan planner logged while
+    * it ran.
+    */
+  private def plannerWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = org.apache.logging.log4j.LogManager.getLogger(classOf[GraftScan])
+      .asInstanceOf[Logger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("planner-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      val out = body
+      (out, seen.toArray(Array.empty[String]).toSeq)
+    } finally { logger.removeAppender(capture); capture.stop() }
   }
 
   test("a repaired .crai re-splits the file while the cram is unchanged") {
