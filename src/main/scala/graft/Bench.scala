@@ -776,7 +776,7 @@ object Bench {
           }
           // b16: the SAME width, over the SAME BAM as b14 but with NO .bai
           // — binary decode parallelised purely by the index-free
-          // record-resync split (BamFormat.resyncRecords). The b14-vs-b16
+          // record-resync split (BgzfRecords). The b14-vs-b16
           // delta isolates what the index buys beyond split planning.
           if (bamNoIdxReady && wanted(s"b16_bam_noindex_scan_w$w")) {
             try {

@@ -1003,7 +1003,7 @@ object FormatQueries {
     // landing-zone shape before `samtools index`) must fan out over
     // parallel chunk partitions, the reader re-finding record boundaries
     // by validated header-chain scan (hadoop-bam SplitGuesser technique;
-    // BamFormat.resyncRecords). Refuses to grade on a one-task plan.
+    // BgzfRecords). Refuses to grade on a one-task plan.
     // Validated FASTQ record split, uncompressed arm: a big single-shard
     // .fastq must fan out over parallel chunks, mid chunks aligning by the
     // chained 4-line validation (quality lines legally start with '@' —

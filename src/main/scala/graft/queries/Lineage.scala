@@ -16,7 +16,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * computes and writes in ONE job; an RDD checkpoint writes in a second job
   * that recomputes the frame (and a persist before it, the textbook fix,
   * measured slower on l30: its columnar cache encode costs more than the
-  * one round it saves).
+  * one round it saves). The cuts of a run land under `<dir>/<runId>` and
+  * stay there: frames read them lazily, so nothing here can tell when they
+  * are dead, and removing that tree is the caller's job once the results
+  * are consumed.
   */
 object Lineage {
   val CheckpointDirKey = "spark.graft.checkpointDir"

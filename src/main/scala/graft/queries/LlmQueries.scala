@@ -783,8 +783,12 @@ object LlmQueries {
     "l30_dup_clusters_ckpt" -> ((s, d) => {
       val pairs = jaccardPairs(s, d).select(col("ida"), col("idb"))
       val saved = s.conf.getOption(Lineage.CheckpointDirKey)
-      s.conf.set(Lineage.CheckpointDirKey, saved.getOrElse(
-        java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString))
+      s.conf.set(Lineage.CheckpointDirKey, saved.getOrElse {
+        // the returned frame reads the cuts, so they live until JVM exit
+        val tmp = java.nio.file.Files.createTempDirectory("graft_cc_ckpt")
+        QueryTmp.deleteRecursivelyOnExit(tmp)
+        tmp.toString
+      })
       try connectedComponentsStar(pairs).orderBy("doc_id")
       finally saved.fold(s.conf.unset(Lineage.CheckpointDirKey))(
         s.conf.set(Lineage.CheckpointDirKey, _))

@@ -59,7 +59,7 @@ private[sources] object BcfHeader {
     val name = p.getName.toLowerCase
     if (name.endsWith(".bcf")) {
       val in = new MultiMemberGzipInputStream(fs.open(p))
-      try graft.sources.formats.BcfFormat.readHeaderText(in) finally in.close()
+      try graft.sources.formats.BcfFormat.readHeaderText(new LeIn(in)) finally in.close()
     } else {
       val in = Codecs.wrap(p.getName, fs.open(p))
       try {

@@ -111,12 +111,18 @@ object ChunkKind {
 /** One chunk of one file; a partition holds one or more chunks (small files
   * are packed together, big files are cut as `kind` says). `vStart`/`vEnd`
   * are the BGZF virtual bounds of a [[ChunkKind.Virtual]] chunk — the reader
-  * seeks to the block and inflates only that range.
+  * seeks to the block and inflates only that range. `fileSize` and `mtime`
+  * are the listing's, so together with `path` they name the file version
+  * the plan saw ([[fileKey]]).
   */
 final case class FileChunk(path: String, start: Long, length: Long, fileSize: Long,
                            partValues: Array[String],
                            vStart: Long = -1L, vEnd: Long = -1L,
-                           kind: ChunkKind = ChunkKind.Plain) {
+                           kind: ChunkKind = ChunkKind.Plain, mtime: Long = 0L) {
+  /** The file's identity in the executor-side header memo
+    * (RecordInput.fileHeader), as GraftScan.fileKey is on the driver.
+    */
+  def fileKey: GraftScan.FileKey = (path, mtime, fileSize)
   def isBgzfChunk: Boolean = kind == ChunkKind.Virtual
   def isWholeFile: Boolean = kind == ChunkKind.Plain && start == 0 && length >= fileSize
   /** A mid-file raw cut of an uncompressed file. */
@@ -126,6 +132,15 @@ final case class FileChunk(path: String, start: Long, length: Long, fileSize: Lo
   /** Raw cut offset a container format resumes from (0 for every other kind). */
   def startOffset: Long =
     if (kind == ChunkKind.Aligned || kind == ChunkKind.Container) start else 0L
+}
+
+object FileChunk {
+  /** A chunk of the listed file `st`, carrying its path, length and mtime. */
+  def of(st: FileStatus, vals: Array[String], start: Long, length: Long,
+         kind: ChunkKind = ChunkKind.Plain, vStart: Long = -1L,
+         vEnd: Long = -1L): FileChunk =
+    FileChunk(st.getPath.toString, start, length, st.getLen, vals, vStart, vEnd, kind,
+      st.getModificationTime)
 }
 
 final case class GraftInputPartition(chunks: Array[FileChunk]) extends InputPartition
@@ -688,7 +703,6 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     // split stays whole, and a bigger one is cut by the first strategy below
     // that applies (the whole file when none does).
     def fileChunks(st: FileStatus, vals: Array[String]): Seq[FileChunk] = {
-      val p = st.getPath.toString
       val size = st.getLen
       val name = st.getPath.getName.toLowerCase
       val indexed: Option[Seq[FileChunk]] =
@@ -713,17 +727,17 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
             // within itself).
             GraftScan.mergeVirtualRanges(ranges).map { case (vs, ve) =>
               val approx = math.max(1L, (ve >>> 16) - (vs >>> 16) + (1L << 16))
-              FileChunk(p, 0, approx, size, vals, vs, ve, ChunkKind.Virtual)
+              FileChunk.of(st, vals, 0, approx, ChunkKind.Virtual, vs, ve)
             }
           } finally GraftScan.activeIndexLookups.decrementAndGet()
         }
       indexed.getOrElse {
-        if (size <= maxSplit) Seq(FileChunk(p, 0, size, size, vals))
+        if (size <= maxSplit) Seq(FileChunk.of(st, vals, 0, size))
         else if (fmt.splittable && !Codecs.isCompressed(name)) rawCuts(st, vals, ChunkKind.Plain)
         else bgzfFullScanChunks(st, vals, name)
           .orElse(rawCutKind(st, name).map(rawCuts(st, vals, _)))
           .orElse(alignedCutChunks(st, vals))
-          .getOrElse(Seq(FileChunk(p, 0, size, size, vals)))
+          .getOrElse(Seq(FileChunk.of(st, vals, 0, size)))
       }
     }
 
@@ -743,8 +757,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     def rawCuts(st: FileStatus, vals: Array[String], kind: ChunkKind): Seq[FileChunk] = {
       val size = st.getLen
       (0L until size by maxSplit).map { off =>
-        FileChunk(st.getPath.toString, off, math.min(maxSplit, size - off), size, vals,
-          kind = kind)
+        FileChunk.of(st, vals, off, math.min(maxSplit, size - off), kind)
       }
     }
 
@@ -760,7 +773,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
         val cLen =
           if (ve == Long.MaxValue) math.max(1L, size - (vs >>> 16))
           else math.max(1L, (ve >>> 16) - (vs >>> 16))
-        FileChunk(st.getPath.toString, 0, cLen, size, vals, vs, ve, ChunkKind.Virtual)
+        FileChunk.of(st, vals, 0, cLen, ChunkKind.Virtual, vs, ve)
       }
     }
 
@@ -833,7 +846,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       *     Hadoop convention at block granularity (BgzfBlockSplitInputStream);
       *   - Record: an unindexed BGZF record file (BAM/BCF with no .bai/.csi,
       *     bgzipped FASTQ) — the format re-finds the first record whose
-      *     start byte it owns (hadoop-bam SplitGuesser; BamFormat.resyncRecords);
+      *     start byte it owns (hadoop-bam SplitGuesser; BgzfRecords);
       *   - Container: an unindexed container file (CRAM with no `.crai`,
       *     mzML) — the format re-finds the first container it owns
       *     (CramFormat.resyncContainerStart, the same pattern at container
@@ -906,7 +919,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
         else {
           bounds += size
           Some(bounds.sliding(2).map { w =>
-            FileChunk(p, w(0), w(1) - w(0), size, vals, kind = ChunkKind.Aligned)
+            FileChunk.of(st, vals, w(0), w(1) - w(0), ChunkKind.Aligned)
           }.toSeq)
         }
       }
@@ -1022,9 +1035,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
     val maxPart = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
-    val chunks = files.map { case (st, vals) =>
-      FileChunk(st.getPath.toString, 0, st.getLen, st.getLen, vals)
-    }
+    val chunks = files.map { case (st, vals) => FileChunk.of(st, vals, 0, st.getLen) }
     GraftScan.pack(chunks, openCost, maxPart).map(p => GraftInputPartition(p): InputPartition)
   }
 
@@ -1135,7 +1146,7 @@ object GraftScan {
   /** A data file's identity in the planning memos: a rewrite changes its
     * mtime or length, so it re-keys.
     */
-  private type FileKey = (String, Long, Long)
+  private[sources] type FileKey = (String, Long, Long)
   private def fileKey(st: FileStatus): FileKey =
     (st.getPath.toString, st.getModificationTime, st.getLen)
 
@@ -1547,18 +1558,10 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
         val s = stream
         () => new ByteLineReader(s, 0L)
     }
-    val end = if (c.isWholeFile || compressed || c.isBgzfChunk) Long.MaxValue
-              else c.start + c.length
     partVals = c.partValues.map(v =>
       (if (v == null) null else UTF8String.fromString(v)): Any)
     val reopen = () => open(): java.io.InputStream
-    it = format.records(
-      new RecordInput(mkLines, stream, end, c.isSplit, c.isBgzfChunk, reopen, path, fs,
-        startsAtFileStart = c.startsAtFileStart,
-        resync = resync,
-        startOffset = c.startOffset,
-        containerResyncSplit = c.kind == ChunkKind.Container,
-        fileSize = c.fileSize),
+    it = format.records(new RecordInput(c, stream, mkLines, reopen, fs, resync),
       dataSchema, parseCols)
     true
   }

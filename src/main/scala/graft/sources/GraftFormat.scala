@@ -2,30 +2,54 @@ package graft.sources
 
 import org.apache.spark.sql.types._
 
-/** One file split handed to a format. Text formats consume `lines` (lazily
+/** One planned chunk handed to a format: the planner's [[FileChunk]] (its
+  * `kind` says how the chunk was cut and so how the format enters it) plus
+  * what the reader opened for it. Text formats consume `lines` (lazily
   * constructed; for a mid-file split it is pre-aligned to the first line at
-  * or after the split start). Binary formats (FCS, mzML) consume `stream`
-  * (the decompressed byte stream) directly — those are always whole-file
-  * inputs. `end == Long.MaxValue` means whole file.
+  * or after the split start). Binary formats consume `stream` — the
+  * decompressed bytes of the chunk, or the raw seekable handle for the
+  * container kinds — and a [[ChunkKind.Record]] chunk's `resync`.
   *
-  * `startsAtFileStart` is true when the decompressed stream begins at the
-  * file's first byte (in-stream headers are present); a full-scan BGZF
-  * split's head chunk has it true while its later chunks (and all region
-  * chunks) start at a record boundary past the header.
+  * `chunk.startsAtFileStart` is true when the stream begins at the file's
+  * first byte (in-stream headers are present); a mid-file chunk takes its
+  * file's header from [[fileHeader]].
   */
-final class RecordInput(mkLines: () => ByteLineReader, val stream: java.io.InputStream,
-                        val end: Long, val isMidFileSplit: Boolean,
-                        val isBgzfChunk: Boolean = false,
+final class RecordInput(val chunk: FileChunk, val stream: java.io.InputStream,
+                        mkLines: () => ByteLineReader = RecordInput.noLines,
                         val reopenRaw: () => java.io.InputStream = () =>
                           throw new UnsupportedOperationException("reopen not available"),
-                        val path: org.apache.hadoop.fs.Path = null,
                         val fs: org.apache.hadoop.fs.FileSystem = null,
-                        val startsAtFileStart: Boolean = true,
-                        val resync: BgzfResyncInputStream = null,
-                        val startOffset: Long = 0L,
-                        val containerResyncSplit: Boolean = false,
-                        val fileSize: Long = -1L) {
+                        val resync: BgzfResyncInputStream = null) {
   lazy val lines: ByteLineReader = mkLines()
+  val path: org.apache.hadoop.fs.Path = new org.apache.hadoop.fs.Path(chunk.path)
+
+  /** Exclusive raw end of the records this chunk owns; `Long.MaxValue`
+    * reads to the end of the stream (a whole file, a compressed stream, a
+    * BGZF virtual range).
+    */
+  val end: Long =
+    if (chunk.isWholeFile || chunk.isBgzfChunk || Codecs.isCompressed(path.getName))
+      Long.MaxValue
+    else chunk.start + chunk.length
+
+  /** The header of this chunk's file, parsed by `parse` from a fresh raw
+    * stream (closed afterwards) and memoized per file version and format:
+    * every chunk of a split or region-pruned file needs it, and one parse
+    * per executor serves them all. Keyed by the listing's (path, mtime,
+    * length), so a rewritten file re-keys instead of serving its old header.
+    */
+  def fileHeader[H <: AnyRef](format: String)(parse: java.io.InputStream => H): H =
+    RecordInput.headers((chunk.fileKey, format)) {
+      val raw = reopenRaw()
+      try parse(raw) finally raw.close()
+    }.asInstanceOf[H]
+}
+
+object RecordInput {
+  private val noLines: () => ByteLineReader =
+    () => throw new IllegalStateException("binary chunks have no line view")
+
+  private val headers = new PlanMemo[(GraftScan.FileKey, String), AnyRef]()
 }
 
 /** A file format the engine can scan: fixed schema + a record iterator.
@@ -68,8 +92,9 @@ trait GraftFormat extends Serializable {
     * sibling): the planner cuts at raw compressed offsets, each reader
     * aligns to the first BGZF block at/after its cut (validated magic
     * scan), and the format's own resync finds the first record whose start
-    * byte it owns. Formats setting this must handle `input.resync != null`
-    * in records().
+    * byte it owns. Formats setting this must handle a [[ChunkKind.Record]]
+    * chunk (its `input.resync`) in records(); the BGZF binary formats do so
+    * through the shared driver [[BgzfRecords]].
     */
   def bgzfRecordResync: Boolean = false
 
@@ -82,7 +107,7 @@ trait GraftFormat extends Serializable {
     * boundary it owns. It is the split whenever no index sibling
     * ([[resyncIndexSibling]]) exists; the indexed path reads exact starts
     * through [[alignedCutOffsets]] instead. Formats setting this must
-    * handle `input.containerResyncSplit` in records() and override
+    * handle a [[ChunkKind.Container]] chunk in records() and override
     * [[resyncSplitSniff]].
     */
   def containerResync: Boolean = false
@@ -113,8 +138,9 @@ trait GraftFormat extends Serializable {
     * memoized by the planner; implementations must be one small read (an
     * index, a metadata header), never a pass over the file, and a failure
     * (an unreadable `.crai`) plans the file as one task. Readers of the
-    * resulting chunks see `startOffset`/`end` on RecordInput and must
-    * decode exactly the containers starting inside [startOffset, end).
+    * resulting [[ChunkKind.Aligned]] chunks see `input.chunk.startOffset`
+    * and `input.end` and must decode exactly the containers starting
+    * inside [startOffset, end).
     */
   def alignedCutOffsets(fs: org.apache.hadoop.fs.FileSystem,
                         path: org.apache.hadoop.fs.Path,

@@ -1,6 +1,5 @@
 package graft.sources.formats
 
-import java.io.{DataInputStream, EOFException, InputStream}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.StructType
@@ -13,16 +12,11 @@ import graft.sources.FormatUtil._
   * SAM text reader (same golden row as sam-select-tests.slt; 1-based start,
   * CIGAR-derived end, raw Phred quality list, 255 mapq -> null).
   *
-  * Unindexed scans stream the whole file; indexed scans get BGZF chunks from
-  * the sibling .bai (see BaiIndex) and re-read only the header for the
-  * reference-name table.
+  * This object holds the header, resync validator and record parse; how a
+  * chunk is entered (whole file, `.bai` chunk, index-free resync cut) is
+  * the shared driver BgzfRecords.
   */
-object BamFormat extends GraftFormat {
-  // executor-level header cache for BGZF-chunk reads, keyed by file path
-  // (headers are tiny; entries live for the executor's lifetime)
-  private val headerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
+object BamFormat extends GraftFormat with BgzfRecordCodec[Array[String]] {
   override def shortName: String = "bam"
   override def defaultExtensions: Seq[String] = Seq("bam")
   override val dataSchema: StructType = SamFormat.dataSchema
@@ -36,25 +30,8 @@ object BamFormat extends GraftFormat {
   private val SeqCodeBytes = SeqCode.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
   private val CigarOps = "MIDNSHP=X"
 
-  private final class LEInput(in: InputStream) {
-    private val d = new DataInputStream(in)
-    def u8(): Int = d.readUnsignedByte()
-    def u16(): Int = { val a = u8(); val b = u8(); a | (b << 8) }
-    def i32(): Int = { val a = u16(); val b = u16(); a | (b << 16) }
-    def f32(): Float = java.lang.Float.intBitsToFloat(i32())
-    def bytes(n: Int): Array[Byte] = { val b = new Array[Byte](n); d.readFully(b); b }
-    def skip(n: Int): Unit = { var left = n; while (left > 0) { left -= d.skipBytes(left) } }
-    /** i32 that signals EOF cleanly instead of throwing mid-field. */
-    def i32OrEof(): Option[Int] = {
-      val first = in.read()
-      if (first < 0) return None
-      Some(first | (u8() << 8) | (u8() << 16) | (u8() << 24))
-    }
-  }
-
   /** Reference names from a BAM header stream (positioned at magic). */
-  def readHeaderRefs(decompressed: InputStream): Array[String] = {
-    val in = new LEInput(decompressed)
+  override def readHeader(in: LeIn): Array[String] = {
     val magic = in.bytes(4)
     require(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M', "not a BAM file")
     val lText = in.i32()
@@ -68,6 +45,8 @@ object BamFormat extends GraftFormat {
       name
     }
   }
+
+  override def refCount(refs: Array[String]): Int = refs.length
 
   override def bgzfRecordResync: Boolean = true
 
@@ -87,8 +66,8 @@ object BamFormat extends GraftFormat {
     * BAMSplitGuesser. Returns 1 valid, 0 invalid, -1 need more buffered
     * bytes to decide.
     */
-  private[sources] def validateChain(b: Array[Byte], n: Int, c: Int,
-                                     nRef: Int, exhausted: Boolean): Int = {
+  override def validateChain(b: Array[Byte], n: Int, c: Int,
+                             nRef: Int, exhausted: Boolean): Int = {
     var p = c.toLong
     var k = 0
     while (true) {
@@ -121,131 +100,12 @@ object BamFormat extends GraftFormat {
     1 // unreachable
   }
 
-  /** Records of one index-free resync chunk: find the first record whose
-    * start byte this chunk owns (validated chain scan over a growing
-    * buffer), then parse records until the first start beyond the owned
-    * extent. A chunk interior to one straddling record correctly yields
-    * zero rows. See BgzfResyncInputStream for the ownership convention.
-    */
-  private def resyncRecords(input: RecordInput,
-                            required: Array[Int]): Iterator[Array[Any]] = {
-    val rr = input.resync
-    if (!rr.hasOwned) return Iterator.empty
-    if (input.startsAtFileStart) {
-      // head chunk: in-stream header, records follow at an exact position.
-      // servedPosition is read BEFORE interposing the buffer; after that,
-      // record starts are tracked arithmetically (pos += 4 + block_size),
-      // so buffered read-ahead cannot skew the ownership check.
-      val refs = readHeaderRefs(rr)
-      val start = rr.servedPosition
-      // LEInput reads straight off the block queue (same as the whole-file
-      // path) — interposing a BufferedInputStream costs ~1.6x on decode
-      return ownedRecords(rr, new LEInput(rr), start, refs, required)
-    }
-    val refs =
-      if (input.path != null)
-        headerCache.computeIfAbsent(input.path.toString, _ => {
-          val hs = new MultiMemberGzipInputStream(input.reopenRaw())
-          try readHeaderRefs(hs) finally hs.close()
-        })
-      else {
-        val hs = new MultiMemberGzipInputStream(input.reopenRaw())
-        try readHeaderRefs(hs) finally hs.close()
-      }
-    val nRef = refs.length
-    val s0 = ResyncScan.findFirst(rr,
-      (b, n, c, ex) => validateChain(b, n, c, nRef, ex), "bam")
-    if (s0 == null) return Iterator.empty
-    // unsynchronized prefix-then-stream concat on the decode hot path;
-    // ownership is checked on arithmetic record-start positions, so
-    // buffered lookahead in s0.buf cannot skew it
-    ownedRecords(rr,
-      new LEInput(new PrefixedInputStream(s0.buf, s0.offset, s0.len, rr)),
-      s0.offset, refs, required)
-  }
-
-  /** Parse records back to back from `in`, stopping before the first record
-    * whose start position is beyond the chunk's owned extent.
-    */
-  private def ownedRecords(rr: graft.sources.BgzfResyncInputStream, in: LEInput,
-                           startPos: Long, refs: Array[String],
-                           required: Array[Int]): Iterator[Array[Any]] =
-    new Iterator[Array[Any]] {
-      private var pos = startPos
-      private var nextRec: Array[Any] = _
-      advance()
-
-      private def advance(): Unit = {
-        nextRec = null
-        if (!rr.positionIsOwned(pos)) return
-        in.i32OrEof().foreach { sz =>
-          nextRec = parseRecord(in, sz, refs, required)
-          pos += 4L + sz
-        }
-      }
-
-      override def hasNext: Boolean = nextRec != null
-      override def next(): Array[Any] = { val r = nextRec; advance(); r }
-    }
-
   override def records(input: RecordInput, schema: StructType,
-                       required: Array[Int]): Iterator[Array[Any]] = {
-    if (input.resync != null) return resyncRecords(input, required)
-    val (stream, refs) =
-      if (input.isBgzfChunk && input.startsAtFileStart) {
-        // head chunk of a full-scan split: the chunk stream already
-        // decompresses from byte 0, so the header (and its ref table) is
-        // read in-stream and records follow directly.
-        (input.stream, readHeaderRefs(input.stream))
-      } else if (input.isBgzfChunk) {
-        // chunk starts at a record; reference names come from the header.
-        // Cached per path on the executor — a region query mapping one BAM
-        // to N chunks would otherwise re-decompress the header N times.
-        def readHdr(): Array[String] = {
-          val headerStream = new MultiMemberGzipInputStream(input.reopenRaw())
-          try readHeaderRefs(headerStream) finally headerStream.close()
-        }
-        val r =
-          if (input.path != null)
-            headerCache.computeIfAbsent(input.path.toString, _ => readHdr())
-          else readHdr()
-        (input.stream, r)
-      } else {
-        // Whole-file path. LEInput issues many 1-4 byte reads; against a
-        // bare GZIPInputStream every one is a JNI inflate call (~175k
-        // rec/s/core). Real BAMs are BGZF by spec, so decode via the block
-        // reader (serves from the inflated block array, no per-member CRC
-        // recompute — ~1.7M rec/s/core, same engine as the chunk path);
-        // a non-BGZF gzip stream falls back to buffered GZIPInputStream.
-        val buffered = new java.io.BufferedInputStream(input.stream, 1 << 16)
-        val s: InputStream =
-          if (Bgzf.looksLikeBgzf(buffered)) new BgzfStreamInputStream(buffered)
-          else new java.io.BufferedInputStream(
-            new MultiMemberGzipInputStream(buffered), 1 << 16)
-        val r = readHeaderRefs(s)
-        (s, r)
-      }
-    val in = new LEInput(stream)
+                       required: Array[Int]): Iterator[Array[Any]] =
+    BgzfRecords.records(this, input, required)
 
-    new Iterator[Array[Any]] {
-      private var nextRec: Array[Any] = _
-      advance()
-
-      private def advance(): Unit = {
-        nextRec = null
-        // i32OrEof returns None ONLY when the stream ends cleanly before the
-        // first length byte; a BAM truncated mid-record throws EOFException
-        // and fails the task instead of silently yielding fewer rows.
-        in.i32OrEof().foreach { sz => nextRec = parseRecord(in, sz, refs, required) }
-      }
-
-      override def hasNext: Boolean = nextRec != null
-      override def next(): Array[Any] = { val r = nextRec; advance(); r }
-    }
-  }
-
-  private def parseRecord(in: LEInput, blockSize: Int, refs: Array[String],
-                          required: Array[Int]): Array[Any] = {
+  override def parseRecord(in: LeIn, blockSize: Int, refs: Array[String],
+                           required: Array[Int]): Array[Any] = {
     val refId = in.i32()
     val pos0 = in.i32()
     val lReadName = in.u8()

@@ -1,54 +1,40 @@
 package graft.sources.formats
 
-import java.io.{DataInputStream, InputStream}
+import java.io.InputStream
 import scala.collection.mutable
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.sources._
 import graft.sources.FormatUtil._
 
+/** A BCF header's (contig id -> name, dictionary id -> name) maps. */
+final case class BcfHeaderMaps(contigs: Map[Int, String],
+                               dict: Map[Int, String])
+
 /** BCF 2.2 reader (binary VCF inside BGZF), hand-decoded from the public
   * spec. Output schema matches the VCF text reader; info/formats are
   * reconstructed as VCF-style strings from the typed values and the header
   * dictionaries (IDX-resolved). Graded parity is the record/region counts
-  * (bcf fixture: 621 total, chrom '1' -> 191).
+  * (bcf fixture: 621 total, chrom '1' -> 191). Chunk framing is the shared
+  * driver BgzfRecords'.
   */
-object BcfFormat extends GraftFormat {
-  private val headerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Header]()
-
+object BcfFormat extends GraftFormat with BgzfRecordCodec[BcfHeaderMaps] {
   override def shortName: String = "bcf"
   override def defaultExtensions: Seq[String] = Seq("bcf")
   override val dataSchema: StructType = VcfFormat.dataSchema
   override def regionColumns: Option[(String, String, String)] =
     Some(("chrom", "pos", "pos"))
 
-  private final class LE(in: InputStream) {
-    val d = new DataInputStream(in)
-    def u8(): Int = d.readUnsignedByte()
-    def i16(): Int = { val a = u8(); val b = u8(); (a | (b << 8)).toShort.toInt }
-    def i32(): Int = { val a = u8(); val b = u8(); val c = u8(); val e = u8()
-      a | (b << 8) | (c << 16) | (e << 24) }
-    def u32(): Long = i32() & 0xffffffffL
-    def f32(): Float = java.lang.Float.intBitsToFloat(i32())
-    def bytes(n: Int): Array[Byte] = { val b = new Array[Byte](n); d.readFully(b); b }
-    def i32OrEof(): Option[Int] = {
-      val first = in.read()
-      if (first < 0) return None
-      Some(first | (u8() << 8) | (u8() << 16) | (u8() << 24))
-    }
-  }
-
   private val MissingFloatBits = 0x7f800001
   private val MissingQualBits = 0x7f800001
 
   /** Typed-value decoder returning a formatted VCF-ish string, or null. */
-  private def readTypedString(in: LE): String = {
+  private def readTypedString(in: LeIn): String = {
     val (t, n) = readTypeDescriptor(in)
     decodeValues(in, t, n)
   }
 
-  private def readTypeDescriptor(in: LE): (Int, Int) = {
+  private def readTypeDescriptor(in: LeIn): (Int, Int) = {
     val b = in.u8()
     val t = b & 0xf
     var n = b >>> 4
@@ -60,7 +46,7 @@ object BcfFormat extends GraftFormat {
     (t, n)
   }
 
-  private def decodeInt(in: LE, t: Int): Option[Int] = t match {
+  private def decodeInt(in: LeIn, t: Int): Option[Int] = t match {
     case 1 => val v = in.u8(); if (v == 0x80) None else Some(v.toByte.toInt)
     case 2 => val v = in.i16(); if (v == Short.MinValue) None else Some(v)
     case 3 => val v = in.i32(); if (v == Int.MinValue) None else Some(v)
@@ -70,7 +56,7 @@ object BcfFormat extends GraftFormat {
   private def fmtFloat(f: Float): String =
     if (f == math.floor(f) && math.abs(f) < 1e7f) f.toLong.toString else f.toString
 
-  private def decodeValues(in: LE, t: Int, n: Int): String = t match {
+  private def decodeValues(in: LeIn, t: Int, n: Int): String = t match {
     case 0 => null
     case 7 =>
       val s = new String(in.bytes(n), java.nio.charset.StandardCharsets.US_ASCII)
@@ -100,10 +86,8 @@ object BcfFormat extends GraftFormat {
       throw new IllegalStateException(s"bcf: unsupported type $other")
   }
 
-  private def decodeIntVector(in: LE, t: Int, n: Int): Seq[Int] =
+  private def decodeIntVector(in: LeIn, t: Int, n: Int): Seq[Int] =
     (0 until n).flatMap(_ => decodeInt(in, t))
-
-  private final case class Header(contigs: Map[Int, String], dict: Map[Int, String])
 
   /** (contig id->name, dictionary id->name) for a header text — the sink
     * inverts these so writer and reader agree on the implicit numbering by
@@ -115,8 +99,7 @@ object BcfFormat extends GraftFormat {
   }
 
   /** Raw header text of a BCF stream (positioned at magic). */
-  private[sources] def readHeaderText(decompressed: InputStream): String = {
-    val in = new LE(decompressed)
+  private[sources] def readHeaderText(in: LeIn): String = {
     val magic = in.bytes(5)
     require(magic(0) == 'B' && magic(1) == 'C' && magic(2) == 'F', "not a BCF file")
     val lText = in.i32()
@@ -124,7 +107,7 @@ object BcfFormat extends GraftFormat {
       .takeWhile(_ != 0)
   }
 
-  private def parseHeader(text: String): Header = {
+  private def parseHeader(text: String): BcfHeaderMaps = {
     val idxRe = "IDX=(\\d+)".r
     val idRe = "<ID=([^,>]+)".r
     val contigs = mutable.Map[Int, String]()
@@ -154,22 +137,22 @@ object BcfFormat extends GraftFormat {
         }
       }
     }
-    Header(contigs.toMap, dict.toMap)
+    BcfHeaderMaps(contigs.toMap, dict.toMap)
   }
 
-  private def readHeaderFrom(in: LE): Header = {
-    val magic = in.bytes(5)
-    require(magic(0) == 'B' && magic(1) == 'C' && magic(2) == 'F', "not a BCF file")
-    val lText = in.i32()
-    parseHeader(new String(in.bytes(lText), java.nio.charset.StandardCharsets.UTF_8))
-  }
+  override def readHeader(in: LeIn): BcfHeaderMaps = parseHeader(readHeaderText(in))
 
   /** Contig names in rid order, for CSI index queries. */
   def readContigNames(decompressed: InputStream): Seq[String] = {
-    val h = readHeaderFrom(new LE(decompressed))
+    val h = readHeader(new LeIn(decompressed))
     if (h.contigs.isEmpty) Nil
     else (0 to h.contigs.keys.max).map(i => h.contigs.getOrElse(i, i.toString))
   }
+
+  // auto-indexed contigs are dense 0..max; an IDX-less header still maps
+  // every rid the file uses
+  override def refCount(h: BcfHeaderMaps): Int =
+    if (h.contigs.isEmpty) Int.MaxValue else h.contigs.keys.max + 1
 
   override def bgzfRecordResync: Boolean = true
 
@@ -184,8 +167,8 @@ object BcfFormat extends GraftFormat {
     * sane). Two chained valid headers, same technique as
     * BamFormat.validateChain. Returns 1 valid / 0 invalid / -1 need more.
     */
-  private[sources] def validateChain(b: Array[Byte], n: Int, c: Int,
-                                     nContig: Int, exhausted: Boolean): Int = {
+  override def validateChain(b: Array[Byte], n: Int, c: Int,
+                             nContig: Int, exhausted: Boolean): Int = {
     var p = c.toLong
     var k = 0
     while (true) {
@@ -210,123 +193,13 @@ object BcfFormat extends GraftFormat {
     1 // unreachable
   }
 
-  /** Records of one index-free resync chunk — see BamFormat.resyncRecords
-    * for the ownership/stop convention (identical here, with the record
-    * step 8 + l_shared + l_indiv).
-    */
-  private def resyncRecords(input: RecordInput,
-                            required: Array[Int]): Iterator[Array[Any]] = {
-    val rr = input.resync
-    if (!rr.hasOwned) return Iterator.empty
-    if (input.startsAtFileStart) {
-      val s = new LE(rr)
-      val header = readHeaderFrom(s)
-      val start = rr.servedPosition
-      // LE reads straight off the block queue — see BamFormat.resyncRecords
-      return ownedRecords(rr, new LE(rr), start, header, required)
-    }
-    val header =
-      if (input.path != null)
-        headerCache.computeIfAbsent(input.path.toString, _ => {
-          val hs = new MultiMemberGzipInputStream(input.reopenRaw())
-          try readHeaderFrom(new LE(hs)) finally hs.close()
-        })
-      else {
-        val hs = new MultiMemberGzipInputStream(input.reopenRaw())
-        try readHeaderFrom(new LE(hs)) finally hs.close()
-      }
-    // auto-indexed contigs are dense 0..max; an IDX-less header still maps
-    // every rid the file uses
-    val nContig =
-      if (header.contigs.isEmpty) Int.MaxValue else header.contigs.keys.max + 1
-    val s0 = ResyncScan.findFirst(rr,
-      (b, n, c, ex) => validateChain(b, n, c, nContig, ex), "bcf")
-    if (s0 == null) return Iterator.empty
-    ownedRecords(rr,
-      new LE(new PrefixedInputStream(s0.buf, s0.offset, s0.len, rr)),
-      s0.offset, header, required)
-  }
-
-  /** Parse records back to back, stopping before the first record whose
-    * start position is beyond the chunk's owned extent (arithmetic
-    * position tracking — buffered read-ahead cannot skew it).
-    */
-  private def ownedRecords(rr: BgzfResyncInputStream, in: LE, startPos: Long,
-                           header: Header,
-                           required: Array[Int]): Iterator[Array[Any]] =
-    new Iterator[Array[Any]] {
-      private var pos = startPos
-      private var nextRec: Array[Any] = _
-      advance()
-
-      private def advance(): Unit = {
-        nextRec = null
-        if (!rr.positionIsOwned(pos)) return
-        in.i32OrEof().foreach { lShared =>
-          val lIndiv = in.i32()
-          nextRec = parseRecord(in, lShared, lIndiv, header, required)
-          pos += 8L + lShared + lIndiv
-        }
-      }
-
-      override def hasNext: Boolean = nextRec != null
-      override def next(): Array[Any] = { val r = nextRec; advance(); r }
-    }
-
   override def records(input: RecordInput, schema: StructType,
-                       required: Array[Int]): Iterator[Array[Any]] = {
-    if (input.resync != null) return resyncRecords(input, required)
-    // CSI chunks start at a record boundary; the dictionaries still come
-    // from the header, read via a separate stream.
-    val (in, header) =
-      if (input.isBgzfChunk && input.startsAtFileStart) {
-        // head chunk of a full-scan split: header is in-stream (the chunk
-        // decompresses from byte 0); records follow directly.
-        val s = new LE(input.stream)
-        (s, readHeaderFrom(s))
-      } else if (input.isBgzfChunk) {
-        def readHdr(): Header = {
-          val hs = new MultiMemberGzipInputStream(input.reopenRaw())
-          try readHeaderFrom(new LE(hs)) finally hs.close()
-        }
-        // per-path executor cache, same rationale as BamFormat.headerCache
-        val h =
-          if (input.path != null)
-            headerCache.computeIfAbsent(input.path.toString, _ => readHdr())
-          else readHdr()
-        (new LE(input.stream), h)
-      } else {
-        // BGZF block decode for whole files (see BamFormat.records: ~10x
-        // over byte-at-a-time reads against a bare GZIPInputStream); a
-        // non-BGZF gzip stream falls back to the buffered generic path
-        val buffered = new java.io.BufferedInputStream(input.stream, 1 << 16)
-        val dec: java.io.InputStream =
-          if (Bgzf.looksLikeBgzf(buffered)) new BgzfStreamInputStream(buffered)
-          else new java.io.BufferedInputStream(
-            new MultiMemberGzipInputStream(buffered), 1 << 16)
-        val s = new LE(dec)
-        (s, readHeaderFrom(s))
-      }
+                       required: Array[Int]): Iterator[Array[Any]] =
+    BgzfRecords.records(this, input, required)
 
-    new Iterator[Array[Any]] {
-      private var nextRec: Array[Any] = _
-      advance()
-
-      private def advance(): Unit = {
-        nextRec = null
-        in.i32OrEof().foreach { lShared =>
-          val lIndiv = in.i32()
-          nextRec = parseRecord(in, lShared, lIndiv, header, required)
-        }
-      }
-
-      override def hasNext: Boolean = nextRec != null
-      override def next(): Array[Any] = { val r = nextRec; advance(); r }
-    }
-  }
-
-  private def parseRecord(in: LE, lShared: Int, lIndiv: Int, h: Header,
-                          required: Array[Int]): Array[Any] = {
+  override def parseRecord(in: LeIn, lShared: Int, h: BcfHeaderMaps,
+                           required: Array[Int]): Array[Any] = {
+    in.i32() // l_indiv
     val rid = in.i32()
     val pos0 = in.i32()
     in.i32() // rlen

@@ -643,24 +643,22 @@ class CramFormat(refPath: Option[String],
   }
 
   /** Skip the file definition, then read the FILE_HEADER container and
-    * return its @SQ names — the per-path header parse an aligned mid-file
-    * chunk needs (memoized in CramFormat.cachedHeaderRefs).
+    * return its @SQ names — the header parse a mid-file chunk needs
+    * (memoized by RecordInput.fileHeader).
     */
   private def headerRefsFromStart(in: java.io.InputStream,
                                   pathStr: String): Array[String] = {
-    try {
-      val sin = new StreamIn(in)
-      checkFileDefinition(sin, pathStr)
-      val b0 = sin.u8()
-      val length = sin.i32le(b0)
-      sin.itf8(); sin.itf8(); sin.itf8(); sin.itf8()
-      sin.ltf8(); sin.ltf8()
-      sin.itf8() // nBlocks
-      val nLandmarks = sin.itf8()
-      (0 until nLandmarks).foreach(_ => sin.itf8())
-      sin.skipN(4) // crc
-      parseHeaderRefs(sin.bytes(length))
-    } finally in.close()
+    val sin = new StreamIn(in)
+    checkFileDefinition(sin, pathStr)
+    val b0 = sin.u8()
+    val length = sin.i32le(b0)
+    sin.itf8(); sin.itf8(); sin.itf8(); sin.itf8()
+    sin.ltf8(); sin.ltf8()
+    sin.itf8() // nBlocks
+    val nLandmarks = sin.itf8()
+    (0 until nLandmarks).foreach(_ => sin.itf8())
+    sin.skipN(4) // crc
+    parseHeaderRefs(sin.bytes(length))
   }
 
   /** First true container start at/after `from` and before `until`, or -1
@@ -704,36 +702,32 @@ class CramFormat(refPath: Option[String],
     // region, containers are pruned by their header coordinates, and by the
     // `.crai` index when one sits next to the file.
     val sin = new StreamIn(input.stream)
-    if (input.startOffset > 0) {
+    val chunk = input.chunk
+    val pathStr = input.path.toString
+    if (chunk.startOffset > 0) {
       // Mid-file chunk of a container split. Two planner kinds: aligned
       // chunks (`.crai`-derived cuts) arrive with the stream already
       // positioned at a true container start; resync chunks (no `.crai`)
       // arrive at a RAW cut offset and the task aligns itself to the first
       // CRC-validated container start it owns. Either way the file
-      // definition and @SQ names come from the head of the file, cached
-      // per path.
+      // definition and @SQ names come from the head of the file, through
+      // the file-keyed header memo.
       val start0 =
-        if (!input.containerResyncSplit) input.startOffset
+        if (chunk.kind != ChunkKind.Container) chunk.startOffset
         else {
           val raw = input.stream.asInstanceOf[org.apache.hadoop.fs.FSDataInputStream]
-          val found = resyncContainerStart(raw, input.startOffset, input.end,
-            input.fileSize)
+          val found = resyncContainerStart(raw, chunk.startOffset, input.end,
+            chunk.fileSize)
           if (found >= 0) raw.seek(found) // positioned probes didn't move it
           found
         }
       if (start0 < 0) return Iterator.empty
       sin.pos = start0
-      val pathStr = if (input.path != null) input.path.toString else ""
-      val refs =
-        if (input.path != null)
-          CramFormat.cachedHeaderRefs(pathStr)(
-            headerRefsFromStart(input.reopenRaw(), pathStr))
-        else headerRefsFromStart(input.reopenRaw(), pathStr)
+      val refs = input.fileHeader("cram")(headerRefsFromStart(_, pathStr))
       return containerIterator(sin, input, required, refs,
         expectFileHeader = false)
     }
-    checkFileDefinition(sin,
-      if (input.path != null) input.path.toString else "")
+    checkFileDefinition(sin, pathStr)
     containerIterator(sin, input, required, Array.empty,
       expectFileHeader = true)
   }
@@ -749,7 +743,7 @@ class CramFormat(refPath: Option[String],
                                 expectFileHeader: Boolean): Iterator[Array[Any]] = {
     val endLimit = input.end
     val craiEntries: Option[Seq[CraiIndex.Entry]] =
-      if (regions.nonEmpty && input.path != null && input.fs != null)
+      if (regions.nonEmpty && input.fs != null)
         CraiIndex.read(input.fs, input.path)
       else None
 
@@ -1296,25 +1290,6 @@ object CramFormat extends CramFormat(None, Nil) {
     * cheap observability the specs assert on (not part of the data path).
     */
   val containersSkipped = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Per-path @SQ names for aligned mid-file chunks — every chunk of a
-    * split CRAM needs the head-of-file header; one parse per executor
-    * suffices. Bounded: cleared wholesale past 4096 entries (re-parse is
-    * one small read; correctness never depends on a hit).
-    */
-  private val headerRefsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[String]]()
-
-  private[formats] def cachedHeaderRefs(key: String)(
-      load: => Array[String]): Array[String] = {
-    var v = headerRefsCache.get(key)
-    if (v == null) {
-      v = load
-      if (headerRefsCache.size > 4096) headerRefsCache.clear()
-      headerRefsCache.put(key, v)
-    }
-    v
-  }
 
   /** Order-0 rANS frequency table (CRAM spec / htscodecs rans_F_decode):
     * symbols ascend; when the byte after a frequency equals sym+1, the byte

@@ -124,7 +124,7 @@ object FcsFormat extends GraftFormat {
       // seeked to the (row-aligned) cut; the meta comes from one small
       // re-read of the head.
       private val meta =
-        if (input.startOffset > 0) {
+        if (input.chunk.startOffset > 0) {
           val in2 = input.reopenRaw()
           try readMeta(in2) finally in2.close()
         } else readMeta(input.stream)
@@ -137,11 +137,11 @@ object FcsFormat extends GraftFormat {
       private val rowBytes = 4L * nPar
       // events owned by this chunk: start byte in [startOffset, end)
       private val e0: Long =
-        if (input.startOffset <= 0) 0L
+        if (input.chunk.startOffset <= 0) 0L
         else {
-          val rel = input.startOffset - meta.dataStart
+          val rel = input.chunk.startOffset - meta.dataStart
           require(rel >= 0 && rel % rowBytes == 0,
-            s"fcs: cut ${input.startOffset} is not row-aligned " +
+            s"fcs: cut ${input.chunk.startOffset} is not row-aligned " +
               s"(dataStart=${meta.dataStart}, rowBytes=$rowBytes)")
           rel / rowBytes
         }

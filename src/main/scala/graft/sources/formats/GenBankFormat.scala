@@ -32,8 +32,8 @@ object GenBankFormat extends GraftFormat {
   // ---- span-based line machinery (hot path; no java String per line —
   // the r14 allocation diet still built one String per line plus the
   // parse-time substrings; at ~10 small lines per record that garbage was
-  // the 96 MB/s single-core wall the ParseProf probe isolated: the line
-  // reader alone runs ~1.5 GB/s). String.trim strips chars <= U+0020; in
+  // the 96 MB/s single-core wall; the line reader alone runs ~1.5 GB/s,
+  // and graft.tools.DecodeRate's genbank row tracks the decode rate). String.trim strips chars <= U+0020; in
   // UTF-8 those are exactly the bytes with unsigned value <= 0x20
   // (multi-byte chars set the high bit), so byte-level trim matches the
   // old String semantics.
@@ -129,7 +129,7 @@ object GenBankFormat extends GraftFormat {
       // LOCUS line; whole-file reads keep the tolerant everything-until-'//'
       // grouping (release-file preamble folds into record 1, where the
       // parser ignores unknown lines).
-      private val split = input.isMidFileSplit || input.end != Long.MaxValue
+      private val split = input.chunk.isSplit || input.end != Long.MaxValue
       private val needSequence = required.contains(0)
       private val needFeatures = required.contains(14)
       private val rl = new RecordLines

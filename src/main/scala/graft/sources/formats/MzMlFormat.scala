@@ -125,7 +125,7 @@ object MzMlFormat extends GraftFormat {
   }
 
   override def records(input: RecordInput, required: Array[Int]): Iterator[Array[Any]] = {
-    if (input.containerResyncSplit) return splitRecords(input, required)
+    if (input.chunk.kind == ChunkKind.Container) return splitRecords(input, required)
     val factory = XMLInputFactory.newInstance()
     factory.setProperty(XMLInputFactory.IS_COALESCING, false) // readBinaryB64 loops chunked CHARACTERS events; coalescing only adds a per-blob assembly copy
     factory.setProperty(XMLInputFactory.SUPPORT_DTD, false)
@@ -164,7 +164,7 @@ object MzMlFormat extends GraftFormat {
   private def splitRecords(input: RecordInput,
                            required: Array[Int]): Iterator[Array[Any]] = {
     val raw = input.stream.asInstanceOf[org.apache.hadoop.fs.FSDataInputStream]
-    val from = math.max(0L, input.startOffset)
+    val from = input.chunk.startOffset
     raw.seek(from)
     val factory = XMLInputFactory.newInstance()
     factory.setProperty(XMLInputFactory.IS_COALESCING, false) // readBinaryB64 loops chunked CHARACTERS events; coalescing only adds a per-blob assembly copy

@@ -156,7 +156,7 @@ object SdfFormat extends GraftFormat {
 
       // mid-record landing: the record we cut belongs to the previous
       // chunk (it reads past its bound) — discard through its terminator
-      if (input.isMidFileSplit && !atRecordStart()) {
+      if (input.chunk.isSplit && !atRecordStart()) {
         var discarding = true
         while (discarding && lines.readLineSpan()) {
           if (spanIsTerminator(lines.lineBytes, lines.lineOff, lines.lineLen))

@@ -246,9 +246,9 @@ final class FastaIndexedFormat(regions: Seq[String]) extends GraftFormat {
         case 2 => utf8(sub)
       }: Array[Any]
 
-    val isComp = input.path != null && Codecs.isCompressed(input.path.getName)
+    val isComp = Codecs.isCompressed(input.path.getName)
     val faiIdx: Option[Map[String, FaiEntry]] =
-      if (input.path != null && input.fs != null && !isComp &&
+      if (input.fs != null && !isComp &&
           FaiIndex.exists(input.fs, input.path))
         Some(FaiIndex.read(input.fs, input.path))
       else None
@@ -256,7 +256,7 @@ final class FastaIndexedFormat(regions: Seq[String]) extends GraftFormat {
     // the .fai stays uncompressed-domain, the .gzi maps to BGZF blocks. A
     // corrupt sibling degrades to the streaming fallback, never an error.
     val faiGzi: Option[(Map[String, FaiEntry], GziIndex)] =
-      if (input.path != null && input.fs != null && isComp &&
+      if (input.fs != null && isComp &&
           FaiIndex.exists(input.fs, input.path) &&
           GziIndex.exists(input.fs, input.path))
         try Some((FaiIndex.read(input.fs, input.path),
@@ -484,14 +484,14 @@ object FastqFormat extends WritableGraftFormat {
       val rr = input.resync
       if (!rr.hasOwned) return Iterator.empty
       return windowRecords(new LineWindow(new ByteLineReader(rr, 0L)),
-        pos => rr.positionIsOwned(pos), align = !input.startsAtFileStart,
+        pos => rr.positionIsOwned(pos), align = !input.chunk.startsAtFileStart,
         required)
     }
-    if (input.isMidFileSplit || input.end != Long.MaxValue)
+    if (input.chunk.isSplit || input.end != Long.MaxValue)
       // uncompressed split: absolute offsets, mkLines pre-aligned to a line
       // start; mid chunks still need the validated record alignment
       return windowRecords(new LineWindow(input.lines),
-        pos => pos < input.end, align = input.isMidFileSplit, required)
+        pos => pos < input.end, align = input.chunk.isSplit, required)
     new Iterator[Array[Any]] {
       private val lines = input.lines
       private val needSeq = required.contains(2)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SharedSpark
 
 /** Index-free BGZF record-resync splits (GraftScan.bgzfRecordSplitChunks +
-  * BamFormat.resyncRecords): a big UNINDEXED BAM (no .bai sibling — the
+  * BgzfRecords): a big UNINDEXED BAM (no .bai sibling — the
   * landing-zone shape before `samtools index` runs) must still fan out over
   * parallel chunk partitions, with the reader re-finding record boundaries
   * by validated header-chain scan (the hadoop-bam SplitGuesser technique).

@@ -15,8 +15,6 @@ import graft.SharedSpark
   */
 class BgzfSplitSpec extends AnyFunSuite with SharedSpark {
 
-  private val fx = "/root/reference/exon/exon-core/test-data/datasources"
-
   /** Save/restore conf discipline: split-forcing knobs never leak. */
   private def withConf[T](kvs: (String, String)*)(body: => T): T = {
     val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -89,6 +87,38 @@ class BgzfSplitSpec extends AnyFunSuite with SharedSpark {
     dir
   }
 
+  private val bcfRecords = 621L
+
+  /** One-shard BCF through the engine's own sink (with .csi), small enough
+    * that its records share one BGZF block but bigger than the split sizes
+    * the tests force.
+    */
+  private lazy val bcfFile: String = {
+    val dir = graft.TestTmp.dir("bgzf_split_bcf").toFile
+    val header = new java.io.File(dir, "header.vcf")
+    java.nio.file.Files.writeString(header.toPath,
+      "##fileformat=VCFv4.3\n##contig=<ID=chr1,length=10000000>\n" +
+        "##contig=<ID=chr2,length=10000000>\n" +
+        "##INFO=<ID=DP,Number=1,Type=Integer,Description=\"depth\">\n" +
+        "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n")
+    val out = new java.io.File(dir, "t").getAbsolutePath
+    spark.range(0, bcfRecords).select(
+        when(col("id") < bcfRecords / 3, "chr1").otherwise("chr2").as("chrom"),
+        (col("id") * 7919 % 9999991 + 1).as("pos"),
+        array(concat(lit("rs"), md5(col("id").cast("string")))).as("id"),
+        lit("A").as("ref"),
+        array(lit("C")).as("alt"),
+        (col("id") % 50).cast("float").as("qual"),
+        lit(null).cast("array<string>").as("filter"),
+        concat(lit("DP="), (col("id") * 31 % 997).cast("string")).as("info"),
+        lit(null).cast("string").as("formats"))
+      .repartition(1)
+      .sortWithinPartitions("chrom", "pos")
+      .write.format("bcf").mode("overwrite").option("headerFrom", header.getPath)
+      .save(out)
+    new java.io.File(out).listFiles().filter(_.getName.endsWith(".bcf")).head.getPath
+  }
+
   private def assertSameRows(split: DataFrame, whole: DataFrame): Unit = {
     assert(split.count() == whole.count())
     assert(split.except(whole).count() == 0, "split scan produced extra/changed rows")
@@ -140,41 +170,46 @@ class BgzfSplitSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("bcf whose records share one BGZF block: index split impossible, resync split still exact") {
-    // the fixture's 621 records decompress into a single BGZF block, so
-    // every index chunk-begin shares one coffset — no record-aligned
-    // index cut exists (bgzfFullScanChunks returns None). Since round 11
-    // the planner falls through to the index-free record-resync split:
-    // raw-offset chunks where every piece interior to the single block
-    // owns no block start and correctly yields zero rows, while the piece
-    // owning the block decodes all 621. Rows must be invariant either way.
-    val whole = spark.read.format("bcf").load(s"$fx/bcf/index.bcf")
-      .select("chrom", "pos", "ref")
+    // the sink-written BCF's records decompress into one BGZF block, so
+    // every index chunk-begin shares one coffset — no record-aligned index
+    // cut exists (bgzfFullScanChunks returns None) and the planner falls
+    // through to the index-free record-resync split: raw-offset chunks
+    // where every piece interior to the single block owns no block start
+    // and correctly yields zero rows, while the piece owning the block
+    // decodes every record. Rows must be invariant either way.
+    val conf = spark.sparkContext.hadoopConfiguration
+    val starts = CsiIndex.forBcf(new org.apache.hadoop.fs.Path(bcfFile), conf).get
+      .bins.iterator.flatMap(_.valuesIterator).flatten.map(_._1 >>> 16).toSet
+    assert(starts.size == 1, s"records span blocks at $starts")
+    val whole = spark.read.format("bcf").load(bcfFile).select("chrom", "pos", "ref")
+    assert(whole.count() == bcfRecords)
     withConf("spark.sql.files.maxPartitionBytes" -> "4096",
              "spark.sql.files.openCostInBytes" -> "1024") {
-      val split = spark.read.format("bcf").load(s"$fx/bcf/index.bcf")
-        .select("chrom", "pos", "ref")
+      val split = spark.read.format("bcf").load(bcfFile).select("chrom", "pos", "ref")
+      assert(split.rdd.getNumPartitions > 1, "resync split did not engage")
       assertSameRows(split, whole)
     }
   }
 
   test("bcf head chunk (in-stream header) decodes records directly") {
-    // exercises the BcfFormat startsAtFileStart branch a full-scan split's
-    // head piece takes: chunk stream decompressing from byte 0, header
-    // parsed in-stream, records following
+    // exercises the driver's Virtual arm at virtual offset 0, the chunk a
+    // full-scan split's head piece gets: the stream decompresses from byte
+    // 0, the header is parsed in-stream, records follow
     val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(s"$fx/bcf/index.bcf")
+    val p = new org.apache.hadoop.fs.Path(bcfFile)
     val fs = p.getFileSystem(conf)
+    val len = fs.getFileStatus(p).getLen
     val chunk = new BgzfChunkInputStream(fs.open(p), 0L, Long.MaxValue)
-    val input = new RecordInput(
-      () => throw new IllegalStateException("binary format must not read lines"),
-      chunk, Long.MaxValue, isMidFileSplit = false, isBgzfChunk = true,
-      path = p, fs = fs, startsAtFileStart = true)
+    val head = FileChunk(p.toString, 0, len, len, Array.empty, 0L, Long.MaxValue,
+      ChunkKind.Virtual)
+    assert(head.startsAtFileStart)
+    val input = new RecordInput(head, chunk, fs = fs)
     val schema = graft.sources.formats.BcfFormat.dataSchema
     val n = graft.sources.formats.BcfFormat
       .records(input, schema, Array(0, 1))
       .size
     chunk.close()
-    assert(n == 621)
+    assert(n == bcfRecords)
   }
 
   test("region reads unaffected by the split conf (index pruning wins)") {

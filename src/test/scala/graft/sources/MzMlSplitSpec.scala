@@ -267,9 +267,8 @@ class MzMlSplitSpec extends AnyFunSuite with SharedSpark {
     val before = MzMlFormat.liveReaderInflaters.get
     val in = new java.io.BufferedInputStream(new java.io.FileInputStream(mzFile), 1 << 16)
     try {
-      val it = MzMlFormat.records(new RecordInput(
-        () => throw new UnsupportedOperationException("no line view"), in, Long.MaxValue,
-        isMidFileSplit = false), Array(0))
+      val whole = FileChunk(mzFile.getAbsolutePath, 0, mzFile.length, mzFile.length, Array.empty)
+      val it = MzMlFormat.records(new RecordInput(whole, in), Array(0))
       (1 until nSpec).foreach(_ => it.next())
       assert(MzMlFormat.liveReaderInflaters.get == before + 1, "released before the last row")
       it.next() // the last row: no hasNext() after it
