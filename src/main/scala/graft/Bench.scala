@@ -373,8 +373,8 @@ object Bench {
 
     // b15 corpus: ONE bgzipped VCF with NO index sibling — the common
     // landing-zone shape (bgzip without tabix). Decode parallelism comes
-    // purely from the index-free BGZF block split (validated boundary scan
-    // + line alignment); before round 11 this shape was one task total.
+    // purely from the index-free BGZF record-resync cut (validated boundary
+    // scan + line rule); before round 11 this shape was one task total.
     // INFO carries an md5 field so the file doesn't deflate to nothing.
     try graft.tools.Corpora.writeUnindexedVcfGz(spark, vcfGzDir, 2000000L)
     catch { case e: Throwable => recordErr("gen_vcfgz_corpus", e) }
@@ -825,8 +825,8 @@ object Bench {
             } catch { case e: Throwable => recordErr(s"b18_fastqgz_scan_w$w", e) }
           }
           // b15: the SAME width, over ONE unindexed bgzipped VCF — text
-          // decode parallelised purely by the INDEX-FREE BGZF block split
-          // (no .tbi exists; readers find block boundaries by validated
+          // decode parallelised purely by the INDEX-FREE BGZF record-resync
+          // cut (no .tbi exists; readers find block boundaries by validated
           // magic scan and align to lines).
           if (vcfGzReady && wanted(s"b15_vcfgz_scan_w$w")) {
             try {

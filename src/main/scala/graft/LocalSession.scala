@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * q-pack's CPU-bound joins need their parallelism back (32m collapsed
   * q07's ~100 MB shuffles to a handful of tasks: 1.2s -> 3.0s), and 4m is
   * sized so those ~100 MB exchanges still fan out across local[32].
-  * SPARK_GRAFT_ADVISORY overrides both.
+  * A caller wanting another size passes it as `advisory`.
   */
 object LocalSession {
   /** Spark's own default — what a deployed jar should carry. */
@@ -28,8 +28,7 @@ object LocalSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", advisory))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -109,7 +109,7 @@ object ImageOps {
   /** Thread-local codec instances: an ImageReader/ImageWriter is reusable
     * via setInput/setOutput, and per-call `getImageReaders` pays a
     * ServiceRegistry walk plus a fresh codec object whose GC/Cleaner churn
-    * is what ImgProf measured degrading under sustained 32-thread decode.
+    * measurably degrades throughput under sustained 32-thread decode.
     * Bounded by live thread count; never disposed (executor task threads
     * are pooled and long-lived).
     */

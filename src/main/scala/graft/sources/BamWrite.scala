@@ -36,25 +36,12 @@ object BamHeader {
   /** (header text, refs as (name, length)) from an existing BAM. */
   def read(path: Path, conf: Configuration): (String, Array[(String, Int)]) = {
     val in = new MultiMemberGzipInputStream(path.getFileSystem(conf).open(path))
-    try {
-      val d = new java.io.DataInputStream(in)
-      def i32(): Int = {
-        val b = new Array[Byte](4); d.readFully(b)
-        (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
-      }
-      val magic = new Array[Byte](4); d.readFully(magic)
-      require(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M',
-        s"not a BAM file: $path")
-      val lText = i32()
-      val text = new Array[Byte](lText); d.readFully(text)
-      val nRef = i32()
-      val refs = Array.fill(nRef) {
-        val lName = i32()
-        val name = new Array[Byte](lName); d.readFully(name)
-        (new String(name, 0, lName - 1, java.nio.charset.StandardCharsets.US_ASCII), i32())
-      }
-      (new String(text, java.nio.charset.StandardCharsets.US_ASCII), refs)
-    } finally in.close()
+    val h =
+      try formats.BamFormat.readHeader(new LeIn(in))
+      catch { case e: IllegalArgumentException =>
+        throw new IllegalArgumentException(s"${e.getMessage}: $path", e) }
+      finally in.close()
+    (h.text, h.refs)
   }
 
   /** Minimal coordinate-sorted header text for a synthesized dictionary. */
@@ -97,6 +84,12 @@ object BamHeader {
             "@SQ requirement samtools imposes on SAM->BAM conversion")
       }
     }
+}
+
+/** A parsed BAM header: its SAM text and its reference dictionary. */
+final class BamHeader(val text: String, val refs: Array[(String, Int)]) {
+  /** Reference names by id, for the per-record lookup. */
+  val names: Array[String] = refs.map(_._1)
 }
 
 /** BAM job: the resolved header text and dictionary. */

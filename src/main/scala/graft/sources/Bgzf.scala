@@ -24,49 +24,36 @@ object Bgzf {
     */
   final case class RawBlock(cdata: Array[Byte], isize: Int, compressedSize: Int)
 
-  /** Non-destructive BGZF sniff on a pushback stream: true iff the next
-    * bytes are a gzip member header whose FEXTRA block carries the BC
-    * subfield (SAM spec §4.1). Reads at most 12 + XLEN bytes and unreads
-    * them all before returning, so the caller's stream position is
-    * unchanged either way. XLEN > 498 (pushback capacity 512 minus the
-    * fixed header) is treated as not-BGZF — real BGZF writers emit XLEN=6.
+  /** Bytes [[looksLikeBgzf]] may read and unread: a pushback stream handed
+    * to it needs at least this capacity.
+    */
+  val SniffBytes = 512
+
+  /** Non-destructive BGZF sniff: true iff the stream starts with a gzip
+    * member header carrying a BC subfield whose block size is plausible —
+    * the same check ([[headerBsizeAt]]) the split scan applies to every
+    * candidate boundary. Reads the fixed header and its extra field (at
+    * most [[SniffBytes]]) and unreads them all, so the stream position is
+    * unchanged either way. An extra field too long to buffer is not BGZF;
+    * real BGZF writers emit XLEN=6.
     */
   def looksLikeBgzf(in: java.io.PushbackInputStream): Boolean = {
-    val head = new Array[Byte](12)
-    var got = 0
-    while (got < 12) {
-      val n = in.read(head, got, 12 - got)
-      if (n < 0) { if (got > 0) in.unread(head, 0, got); return false }
-      got += n
+    val b = new Array[Byte](SniffBytes)
+    def fill(from: Int, to: Int): Int = {
+      var got = from
+      var eof = false
+      while (got < to && !eof) {
+        val n = in.read(b, got, to - got)
+        if (n < 0) eof = true else got += n
+      }
+      got
     }
-    def bail(extra: Array[Byte], extraLen: Int): Boolean = {
-      if (extraLen > 0) in.unread(extra, 0, extraLen)
-      in.unread(head, 0, 12)
-      false
-    }
-    if ((head(0) & 0xff) != 31 || (head(1) & 0xff) != 139 ||
-        (head(2) & 0xff) != 8 || (head(3) & 0x04) == 0)
-      return bail(null, 0)
-    val xlen = u16(head, 10)
-    if (xlen > 498) return bail(null, 0)
-    val extra = new Array[Byte](xlen)
-    got = 0
-    while (got < xlen) {
-      val n = in.read(extra, got, xlen - got)
-      if (n < 0) return bail(extra, got)
-      got += n
-    }
-    var i = 0
-    var found = false
-    while (i + 4 <= xlen && !found) {
-      val slen = u16(extra, i + 2)
-      if ((extra(i) & 0xff) == 66 && (extra(i + 1) & 0xff) == 67 && slen == 2)
-        found = true
-      else i += 4 + slen
-    }
-    in.unread(extra, 0, xlen)
-    in.unread(head, 0, 12)
-    found
+    val head = fill(0, 12)
+    val got =
+      if (head < 12) head else fill(12, math.min(SniffBytes, 12 + u16(b, 10)))
+    val bgzf = headerBsizeAt(b, 0, got) > 0
+    in.unread(b, 0, got)
+    bgzf
   }
 
   /** Read and inflate one BGZF block at the stream's current position.
@@ -209,26 +196,6 @@ object Bgzf {
     }
     -1
   }
-
-  /** Cheap sniff (mark/reset, no bytes consumed): gzip magic + FEXTRA flag
-    * + a BC-first extra subfield — the layout every BGZF writer (htslib,
-    * this repo's BgzfWriter) emits. A BGZF file with BC not first would
-    * sniff false and take the generic gzip path: slower, still correct.
-    */
-  def looksLikeBgzf(in: java.io.BufferedInputStream): Boolean = {
-    in.mark(16)
-    try {
-      val h = new Array[Byte](14)
-      var got = 0
-      while (got < 14) {
-        val n = in.read(h, got, 14 - got)
-        if (n < 0) return false
-        got += n
-      }
-      (h(0) & 0xff) == 31 && (h(1) & 0xff) == 139 && (h(3) & 4) != 0 &&
-        u16(h, 10) >= 6 && h(12) == 66 && h(13) == 67
-    } finally in.reset()
-  }
 }
 
 /** Ordered BGZF block cursor shared by every block-loop stream: raw block
@@ -348,27 +315,42 @@ private[sources] object BgzfBlocks {
   }
 }
 
-/** Decompressed stream over an entire BGZF file: a sequential readBlock
-  * loop serving bytes from each inflated block's array. Roughly 2x faster
-  * than GZIPInputStream on whole-file BAM/BCF decode — no per-member CRC
-  * recomputation, and byte-at-a-time record reads hit an array instead of
-  * the inflater; block inflation overlaps parse via [[BgzfBlocks]] when
-  * cores are idle.
+/** Decompressed stream over the BGZF virtual range [vStart, vEnd) of a
+  * file: an index chunk, or the whole file as [0, ∞) (the one-argument
+  * constructor). Serves bytes straight from each inflated block's array —
+  * roughly 2x faster than GZIPInputStream on whole-file BAM/BCF decode (no
+  * per-member CRC recomputation, and byte-at-a-time record reads hit an
+  * array instead of the inflater); block inflation overlaps parse via
+  * [[BgzfBlocks]] when cores are idle. A range starting past block 0 needs
+  * a seekable `raw`. Prefetch stops at the block holding `vEnd`, so a small
+  * region read never inflates blocks past its end.
   */
-final class BgzfStreamInputStream(raw: InputStream) extends InputStream {
+final class BgzfStreamInputStream(raw: InputStream, vStart: Long, vEnd: Long)
+  extends InputStream {
+
+  def this(raw: InputStream) = this(raw, 0L, Long.MaxValue)
+
+  private val endCoffset = vEnd >>> 16
   private var buf: Array[Byte] = _
   private var pos = 0
   private var limit = 0
   private var done = false
-  private val blocks = new BgzfBlocks(raw)
+  private var firstBlock = true
+  private val blocks = {
+    val startCoffset = vStart >>> 16
+    if (startCoffset > 0) raw.asInstanceOf[org.apache.hadoop.fs.Seekable].seek(startCoffset)
+    new BgzfBlocks(raw, startCoffset, stopAfter = endCoffset)
+  }
 
   private def advance(): Unit = {
     while (!done && pos >= limit) {
       val b = blocks.next()
       if (b == null) { done = true; return }
       buf = b.data
-      pos = 0
-      limit = buf.length
+      pos = if (firstBlock) (vStart & 0xffff).toInt else 0
+      firstBlock = false
+      limit = if (b.offset == endCoffset) math.min(buf.length, (vEnd & 0xffff).toInt)
+              else buf.length
     }
   }
 
@@ -514,100 +496,24 @@ object AsyncChunkedInputStream {
 }
 
 /** Decompressed stream over one COMPRESSED-offset split [cStart, cEnd) of a
-  * BGZF file with NO index: the index-free analog of the full-scan split,
-  * for one-line-per-record text formats (bgzipped VCF/GFF/BED/... without a
-  * .tbi sibling — the common landing-zone shape).
+  * BGZF file with NO index (an unindexed BAM/BCF, a bgzipped FASTQ/FASTA or
+  * line file — the landing-zone shape before `samtools index` or `tabix`
+  * runs): every format the planner cuts as [[ChunkKind.Record]] reads
+  * through it and re-finds its own first record (BAM/BCF record resync, the
+  * hadoop-bam SplitGuesser technique; FASTQ/FASTA record starts; a line
+  * format's first '\n').
   *
   * Block ownership is positional and deterministic: the chunk owns every
-  * block whose start offset is in [findBlockAtOrAfter(cStart),
-  * first block >= cEnd). Record alignment is the Hadoop text convention
-  * lifted to block granularity — this stream ALWAYS serves past the last
-  * owned block through the first '\n' of the following blocks (so the line
-  * straddling the boundary completes here), and the READER of a cStart>0
-  * chunk always discards its first line (served by the predecessor's
-  * tail). Every line lands in exactly one chunk under any chunking;
-  * BgzfBlockSplitSpec asserts the invariance.
-  */
-final class BgzfBlockSplitInputStream(raw: FSDataInputStream, cStart: Long,
-                                      cEnd: Long, fileSize: Long)
-  extends InputStream {
-
-  private var buf: Array[Byte] = _
-  private var pos = 0
-  private var limit = 0
-  private var done = false
-  private var tailing = false
-  private var lastTail = false
-  private var blocks: BgzfBlocks = null
-  private val startOffset: Long = Bgzf.findBlockAtOrAfter(raw, cStart, fileSize)
-
-  if (startOffset < 0) done = true
-  else {
-    raw.seek(startOffset)
-    blocks = new BgzfBlocks(raw, startOffset)
-    advance()
-  }
-
-  private def advance(): Unit = {
-    while (!done && pos >= limit) {
-      if (lastTail) { done = true; return }
-      val block = blocks.next()
-      if (block == null) { done = true; return }
-      if (!tailing && block.offset >= cEnd) tailing = true
-      buf = block.data
-      pos = 0
-      limit = buf.length
-      if (tailing) {
-        // serve only through the first '\n' at/after the boundary; the
-        // straddling line's remainder may span multiple blocks
-        var i = 0
-        var nl = -1
-        while (i < limit && nl < 0) { if (buf(i) == '\n') nl = i; i += 1 }
-        if (nl >= 0) { limit = nl + 1; lastTail = true }
-      }
-    }
-  }
-
-  override def read(): Int = {
-    if (done) return -1
-    val b = buf(pos) & 0xff
-    pos += 1
-    if (pos >= limit) advance()
-    b
-  }
-
-  override def read(out: Array[Byte], off: Int, len: Int): Int = {
-    if (done) return -1
-    val n = math.min(len, limit - pos)
-    System.arraycopy(buf, pos, out, off, n)
-    pos += n
-    if (pos >= limit) advance()
-    n
-  }
-
-  override def close(): Unit = {
-    if (blocks != null) blocks.close()
-    raw.close()
-  }
-}
-
-/** Decompressed stream over one COMPRESSED-offset split [cStart, cEnd) of a
-  * BGZF binary file with NO index (unindexed BAM/BCF — the landing-zone
-  * shape before `samtools index` runs): the record-structured analog of
-  * BgzfBlockSplitInputStream, for formats whose record boundary is not a
-  * line but a self-describing binary header the FORMAT can re-find
-  * (BAM/BCF record resync, the hadoop-bam SplitGuesser technique).
-  *
-  * Block ownership is positional and deterministic, same convention as the
-  * text split: the chunk owns every block whose raw offset is in
-  * [findBlockAtOrAfter(cStart), first block >= cEnd). Unlike the text
-  * stream, this one never cuts: it serves decompressed bytes from the first
-  * owned block through EOF, because a record starting in the last owned
-  * block may straddle arbitrarily many following blocks. The FORMAT stops
-  * instead, via `positionIsOwned`: a record belongs to this chunk iff its
-  * first decompressed byte falls inside the owned blocks' extent. Every
-  * record therefore lands in exactly one chunk under any chunking
-  * (BamResyncSpec asserts the invariance).
+  * block whose raw offset is in [findBlockAtOrAfter(cStart), first block >=
+  * cEnd). The stream never cuts: it serves decompressed bytes from the
+  * first owned block through EOF, because a record starting in the last
+  * owned block may straddle arbitrarily many following blocks. The FORMAT
+  * stops instead, via `positionIsOwned`, on decompressed positions counted
+  * from the first owned block's first byte. A binary record belongs to the
+  * chunk owning its first byte; a line belongs to the chunk owning the
+  * '\n' before it (LineFormat.records). Every record therefore lands in
+  * exactly one chunk under any chunking (BamResyncSpec, BgzfBlockSplitSpec
+  * and FastqSplitSpec assert the invariance).
   */
 final class BgzfResyncInputStream(raw: FSDataInputStream, cStart: Long,
                                   cEnd: Long, fileSize: Long)
@@ -624,7 +530,6 @@ final class BgzfResyncInputStream(raw: FSDataInputStream, cStart: Long,
   // its successor's offset lands >= cEnd — no lookahead needed)
   private var ownedLoaded = 0L
   private var ownedComplete = eof
-  private var served = 0L
 
   /** False when no block starts inside [cStart, cEnd) — the whole chunk is
     * interior to one block owned by the predecessor.
@@ -656,11 +561,6 @@ final class BgzfResyncInputStream(raw: FSDataInputStream, cStart: Long,
     pos < ownedLoaded
   }
 
-  /** Decompressed bytes served through read() so far — equals the current
-    * record-start position for a parser that consumes records back to back.
-    */
-  def servedPosition: Long = served
-
   override def read(): Int = {
     while (queue.isEmpty || headPos >= queue.peekFirst().length) {
       if (!queue.isEmpty) { queue.removeFirst(); headPos = 0 }
@@ -668,7 +568,6 @@ final class BgzfResyncInputStream(raw: FSDataInputStream, cStart: Long,
     }
     val b = queue.peekFirst()(headPos) & 0xff
     headPos += 1
-    served += 1
     b
   }
 
@@ -681,7 +580,6 @@ final class BgzfResyncInputStream(raw: FSDataInputStream, cStart: Long,
     val n = math.min(len, head.length - headPos)
     System.arraycopy(head, headPos, out, off, n)
     headPos += n
-    served += n
     n
   }
 
@@ -800,8 +698,9 @@ trait BgzfRecordCodec[H <: AnyRef] {
   *   - Virtual (index chunk): a chunk at virtual offset 0 reads its header
   *     in-stream; any other starts at a record and takes the header from the
   *     memo.
-  *   - Plain (the whole file): BGZF decodes through the block reader; a
-  *     plain gzip stream falls back to the buffered generic path.
+  *   - Plain (the whole file): the whole-file gzip decision of
+  *     [[Codecs.gunzip]] — BGZF through the block reader, plain gzip
+  *     through the buffered generic path.
   * Every arm reads through one [[LeIn]] straight off the block queue —
   * interposing a BufferedInputStream costs ~1.6x on decode.
   */
@@ -837,13 +736,10 @@ object BgzfRecords {
       case _ =>
         // LeIn issues many 1-4 byte reads; against a bare GZIPInputStream
         // each is a JNI inflate call (~10x slower than the block reader,
-        // which serves from the inflated block array)
-        val buffered = new java.io.BufferedInputStream(input.stream, 1 << 16)
-        val s: java.io.InputStream =
-          if (Bgzf.looksLikeBgzf(buffered)) new BgzfStreamInputStream(buffered)
-          else new java.io.BufferedInputStream(
-            new MultiMemberGzipInputStream(buffered), 1 << 16)
-        val in = new LeIn(s)
+        // which serves from the inflated block array), so only the plain
+        // gzip fallback is buffered
+        val in = new LeIn(Codecs.gunzip(input.stream,
+          gz => new java.io.BufferedInputStream(gz, 1 << 16)))
         new Records(codec, in, codec.readHeader(in), null, required)
     }
   }
@@ -877,67 +773,4 @@ object BgzfRecords {
     override def hasNext: Boolean = nextRec != null
     override def next(): Array[Any] = { val r = nextRec; advance(); r }
   }
-}
-
-/** InputStream over the BGZF-decompressed bytes of one virtual-position
-  * chunk [vStart, vEnd]. Seeks the raw stream to the chunk's first block and
-  * serves decompressed bytes until the end virtual position. Index chunk
-  * boundaries are record-aligned, so line parsing terminates cleanly.
-  */
-final class BgzfChunkInputStream(raw: FSDataInputStream, vStart: Long, vEnd: Long)
-  extends InputStream {
-
-  private val endCoffset = vEnd >>> 16
-  private val startCoffset = vStart >>> 16
-  private var firstBlock = true
-  private var buf: Array[Byte] = _
-  private var pos = 0
-  private var limit = 0
-  private var done = false
-  // stopAfter bounds prefetch to the chunk's own blocks: a small indexed
-  // region read must never inflate blocks past its end virtual position
-  private val blocks = {
-    raw.seek(startCoffset)
-    new BgzfBlocks(raw, startCoffset, stopAfter = endCoffset)
-  }
-
-  advance()
-
-  /** Load blocks until there is at least one servable byte or the chunk is
-    * exhausted.
-    */
-  private def advance(): Unit = {
-    while (!done) {
-      val block = blocks.next()
-      if (block == null) { done = true; return }
-      buf = block.data
-      pos = if (firstBlock) (vStart & 0xffff).toInt else 0
-      firstBlock = false
-      limit = if (block.offset == endCoffset)
-                math.min(buf.length, (vEnd & 0xffff).toInt)
-              else buf.length
-      // after the end block the cursor returns null by itself (stopAfter),
-      // so no explicit end-of-chunk bookkeeping is needed here
-      if (pos < limit) return
-    }
-  }
-
-  override def read(): Int = {
-    if (done) return -1
-    val b = buf(pos) & 0xff
-    pos += 1
-    if (pos >= limit) advance()
-    b
-  }
-
-  override def read(out: Array[Byte], off: Int, len: Int): Int = {
-    if (done) return -1
-    val n = math.min(len, limit - pos)
-    System.arraycopy(buf, pos, out, off, n)
-    pos += n
-    if (pos >= limit) advance()
-    n
-  }
-
-  override def close(): Unit = { blocks.close(); raw.close() }
 }

@@ -195,7 +195,7 @@ object FaiIndex {
         "single-extraction limit — request a smaller window")
     val nBytes = (until - from).toInt
     val buf = new Array[Byte](nBytes)
-    val in = new BgzfChunkInputStream(fs.open(fasta),
+    val in = new BgzfStreamInputStream(fs.open(fasta),
       gzi.virtualFor(from), gzi.virtualFor(until))
     try {
       var got = 0

@@ -92,12 +92,9 @@ object ChunkKind {
     * pruning, or a full-scan cut at indexed record starts).
     */
   case object Virtual extends ChunkKind
-  /** Raw compressed-offset cut of a bgzipped line file: the reader aligns to
-    * the first BGZF block at/after the cut, then to lines.
-    */
-  case object Block extends ChunkKind
-  /** Raw compressed-offset cut of a BGZF record file (BAM/BCF/FASTQ): the
-    * reader aligns to a block and the format re-finds a record start.
+  /** Raw compressed-offset cut of an unindexed BGZF file (BAM, BCF, FASTQ,
+    * FASTA, the line formats): the reader aligns to the first BGZF block
+    * at/after the cut and the format re-finds a record start.
     */
   case object Record extends ChunkKind
   /** Cut at a format-provided exact container start (`.crai`, FCS stride). */
@@ -840,19 +837,18 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       * the driver cuts in O(1) (one memoized sniff, no per-record I/O) and
       * each reader aligns itself to the first boundary it owns. The kind
       * says how:
-      *   - Block: bgzipped one-line-per-record text with no tabix sibling
-      *     (the .vcf.gz/.gff.gz landing shape) — the reader finds its first
-      *     BGZF block by validated magic scan and aligns to lines by the
-      *     Hadoop convention at block granularity (BgzfBlockSplitInputStream);
-      *   - Record: an unindexed BGZF record file (BAM/BCF with no .bai/.csi,
-      *     bgzipped FASTQ) — the format re-finds the first record whose
-      *     start byte it owns (hadoop-bam SplitGuesser; BgzfRecords);
+      *   - Record: an unindexed BGZF file (BAM/BCF with no .bai/.csi,
+      *     bgzipped FASTQ/FASTA, a bgzipped line file with no .tbi — the
+      *     .vcf.gz/.gff.gz landing shape) — the reader finds its first BGZF
+      *     block by validated magic scan and the format re-finds the first
+      *     record it owns (hadoop-bam SplitGuesser; BgzfRecords for the
+      *     binary formats, LineFormat.records' line rule for text);
       *   - Container: an unindexed container file (CRAM with no `.crai`,
       *     mzML) — the format re-finds the first container it owns
       *     (CramFormat.resyncContainerStart, the same pattern at container
       *     granularity), so planning cost is independent of container count.
-      * Plain gzip cannot be entered mid-stream, so the BGZF kinds are gated
-      * on a 16-byte sniff. An index sibling always wins: bgzfFullScanChunks
+      * Plain gzip cannot be entered mid-stream, so Record is gated on the
+      * BGZF sniff. An index sibling always wins: bgzfFullScanChunks
       * runs first, and a container format's sibling (`.crai`) vetoes the
       * resync here, checked on every plan outside the memo — a sibling
       * dropped next to an already-planned file must switch the next scan
@@ -864,7 +860,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
       def bgzf: Boolean = GraftScan.bgzfSniffs(key) {
         try {
           val in = fs.open(st.getPath)
-          try Bgzf.looksLikeBgzf(new java.io.BufferedInputStream(in, 64))
+          try Bgzf.looksLikeBgzf(new java.io.PushbackInputStream(in, Bgzf.SniffBytes))
           finally in.close()
         } catch { case _: Exception => false }
       }
@@ -875,12 +871,11 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
           try fmt.resyncSplitSniff(fs, st.getPath)
           catch { case _: Exception => false }
         }
-      // BAM/BCF are BGZF by definition; other record formats (FASTQ/FASTA)
-      // engage on any compressed name and the sniff separates BGZF from
-      // plain gzip (one task, correct)
+      // BAM/BCF are BGZF by definition; other formats engage on any
+      // compressed name and the sniff separates BGZF from plain gzip (one
+      // task, correct)
       def recordNamed = GraftScan.bgzfNamed(name) || Codecs.isCompressed(name)
-      if (fmt.lineRecords && GraftScan.gzNamed(name) && bgzf) Some(ChunkKind.Block)
-      else if (fmt.bgzfRecordResync && recordNamed && bgzf) Some(ChunkKind.Record)
+      if (fmt.bgzfRecordResync && recordNamed && bgzf) Some(ChunkKind.Record)
       else if (fmt.containerResync && resyncable) Some(ChunkKind.Container)
       else None
     }
@@ -1505,12 +1500,13 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
       () => throw new IllegalStateException(s"$what chunks have no line view")
     val mkLines: () => ByteLineReader = c.kind match {
       case ChunkKind.Record =>
-        // binary record-resync chunk: the FORMAT consumes `resync` directly
-        // (BAM/BCF record boundaries are not lines)
-        resync = new BgzfResyncInputStream(raw, c.start, c.start + c.length,
-          c.fileSize)
-        stream = resync
-        noLines("record-resync")
+        // BGZF resync chunk: the format re-finds its first record and stops
+        // at its owned extent — BAM/BCF on `resync` as bytes, the text
+        // formats on lines whose offsets count from the first owned block
+        val rr = new BgzfResyncInputStream(raw, c.start, c.start + c.length, c.fileSize)
+        resync = rr
+        stream = rr
+        () => new ByteLineReader(rr, 0L)
       case ChunkKind.Aligned =>
         // aligned container chunk (CRAM): the cut IS a container start, so
         // the format consumes the raw stream from there directly
@@ -1523,20 +1519,8 @@ final class GraftPartitionReader(format: GraftFormat, dataSchema: StructType,
         // there itself (task-open resync)
         stream = raw
         noLines("container-resync")
-      case ChunkKind.Block =>
-        stream = new BgzfBlockSplitInputStream(raw, c.start, c.start + c.length,
-          c.fileSize)
-        val s = stream
-        () => {
-          val r = new ByteLineReader(s, 0L)
-          // Hadoop convention at block granularity: the predecessor chunk
-          // always serves through the first '\n' past the boundary, so a
-          // mid-file chunk always discards its first line.
-          if (c.start > 0) r.readLine()
-          r
-        }
       case ChunkKind.Virtual =>
-        stream = new BgzfChunkInputStream(raw, c.vStart, c.vEnd)
+        stream = new BgzfStreamInputStream(raw, c.vStart, c.vEnd)
         val s = stream
         () => new ByteLineReader(s, 0L)
       case ChunkKind.Plain if compressed =>

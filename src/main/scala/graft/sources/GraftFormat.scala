@@ -5,10 +5,12 @@ import org.apache.spark.sql.types._
 /** One planned chunk handed to a format: the planner's [[FileChunk]] (its
   * `kind` says how the chunk was cut and so how the format enters it) plus
   * what the reader opened for it. Text formats consume `lines` (lazily
-  * constructed; for a mid-file split it is pre-aligned to the first line at
-  * or after the split start). Binary formats consume `stream` — the
+  * constructed; for a mid-file Plain split it is pre-aligned to the first
+  * line at or after the split start; for a [[ChunkKind.Record]] chunk it
+  * starts at the first owned BGZF block, offsets count from there, and the
+  * format aligns itself). Binary formats consume `stream` — the
   * decompressed bytes of the chunk, or the raw seekable handle for the
-  * container kinds — and a [[ChunkKind.Record]] chunk's `resync`.
+  * container kinds — and a Record chunk's `resync`.
   *
   * `chunk.startsAtFileStart` is true when the stream begins at the file's
   * first byte (in-stream headers are present); a mid-file chunk takes its
@@ -25,11 +27,11 @@ final class RecordInput(val chunk: FileChunk, val stream: java.io.InputStream,
 
   /** Exclusive raw end of the records this chunk owns; `Long.MaxValue`
     * reads to the end of the stream (a whole file, a compressed stream, a
-    * BGZF virtual range).
+    * BGZF virtual range) or leaves the stop to `resync`'s ownership.
     */
   val end: Long =
-    if (chunk.isWholeFile || chunk.isBgzfChunk || Codecs.isCompressed(path.getName))
-      Long.MaxValue
+    if (chunk.isWholeFile || chunk.isBgzfChunk || chunk.kind == ChunkKind.Record ||
+        Codecs.isCompressed(path.getName)) Long.MaxValue
     else chunk.start + chunk.length
 
   /** The header of this chunk's file, parsed by `parse` from a fresh raw
@@ -78,25 +80,26 @@ trait GraftFormat extends Serializable {
   /** Uncompressed files may be split at record boundaries. */
   def splittable: Boolean = false
 
-  /** One record == one line. Enables the index-free BGZF block split: a big
-    * bgzipped file with no tabix sibling still fans out, because line
-    * alignment at block boundaries is discoverable (Hadoop text-split
-    * convention lifted to BGZF blocks). Multi-line-record formats (FASTA,
-    * FASTQ, GenBank) must stay false — their record boundary is not '\n'.
+  /** One record == one line. A line format re-finds a record boundary
+    * anywhere (the next '\n'), so it takes the index-free BGZF split
+    * ([[bgzfRecordResync]]) through LineFormat.records' line rule.
+    * Multi-line-record formats (FASTA, FASTQ, GenBank) must stay false —
+    * their record boundary is not '\n'.
     */
   def lineRecords: Boolean = false
 
   /** The format can re-find a record boundary mid-stream in BGZF-compressed
     * data (hadoop-bam SplitGuesser style). Enables the index-free full-scan
-    * split of big unindexed BGZF binary files (BAM/BCF with no .bai/.csi
-    * sibling): the planner cuts at raw compressed offsets, each reader
-    * aligns to the first BGZF block at/after its cut (validated magic
-    * scan), and the format's own resync finds the first record whose start
-    * byte it owns. Formats setting this must handle a [[ChunkKind.Record]]
-    * chunk (its `input.resync`) in records(); the BGZF binary formats do so
-    * through the shared driver [[BgzfRecords]].
+    * split of big unindexed BGZF files (BAM/BCF with no .bai/.csi sibling,
+    * bgzipped FASTQ/FASTA, bgzipped line files with no .tbi): the planner
+    * cuts at raw compressed offsets, each reader aligns to the first BGZF
+    * block at/after its cut (validated magic scan), and the format finds
+    * the first record it owns. Formats setting this must handle a
+    * [[ChunkKind.Record]] chunk (its `input.resync`) in records(); the BGZF
+    * binary formats do so through the shared driver [[BgzfRecords]], the
+    * line formats through LineFormat.records.
     */
-  def bgzfRecordResync: Boolean = false
+  def bgzfRecordResync: Boolean = lineRecords
 
   /** The format can re-find a record/container boundary from a RAW byte
     * offset at task open (CRC-validated header resync for CRAM; markup-
@@ -231,17 +234,33 @@ abstract class LineFormat extends GraftFormat {
         parseLineBytes(b, off, len, required)
     }
 
-  final override def records(input: RecordInput, required: Array[Int]): Iterator[Array[Any]] =
+  /** Lines of this chunk, parsed. A [[ChunkKind.Record]] chunk (an
+    * unindexed bgzipped file) applies the line rule on its owned BGZF
+    * blocks: a mid-file chunk first discards through its first '\n' (that
+    * line is its predecessor's), then serves a line while the '\n' just
+    * before it (at `nextLineStart - 1`) lies in an owned block; the head
+    * chunk's first line has no '\n' before it and is always served. So a
+    * line straddling the last owned block completes here, and every line
+    * lands in exactly one chunk under any chunking.
+    */
+  final override def records(input: RecordInput, required: Array[Int]): Iterator[Array[Any]] = {
+    val rr = input.resync
+    if (rr != null && !rr.hasOwned) return Iterator.empty
+    val lines = input.lines
+    if (rr != null && !input.chunk.startsAtFileStart) lines.readLineSpan()
+    val end = input.end
+    def owned(): Boolean = {
+      val s = lines.nextLineStart
+      s < end && (rr == null || rr.positionIsOwned(s - 1))
+    }
     if (parsesBytes)
       new Iterator[Array[Any]] {
-        private val lines = input.lines
         private val parse = byteParser(required)
         private var nextRow: Array[Any] = _
         private def advance(): Unit = {
           nextRow = null
           while (nextRow == null) {
-            if (lines.nextLineStart >= input.end) return
-            if (!lines.readLineSpan()) return
+            if (!owned() || !lines.readLineSpan()) return
             if (!skipLineBytes(lines.lineBytes, lines.lineOff, lines.lineLen))
               nextRow = parse.parse(lines.lineBytes, lines.lineOff, lines.lineLen)
           }
@@ -256,8 +275,8 @@ abstract class LineFormat extends GraftFormat {
         private def advance(): Unit = {
           nextRow = null
           while (nextRow == null) {
-            if (input.lines.nextLineStart >= input.end) return
-            val line = input.lines.readLine()
+            if (!owned()) return
+            val line = lines.readLine()
             if (line == null) return
             if (!skipLine(line)) nextRow = parseLine(line, required)
           }
@@ -266,6 +285,7 @@ abstract class LineFormat extends GraftFormat {
         override def hasNext: Boolean = nextRow != null
         override def next(): Array[Any] = { val r = nextRow; advance(); r }
       }
+  }
 }
 
 object FormatUtil {

@@ -214,11 +214,7 @@ object Codecs {
     // AsyncChunkedInputStream) — the plain sequential read when the pool
     // gate is closed.
     def pipelined(dec: InputStream): InputStream = AsyncChunkedInputStream.wrap(dec)
-    if (gzipExts.exists(n.endsWith)) {
-      val pb = new java.io.PushbackInputStream(in, 512)
-      if (Bgzf.looksLikeBgzf(pb)) new BgzfStreamInputStream(pb)
-      else pipelined(new MultiMemberGzipInputStream(pb))
-    }
+    if (gzipExts.exists(n.endsWith)) gunzip(in, pipelined)
     else if (zstdExts.exists(n.endsWith)) {
       val z = new com.github.luben.zstd.ZstdInputStream(in)
       z.setContinuous(true)
@@ -232,6 +228,17 @@ object Codecs {
         new org.apache.commons.compress.compressors.xz.XZCompressorInputStream(
           new java.io.BufferedInputStream(in, 1 << 16), true))
     else in
+  }
+
+  /** The whole-file gzip decision: BGZF content (sniffed without moving
+    * the stream) decodes through [[BgzfStreamInputStream]], any other gzip
+    * through `generic` over the multi-member stream. The sniff's pushback
+    * is a pass-through once drained, so the BGZF path copies nothing extra.
+    */
+  def gunzip(in: InputStream, generic: InputStream => InputStream): InputStream = {
+    val pb = new java.io.PushbackInputStream(in, Bgzf.SniffBytes)
+    if (Bgzf.looksLikeBgzf(pb)) new BgzfStreamInputStream(pb)
+    else generic(new MultiMemberGzipInputStream(pb))
   }
 }
 

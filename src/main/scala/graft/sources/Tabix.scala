@@ -181,7 +181,8 @@ object BaiIndex {
     if (!fs.exists(bai)) return None
 
     val headerIn = new MultiMemberGzipInputStream(fs.open(bamPath))
-    val names = try formats.BamFormat.readHeader(new LeIn(headerIn)) finally headerIn.close()
+    val names = try formats.BamFormat.readHeader(new LeIn(headerIn)).names
+      finally headerIn.close()
 
     val in = fs.open(bai)
     val bytes = try in.readAllBytes() finally in.close()

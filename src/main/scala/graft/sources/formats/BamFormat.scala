@@ -16,7 +16,7 @@ import graft.sources.FormatUtil._
   * chunk is entered (whole file, `.bai` chunk, index-free resync cut) is
   * the shared driver BgzfRecords.
   */
-object BamFormat extends GraftFormat with BgzfRecordCodec[Array[String]] {
+object BamFormat extends GraftFormat with BgzfRecordCodec[BamHeader] {
   override def shortName: String = "bam"
   override def defaultExtensions: Seq[String] = Seq("bam")
   override val dataSchema: StructType = SamFormat.dataSchema
@@ -30,23 +30,24 @@ object BamFormat extends GraftFormat with BgzfRecordCodec[Array[String]] {
   private val SeqCodeBytes = SeqCode.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
   private val CigarOps = "MIDNSHP=X"
 
-  /** Reference names from a BAM header stream (positioned at magic). */
-  override def readHeader(in: LeIn): Array[String] = {
+  /** The header from a stream positioned at the magic: the one parse behind
+    * the reader, BaiIndex.forBam and a sink's `headerFrom`.
+    */
+  override def readHeader(in: LeIn): BamHeader = {
     val magic = in.bytes(4)
     require(magic(0) == 'B' && magic(1) == 'A' && magic(2) == 'M', "not a BAM file")
-    val lText = in.i32()
-    in.skip(lText)
+    val text = new String(in.bytes(in.i32()), java.nio.charset.StandardCharsets.US_ASCII)
     val nRef = in.i32()
-    Array.fill(nRef) {
+    val refs = Array.fill(nRef) {
       val lName = in.i32()
       val name = new String(in.bytes(lName), 0, lName - 1,
         java.nio.charset.StandardCharsets.US_ASCII) // strip trailing NUL
-      in.i32() // l_ref
-      name
+      (name, in.i32())
     }
+    new BamHeader(text, refs)
   }
 
-  override def refCount(refs: Array[String]): Int = refs.length
+  override def refCount(h: BamHeader): Int = h.refs.length
 
   override def bgzfRecordResync: Boolean = true
 
@@ -104,8 +105,9 @@ object BamFormat extends GraftFormat with BgzfRecordCodec[Array[String]] {
                        required: Array[Int]): Iterator[Array[Any]] =
     BgzfRecords.records(this, input, required)
 
-  override def parseRecord(in: LeIn, blockSize: Int, refs: Array[String],
+  override def parseRecord(in: LeIn, blockSize: Int, h: BamHeader,
                            required: Array[Int]): Array[Any] = {
+    val refs = h.names
     val refId = in.i32()
     val pos0 = in.i32()
     val lReadName = in.u8()

@@ -66,8 +66,7 @@ object FastaFormat extends WritableGraftFormat {
       if (!rr.hasOwned) return Iterator.empty
       // line offsets are relative to the first owned block's first byte —
       // exactly the coordinate positionIsOwned speaks
-      return fastaIter(new ByteLineReader(rr, 0L),
-        pos => rr.positionIsOwned(pos), required)
+      return fastaIter(input.lines, pos => rr.positionIsOwned(pos), required)
     }
     fastaIter(input.lines, pos => pos < input.end, required)
   }
@@ -483,7 +482,7 @@ object FastqFormat extends WritableGraftFormat {
       // validated resync, the head chunk starts at a true record start.
       val rr = input.resync
       if (!rr.hasOwned) return Iterator.empty
-      return windowRecords(new LineWindow(new ByteLineReader(rr, 0L)),
+      return windowRecords(new LineWindow(input.lines),
         pos => rr.positionIsOwned(pos), align = !input.chunk.startsAtFileStart,
         required)
     }

@@ -27,7 +27,7 @@ object Faidx {
     val compressed = Codecs.isCompressed(name)
     val isBgzf = compressed && {
       val in = fs.open(path)
-      try Bgzf.looksLikeBgzf(new java.io.BufferedInputStream(in, 64))
+      try Bgzf.looksLikeBgzf(new java.io.PushbackInputStream(in, Bgzf.SniffBytes))
       finally in.close()
     }
     require(!compressed || isBgzf,

@@ -22,4 +22,24 @@ class SourceTextSpec extends AnyFunSuite {
       assert(withNul.isEmpty, s"NUL byte in: ${withNul.mkString(", ")}")
     } finally files.close()
   }
+
+  test("the engine packages read no env var or system property") {
+    // readers, functions and streaming are configured through the session
+    // (`spark.graft.*`, reader options), never through the process
+    val reads = "sys\\.env|System\\.getenv|sys\\.props|System\\.getProperty".r
+    val hits = Seq("sources", "functions", "streaming").flatMap { pkg =>
+      val root = java.nio.file.Paths.get("src/main/scala/graft", pkg)
+      assert(java.nio.file.Files.isDirectory(root), s"run from the repository root: $root")
+      val files = java.nio.file.Files.walk(root)
+      try files.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .flatMap { p =>
+          java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if reads.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+          }
+        }.toList
+      finally files.close()
+    }
+    assert(hits.isEmpty, s"configuration read outside the session:\n${hits.mkString("\n")}")
+  }
 }

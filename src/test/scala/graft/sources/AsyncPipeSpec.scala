@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, PushbackInputStream}
 import java.util.zip.GZIPOutputStream
 
-/** Pins for the r17 whole-file decode additions: the non-destructive BGZF
-  * sniff in Codecs.wrap, and the sequential-codec decode/parse overlap
-  * pipe (AsyncChunkedInputStream).
+/** Pins for the whole-file decode path: the one non-destructive BGZF sniff
+  * (Bgzf.looksLikeBgzf, behind Codecs.gunzip and the planner's split gate),
+  * and the sequential-codec decode/parse overlap pipe
+  * (AsyncChunkedInputStream).
   */
 class AsyncPipeSpec extends AnyFunSuite {
 
@@ -60,6 +61,26 @@ class AsyncPipeSpec extends AnyFunSuite {
       assert(!Bgzf.looksLikeBgzf(pb))
       assert(readAll(pb).sameElements(head), s"sniff consumed bytes at n=$n")
     }
+  }
+
+  test("looksLikeBgzf: BC anywhere in the extra field; implausible BSIZE is not BGZF") {
+    // re-frame the first block with a foreign subfield ahead of BC (XLEN 12,
+    // BSIZE grown by the 6 extra bytes): still BGZF, still decodable
+    val b = bgzf(payload)
+    val bsize = ((b(16) & 0xff) | ((b(17) & 0xff) << 8)) + 1
+    val extra = Array[Byte]('X', 'Y', 2, 0, 0, 0, 'B', 'C', 2, 0,
+      ((bsize + 5) & 0xff).toByte, (((bsize + 5) >> 8) & 0xff).toByte)
+    val head = b.take(10) ++ Array[Byte](12, 0) ++ extra
+    val reframed = head ++ b.slice(18, b.length)
+    val pb = new PushbackInputStream(new ByteArrayInputStream(reframed), Bgzf.SniffBytes)
+    assert(Bgzf.looksLikeBgzf(pb))
+    assert(readAll(new BgzfStreamInputStream(pb)).sameElements(payload))
+
+    // a BC subfield whose BSIZE cannot hold the block's own framing
+    val tiny = b.take(16) ++ Array[Byte](5, 0) ++ b.drop(18)
+    val pbT = new PushbackInputStream(new ByteArrayInputStream(tiny), Bgzf.SniffBytes)
+    assert(!Bgzf.looksLikeBgzf(pbT))
+    assert(readAll(pbT).sameElements(tiny), "sniff consumed bytes")
   }
 
   test("async pipe serves byte-identical data for every wrapped codec") {

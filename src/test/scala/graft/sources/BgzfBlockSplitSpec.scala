@@ -2,14 +2,18 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
 
-/** Index-FREE BGZF splits (GraftScan.bgzfBlockSplitChunks): a big bgzipped
-  * one-line-per-record text file with NO tabix sibling — the common
-  * landing-zone shape — must fan out over parallel chunks via validated
-  * block-boundary scans + Hadoop line alignment, and the result must be
+/** Index-FREE BGZF splits of text: a big bgzipped one-line-per-record file
+  * with NO tabix sibling — the common landing-zone shape — is cut as
+  * ChunkKind.Record (GraftScan's rawCutKind), each reader aligns to a BGZF
+  * block by validated boundary scan (BgzfResyncInputStream), and
+  * LineFormat.records applies the line rule: a mid-file chunk discards
+  * through its first '\n', then serves a line while the '\n' before it lies
+  * in an owned block. It must fan out over parallel chunks with the result
   * invariant to the chunking. Plain (non-BGZF) gzip must stay one task.
   */
 class BgzfBlockSplitSpec extends AnyFunSuite with SharedSpark {
@@ -144,37 +148,141 @@ class BgzfBlockSplitSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  /** Every line a format would see, comments and headers included. */
+  private object AllLines extends LineFormat {
+    override def shortName: String = "lines"
+    override def defaultExtensions: Seq[String] = Nil
+    override val dataSchema: StructType = StructType(Seq(StructField("line", StringType)))
+    override def skipLine(line: String): Boolean = false
+    override def parseLine(line: String, required: Array[Int]): Array[Any] = Array(line)
+  }
+
+  /** The lines LineFormat.records serves for the Record chunk [cStart, cEnd),
+    * entered as the partition reader enters it.
+    */
+  private def chunkLines(p: org.apache.hadoop.fs.Path, size: Long,
+                         cStart: Long, cEnd: Long): IndexedSeq[String] = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rr = new BgzfResyncInputStream(fs.open(p), cStart, cEnd, size)
+    val chunk = FileChunk(p.toString, cStart, cEnd - cStart, size, Array.empty,
+      kind = ChunkKind.Record)
+    try AllLines.records(new RecordInput(chunk, rr, () => new ByteLineReader(rr, 0L),
+      resync = rr), Array(0)).map(_(0).asInstanceOf[String]).toVector
+    finally rr.close()
+  }
+
+  /** Every line of the whole decompressed file. */
+  private def wholeLines(p: org.apache.hadoop.fs.Path): IndexedSeq[String] = {
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = new BgzfStreamInputStream(fs.open(p))
+    try {
+      val r = new ByteLineReader(in, 0L)
+      Iterator.continually(r.readLine()).takeWhile(_ != null).toVector
+    } finally in.close()
+  }
+
+  /** Cuts every `step` compressed bytes must serve the whole file's lines,
+    * in order, each exactly once.
+    */
+  private def assertChunkingInvariant(p: org.apache.hadoop.fs.Path, size: Long,
+                                      whole: IndexedSeq[String], step: Long): Unit = {
+    val cuts = (0L until size by step) :+ size
+    val got = cuts.sliding(2).flatMap(w => chunkLines(p, size, w(0), w(1))).toVector
+    assert(got.size == whole.size, s"step $step: ${got.size} lines vs ${whole.size}")
+    assert(firstDiff(got, whole).isEmpty, s"step $step: line sequence diverged")
+  }
+
+  /** Index of the first element where `got` and `want` differ (a failure
+    * message naming it instead of printing both sequences).
+    */
+  private def firstDiff[T](got: IndexedSeq[T], want: IndexedSeq[T]): Option[Int] =
+    (0 until math.max(got.size, want.size)).find(i => got.lift(i) != want.lift(i))
+
   test("stream-level property: any chunking yields every line exactly once") {
-    // drive BgzfBlockSplitInputStream directly (plus the reader-side
-    // first-line discard) across many cut layouts, including cuts inside
-    // blocks, at block boundaries, and tiny chunks smaller than one block
+    // drive the Record chunk's stream and LineFormat.records' line rule
+    // directly across many cut layouts, including cuts inside blocks, at
+    // block boundaries, and tiny chunks smaller than one block
     val gz = new java.io.File(gzOnlyDir).listFiles()
       .filter(_.getName.endsWith(".vcf.gz")).head
     val p = new org.apache.hadoop.fs.Path(gz.getAbsolutePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val size = gz.length()
-    def linesOf(cStart: Long, cEnd: Long): Seq[String] = {
-      val in = new BgzfBlockSplitInputStream(fs.open(p), cStart, cEnd, size)
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, "UTF-8"))
-      try {
-        var out = List.newBuilder[String]
-        if (cStart > 0) r.readLine() // reader-side discard convention
-        var l = r.readLine()
-        while (l != null) { out += l; l = r.readLine() }
-        out.result()
-      } finally r.close()
-    }
-    val whole = linesOf(0L, size)
+    val whole = wholeLines(p)
     assert(whole.size > 100000) // header lines + 120k records
-    // deterministic pseudo-random chunk sizes (no Date/Random seeds needed)
+    assert(firstDiff(chunkLines(p, size, 0L, size), whole).isEmpty)
     Seq(7919L, 23456L, 65536L, 100003L, size / 3, size / 7).foreach { step =>
-      val cuts = (0L until size by math.max(1024L, step)) :+ size
-      val got = cuts.sliding(2).flatMap { w => linesOf(w(0), w(1)) }.toSeq
-      assert(got.size == whole.size,
-        s"step $step: ${got.size} lines vs ${whole.size}")
-      assert(got == whole, s"step $step: line sequence diverged")
+      assertChunkingInvariant(p, size, whole, math.max(1024L, step))
     }
+  }
+
+  test("line ownership property: long, CRLF and block-aligned lines under any chunking") {
+    // A BED file bgzipped by BgzfWriter (65280 payload bytes per block), no
+    // .tbi. Near each block boundary k one line is sized so that, by k % 3:
+    // 0 — the line ends exactly at the boundary (the next line starts the
+    // block), 1 — its '\r' is the block's last byte and its '\n' the next
+    // block's first, 2 — a line straddles the boundary. Lines 3000 and 9000
+    // are longer than two blocks. All lines end in CRLF.
+    val payload = 65280
+    val text = new java.io.ByteArrayOutputStream()
+    val expected = Vector.newBuilder[(String, Long, Long, String, String)]
+    val lineStarts = scala.collection.mutable.HashSet[Long]()
+    val rnd = new scala.util.Random(20261020)
+    def letters(n: Int): String = Seq.fill(n)(('a' + rnd.nextInt(26)).toChar).mkString
+    var i = 0
+    while (text.size < 1200000) {
+      val pos = text.size.toLong
+      val boundary = pos / payload + 1
+      val toBoundary = boundary * payload - pos
+      val head = s"chr${i % 3}\t${i * 10L}\t${i * 10L + 5}\tr${i}_"
+      val tail = "\t0\t+\r\n"
+      val pad =
+        if (toBoundary >= 100 && toBoundary <= 300 && boundary % 3 != 2)
+          (toBoundary + (if (boundary % 3 == 1) 1 else 0)).toInt - head.length - tail.length
+        else if (i % 6000 == 3000) 150000
+        else 10 + rnd.nextInt(60)
+      val padding = letters(pad)
+      lineStarts += pos
+      text.write((head + padding + tail).getBytes("UTF-8"))
+      expected += ((s"chr${i % 3}", i * 10L, i * 10L + 5, s"r${i}_$padding", "+"))
+      i += 1
+    }
+    val bytes = text.toByteArray
+    val boundaries = (payload.toLong until bytes.length by payload).toSeq
+    assert(boundaries.exists(lineStarts.contains), "no block boundary on a line start")
+    assert(boundaries.exists(b => bytes(b.toInt - 1) == '\r' && bytes(b.toInt) == '\n'),
+      "no CRLF split across a block boundary")
+    assert(expected.result().exists(_._4.length > 2 * payload), "no line longer than a block")
+
+    val dir = graft.TestTmp.dir("line_ownership").toFile
+    val f = new java.io.File(dir, "lines.bed.gz")
+    val fos = new java.io.FileOutputStream(f)
+    try {
+      val w = new BgzfWriter(new java.io.BufferedOutputStream(fos, 1 << 16))
+      w.write(bytes)
+      w.finish()
+    } finally fos.close()
+    val cols = Seq("reference_sequence_name", "start", "end", "name", "strand")
+    def rows(df: DataFrame): IndexedSeq[(String, Long, Long, String, String)] =
+      df.select(cols.map(col): _*).collect().toIndexedSeq.map { r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3), r.getString(4))
+      }.sortBy(r => (r._2, r._1))
+    val whole = spark.read.format("bed").load(dir.toString)
+    assert(whole.rdd.getNumPartitions == 1)
+    val wholeRows = rows(whole)
+    assert(firstDiff(wholeRows, expected.result().sortBy(r => (r._2, r._1))).isEmpty,
+      "whole-file scan differs from the lines written")
+    Seq(4096L, 16384L, 50000L, 131072L).foreach { maxBytes =>
+      withConf("spark.sql.files.maxPartitionBytes" -> maxBytes.toString,
+               "spark.sql.files.openCostInBytes" -> "1024") {
+        val split = spark.read.format("bed").load(dir.toString)
+        assert(split.rdd.getNumPartitions > 2, s"maxPartitionBytes $maxBytes: no split")
+        assert(firstDiff(rows(split), wholeRows).isEmpty,
+          s"maxPartitionBytes $maxBytes: rows differ")
+      }
+    }
+    // the same rule at stream level, with cuts far smaller than a block
+    val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+    val lines = wholeLines(p)
+    Seq(997L, 4096L, 30011L).foreach(assertChunkingInvariant(p, f.length, lines, _))
   }
 
   test("findBlockAtOrAfter lands on true block boundaries from arbitrary offsets") {

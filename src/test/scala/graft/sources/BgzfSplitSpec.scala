@@ -199,7 +199,7 @@ class BgzfSplitSpec extends AnyFunSuite with SharedSpark {
     val p = new org.apache.hadoop.fs.Path(bcfFile)
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
-    val chunk = new BgzfChunkInputStream(fs.open(p), 0L, Long.MaxValue)
+    val chunk = new BgzfStreamInputStream(fs.open(p), 0L, Long.MaxValue)
     val head = FileChunk(p.toString, 0, len, len, Array.empty, 0L, Long.MaxValue,
       ChunkKind.Virtual)
     assert(head.startsAtFileStart)

@@ -8,8 +8,9 @@ import graft.tools.MiniS3
 
 /** Object-store arm for the index-free split families that BamResyncSpec /
   * BgzfBlockSplitSpec / FastqSplitSpec prove on local disk only: unindexed
-  * BAM (binary record resync), unindexed bgzipped VCF (BGZF block split +
-  * line alignment) and bgzipped FASTQ (validated 4-line resync). A 300 GB
+  * BAM (binary record resync), unindexed bgzipped VCF (the same BGZF
+  * record-resync cut + the line rule) and bgzipped FASTQ (validated 4-line
+  * resync). A 300 GB
   * landing-zone file lives on an object store, where the access pattern —
   * not just the row result — must be sane: each split task should cost a
   * constant handful of ranged GETs (open at the cut + one header reopen),
@@ -284,7 +285,7 @@ class S3ResyncSweepSpec extends AnyFunSuite with SharedSpark {
       _.select("name", "reference", "start", "cigar"))
   }
 
-  test("unindexed bgzipped VCF block split over S3: bounded ranged GETs, exact rows") {
+  test("unindexed bgzipped VCF record-resync split over S3: bounded ranged GETs, exact rows") {
     sweepCase("vcf", vcfGzFile, "vcf", 262144L,
       _.select("chrom", "pos", "ref", "info"))
   }
