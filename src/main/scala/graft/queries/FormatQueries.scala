@@ -722,14 +722,15 @@ object FormatQueries {
     // produce IDENTICAL row-level aggregates. Fixture paths are the
     // repo-committed test resources, read directly.
     "f62_cram31_scan" -> ((s, _) => {
-      // repo-committed fixtures, located relative to the working tree (env
-      // override for non-root CWDs) instead of a hardcoded checkout path
-      val root = sys.env.getOrElse("GRAFT_REPO_ROOT",
-        new java.io.File(".").getCanonicalPath)
+      // repo-committed fixtures, located relative to the working tree
+      // (spark.graft.repoRoot for other working directories) instead of a
+      // hardcoded checkout path
+      val root = s.conf.getOption("spark.graft.repoRoot")
+        .getOrElse(new java.io.File(".").getCanonicalPath)
       val rdir = s"$root/src/test/resources/cram"
       require(new java.io.File(rdir).isDirectory,
         s"f62: CRAM 3.1 fixtures not found at $rdir " +
-          "(run from the repo root or set GRAFT_REPO_ROOT)")
+          "(run from the repo root or set spark.graft.repoRoot)")
       def agg(p: String, suffix: String) =
         s.read.format("cram").load(p).agg(
           count(lit(1)).as(s"n_$suffix"),

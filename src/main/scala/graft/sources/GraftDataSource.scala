@@ -16,16 +16,53 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Hadoop Configuration is not serializable; ship it to executors manually. */
+/** Ships a Hadoop Configuration to tasks as its plain key/value pairs:
+  * length-prefixed UTF-8, encoded once per instance on first serialization,
+  * decoded into `new Configuration(false)` with one `set` per pair — the
+  * properties `Configuration.readFields` would rebuild, without its
+  * per-property gzip of the pair's source names. Reads and writes, batch
+  * and streaming, all ship their conf through this class.
+  */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
+  @transient private lazy val encoded: Array[Byte] = SerializableHadoopConf.encode(value)
+
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    value.write(out)
+    out.writeInt(encoded.length)
+    out.write(encoded)
   }
   private def readObject(in: java.io.ObjectInputStream): Unit = {
     in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
+    val bytes = new Array[Byte](in.readInt())
+    in.readFully(bytes)
+    value = SerializableHadoopConf.decode(bytes)
+  }
+}
+
+object SerializableHadoopConf {
+  import java.nio.charset.StandardCharsets.UTF_8
+
+  private def encode(conf: Configuration): Array[Byte] = {
+    val bytes = new java.io.ByteArrayOutputStream(1 << 16)
+    val out = new java.io.DataOutputStream(bytes)
+    // an Int length, not writeUTF: a value may exceed its 64 KiB cap
+    def put(s: String): Unit = { val b = s.getBytes(UTF_8); out.writeInt(b.length); out.write(b) }
+    conf.iterator().forEachRemaining { e => put(e.getKey); put(e.getValue) }
+    out.flush()
+    bytes.toByteArray
+  }
+
+  private def decode(bytes: Array[Byte]): Configuration = {
+    val conf = new Configuration(false)
+    val in = java.nio.ByteBuffer.wrap(bytes)
+    def take(): String = {
+      val n = in.getInt()
+      val s = new String(bytes, in.position(), n, UTF_8)
+      in.position(in.position() + n)
+      s
+    }
+    while (in.hasRemaining) { val k = take(); conf.set(k, take()) }
+    conf
   }
 }
 
@@ -1034,9 +1071,20 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     GraftScan.pack(chunks, openCost, maxPart).map(p => GraftInputPartition(p): InputPartition)
   }
 
-  private[sources] def readerFactory: PartitionReaderFactory = createReaderFactory()
+  /** The conf this scan's tasks read with. One instance per scan: Spark
+    * asks for the reader factory more than once per query, and each
+    * instance encodes the conf once.
+    */
+  private lazy val shippedConf =
+    new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** A streaming batch's factory: it ships the conf as of that batch. */
+  private[sources] def readerFactory: PartitionReaderFactory = newReaderFactory(
+    new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
+
+  override def createReaderFactory(): PartitionReaderFactory = newReaderFactory(shippedConf)
+
+  private def newReaderFactory(conf: SerializableHadoopConf): PartitionReaderFactory = {
     val dataIdx = table.resolvedDataSchema.fieldNames.zipWithIndex.toMap
     val partIdx = table.listing._2.zipWithIndex.toMap
     // For each output field: Left(dataColIdx) or Right(partColIdx).
@@ -1053,7 +1101,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     new GraftReaderFactory(
       table.format,
       parseSchema,
-      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
+      conf,
       fieldSources,
       if (table.regionsOption.nonEmpty) region else Nil,
       limit,

@@ -128,32 +128,39 @@ class S3HttpFileSystem extends FileSystem {
     else try is.readAllBytes() finally is.close()
   }
 
-  /** Object length via HEAD; falls back to a 1-byte ranged GET's
-    * Content-Range total when the server omits Content-Length on HEAD.
-    * Returns -1 if the key does not exist.
+  /** The object's status via HEAD: its length and its `Last-Modified`
+    * time (0 if the server sends none). The length falls back to a 1-byte
+    * ranged GET's Content-Range total when the server omits Content-Length
+    * on HEAD. None if the key does not exist.
     */
-  private def objectLength(key: String): Long = {
+  private def headObject(key: String): Option[FileStatus] = {
     val head = request("HEAD", key)
     val code = head.getResponseCode
     val len = head.getHeaderField("Content-Length")
+    val mtime = head.getLastModified
     head.disconnect()
-    if (code == 404) -1L
+    if (code == 404) None
     else if (code != 200) throw new IOException(s"HEAD $key -> $code")
-    else if (len != null) len.toLong
+    else if (len != null) Some(fileStatus(key, len.toLong, mtime))
     else {
       val g = request("GET", key, headers = Map("Range" -> "bytes=0-0"))
       try {
         val cr = g.getHeaderField("Content-Range") // bytes 0-0/N
         drain(g)
         if (cr == null) throw new IOException(s"no Content-Range for $key")
-        cr.substring(cr.indexOf('/') + 1).toLong
+        Some(fileStatus(key, cr.substring(cr.indexOf('/') + 1).toLong, mtime))
       } finally g.disconnect()
     }
   }
 
+  /** Object length via HEAD, -1 if the key does not exist. */
+  private def objectLength(key: String): Long = headObject(key).fold(-1L)(_.getLen)
+
   // ---- ListObjectsV2 ----------------------------------------------------
 
-  private case class Listing(keys: Seq[(String, Long)], prefixes: Seq[String])
+  /** A listed object: key, size and `LastModified` (epoch ms, 0 if absent). */
+  private case class Obj(key: String, len: Long, mtime: Long)
+  private case class Listing(keys: Seq[Obj], prefixes: Seq[String])
 
   private def listOnce(prefix: String, delimiter: Option[String],
       token: Option[String]): (Listing, Option[String]) = {
@@ -166,24 +173,23 @@ class S3HttpFileSystem extends FileSystem {
     val body = new String(drain(conn), StandardCharsets.UTF_8)
     conn.disconnect()
     if (code != 200) throw new IOException(s"LIST $prefix -> $code")
-    def all(tag: String): Seq[String] = {
+    def all(tag: String, in: String = body): Seq[String] = {
       val out = Seq.newBuilder[String]
       var i = 0
       val open = s"<$tag>"; val close = s"</$tag>"
-      while ({ i = body.indexOf(open, i); i >= 0 }) {
-        val end = body.indexOf(close, i)
-        out += body.substring(i + open.length, end)
+      while ({ i = in.indexOf(open, i); i >= 0 }) {
+        val end = in.indexOf(close, i)
+        out += in.substring(i + open.length, end)
         i = end + close.length
       }
       out.result()
     }
     def unesc(s: String): String =
       s.replace("&lt;", "<").replace("&gt;", ">").replace("&amp;", "&")
-    val contents = {
-      // Key/Size pairs appear inside <Contents> in document order
-      val ks = all("Key").map(unesc)
-      val ss = all("Size").map(_.trim.toLong)
-      ks.zip(ss)
+    val contents = all("Contents").map { c =>
+      val mtime = all("LastModified", c).headOption
+        .flatMap(t => scala.util.Try(java.time.Instant.parse(t.trim).toEpochMilli).toOption)
+      Obj(unesc(all("Key", c).head), all("Size", c).head.trim.toLong, mtime.getOrElse(0L))
     }
     // CommonPrefixes holds nested <Prefix>; the top-level echo <Prefix> of the
     // request is the FIRST <Prefix> in the document — drop exactly one echo.
@@ -198,7 +204,7 @@ class S3HttpFileSystem extends FileSystem {
 
   private def listAll(prefix: String, delimiter: Option[String]): Listing = {
     var token: Option[String] = None
-    var keys = Seq.empty[(String, Long)]
+    var keys = Seq.empty[Obj]
     var prefixes = Seq.empty[String]
     var more = true
     while (more) {
@@ -213,8 +219,8 @@ class S3HttpFileSystem extends FileSystem {
 
   private def pathFor(key: String): Path = new Path(s"$fsUri/$key")
 
-  private def fileStatus(key: String, len: Long): FileStatus =
-    new FileStatus(len, false, 1, 32L * 1024 * 1024, 0L, pathFor(key))
+  private def fileStatus(key: String, len: Long, mtime: Long): FileStatus =
+    new FileStatus(len, false, 1, 32L * 1024 * 1024, mtime, pathFor(key))
 
   private def dirStatus(key: String): FileStatus =
     new FileStatus(0, true, 1, 0, 0L, pathFor(key.stripSuffix("/")))
@@ -222,12 +228,14 @@ class S3HttpFileSystem extends FileSystem {
   override def getFileStatus(f: Path): FileStatus = {
     val key = keyOf(f)
     if (key.isEmpty) return dirStatus("")
-    val len = objectLength(key)
-    if (len >= 0) return fileStatus(key, len)
-    if (objectLength(key + "/") >= 0) return dirStatus(key) // mkdirs marker
-    val l = listAll(key + "/", delimiter = Some("/"))
-    if (l.keys.nonEmpty || l.prefixes.nonEmpty) dirStatus(key)
-    else throw new FileNotFoundException(s"$scheme://$bucket/$key")
+    headObject(key).getOrElse {
+      if (objectLength(key + "/") >= 0) dirStatus(key) // mkdirs marker
+      else {
+        val l = listAll(key + "/", delimiter = Some("/"))
+        if (l.keys.nonEmpty || l.prefixes.nonEmpty) dirStatus(key)
+        else throw new FileNotFoundException(s"$scheme://$bucket/$key")
+      }
+    }
   }
 
   /** LIST first: a directory (the common case) costs one request. Only a
@@ -237,13 +245,11 @@ class S3HttpFileSystem extends FileSystem {
     val key = keyOf(f)
     val prefix = if (key.isEmpty) "" else key + "/"
     val l = listAll(prefix, delimiter = Some("/"))
-    if (key.nonEmpty && l.keys.isEmpty && l.prefixes.isEmpty) {
-      val len = objectLength(key)
-      if (len < 0) throw new FileNotFoundException(s"$scheme://$bucket/$key")
-      return Array(fileStatus(key, len))
-    }
+    if (key.nonEmpty && l.keys.isEmpty && l.prefixes.isEmpty)
+      return Array(headObject(key).getOrElse(
+        throw new FileNotFoundException(s"$scheme://$bucket/$key")))
     val files = l.keys.collect {
-      case (k, len) if k != prefix => fileStatus(k, len) // skip the dir marker itself
+      case o if o.key != prefix => fileStatus(o.key, o.len, o.mtime) // skip the dir marker itself
     }
     (files ++ l.prefixes.map(p => dirStatus(p))).toArray
   }
@@ -263,13 +269,10 @@ class S3HttpFileSystem extends FileSystem {
     val listed = listAll(prefix, delimiter = None).keys
     val entries =
       if (listed.nonEmpty || key.isEmpty) listed.collect {
-        case (k, _) if k.endsWith("/") && k != prefix => dirStatus(k) // a marker
-        case (k, len) if !k.endsWith("/") => fileStatus(k, len)
-      } else {
-        val len = objectLength(key)
-        if (len < 0) throw new FileNotFoundException(s"$scheme://$bucket/$key")
-        Seq(fileStatus(key, len))
-      }
+        case o if o.key.endsWith("/") && o.key != prefix => dirStatus(o.key) // a marker
+        case o if !o.key.endsWith("/") => fileStatus(o.key, o.len, o.mtime)
+      } else Seq(headObject(key).getOrElse(
+        throw new FileNotFoundException(s"$scheme://$bucket/$key")))
     val it = entries.iterator.map(st => new LocatedFileStatus(st, Array.empty[BlockLocation]))
     new RemoteIterator[LocatedFileStatus] {
       override def hasNext: Boolean = it.hasNext
@@ -646,7 +649,7 @@ class S3HttpFileSystem extends FileSystem {
         case _: FileNotFoundException => None
       }).exists(_.isDirectory)
       if (dstIsDir) dstKey = s"$dstKey/${src.getName}"
-      (l.keys.map(_._1) ++ Some(srcKey + "/").filter(k => objectLength(k) >= 0))
+      (l.keys.map(_.key) ++ Some(srcKey + "/").filter(k => objectLength(k) >= 0))
         .distinct.foreach { k =>
           copyObject(k, dstKey + k.stripPrefix(srcKey))
           deleteObject(k)
@@ -661,9 +664,9 @@ class S3HttpFileSystem extends FileSystem {
     val l = listAll(key + "/", delimiter = None)
     val marker = objectLength(key + "/") >= 0
     if (l.keys.isEmpty && !marker) return false
-    if (!recursive && l.keys.exists(_._1 != key + "/"))
+    if (!recursive && l.keys.exists(_.key != key + "/"))
       throw new IOException(s"directory not empty: $f")
-    l.keys.map(_._1).foreach(deleteObject)
+    l.keys.map(_.key).foreach(deleteObject)
     if (marker) deleteObject(key + "/")
     true
   }

@@ -15,11 +15,12 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * (`?uploads` / `?partNumber&uploadId` / complete). The reference validates
   * the same surface against localstack (exon-core/tests/sqllogictests/slt/
   * fasta-scan-s3-tests.slt, cram-remote-tests.slt); this is the sandbox
-  * equivalent. Keys live in a ConcurrentHashMap; a request log records
-  * (method, path, range) so tests can assert seek behavior.
+  * equivalent. Keys live in a ConcurrentHashMap with their put time, which
+  * LIST reports as `LastModified` and HEAD as `Last-Modified`; a request
+  * log records (method, path, range) so tests can assert seek behavior.
   */
 final class MiniS3 {
-  private val objects = new ConcurrentHashMap[String, Array[Byte]]() // "bucket/key" -> bytes
+  private val objects = new ConcurrentHashMap[String, MiniS3.Stored]() // "bucket/key" -> object
   private val uploads = new ConcurrentHashMap[String, ConcurrentHashMap[Int, Array[Byte]]]()
   private val uploadKey = new ConcurrentHashMap[String, String]() // uploadId -> "bucket/key"
   private val nextUpload = new AtomicLong(1)
@@ -50,10 +51,18 @@ final class MiniS3 {
   def port: Int = server.getAddress.getPort
   def endpoint: String = s"http://127.0.0.1:$port"
 
-  def put(bucket: String, key: String, bytes: Array[Byte]): Unit =
-    objects.put(s"$bucket/$key", bytes)
+  /** Store an object, stamped `modified` (epoch ms; the put time by
+    * default), kept in whole seconds as S3 reports it.
+    */
+  def put(bucket: String, key: String, bytes: Array[Byte],
+      modified: Long = System.currentTimeMillis()): Unit =
+    store(s"$bucket/$key", bytes, modified)
   def get(bucket: String, key: String): Option[Array[Byte]] =
-    Option(objects.get(s"$bucket/$key"))
+    Option(objects.get(s"$bucket/$key")).map(_.bytes)
+
+  private def store(full: String, bytes: Array[Byte],
+      modified: Long = System.currentTimeMillis()): Unit =
+    objects.put(full, MiniS3.Stored(bytes, modified / 1000 * 1000))
   def keys(bucket: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
     objects.keySet().asScala.toSeq.filter(_.startsWith(bucket + "/"))
@@ -172,7 +181,8 @@ final class MiniS3 {
       case "GET" if key.isEmpty || q.contains("list-type") => list(ex, bucket, q)
       case "GET" => getObject(ex, s"$bucket/$key", range)
       case "HEAD" => Option(objects.get(s"$bucket/$key")) match {
-        case Some(b) => send(ex, 200, b) // send() strips the body for HEAD
+        case Some(o) => // send() strips the body for HEAD
+          send(ex, 200, o.bytes, Map("Last-Modified" -> MiniS3.httpDate(o.modified)))
         case None => notFound(ex)
       }
       case "PUT" if q.contains("partNumber") && q.contains("uploadId") =>
@@ -187,15 +197,15 @@ final class MiniS3 {
           case Some(src0) =>
             val src = java.net.URLDecoder.decode(src0.stripPrefix("/"), "UTF-8")
             Option(objects.get(src)) match {
-              case Some(b) =>
-                objects.put(s"$bucket/$key", b)
+              case Some(o) =>
+                store(s"$bucket/$key", o.bytes)
                 send(ex, 200,
                   "<CopyObjectResult><ETag>\"copy\"</ETag></CopyObjectResult>"
                     .getBytes(StandardCharsets.UTF_8))
               case None => notFound(ex)
             }
           case None =>
-            objects.put(s"$bucket/$key", ex.getRequestBody.readAllBytes())
+            store(s"$bucket/$key", ex.getRequestBody.readAllBytes())
             send(ex, 200, Array.empty, Map("ETag" -> "\"put\""))
         }
       case "POST" if q.contains("uploads") =>
@@ -238,7 +248,7 @@ final class MiniS3 {
           val ordered = parts.asScala.toSeq.sortBy(_._1).map(_._2)
           val out = new java.io.ByteArrayOutputStream()
           ordered.foreach(out.write)
-          objects.put(dest, out.toByteArray)
+          store(dest, out.toByteArray)
           send(ex, 200,
             s"""<CompleteMultipartUploadResult><Key>${xmlEscape(dest)}</Key>
                |<ETag>"mpu"</ETag></CompleteMultipartUploadResult>"""
@@ -256,7 +266,7 @@ final class MiniS3 {
   }
 
   private def getObject(ex: HttpExchange, full: String, range: Option[String]): Unit =
-    Option(objects.get(full)) match {
+    Option(objects.get(full)).map(_.bytes) match {
       case None => notFound(ex)
       case Some(b) =>
         (if (ignoreRange) None else range) match {
@@ -315,9 +325,10 @@ final class MiniS3 {
       sb.append("<NextContinuationToken>").append(xmlEscape(page.last))
         .append("</NextContinuationToken>")
     page.foreach { k =>
+      val o = objects.get(s"$bucket/$k")
       sb.append("<Contents><Key>").append(xmlEscape(k)).append("</Key><Size>")
-        .append(objects.get(s"$bucket/$k").length)
-        .append("</Size><LastModified>2026-01-01T00:00:00.000Z</LastModified></Contents>")
+        .append(o.bytes.length).append("</Size><LastModified>")
+        .append(java.time.Instant.ofEpochMilli(o.modified)).append("</LastModified></Contents>")
     }
     prefixes.foreach { p =>
       sb.append("<CommonPrefixes><Prefix>").append(xmlEscape(p))
@@ -327,6 +338,15 @@ final class MiniS3 {
     send(ex, 200, sb.toString.getBytes(StandardCharsets.UTF_8),
       Map("Content-Type" -> "application/xml"))
   }
+}
+
+object MiniS3 {
+  private final case class Stored(bytes: Array[Byte], modified: Long)
+
+  /** An HTTP-date (RFC 1123), as S3 sends `Last-Modified`. */
+  private def httpDate(ms: Long): String =
+    java.time.format.DateTimeFormatter.RFC_1123_DATE_TIME.format(
+      java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC))
 }
 
 /** Standalone demo/dev entry: `runMain graft.tools.MiniS3Server [port]`. */

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SharedSpark
+import graft.tools.MiniS3
 
 /** A mid-file chunk takes its file's header from the executor-side memo
   * (RecordInput.fileHeader). A file rewritten in place at the same path —
@@ -14,7 +15,9 @@ import graft.SharedSpark
   * re-keys. Each test reads once (warming the memo), overwrites the data
   * file and its index with a distinct mtime, and reads again; every row's
   * name carries the reference it was written on, so a stale header shows
-  * as a row whose reference name disagrees with its name.
+  * as a row whose reference name disagrees with its name. The S3 twin
+  * rewrites an object at the same length, so only the object's
+  * LastModified can re-key it.
   */
 class StaleHeaderSpec extends AnyFunSuite with SharedSpark {
 
@@ -164,6 +167,75 @@ class StaleHeaderSpec extends AnyFunSuite with SharedSpark {
       assert(after.rdd.getNumPartitions > 1)
       assert(after.count() == 30000)
       assert(misnamed(after, "name", "reference") == 0)
+    }
+  }
+
+  /** A bgzipped VCF and its .tbi: three BGZF blocks of exactly one payload
+    * each (header, then the records of `order(0)`, then of `order(1)`), so
+    * swapping `order` moves the same compressed blocks and keeps the length.
+    */
+  private def blockSwappedVcf(order: Seq[String]): (Array[Byte], Array[Byte]) = {
+    val payload = 65280 // BgzfWriter's block payload: a full buffer ends a block
+    def line(chrom: String, i: Int, pad: Int): String =
+      f"$chrom\t${100000 + i * 10}\t${chrom}_v$i%05d\tA\tG\t50\tPASS\tAC=1;P=${"x" * pad}\n"
+    val width = 60
+    val pad = width - line("chrA", 0, 0).length
+    val n = payload / width
+    assert(payload % width == 0)
+    val head = "##fileformat=VCFv4.2\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+    val filler = "##filler=" + "x" * (payload - head.length - 10) + "\n"
+    val data = new java.io.ByteArrayOutputStream()
+    val w = new BgzfWriter(data)
+    val tbi = new TabixWriter(order)
+    w.write((head.take(21) + filler + head.drop(21)).getBytes("US-ASCII"))
+    assert(w.virtualPos == (data.size.toLong << 16), "header is not one whole block")
+    for (r <- order.indices; i <- 0 until n) {
+      val bytes = line(order(r), i, pad).getBytes("US-ASCII")
+      assert(bytes.length == width)
+      val vs = w.virtualPos
+      w.write(bytes)
+      tbi.add(r, 100000 + i * 10 - 1, 100000 + i * 10, vs, w.virtualPos)
+    }
+    w.finish()
+    val idx = new java.io.ByteArrayOutputStream()
+    tbi.write(idx)
+    (data.toByteArray, idx.toByteArray)
+  }
+
+  test("s3: a region read after an in-place rewrite at the same length uses the new index") {
+    val s3 = new MiniS3().start()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.s3.impl", "fs.s3.endpoint", "fs.s3.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.s3.impl", classOf[graft.sources.s3.S3HttpFileSystem].getName)
+    conf.set("fs.s3.endpoint", s3.endpoint)
+    conf.set("fs.s3.impl.disable.cache", "true")
+    try {
+      def install(order: Seq[String], mtime: Long): Array[Byte] = {
+        val (vcf, tbi) = blockSwappedVcf(order)
+        s3.put("graft-test", "stale/calls.vcf.gz", vcf, mtime)
+        s3.put("graft-test", "stale/calls.vcf.gz.tbi", tbi, mtime)
+        vcf
+      }
+      // a listed root (LIST's LastModified) and a file root (HEAD's Last-Modified)
+      def chrAIds(root: String): Seq[String] = spark.read.format("vcf").load(root)
+        .where("chrom = 'chrA' AND pos BETWEEN 100001 AND 100500")
+        .select(element_at(col("id"), 1)).collect().map(_.getString(0)).toSeq
+      val roots = Seq("s3://graft-test/stale", "s3://graft-test/stale/calls.vcf.gz")
+      val v1 = install(Seq("chrA", "chrB"), T0)
+      roots.foreach(r => assert(chrAIds(r).size == 50, r))
+      val v2 = install(Seq("chrB", "chrA"), T0 + 60000)
+      assert(v1.length == v2.length && !v1.sameElements(v2))
+      roots.foreach { r =>
+        val ids = chrAIds(r)
+        assert(ids.size == 50, s"$r: region read lost chrA rows after the rewrite")
+        assert(ids.forall(_.startsWith("chrA_")), r)
+      }
+    } finally {
+      s3.stop()
+      saved.foreach { case (k, v) =>
+        v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
+      }
     }
   }
 }
