@@ -17,17 +17,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Ships a Hadoop Configuration to tasks as its plain key/value pairs:
-  * length-prefixed UTF-8, encoded once per instance on first serialization,
+  * length-prefixed UTF-8 of the conf as it stands at each serialization,
   * decoded into `new Configuration(false)` with one `set` per pair — the
   * properties `Configuration.readFields` would rebuild, without its
   * per-property gzip of the pair's source names. Reads and writes, batch
   * and streaming, all ship their conf through this class.
   */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  @transient private lazy val encoded: Array[Byte] = SerializableHadoopConf.encode(value)
-
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {
     out.defaultWriteObject()
+    val encoded = SerializableHadoopConf.encode(value)
     out.writeInt(encoded.length)
     out.write(encoded)
   }
@@ -1071,20 +1070,9 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     GraftScan.pack(chunks, openCost, maxPart).map(p => GraftInputPartition(p): InputPartition)
   }
 
-  /** The conf this scan's tasks read with. One instance per scan: Spark
-    * asks for the reader factory more than once per query, and each
-    * instance encodes the conf once.
-    */
-  private lazy val shippedConf =
-    new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration)
+  private[sources] def readerFactory: PartitionReaderFactory = createReaderFactory()
 
-  /** A streaming batch's factory: it ships the conf as of that batch. */
-  private[sources] def readerFactory: PartitionReaderFactory = newReaderFactory(
-    new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration))
-
-  override def createReaderFactory(): PartitionReaderFactory = newReaderFactory(shippedConf)
-
-  private def newReaderFactory(conf: SerializableHadoopConf): PartitionReaderFactory = {
+  override def createReaderFactory(): PartitionReaderFactory = {
     val dataIdx = table.resolvedDataSchema.fieldNames.zipWithIndex.toMap
     val partIdx = table.listing._2.zipWithIndex.toMap
     // For each output field: Left(dataColIdx) or Right(partColIdx).
@@ -1101,7 +1089,7 @@ final class GraftScan(table: GraftTable, required: StructType, partFilters: Arra
     new GraftReaderFactory(
       table.format,
       parseSchema,
-      conf,
+      new SerializableHadoopConf(SparkSession.active.sparkContext.hadoopConfiguration),
       fieldSources,
       if (table.regionsOption.nonEmpty) region else Nil,
       limit,

@@ -185,10 +185,8 @@ final class GraftStreamingWrite(job: SinkJob, dir: String, schema: StructType,
                                 conf: SerializableHadoopConf, queryId: String)
   extends StreamingWrite {
 
-  // a fresh instance per epoch: each epoch ships the conf as of that epoch
   override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftStreamingDataWriterFactory(job, dir, job.sourceIndexes(schema),
-      new SerializableHadoopConf(conf.value), queryId)
+    new GraftStreamingDataWriterFactory(job, dir, job.sourceIndexes(schema), conf, queryId)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     GraftWriteTemp.clean(dir, s"$queryId-$epochId", conf.value)

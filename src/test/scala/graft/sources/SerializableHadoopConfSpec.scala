@@ -84,24 +84,47 @@ class SerializableHadoopConfSpec extends AnyFunSuite with SharedSpark {
     data.toByteArray
   }
 
-  test("an endpoint changed between two queries reaches the second query's readers") {
+  /** Two MiniS3 servers, `a` then `b`, with `fs.s3.*` aimed at `a` for
+    * `body`; `body` gets the session conf and a hook that stops `a`.
+    */
+  private def withTwoEndpoints(aObj: Array[Byte], bObj: Array[Byte])(
+      body: (Configuration, MiniS3, () => Unit) => Unit): Unit = {
     val a = new MiniS3().start()
     val b = new MiniS3().start()
     var aUp = true
     try {
-      a.put("graft-test", "calls/calls.vcf.gz", vcfGz(100))
-      b.put("graft-test", "calls/calls.vcf.gz", vcfGz(250))
+      a.put("graft-test", "calls/calls.vcf.gz", aObj)
+      b.put("graft-test", "calls/calls.vcf.gz", bObj)
       withHadoopConf(
           "fs.s3.impl" -> classOf[graft.sources.s3.S3HttpFileSystem].getName,
           "fs.s3.impl.disable.cache" -> "true",
           "fs.s3.endpoint" -> a.endpoint) { conf =>
-        def count(): Long = spark.read.format("vcf").load("s3://graft-test/calls").count()
-        assert(count() == 100)
-        // with `a` down, a reader shipped the old endpoint fails the query
-        a.stop(); aUp = false
-        conf.set("fs.s3.endpoint", b.endpoint)
-        assert(count() == 250)
+        body(conf, b, () => { a.stop(); aUp = false })
       }
     } finally { if (aUp) a.stop(); b.stop() }
+  }
+
+  test("an endpoint changed between two queries reaches the second query's readers") {
+    withTwoEndpoints(vcfGz(100), vcfGz(250)) { (conf, b, stopA) =>
+      def count(): Long = spark.read.format("vcf").load("s3://graft-test/calls").count()
+      assert(count() == 100)
+      // with `a` down, a reader shipped the old endpoint fails the query
+      stopA()
+      conf.set("fs.s3.endpoint", b.endpoint)
+      assert(count() == 250)
+    }
+  }
+
+  test("an endpoint changed between two actions on one DataFrame reaches the second action") {
+    // the same bytes on both servers: the second action reuses the first's
+    // planned partitions, so only where the readers connect differs
+    val vcf = vcfGz(100)
+    withTwoEndpoints(vcf, vcf) { (conf, b, stopA) =>
+      val df = spark.read.format("vcf").load("s3://graft-test/calls").select("pos")
+      assert(df.collect().length == 100)
+      stopA()
+      conf.set("fs.s3.endpoint", b.endpoint)
+      assert(df.collect().length == 100)
+    }
   }
 }

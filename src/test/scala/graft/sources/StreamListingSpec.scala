@@ -3,6 +3,7 @@ package graft.sources
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.streaming.Trigger
 import graft.SharedSpark
+import graft.tools.MiniS3
 
 /** Committed-prefix skip in GraftMicroBatchStream: a trigger must sort only
   * files PAST the committed boundary key, not re-sort everything ever
@@ -135,5 +136,47 @@ class StreamListingSpec extends AnyFunSuite with SharedSpark {
       assert(sorted >= 0, "no trigger listed after reset")
       assert(sorted <= 3, s"a trigger re-sorted $sorted files, expected <= 3")
     } finally q.stop()
+  }
+
+  test("s3: a stream orders objects by LastModified and re-reads one rewritten in place") {
+    val s3 = new MiniS3().start()
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.s3.impl", "fs.s3.endpoint", "fs.s3.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    conf.set("fs.s3.impl", classOf[graft.sources.s3.S3HttpFileSystem].getName)
+    conf.set("fs.s3.endpoint", s3.endpoint)
+    conf.set("fs.s3.impl.disable.cache", "true")
+    val ckpt = graft.TestTmp.dir("graft_stream_s3_ckpt").toString
+    val t0 = 1700000000000L
+    def put(name: String, id: String, mtime: Long): Unit =
+      s3.put("graft-test", s"land/$name.fasta", s">$id\nACGT\n".getBytes("US-ASCII"), mtime)
+    // one id list per micro-batch, in batch order
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    def drain(): Unit = spark.readStream.format("fasta")
+      .option("maxFilesPerTrigger", "1").load("s3://graft-test/land")
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        batches.add(df.select("id").collect().map(_.getString(0)).toSeq.sorted); ()
+      }
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    try {
+      // names sort against put order: the offset key is (LastModified, path)
+      put("a", "a1", t0 + 4000)
+      put("b", "b1", t0 + 2000)
+      put("c", "c1", t0)
+      drain()
+      assert(batches.toArray.toSeq == Seq(Seq("c1"), Seq("b1"), Seq("a1")))
+      // a rewrite at the same length gets a later LastModified: it sorts
+      // past the committed offset and is read again
+      batches.clear()
+      put("b", "b2", t0 + 6000)
+      drain()
+      assert(batches.toArray.toSeq == Seq(Seq("b2")))
+    } finally {
+      s3.stop()
+      saved.foreach { case (k, v) =>
+        v match { case Some(x) => conf.set(k, x); case None => conf.unset(k) }
+      }
+    }
   }
 }
